@@ -32,6 +32,14 @@ allows. Lineage is truncated with a lazy ``localCheckpoint`` per
 round, so round N's count job materializes round N-1's table and the
 plan stays O(1) deep.
 
+Small vocabularies: a word table of at most
+``partitioning.local_rows_max`` rows (default 100k) is collected once,
+with its initial symbols split by Spark's own `chars`, and the merge
+loop runs on the driver (`_train_local`). Each Spark round above is a
+few KB of work behind several scheduled jobs at that size; the driver
+loop computes the same counts, argmax and fold, so the merges and the
+final symbolization are identical.
+
 Determinism: ties in pair counts break on (left asc, right asc), so
 the merge sequence is a pure function of the word-frequency table —
 engine/retry/partitioning-portable, golden-tested against a pure-
@@ -44,6 +52,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .partitioning import collect_if_small, rows_frame
 
 
 @dataclass(frozen=True)
@@ -143,46 +153,76 @@ def train_bpe(
     symbolization — ``word_col`` + ``syms array<string>``). Stops
     early if no adjacent pair remains (fully merged vocabulary).
 
-    Lineage is cut every ``checkpoint_every`` merges (same cadence idea
-    as apply_merges): the per-round ``localCheckpoint`` call alone cost
-    ~27 ms of plan/RDD conversion, dominating the tiny 1-partition
-    round job, while re-folding up to 3 un-checkpointed merges on the
-    vocabulary-sized table is single-digit ms — r12, guide §1.3 (count
-    jobs and their fixed overhead, not just data volume)."""
-    from .partitioning import narrow_rounds
-
+    A word table of at most ``local_rows_max`` rows trains on the driver
+    (module docstring). Otherwise lineage is cut every
+    ``checkpoint_every`` merges (same cadence idea as apply_merges): the
+    per-round ``localCheckpoint`` call alone cost ~27 ms of plan/RDD
+    conversion, dominating the tiny 1-partition round job, while
+    re-folding up to 3 un-checkpointed merges on the vocabulary-sized
+    table is single-digit ms — r12, guide §1.3 (count jobs and their
+    fixed overhead, not just data volume)."""
     cur = (
         words.filter(F.length(word_col) > 0)
         .select(word_col, freq_col, chars(F.col(word_col)).alias("syms"))
         .localCheckpoint(eager=False)
     )
-    # fan-in guard (r13, guide §1.2): the merge loop is driver-
-    # sequential over the vocabulary-sized word table — at bench scale
-    # every pair-count round is a KB-sized 1-partition aggregate whose
-    # cost is AQE stage-job scheduling. A provably tiny word table runs
-    # the loop non-adaptively on one shuffle partition (one job per
-    # round); the count materializes the pin the first round would have
-    # materialized anyway, and past narrow_rows_max the loop stays wide.
-    n_words = cur.count()
+    # driver-local tier (partitioning.collect_if_small): a provably tiny
+    # word table — initial symbols split by Spark's own `chars` — is
+    # collected in one job and merged on the driver
+    local = collect_if_small(cur)
+    if local is not None:
+        merges, rows = _train_local(local, num_merges)
+        return merges, rows_frame(cur.sparkSession, rows, cur.schema)
     merges: list[Merge] = []
-    with narrow_rounds(cur.sparkSession, n_words):
-        for rank in range(1, num_merges + 1):
-            best = (
-                _pair_counts(cur, freq_col)
-                .orderBy(F.desc("cnt"), F.asc("left"), F.asc("right"))
-                .limit(1)
-                .collect()
-            )
-            if not best:
-                break
-            m = Merge(rank, best[0]["left"], best[0]["right"], int(best[0]["cnt"]))
-            merges.append(m)
-            cur = cur.withColumn(
-                "syms", F.expr(merge_pair_sql("`syms`", m.left, m.right))
-            )
-            if rank % checkpoint_every == 0:
-                cur = cur.localCheckpoint(eager=False)
+    for rank in range(1, num_merges + 1):
+        best = (
+            _pair_counts(cur, freq_col)
+            .orderBy(F.desc("cnt"), F.asc("left"), F.asc("right"))
+            .limit(1)
+            .collect()
+        )
+        if not best:
+            break
+        m = Merge(rank, best[0]["left"], best[0]["right"], int(best[0]["cnt"]))
+        merges.append(m)
+        cur = cur.withColumn(
+            "syms", F.expr(merge_pair_sql("`syms`", m.left, m.right))
+        )
+        if rank % checkpoint_every == 0:
+            cur = cur.localCheckpoint(eager=False)
     return merges, cur
+
+
+def _merge_local(syms: list[str], left: str, right: str) -> list[str]:
+    """`merge_pair`'s greedy left-to-right fold on a Python list."""
+    out: list[str] = []
+    for s in syms:
+        if out and out[-1] == left and s == right:
+            out[-1] = left + right
+        else:
+            out.append(s)
+    return out
+
+
+def _train_local(rows: list, num_merges: int) -> tuple[list[Merge], list]:
+    """`train_bpe`'s merge loop on the driver over collected
+    (word, freq, syms) rows: the same weighted pair counts, the same
+    (cnt desc, left asc, right asc) argmax — Python's str order is
+    Spark's UTF-8 binary order — and the same greedy fold. Returns
+    (merges, rows in their final symbolization)."""
+    words = [(r[0], r[1], list(r[2])) for r in rows]
+    merges: list[Merge] = []
+    for rank in range(1, num_merges + 1):
+        counts: dict[tuple[str, str], int] = {}
+        for _, f, syms in words:
+            for pair in zip(syms, syms[1:]):
+                counts[pair] = counts.get(pair, 0) + f
+        if not counts:
+            break
+        (left, right), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append(Merge(rank, left, right, int(cnt)))
+        words = [(w, f, _merge_local(syms, left, right)) for w, f, syms in words]
+    return merges, words
 
 
 def apply_merges(

@@ -317,6 +317,12 @@ def fuzzy_decontaminate_pairs(
     `lsh_verified_jaccard_pairs` back half). Returns
     (id_a < id_b, jaccard) with exactly one eval side per pair; the
     caller orients train/eval.
+
+    Behaviour change: the minhash signatures are built from the same
+    `shingle_n`-grams as the jaccard verify. Earlier versions always
+    signed 3-grams, so for ``shingle_n != 3`` the LSH candidate recall,
+    and with it the returned pairs, differ from those versions. The
+    default (3) is unchanged.
     """
     flag = F.col(eval_col).cast("boolean")
     # ONE tokenize+shingle pass feeds both the banded signatures and

@@ -17,14 +17,90 @@ Scale notes (100 TB):
   dup pairs) switch to the large-star/small-star algorithm (Kiveris et
   al., "Connected Components in MapReduce and Beyond", SoCC'14), which
   converges in O(log^2 n) rounds with the same join+min primitive.
+
+Small graphs: every operator here first pins its loop input (the pair
+list, or pagerank's aggregated edge list) and offers it to
+`partitioning.collect_if_small`. At or under `local_rows_max` rows
+(default 100k) the rows come back in one job and the loop runs on the
+driver (`_cc_local`, `_star_local`, `_pagerank_local`), replaying the
+Spark rounds exactly: same round count, same convergence verdict, same
+rounded arithmetic. Above it the Spark rounds run as described above.
 """
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Context, Decimal
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from .partitioning import narrow_rounds
+from .partitioning import collect_if_small, rows_frame
+
+
+def _comp_schema(node: StructField) -> StructType:
+    """(node, comp) result schema of both CC variants, typed as `node`."""
+    return StructType([
+        StructField("node", node.dataType, node.nullable),
+        StructField("comp", node.dataType, node.nullable),
+    ])
+
+
+def _cc_local(pairs: list, max_iter: int) -> tuple[list | None, int]:
+    """Min-label propagation on the driver, round-synchronous exactly as
+    the Spark loop in `connected_components` (every node takes the min
+    of its own and its neighbours' PREVIOUS labels), so the round count
+    and the non-convergence verdict are the same. Returns ((node, comp)
+    rows, or None when `max_iter` rounds did not converge; rounds run)."""
+    sym = set()
+    comp = {}
+    for a, b in pairs:
+        sym.add((a, b))
+        sym.add((b, a))
+        comp[a] = a
+        comp[b] = b
+    rounds = 0
+    for _ in range(max_iter):
+        rounds += 1
+        new = dict(comp)
+        for s, d in sym:
+            if comp[s] < new[d]:
+                new[d] = comp[s]
+        if new == comp:
+            return list(comp.items()), rounds
+        comp = new
+    return None, rounds
+
+
+def _star_local(pairs: list, max_iter: int) -> tuple[list | None, int]:
+    """Large-star then small-star on the driver, one round per round of
+    the Spark loop in `connected_components_star` (same oriented
+    big -> small edge sets, same set-equality fixpoint). Returns
+    ((node, comp) rows or None when not converged, rounds run)."""
+    nodes = dict.fromkeys(x for p in pairs for x in p)
+    e = {(max(u, v), min(u, v)) for u, v in pairs if u != v}
+    rounds = 0
+    for _ in range(max_iter):
+        rounds += 1
+        g = list(e) + [(v, u) for u, v in e]
+        m = {}
+        for u, v in g:
+            if u not in m or v < m[u]:
+                m[u] = v
+        large = [(v, min(m[u], u)) for u, v in g if v > u]
+        ms = {}
+        for u, v in large:
+            if u not in ms or v < ms[u]:
+                ms[u] = v
+        new = {(v, ms[u]) for u, v in large if v != ms[u]} | set(ms.items())
+        if new == e:
+            comp: dict = {}
+            for u, v in e:
+                comp.setdefault(u, []).append(v)
+            return [(x, c) for x in nodes for c in comp.get(x, (x,))], rounds
+        e = new
+    return None, rounds
 
 
 def connected_components(
@@ -55,25 +131,25 @@ def connected_components(
     # separately scheduled job per checkpoint. Only the raw pin above
     # stays eager: its upstream (e.g. minhash banding) is expensive and
     # two lazy consumers racing in one job could compute it twice.
-    # fan-in guard (r13, guide §1.2): the pair list is already pinned,
-    # so this count reads cached blocks; when the graph is provably
-    # tiny the whole round loop runs non-adaptively on one shuffle
-    # partition (one job per round instead of one job per Exchange)
-    n_pairs = e.count()
-    e = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    e = e.localCheckpoint(eager=False)
-
-    comp = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint(eager=False)
-    )
-    converged = False
-    rounds = 0
-    with narrow_rounds(e.sparkSession, n_pairs):
+    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    # driver-local tier (partitioning.collect_if_small): a provably tiny
+    # pair list is collected in one job and propagated on the driver
+    local = collect_if_small(e)
+    if local is not None:
+        rows, rounds = _cc_local(local, max_iter)
+        converged = rows is not None
+        if converged:
+            comp = rows_frame(e.sparkSession, rows, _comp_schema(sym.schema["src"]))
+    else:
+        e = sym.distinct().localCheckpoint(eager=False)
+        comp = (
+            e.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("comp", F.col("node"))
+            .localCheckpoint(eager=False)
+        )
+        converged = False
+        rounds = 0
         for _ in range(max_iter):
             rounds += 1
             msgs = e.join(comp, e["src"] == comp["node"]).select(
@@ -167,56 +243,60 @@ def connected_components_star(
         .union(raw.select(F.col("v").alias("node")))
         .distinct()
     )
-    # canonical big -> small orientation (small-star form). Lazy
-    # checkpoint: the prev_n count below computes every partition and
-    # materializes it in the same job (one job instead of two — r12).
-    e = (
-        raw.filter(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    def _large(ed: DataFrame) -> DataFrame:
-        g = ed.union(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = g.groupBy("u").agg(F.min("v").alias("__mv")).select(
-            "u", F.least(F.col("__mv"), F.col("u")).alias("m")
-        )
-        # NO distinct here: duplicate edges are harmless to _small's
-        # min-aggregation and its final distinct collapses them — one
-        # fewer shuffle per round
-        return (
-            g.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-
-    def _small(ed: DataFrame) -> DataFrame:
-        g = ed.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins = g.groupBy("u").agg(F.min("v").alias("m"))
-        return (
-            g.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .union(mins.select("u", F.col("m").alias("v")))
+    # driver-local tier (partitioning.collect_if_small): a provably tiny
+    # pair list is collected in one job and starred on the driver
+    local = collect_if_small(raw)
+    if local is not None:
+        rows, rounds = _star_local(local, max_iter)
+        converged = rows is not None
+        if converged:
+            comp = rows_frame(
+                raw.sparkSession, rows, _comp_schema(nodes.schema["node"])
+            )
+    else:
+        # canonical big -> small orientation (small-star form). Lazy
+        # checkpoint: the prev_n count below computes every partition and
+        # materializes it in the same job (one job instead of two — r12).
+        e = (
+            raw.filter(F.col("u") != F.col("v"))
+            .select(
+                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+            )
             .distinct()
+            .localCheckpoint(eager=False)
         )
 
-    converged = False
-    rounds = 0
-    prev_n = e.count()
-    # fan-in guard (r13, guide §1.2): at convergence scale every round
-    # frame is KB-sized and AQE coalesces each shuffle to 1 partition
-    # anyway — the wall cost is one scheduled job PER EXCHANGE. Tiny
-    # graphs run the loop non-adaptively on one shuffle partition (one
-    # job per round, same 1-task width); the guard never fires past
-    # narrow_rows_max, so the 100 TB path stays wide and adaptive.
-    with narrow_rounds(e.sparkSession, prev_n) as fanin:
+        def _large(ed: DataFrame) -> DataFrame:
+            g = ed.union(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            mins = g.groupBy("u").agg(F.min("v").alias("__mv")).select(
+                "u", F.least(F.col("__mv"), F.col("u")).alias("m")
+            )
+            # NO distinct here: duplicate edges are harmless to _small's
+            # min-aggregation and its final distinct collapses them — one
+            # fewer shuffle per round
+            return (
+                g.join(mins, "u")
+                .filter(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .filter(F.col("u") != F.col("v"))
+            )
+
+        def _small(ed: DataFrame) -> DataFrame:
+            g = ed.select(
+                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+            )
+            mins = g.groupBy("u").agg(F.min("v").alias("m"))
+            return (
+                g.join(mins, "u")
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .filter(F.col("u") != F.col("v"))
+                .union(mins.select("u", F.col("m").alias("v")))
+                .distinct()
+            )
+
+        converged = False
+        rounds = 0
+        prev_n = e.count()
         for _ in range(max_iter):
             rounds += 1
             # lazy checkpoint: the next action computes all partitions,
@@ -224,35 +304,12 @@ def connected_components_star(
             # instead of an eager-checkpoint job + a probe job (r12,
             # guide §1.3)
             new = _small(_large(e)).localCheckpoint(eager=False)
-            # fixpoint when the oriented edge sets are identical. Both
-            # inputs are distinct, so in the unioned groupBy a row with
-            # count 1 is in exactly one set — zero such rows == sets
-            # identical (same fixpoint as count-match + symmetric diff).
-            if fanin.active:
-                # fused probe (r13, VERDICT r12 #4): on a tiny graph ONE
-                # union+groupBy job materializes `new` AND answers
-                # convergence — replaces the count job + the conditional
-                # diff job (each ~0.2 s at bench). Narrow-only by the
-                # same row-count guard: at scale this would shuffle both
-                # edge sets EVERY round, where the metadata-cheap count
-                # probe below is the right necessary condition.
-                diff = (
-                    new.union(e)
-                    .groupBy("u", "v")
-                    .agg(F.count(F.lit(1)).alias("__c"))
-                    .filter(F.col("__c") == 1)
-                    .limit(1)
-                    .count()
-                )
-                if diff == 0:
-                    converged = True
-                    e = new
-                    break
-                e = new
-                continue
-            # wide path: cheap necessary condition first (row counts);
-            # only on a count match run the exact set compare, as ONE
-            # union+groupBy job instead of two subtract anti-joins.
+            # fixpoint when the oriented edge sets are identical: cheap
+            # necessary condition first (row counts); only on a count match
+            # run the exact set compare, as ONE union+groupBy job instead of
+            # two subtract anti-joins. Both inputs are distinct, so a row
+            # with count 1 is in exactly one set — zero such rows == sets
+            # identical.
             n = new.count()
             if n == prev_n:
                 diff = (
@@ -269,6 +326,10 @@ def connected_components_star(
                     break
             prev_n = n
             e = new
+        comp_map = e.select(F.col("u").alias("node"), F.col("v").alias("comp"))
+        comp = nodes.join(comp_map, "node", "left").select(
+            "node", F.coalesce("comp", "node").alias("comp")
+        )
     if stats is not None:
         stats["rounds"] = rounds
     if not converged:
@@ -277,10 +338,7 @@ def connected_components_star(
             "rounds — expected O(log n); check the input for NULL-key "
             "explosion or raise max_iter"
         )
-    comp_map = e.select(F.col("u").alias("node"), F.col("v").alias("comp"))
-    return nodes.join(comp_map, "node", "left").select(
-        "node", F.coalesce("comp", "node").alias("comp")
-    )
+    return comp
 
 
 def dedup_clusters(
@@ -299,6 +357,68 @@ def dedup_clusters(
         .otherwise(F.lit(0))
         .alias("keep"),
     )
+
+
+_Q12 = Decimal("1e-12")
+_DEC38 = Context(prec=38)  # DECIMAL(38,12)'s digit budget
+
+
+def _dec12(x: float) -> Decimal:
+    """Spark's CAST(x AS DECIMAL(38,12)) of a double, which is also the
+    decimal step of its ROUND(x, 12): BigDecimal(Double.toString(x)) at
+    scale 12, HALF_UP. Python's repr is the same shortest round-trip
+    digit string (pinned against F.round over seeded doubles in
+    tests/test_fanin.py)."""
+    return Decimal(repr(x)).quantize(_Q12, ROUND_HALF_UP, _DEC38)
+
+
+def _double(d: Decimal) -> float:
+    """Spark's decimal -> double cast (correctly rounded). `+ 0.0` folds
+    Python's -0 into +0: a Spark decimal has no negative zero."""
+    return float(d) + 0.0
+
+
+def _round12(x: float) -> float:
+    """Spark's ROUND(x, 12) on a double (NaN and infinities pass)."""
+    return _double(_dec12(x)) if math.isfinite(x) else x
+
+
+def _pagerank_local(rows: list, iterations: int, damping: float) -> list:
+    """`pagerank`'s power iteration on the driver over collected
+    (src, dst, w, out_w) rows, replaying the Spark loop's arithmetic
+    step for step: same double expressions in the same order, the same
+    12-dp rounding points, contributions summed as exact decimals and
+    cast to double where the Spark plan casts. `out_w` is Spark's own
+    aggregate, so the one order-dependent float sum is not redone here.
+    Returns (node, rank) rows."""
+    nodes = dict.fromkeys(x for r in rows for x in (r[0], r[1]))
+    n = len(nodes)
+    if n == 0:
+        return []
+    nf = float(n)
+    out_w = dict.fromkeys(nodes, 0.0)
+    for r in rows:
+        if r[3] is not None:
+            out_w[r[0]] = r[3]
+    # a NULL weight contributes NULL, which SUM skips
+    edges = [(r[0], r[1], r[2]) for r in rows if r[2] is not None]
+    dangling = [v for v in nodes if out_w[v] == 0]
+    base = _round12((1.0 - damping) / nf)
+    rank = dict.fromkeys(nodes, _round12(1.0 / nf))
+    for _ in range(iterations):
+        cs: dict = {}
+        for s, d, w in edges:
+            c = _dec12(_round12(rank[s] * w / out_w[s]))
+            cs[d] = cs[d] + c if d in cs else c
+        dm = (
+            _double(sum(_dec12(_round12(rank[v] / nf)) for v in dangling))
+            if dangling else 0.0
+        )
+        rank = {
+            v: _round12(base + damping * ((_double(cs[v]) if v in cs else 0.0) + dm))
+            for v in nodes
+        }
+    return list(rank.items())
 
 
 def pagerank(
@@ -329,14 +449,19 @@ def pagerank(
     like connected_components; dangling mass is a 1-row aggregate
     crossed back in (broadcast). Node count N is a driver scalar — the
     only collect, O(1) rows.
+
+    An edge list of at most `local_rows_max` rows is instead collected
+    once, together with Spark's out-weight aggregate, and iterated on
+    the driver by `_pagerank_local` in the same arithmetic — the
+    determinism contract above is what makes the two bit-identical.
     """
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
     # lazy checkpoints throughout (r12, guide §1.3): every localCheckpoint
     # here still cuts the SQL plan immediately, but materialization rides
-    # the NEXT action that touches it (nodes.count below for e/nodes; the
-    # first iteration's dangling-broadcast build for deg/ranks) instead of
-    # paying a separately scheduled job per checkpoint — on the bench's
-    # small transition graph the per-iteration jobs ARE the cost
+    # the NEXT action that touches it (the size probe for e, nodes.count
+    # for nodes; the first iteration's dangling-broadcast build for
+    # deg/ranks) instead of paying a separately scheduled job per
+    # checkpoint
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -344,16 +469,26 @@ def pagerank(
         .agg(F.sum("w").alias("w"))
         .localCheckpoint(eager=False)
     )
+    out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
+    # driver-local tier (partitioning.collect_if_small): a provably tiny
+    # edge list is collected in one job, WITH Spark's own out-weight
+    # aggregate, and iterated on the driver in the same arithmetic
+    local = collect_if_small(e.join(out_w, "src"))
+    if local is not None:
+        return rows_frame(
+            e.sparkSession,
+            _pagerank_local(local, iterations, damping),
+            StructType([nodes.schema["node"], StructField("rank", DoubleType())]),
+        )
+    nodes = nodes.localCheckpoint(eager=False)
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
-    out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     deg = nodes.join(out_w, nodes["node"] == out_w["src"], "left").select(
         "node", F.coalesce("out_w", F.lit(0.0)).alias("out_w")
     ).localCheckpoint(eager=False)
@@ -363,70 +498,57 @@ def pagerank(
     nf = F.lit(float(n))
     base = F.round((F.lit(1.0) - F.lit(damping)) / nf, 12)
     ranks = deg.select("node", "out_w", F.round(F.lit(1.0) / nf, 12).alias("rank"))
-    # fan-in guard (r13, guide §1.2): rank frames are O(nodes) and the
-    # contribution stream O(edges) — both must be tiny before the loop
-    # runs narrow. The edge count is only paid when the node count is
-    # already under the threshold (e's checkpoint was materialized by
-    # nodes.count(), so it reads cached blocks), never at scale. The
-    # guard must cover the plan BUILDS too (each lazy localCheckpoint's
-    # toRdd compiles the iteration's physical plan — with AQE off it
-    # compiles narrow and defers execution), so the whole loop sits
-    # inside the context.
-    from .partitioning import narrow_rows_max
-
-    n_edges = e.count() if n < narrow_rows_max(e.sparkSession) else n
-    with narrow_rounds(e.sparkSession, max(n, n_edges)):
-        # dangling-mass structure probe (r12, guide §2.4): whether any
-        # node has zero out-weight is a property of the GRAPH, not of
-        # the ranks — when none does, every iteration's dangling
-        # aggregate is exactly the empty sum (coalesce -> decimal 0 ->
-        # +0.0, bit-identical), so one upfront limit(1) probe replaces
-        # `iterations` broadcast-aggregate builds over the rank table.
-        # Graphs with dangling nodes keep the per-iteration aggregate
-        # (its input changes every step).
-        has_dangling = deg.filter(F.col("out_w") == 0).limit(1).count() > 0
-        for _ in range(iterations):
-            contrib = (
-                e.join(ranks, e["src"] == ranks["node"])
-                .select(
-                    F.col("dst"),
-                    F.round(F.col("rank") * F.col("w") / F.col("out_w"), 12)
-                    .cast("decimal(38,12)")
-                    .alias("c"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("c").alias("cs"))
+    # dangling-mass structure probe (r12, guide §2.4): whether any
+    # node has zero out-weight is a property of the GRAPH, not of
+    # the ranks — when none does, every iteration's dangling
+    # aggregate is exactly the empty sum (coalesce -> decimal 0 ->
+    # +0.0, bit-identical), so one upfront limit(1) probe replaces
+    # `iterations` broadcast-aggregate builds over the rank table.
+    # Graphs with dangling nodes keep the per-iteration aggregate
+    # (its input changes every step).
+    has_dangling = deg.filter(F.col("out_w") == 0).limit(1).count() > 0
+    for _ in range(iterations):
+        contrib = (
+            e.join(ranks, e["src"] == ranks["node"])
+            .select(
+                F.col("dst"),
+                F.round(F.col("rank") * F.col("w") / F.col("out_w"), 12)
+                .cast("decimal(38,12)")
+                .alias("c"),
             )
-            nxt = deg.join(contrib, deg["node"] == contrib["dst"], "left")
-            if has_dangling:
-                dangling = ranks.filter(F.col("out_w") == 0).agg(
-                    F.coalesce(
-                        F.sum(F.round(F.col("rank") / F.lit(float(n)), 12).cast("decimal(38,12)")),
-                        F.lit(0).cast("decimal(38,12)"),
-                    ).alias("dm")
-                )
-                nxt = nxt.crossJoin(F.broadcast(dangling))
-                dm = F.col("dm").cast("double")
-            else:
-                dm = F.lit(0.0)
-            ranks = (
-                nxt.select(
-                    "node",
-                    "out_w",
-                    F.round(
-                        base
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("cs").cast("double"), F.lit(0.0))
-                            + dm
-                        ),
-                        12,
-                    ).alias("rank"),
-                )
-                # lazy: iteration k's ranks materialize inside iteration
-                # k+1's dangling-broadcast build (or the caller's action for
-                # the last one) — one job per iteration instead of an eager
-                # checkpoint job PLUS the broadcast job (r12, guide §1.3)
-                .localCheckpoint(eager=False)
+            .groupBy("dst")
+            .agg(F.sum("c").alias("cs"))
+        )
+        nxt = deg.join(contrib, deg["node"] == contrib["dst"], "left")
+        if has_dangling:
+            dangling = ranks.filter(F.col("out_w") == 0).agg(
+                F.coalesce(
+                    F.sum(F.round(F.col("rank") / F.lit(float(n)), 12).cast("decimal(38,12)")),
+                    F.lit(0).cast("decimal(38,12)"),
+                ).alias("dm")
             )
+            nxt = nxt.crossJoin(F.broadcast(dangling))
+            dm = F.col("dm").cast("double")
+        else:
+            dm = F.lit(0.0)
+        ranks = (
+            nxt.select(
+                "node",
+                "out_w",
+                F.round(
+                    base
+                    + F.lit(damping)
+                    * (
+                        F.coalesce(F.col("cs").cast("double"), F.lit(0.0))
+                        + dm
+                    ),
+                    12,
+                ).alias("rank"),
+            )
+            # lazy: iteration k's ranks materialize inside iteration
+            # k+1's dangling-broadcast build (or the caller's action for
+            # the last one) — one job per iteration instead of an eager
+            # checkpoint job PLUS the broadcast job (r12, guide §1.3)
+            .localCheckpoint(eager=False)
+        )
     return ranks.select("node", "rank")

@@ -26,6 +26,7 @@ site is a fresh parquet load) sizeInBytes is the exact on-disk size.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 # Catalyst's "unknown size" default is Long.MaxValue-ish (8 EB); any
 # estimate at or beyond this means "no stats — assume big" and the
@@ -82,76 +83,61 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     )
 
 
-# --- iterative-loop fan-in (r13, guide §1.2/§2.2) --------------------------
+# --- driver-local tier for iterative loops --------------------------------
 #
-# The iterative operators (star-CC, min-label CC, pagerank, BPE train)
-# run a driver-sequential loop of TINY per-round jobs at convergence
-# scale: the round frames are KB-sized and AQE already coalesces every
-# shuffle to 1 partition, so the wall-clock cost is pure scheduling —
-# adaptive execution materializes each Exchange as its OWN job (3-4
-# stage jobs + broadcast jobs + the action per round; one star-CC run
-# measured 49 jobs at sf0.1). When a round frame is PROVABLY tiny (the
-# loops already count rows every round for convergence), running the
-# loop non-adaptively on one shuffle partition collapses each round to
-# one job with the same 1-task parallelism AQE was choosing anyway
-# (measured 1.37-1.52x on the three loop queries at sf0.1).
+# The iterative operators (min-label CC, star-CC, pagerank, BPE train)
+# run a driver-sequential loop whose every round is a Spark job over a
+# frame the size of the loop input. At convergence scale that input is
+# KB-sized, so each round costs job scheduling, not compute (measured
+# at sf0.01: 15 builder jobs for a 5-node pagerank, 28 for 24 BPE
+# merges, each job mostly fixed overhead). When the loop input
+# (the pinned pair list, the aggregated edge list, the word table) has
+# at most `local_rows_max(spark)` rows, the operator collects it in ONE
+# job and runs the same round-synchronous arithmetic in plain Python on
+# the driver, handing the result back through `rows_frame`.
 #
-# Scale safety: the guard fires only below `narrow_rows_max(spark)`
-# rows (default 100k — a few MB of edge/rank/word rows; conf-
-# overridable per deploy). A 100 TB graph or vocabulary never trips it,
-# so the wide adaptive path is untouched where parallelism matters, and
-# the toggle saves/restores the session conf so nothing leaks.
+# Scale safety: the threshold (default 100k rows, a few MB of driver
+# memory; conf key spark.nba_pipeline.iterative.narrowRowsMax) bounds
+# what is ever collected. The probe is a LIMIT, so above the threshold
+# it stops after T + 1 rows of its input, and the Spark rounds then run
+# as before, with adaptive execution on. No session conf is touched on
+# either path.
 
-_NARROW_ROWS_CONF = "spark.nba_pipeline.iterative.narrowRowsMax"
-_NARROW_ROWS_DEFAULT = 100_000
+_LOCAL_ROWS_CONF = "spark.nba_pipeline.iterative.narrowRowsMax"
+_LOCAL_ROWS_DEFAULT = 100_000
+# DataFrame.limit takes a JVM int; the probe asks for one row past the cap
+_LIMIT_MAX = (1 << 31) - 2
 
 
-def narrow_rows_max(spark) -> int:
-    """Row threshold under which an iterative loop's rounds run
-    non-adaptively on one shuffle partition."""
+def local_rows_max(spark) -> int:
+    """Row threshold at or under which an iterative loop runs on the
+    driver instead of as one Spark job per round."""
     try:
-        return int(spark.conf.get(_NARROW_ROWS_CONF, str(_NARROW_ROWS_DEFAULT)))
+        return int(spark.conf.get(_LOCAL_ROWS_CONF, str(_LOCAL_ROWS_DEFAULT)))
     except ValueError:
-        return _NARROW_ROWS_DEFAULT
+        return _LOCAL_ROWS_DEFAULT
 
 
-class narrow_rounds:
-    """Context manager: run the enclosed (provably tiny) loop actions
-    with adaptive execution OFF and one shuffle partition, restoring
-    the prior conf on exit. ``narrow_rounds(spark, rows)`` is a no-op
-    when ``rows`` is at or above ``narrow_rows_max(spark)`` — the
-    at-scale path keeps AQE and full shuffle width."""
+def collect_if_small(df: DataFrame) -> list | None:
+    """The rows of ``df`` when it has at most ``local_rows_max`` of them,
+    else None. Size probe and collect are one ``limit(T + 1)`` action,
+    so at most T + 1 rows ever reach the driver."""
+    cap = min(local_rows_max(df.sparkSession), _LIMIT_MAX)
+    if cap < 0:
+        return None
+    rows = df.limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None
 
-    _KEYS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
 
-    def __init__(self, spark, rows: int):
-        self._spark = spark
-        self._active = 0 <= rows < narrow_rows_max(spark)
-        self._saved: dict[str, str | None] = {}
+def rows_frame(spark, rows: list, schema: StructType) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` shipped as Arrow batches.
+    The JVM builds the frame from the batches itself; a plain Python
+    list would travel as a pickled RDD whose re-serialization starts
+    Python worker processes on first use (measured on a 4-core VM: ~200 MB
+    more peak RSS on perfbench's llm_curation, which otherwise starts no
+    Python workers)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def __enter__(self):
-        if not self._active:
-            return self
-        for k in self._KEYS:
-            try:
-                self._saved[k] = self._spark.conf.get(k)
-            except Exception:
-                self._saved[k] = None
-        self._spark.conf.set("spark.sql.adaptive.enabled", "false")
-        self._spark.conf.set("spark.sql.shuffle.partitions", "1")
-        return self
-
-    def __exit__(self, *exc):
-        for k, v in self._saved.items():
-            if v is None:
-                try:
-                    self._spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                self._spark.conf.set(k, v)
-        return False
-
-    @property
-    def active(self) -> bool:
-        return self._active
+    cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in schema.fields]
+    return spark.createDataFrame(pa.table(cols, schema=to_arrow_schema(schema)), schema)

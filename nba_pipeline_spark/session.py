@@ -52,26 +52,39 @@ _RUNTIME_CONF = {
 # key mid-session (the bench skew demo, conf-toggling tests) already
 # saves and restores the value itself, which is the contract that made
 # re-applying redundant. `retune` is the explicit escape hatch.
+#
+# A session enters the memo only when EVERY key took (set without
+# raising and read back equal): results depend on each pin, e.g. the
+# parser mode the SQL-text twins were tested under. Keys that did not
+# take are remembered per session and are the only ones the next call
+# re-applies.
 _TUNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+_RETRY: "weakref.WeakKeyDictionary[SparkSession, tuple[str, ...]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _took(spark: SparkSession, key: str, value: str) -> bool:
+    try:
+        spark.conf.set(key, value)
+        return spark.conf.get(key) == value
+    except Exception:
+        return False  # non-settable on this build or stopped session
 
 
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime conf to any session (driver-provided or ours).
-    Idempotent and memoized: repeat calls on an already-tuned session
-    are a set-membership check, not 12 py4j round-trips."""
+    Idempotent and memoized: repeat calls on a fully tuned session are
+    a set-membership check, not 12 py4j round-trips; on a partly tuned
+    one they re-apply only the keys that did not take."""
     if spark in _TUNED:
         return spark
-    any_ok = False
-    for k, v in _RUNTIME_CONF.items():
-        try:
-            spark.conf.set(k, v)
-            any_ok = True
-        except Exception:
-            pass  # non-settable on this build — keep going
-    # memoize only a tune that actually took (ADVICE r12): a session
-    # where EVERY set raised (stopped/misbehaving) retries next call
-    # instead of being permanently recorded as tuned
-    if any_ok:
+    keys = _RETRY.get(spark) or tuple(_RUNTIME_CONF)
+    failed = tuple(k for k in keys if not _took(spark, k, _RUNTIME_CONF[k]))
+    if failed:
+        _RETRY[spark] = failed
+    else:
+        _RETRY.pop(spark, None)
         _TUNED.add(spark)
     return spark
 
@@ -79,6 +92,7 @@ def tune(spark: SparkSession) -> SparkSession:
 def retune(spark: SparkSession) -> SparkSession:
     """Force re-application of the runtime conf (drop the memo)."""
     _TUNED.discard(spark)
+    _RETRY.pop(spark, None)
     return tune(spark)
 
 
