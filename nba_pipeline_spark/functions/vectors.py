@@ -3,27 +3,24 @@
 JVM-side higher-order functions (zip_with/aggregate) — no Python in
 the inner loop. Floats are widened to double before accumulation so
 results are engine-portable (and match a double-precision oracle).
+
+Every builder here takes SQL text (a quoted column name from
+`sql_ident`, a plain internal column name, or another builder's output)
+and returns SQL text (`*_sql`) or one `F.expr` of it, which parses the
+whole tree in the JVM in a single call. Building the same tree through
+the Python Column/lambda API costs ~25-65 ms of py4j round-trips per
+expression at plan-construction time (measured: cosine 65 ms,
+to_double_array 25 ms vs 0.4 ms for one parse), and the similarity/ANN
+tier constructs them in every query.
+Lambda variables are `__`-prefixed so composed texts never capture a
+caller's column. NULL vectors, zero norms and length mismatches are
+pinned against a Column-API reference in tests/test_dedup_similarity.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-# ---------------------------------------------------------------------
-# SQL-text twins (r12, guide §1.2 driver overhead): building these
-# expressions through the Python Column/lambda API costs ~25-65 ms of
-# py4j round-trips PER CALL at plan-construction time (measured:
-# cosine() 65 ms, to_double_array() 25 ms vs 0.4 ms for one F.expr
-# parse), and the similarity/ANN tier constructs them in every query.
-# The *_sql helpers emit the IDENTICAL expression as one SQL string —
-# same HOF structure, same 0.0D literals, same let-binding via the
-# 1-element-array transform — parsed in the JVM in a single call.
-# Numeric equivalence (NULLs, zero norms, length mismatches included)
-# is pinned by tests/test_dedup_similarity.py. Inputs are SQL text
-# (a quoted column name via `sql_ident`, or a composed *_sql string).
-# ---------------------------------------------------------------------
 
 
 def sql_ident(name: str) -> str:
@@ -35,6 +32,10 @@ def to_double_array_sql(a: str) -> str:
     return f"transform({a}, __td -> cast(__td as double))"
 
 
+def to_double_array(a: str) -> Column:
+    return F.expr(to_double_array_sql(a))
+
+
 def dot_sql(a: str, b: str) -> str:
     return (
         f"aggregate(zip_with({a}, {b}, (__x, __y) -> __x * __y), 0.0D, "
@@ -42,14 +43,36 @@ def dot_sql(a: str, b: str) -> str:
     )
 
 
+def dot_fixed_sql(a: str, b: str, dims: int) -> str:
+    """Dot product unrolled for a known dimensionality.
+
+    Left-associated from 0.0D so the float accumulation order is
+    IDENTICAL to ``dot_sql`` (aggregate's acc chain) — bit-compatible
+    results.
+
+    Faster than the HOF ``dot_sql`` ONLY inside whole-stage-codegen'd
+    projections (zero allocation vs a 64-elem zip_with array per row).
+    In INTERPRETED contexts — join conditions, where Catalyst pushes
+    threshold filters — the relationship inverts hard: one
+    zip_with/aggregate loop node beats this 64-term tree with 128
+    subscript nodes ~4-6x (re-measured at sf0.1: 4.4 s vs 0.7 s in the
+    LSH pair join). Rule: unrolled for codegen projects (csim, knn
+    select), HOF for anything that can land in a join condition.
+    """
+    return "0.0D" + "".join(f" + {a}[{i}] * {b}[{i}]" for i in range(dims))
+
+
 def norm_sql(a: str) -> str:
     return f"sqrt(aggregate({a}, 0.0D, (__na, __nx) -> __na + __nx * __nx))"
 
 
 def cosine_sql(a: str, b: str) -> str:
-    """Text twin of `cosine`: both inputs let-bound (evaluated once per
-    row even when `a`/`b` are computed expressions), try_divide for
-    zero-norm NULL safety — the same tree `cosine` builds."""
+    """Cosine similarity; NULL-safe on zero-norm vectors (try_divide).
+
+    Both inputs are let-bound through a 1-element-array transform
+    (evaluated once per row even when `a`/`b` are computed expressions
+    such as `to_double_array_sql(col)`): each is referenced twice, by
+    the dot and by its norm."""
     inner = (
         f"try_divide({dot_sql('__ca', '__cb')}, "
         f"{norm_sql('__ca')} * {norm_sql('__cb')})"
@@ -62,71 +85,3 @@ def cosine_sql(a: str, b: str) -> str:
 
 def cosine_expr(a: str, b: str) -> Column:
     return F.expr(cosine_sql(a, b))
-
-
-def to_double_array(col: Column | str) -> Column:
-    if isinstance(col, str):
-        return F.expr(to_double_array_sql(col))
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def dot_fixed(a: Column, b: Column, dims: int) -> Column:
-    """Dot product unrolled for a known dimensionality.
-
-    Left-associated from 0.0 so the float accumulation order is
-    IDENTICAL to ``dot`` (aggregate's acc chain) — bit-compatible
-    results.
-
-    Faster than the HOF ``dot`` ONLY inside whole-stage-codegen'd
-    projections (zero allocation vs a 64-elem zip_with array per row).
-    In INTERPRETED contexts — join conditions, where Catalyst pushes
-    threshold filters — the relationship inverts hard: one
-    zip_with/aggregate loop node beats this 64-term tree with 128
-    getItem nodes ~4-6x (re-measured at sf0.1: 4.4 s vs 0.7 s in the
-    LSH pair join). Rule: unrolled for codegen projects (csim, knn
-    select), HOF for anything that can land in a join condition.
-    """
-    acc = F.lit(0.0)
-    for i in range(dims):
-        acc = acc + a.getItem(i) * b.getItem(i)
-    return acc
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL-safe on zero-norm vectors (try_divide).
-
-    Both inputs are let-bound (functions/exprs.py): each is referenced
-    twice (dot + norm), and callers routinely pass computed expressions
-    (`to_double_array(col)`), which would otherwise be evaluated twice
-    per row."""
-    from .exprs import let
-
-    return let(
-        a, lambda aa: let(b, lambda bb: F.try_divide(dot(aa, bb), norm(aa) * norm(bb)))
-    )
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def normalize(a: Column) -> Column:
-    """Unit-normalize (dot of normalized vectors == cosine)."""
-    n = norm(a)
-    return F.transform(a, lambda x: F.try_divide(x, n))

@@ -92,9 +92,13 @@ def merge_pair(syms: Column, left: str, right: str) -> Column:
 
 
 def _sql_str(s: str) -> str:
-    """Escape a Python string as a Spark SQL string literal (default
-    parser mode: backslash IS an escape character)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """A Python string as Spark SQL text that evaluates to `s` in both
+    parser modes (`spark.sql.parser.escapedStringLiterals` on or off):
+    a plain quoted literal when `s` holds no backslash or quote, else
+    its UTF-8 bytes as hex digits decoded in-plan (constant-folded)."""
+    if "\\" not in s and "'" not in s:
+        return f"'{s}'"
+    return f"decode(unhex('{s.encode().hex()}'), 'UTF-8')"
 
 
 def merge_pair_sql(syms: str, left: str, right: str) -> str:
@@ -102,11 +106,13 @@ def merge_pair_sql(syms: str, left: str, right: str) -> str:
     same pattern as functions/vectors.py's *_sql helpers): the fold is
     rebuilt once per merge round inside a driver-sequential loop, and
     the Column/lambda construction costs ~20 ms of py4j round-trips
-    per build vs ~1 ms for one F.expr parse. Emits the IDENTICAL
-    expression — same CASE WHEN structure, same CAST(array() AS
-    array<string>) seed — differential-pinned in tests/test_bpe.py.
+    per build vs ~1 ms for one F.expr parse. Emits the same fold —
+    same CASE WHEN structure, same CAST(array() AS array<string>)
+    seed; only a symbol holding a quote or backslash is spelled as a
+    decoded hex literal — differential-pinned in tests/test_bpe.py
+    under both parser modes.
     `syms` is SQL text (a quoted column name); left/right are raw
-    symbol strings, escaped here."""
+    symbol strings, rendered by `_sql_str`."""
     lt, rt, both = _sql_str(left), _sql_str(right), _sql_str(left + right)
     return (
         f"aggregate({syms}, CAST(array() AS array<string>), "

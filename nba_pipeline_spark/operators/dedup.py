@@ -34,10 +34,9 @@ from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokenize
 from ..functions.vectors import (
-    dot,
-    dot_fixed,
+    dot_fixed_sql,
     dot_sql,
-    norm,
+    norm_sql,
     sql_ident,
     to_double_array,
 )
@@ -744,7 +743,7 @@ def embedding_lsh_neardup_pairs(
     all_planes = hyperplane_planes(n_bands * n_bits, dims)
     e = df.select(
         F.col(id_col), to_double_array(sql_ident(vec_col)).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    ).withColumn("nrm", F.expr(norm_sql("v")))
     buckets = F.array(
         *[
             hyperplane_bucket(
@@ -822,17 +821,17 @@ def embedding_neardup_pairs(
     id_col: str,
     block_cols: list[str],
     threshold: float,
-    dims: int | None = None,
     broadcast_build: bool = False,
     max_block: int | None = None,
     observation=None,
 ) -> DataFrame:
     """Tier 5b: cosine near-duplicates within blocks (label / IVF cell).
 
-    Same blocked self-join shape. With ``dims`` given, the per-pair dot
-    product is unrolled into a codegen-compiled flat sum (same float
-    order as the HOF path — bit-compatible); without it, falls back to
-    interpreted higher-order functions.
+    Same blocked self-join shape. The per-pair dot is the HOF fold
+    (``dot_sql``): the threshold filter is pushed into the join
+    condition, which runs on the interpreted path, where an unrolled
+    chain is ~4x slower (re-measured at sf0.1: 2.4 s unrolled vs 0.5 s
+    HOF, bit-identical results).
 
     ``broadcast_build=True`` is the small-corpus fast path: broadcast
     the build side and fan the probe side across cores. A sort-merge
@@ -857,7 +856,7 @@ def embedding_neardup_pairs(
     # join so each is computed n times, not n² times per pair.
     docs = df.select(
         F.col(id_col), *block_cols, to_double_array(sql_ident(vec_col)).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    ).withColumn("nrm", F.expr(norm_sql("v")))
     if max_block is not None:
         counts = docs.groupBy(*block_cols).agg(F.count(F.lit(1)).alias("__n"))
         hot = F.col("__n") > max_block
@@ -882,12 +881,6 @@ def embedding_neardup_pairs(
     cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
     for c in block_cols:
         cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    # ``dims`` kept for API stability, but the pair dot is ALWAYS the
-    # HOF fold: the threshold filter is pushed into the join condition
-    # (interpreted path), where the unrolled chain is ~4x slower
-    # (re-measured at sf0.1: 2.4 s fixed64 vs 0.5 s HOF, bit-identical
-    # results — the round-1 note claiming the opposite predates the
-    # pushdown and measured the codegen'd project path).
     sim = F.try_divide(F.expr(dot_sql("`a`.`v`", "`b`.`v`")), F.col("a.nrm") * F.col("b.nrm"))
     return (
         a.join(b, cond)
@@ -966,16 +959,12 @@ def semdedup_pairs(
     assigned = assign_cells(e, centroids, id_col)
     # similarity-to-own-centroid, rounded: the keep-policy ranking must
     # be engine-portable, so the tie axis is (round(csim,6), id)
-    dot_fn = (lambda x, y: dot_fixed(x, y, dims)) if dims else dot
+    dot = dot_fixed_sql("v", "cv", dims) if dims else dot_sql("v", "cv")
     with_csim = (
         assigned.join(F.broadcast(centroids), "cid")
-        .withColumn("nrm", norm(F.col("v")))
+        .withColumn("nrm", F.expr(norm_sql("v")))
         .withColumn(
-            "csim",
-            F.round(
-                F.try_divide(dot_fn(F.col("v"), F.col("cv")), F.col("nrm") * norm(F.col("cv"))),
-                6,
-            ),
+            "csim", F.expr(f"round(try_divide({dot}, nrm * {norm_sql('cv')}), 6)")
         )
         .select(id_col, "cid", "v", "nrm", "csim")
         .localCheckpoint(eager=False)  # both join sides reference it
@@ -1464,12 +1453,10 @@ def semantic_decontaminate(
     LOWEST eval id (the struct array is sorted by eid, array_position
     returns the first match) — engine-portable, mirrored by the
     oracle's (sim6 DESC, eid ASC) row_number."""
-    from ..functions.vectors import dot, norm
-
     is_eval = F.col(eval_col).cast("boolean")
     # eval norms precomputed once in the broadcast structs; train norm
     # computed once per row — identical arithmetic (dot / (na * nb),
-    # try_divide NULL-safety on zero norms) to functions.vectors.cosine
+    # try_divide NULL-safety on zero norms) to functions.vectors.cosine_sql
     # with the two norm aggregates hoisted out of the per-eval loop
     ev = (
         emb.filter(is_eval)
@@ -1478,7 +1465,7 @@ def semantic_decontaminate(
             F.struct(
                 F.col(id_col).alias("eid"),
                 F.col("v").alias("evv"),
-                norm(F.col("v")).alias("en"),
+                F.expr(norm_sql("v")).alias("en"),
             ).alias("e")
         )
         .agg(F.sort_array(F.collect_list("e")).alias("evals"))
@@ -1491,23 +1478,15 @@ def semantic_decontaminate(
     # Round-robin fan-out is guarded: a real at-scale scan already has
     # more partitions than cores and is untouched.
     tr = fan_out(emb.filter(~is_eval)).select(
-        F.col(id_col), to_double_array(sql_ident(vec_col)).alias("__v")
-    ).withColumn("__n", norm(F.col("__v")))
+        F.col(id_col), to_double_array(sql_ident(vec_col)).alias("__tv")
+    ).withColumn("__tn", F.expr(norm_sql("__tv")))
+    sims = (
+        "transform(evals, __e -> round(try_divide("
+        f"{dot_sql('__tv', '__e.evv')}, __tn * __e.en), 6))"
+    )
     scored = (
         tr.crossJoin(F.broadcast(ev))
-        .select(
-            F.col(id_col),
-            F.col("evals"),
-            F.transform(
-                "evals",
-                lambda e: F.round(
-                    F.try_divide(
-                        dot(F.col("__v"), e["evv"]), F.col("__n") * e["en"]
-                    ),
-                    6,
-                ),
-            ).alias("sims"),
-        )
+        .select(F.col(id_col), F.col("evals"), F.expr(sims).alias("sims"))
         .withColumn("sim6", F.array_max("sims"))
     )
     return (

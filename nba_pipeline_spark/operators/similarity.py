@@ -37,10 +37,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import (
-    cosine,
     cosine_expr,
-    cosine_sql,
-    l2_distance,
+    dot_fixed_sql,
+    dot_sql,
+    norm_sql,
     sql_ident,
     to_double_array,
     to_double_array_sql,
@@ -185,8 +185,8 @@ def _assign_cells_literal(
     costs seconds of Py4J round-trips PER CALL (measured 2.05 s build
     + 3.8 s analysis for k=16, dims=64 vs 5 ms + 1.1 s in this form,
     bit-identical results) — and k-means pays it every iteration.
-    The aggregate/zip_with text mirrors vectors.l2_distance exactly
-    (same accumulation order → same rounded values).
+    The zip_with/aggregate fold accumulates left to right from 0.0
+    (the order the rounded distances depend on).
     """
     cells = sorted(cells, key=lambda c: int(c[0]))
 
@@ -237,48 +237,31 @@ def _plane_sql(vals: list[float]) -> str:
 
 
 def _dot_literal_sql(col_name: str, plane: list[float]) -> str:
-    # text mirror of _dot_literal: same zip_with/aggregate accumulation
+    # projection of a vector onto one literal plane: the zip_with/
+    # aggregate fold, accumulated left to right from 0.0
     return (
         f"aggregate(zip_with({col_name}, {_plane_sql(plane)}, (x,y)->x*y), "
         "cast(0.0 as double), (a,w)->a+w)"
     )
 
 
-def _dot_literal(v: Column | str, plane: list[float]) -> Column:
-    if isinstance(v, str):
-        return F.expr(_dot_literal_sql(v, plane))
-    lit = F.array(*[F.lit(x) for x in plane])
-    return F.aggregate(
-        F.zip_with(v, lit, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-
-
-def hyperplane_bucket(v: Column | str, planes: list[list[float]]) -> Column:
+def hyperplane_bucket(v: str, planes: list[list[float]]) -> Column:
     """Bucket id = sign bits of the plane projections, packed little-
     endian. The sign test uses the 6dp-rounded projection (NULL-safe:
     a NULL projection contributes bit 0 on both engines) so last-bit
     float divergence cannot flip a bucket.
 
-    Pass the vector column NAME (string form) wherever possible: it
-    renders the whole bucket as ONE parsed SQL expression instead of a
-    per-element F.lit / per-lambda Py4J forest — measured 2.7 s of
-    pure driver build time per embedding-LSH query in the Column form
-    (SCALE.md "literal forests are Py4J storms"). Values identical:
-    CASE WHEN NULL → ELSE 0 matches when().otherwise(0)."""
-    if isinstance(v, str):
-        bits = " + ".join(
-            f"(CASE WHEN round({_dot_literal_sql(v, plane)}, 6) >= 0 "
-            f"THEN {1 << b} ELSE 0 END)"
-            for b, plane in enumerate(planes)
-        )
-        return F.expr(f"CAST(({bits}) AS INT)")
-    bucket = F.lit(0)
-    for b, plane in enumerate(planes):
-        bit = F.when(F.round(_dot_literal(v, plane), 6) >= 0, F.lit(1 << b)).otherwise(
-            F.lit(0)
-        )
-        bucket = bucket + bit
-    return bucket.cast("int")
+    `v` is SQL text (a column name). The whole bucket is ONE parsed SQL
+    expression with the planes inlined as array literals; a per-element
+    F.lit / per-lambda Py4J forest measured 2.7 s of pure driver build
+    time per embedding-LSH query (SCALE.md "literal forests are Py4J
+    storms")."""
+    bits = " + ".join(
+        f"(CASE WHEN round({_dot_literal_sql(v, plane)}, 6) >= 0 "
+        f"THEN {1 << b} ELSE 0 END)"
+        for b, plane in enumerate(planes)
+    )
+    return F.expr(f"CAST(({bits}) AS INT)")
 
 
 def lsh_topk(
@@ -350,7 +333,7 @@ def lsh_topk_multiprobe(
             "v",
             "bucket",
             *[
-                F.round(_dot_literal("v", p), 6).alias(f"proj{b}")
+                F.expr(f"round({_dot_literal_sql('v', p)}, 6)").alias(f"proj{b}")
                 for b, p in enumerate(planes)
             ],
         )
@@ -433,10 +416,7 @@ def knn_join(
     Per-query top-k is a row_number window partitioned by query_id —
     parallelism = |queries|, never a global sort.
     """
-    from ..functions.vectors import dot as _dot
-    from ..functions.vectors import dot_fixed, norm
-
-    dot_fn = (lambda x, y: dot_fixed(x, y, dims)) if dims else _dot
+    dot = dot_fixed_sql("v", "qv", dims) if dims else dot_sql("v", "qv")
     # fan_out (r13): the |emb| x |queries| scoring below is narrow — a
     # single-row-group scan otherwise scores on one core regardless of
     # cluster width (guarded no-op at scale)
@@ -444,10 +424,10 @@ def knn_join(
 
     e = fan_out(emb).select(
         F.col(id_col), to_double_array(sql_ident(vec_col)).alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    ).withColumn("nrm", F.expr(norm_sql("v")))
     q = queries.select(
         F.col("query_id"), to_double_array(sql_ident("qv")).alias("qv")
-    ).withColumn("qnrm", norm(F.col("qv")))
+    ).withColumn("qnrm", F.expr(norm_sql("qv")))
     if n_bits is None:
         cand = e.crossJoin(F.broadcast(q))
     else:
@@ -460,10 +440,7 @@ def knn_join(
     scored = cand.filter(F.col(id_col) != F.col("query_id")).select(
         "query_id",
         F.col(id_col),
-        F.round(
-            F.try_divide(dot_fn(F.col("v"), F.col("qv")), F.col("nrm") * F.col("qnrm")),
-            6,
-        ).alias("sim6"),
+        F.expr(f"round(try_divide({dot}, nrm * qnrm), 6)").alias("sim6"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim6"), F.asc(id_col))
     return (
@@ -474,10 +451,7 @@ def knn_join(
 
 
 def int8_codes_sql(v: str) -> tuple[str, str]:
-    """SQL-text twin of `int8_codes` (r12, guide §1.2): the Column form
-    costs ~85 ms of py4j lambda construction per call at plan-build;
-    this is one string splice parsed in a single F.expr. `v` is SQL
-    text. Equivalence pinned by tests/test_dedup_similarity.py."""
+    """SQL text of `int8_codes` for splicing into larger expressions."""
     scale = f"(array_max(transform({v}, __ia -> abs(__ia))) / 127.0D)"
     codes = (
         f"CASE WHEN {scale} > 0 THEN "
@@ -487,46 +461,33 @@ def int8_codes_sql(v: str) -> tuple[str, str]:
     return codes, scale
 
 
-def int8_codes(v: Column | str) -> tuple[Column, Column]:
+def int8_codes(v: str) -> tuple[Column, Column]:
     """(codes, scale): symmetric scale-only int8 quantization of a
     double array — code_i = floor(x_i/s + 0.5), s = max|x|/127 per
     vector. No affine offset (an offset breaks dot-product ranking);
     every step is one correctly-rounded IEEE op on exactly-derived
     doubles, so codes are bit-identical cross-engine. The scan-side
     scheme of the quantized ANN family (storage-side quantization with
-    per-vector (min,max) lives in q_embed_quantize). Accepts SQL text
-    for the hot plan-build path (one parse, see int8_codes_sql)."""
-    if isinstance(v, str):
-        codes_s, scale_s = int8_codes_sql(v)
-        return F.expr(codes_s), F.expr(scale_s)
-    scale = F.array_max(F.transform(v, F.abs)) / F.lit(127.0)
-    codes = F.when(
-        scale > 0,
-        F.transform(v, lambda x: F.floor(x / scale + F.lit(0.5)).cast("bigint")),
-    ).otherwise(F.transform(v, lambda x: F.lit(0).cast("bigint")))
-    return codes, scale
+    per-vector (min,max) lives in q_embed_quantize). `v` is SQL text;
+    each output is one parse."""
+    codes_s, scale_s = int8_codes_sql(v)
+    return F.expr(codes_s), F.expr(scale_s)
 
 
 def quantized_dot_sql(codes_a: str, codes_b: str) -> str:
-    """SQL-text twin of `quantized_dot` — identical zip-sum tree, one
-    parse instead of ~35 ms of py4j lambda construction."""
+    """SQL text of `quantized_dot` for splicing into larger
+    expressions."""
     return (
         f"aggregate(zip_with({codes_a}, {codes_b}, (__qa, __qb) -> __qa * __qb), "
         f"cast(0 as bigint), (__qacc, __qx) -> __qacc + __qx)"
     )
 
 
-def quantized_dot(codes_a: Column | str, codes_b: Column | str) -> Column:
+def quantized_dot(codes_a: str, codes_b: str) -> Column:
     """BIGINT zip-sum of two code arrays — the integer-exact core of
     the asymmetric quantized score (codes_a · codes_b) · s_a · s_b.
-    Accepts SQL text for the hot plan-build path (one parse)."""
-    if isinstance(codes_a, str) and isinstance(codes_b, str):
-        return F.expr(quantized_dot_sql(codes_a, codes_b))
-    return F.aggregate(
-        F.zip_with(codes_a, codes_b, lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    Inputs are SQL text; one parse."""
+    return F.expr(quantized_dot_sql(codes_a, codes_b))
 
 
 def build_ivf_quantized_index(
@@ -822,22 +783,18 @@ def ivf_quantized_topk(
 
 
 def fixed_point_sql(v: str, bits: int = 20) -> str:
-    """SQL-text twin of `fixed_point` — identical grid expression, one
-    parse instead of ~25 ms of py4j lambda construction per call."""
+    """SQL text of `fixed_point` for splicing into larger expressions."""
     scale = repr(float(1 << bits))
     return f"transform({v}, __fp -> cast(floor(__fp * {scale}D + 0.5D) as bigint))"
 
 
-def fixed_point(v: Column | str, bits: int = 20) -> Column:
+def fixed_point(v: str, bits: int = 20) -> Column:
     """array<bigint> fixed-point grid of a double array: floor(x *
     2^bits + 0.5) — one correctly-rounded multiply + floor per element,
     bit-identical cross-engine (the int8_codes argument, without the
     per-vector scale so values stay COMPARABLE across vectors).
-    Accepts SQL text for the hot plan-build path (one parse)."""
-    if isinstance(v, str):
-        return F.expr(fixed_point_sql(v, bits))
-    scale = F.lit(float(1 << bits))
-    return F.transform(v, lambda x: F.floor(x * scale + F.lit(0.5)).cast("bigint"))
+    `v` is SQL text; one parse."""
+    return F.expr(fixed_point_sql(v, bits))
 
 
 def pq_train_codebooks(
@@ -1000,7 +957,7 @@ def pq_encode(
     )
 
 
-def _subvectors_dyn(v: Column | str, m: int) -> Column:
+def _subvectors_dyn(v: str, m: int) -> Column:
     """m contiguous slices with the sub-dim derived IN-PLAN from the
     array length (size(v)/m) — no driver-side dims probe on the hot
     encode path. Divisibility (size(v) % m == 0) is validated by the
@@ -1008,16 +965,11 @@ def _subvectors_dyn(v: Column | str, m: int) -> Column:
     vector of a DIFFERENT length than the codewords yields NULL
     zip_with distances downstream, which the nulls-LAST argmin windows
     refuse to promote to a code (the row surfaces no assignment rather
-    than an arbitrary one). Accepts SQL text for the hot plan-build
-    path (one parse instead of ~60 ms of per-slice py4j calls)."""
-    if isinstance(v, str):
-        dsub = f"cast((size({v}) / {m}) as int)"
-        slices = ", ".join(
-            f"slice({v}, {s} * {dsub} + 1, {dsub})" for s in range(m)
-        )
-        return F.expr(f"array({slices})")
-    dsub = (F.size(v) / F.lit(m)).cast("int")
-    return F.array(*[F.slice(v, s * dsub + 1, dsub) for s in range(m)])
+    than an arbitrary one). `v` is SQL text; one parse for all m
+    slices."""
+    dsub = f"cast((size({v}) / {m}) as int)"
+    slices = ", ".join(f"slice({v}, {s} * {dsub} + 1, {dsub})" for s in range(m))
+    return F.expr(f"array({slices})")
 
 
 def pruned_vector_fetch(e: DataFrame, id_col: str, ids: list) -> DataFrame:

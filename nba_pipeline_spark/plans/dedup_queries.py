@@ -489,11 +489,6 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.partitioning import plan_size_bytes
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # NB: the pair dot inside embedding_neardup_pairs is the HOF fold
-    # regardless of dims — the threshold filter is pushed into the
-    # interpreted join condition where the unrolled chain is ~4x
-    # slower (see the operator docstring; results bit-identical).
-    #
     # broadcast_build only when the whole corpus fits an executor (same
     # 64 MB bar the session sets for dim-table auto-broadcast): the
     # broadcast plan keeps probe parallelism at fan_out width with zero
@@ -504,7 +499,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     small = plan_size_bytes(emb) <= (64 << 20)
     return OD.embedding_neardup_pairs(
         emb, "embedding", "vec_id", block_cols=["label"], threshold=0.3,
-        dims=64, broadcast_build=small,
+        broadcast_build=small,
     )
 
 

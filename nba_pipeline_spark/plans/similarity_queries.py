@@ -6,7 +6,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import (
-    cosine,
     cosine_expr,
     to_double_array,
     to_double_array_sql,

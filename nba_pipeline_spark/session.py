@@ -32,13 +32,9 @@ _RUNTIME_CONF = {
     # reader rejects; read as long and convert at the source boundary
     # (sources.registry normalizes back to TimestampType, micros).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # The SQL-text expression twins (functions/vectors.py, operators/
-    # bpe.py::_sql_str) escape string literals assuming the DEFAULT
-    # parser mode (backslash IS an escape char). A driver-provided
-    # Hive-compat session (escapedStringLiterals=true) would silently
-    # change how \' and \\ parse — pin the mode the twins were
-    # differential-tested under (ADVICE r12).
-    "spark.sql.parser.escapedStringLiterals": "false",
+    # spark.sql.parser.escapedStringLiterals is deliberately NOT set:
+    # SQL text built at plan time splices string values only through
+    # operators/bpe.py::_sql_str, which parses the same in both modes.
 }
 
 
@@ -55,7 +51,7 @@ _RUNTIME_CONF = {
 #
 # A session enters the memo only when EVERY key took (set without
 # raising and read back equal): results depend on each pin, e.g. the
-# parser mode the SQL-text twins were tested under. Keys that did not
+# UTC session time zone the oracles assume. Keys that did not
 # take are remembered per session and are the only ones the next call
 # re-applies.
 _TUNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()

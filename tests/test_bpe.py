@@ -124,7 +124,8 @@ def test_randomized_corpora_match_reference(spark):
 def test_merge_pair_sql_twin_matches_column_builder(spark):
     # r12: the per-round fold is built as ONE SQL parse (merge_pair_sql)
     # instead of a py4j lambda chain — pin bit-identical results across
-    # greedy-overlap, unicode, quote/backslash symbols, and empties
+    # greedy-overlap, unicode, quote/backslash symbols, and empties, in
+    # BOTH string-literal parser modes (the session no longer pins one)
     cases = [
         ("aaaa", "a", "a"),
         ("abab", "a", "b"),
@@ -134,21 +135,37 @@ def test_merge_pair_sql_twin_matches_column_builder(spark):
         ("中中a", "中", "中"),
         ("a'b\\c", "'", "b"),
         ("a'b\\c", "\\", "c"),
+        ("x'\\y", "'", "\\"),  # merged symbol holds both
         ("qq", "q", "x"),  # no match anywhere
     ]
-    for word, left, right in cases:
-        syms = F.split(F.lit(word), "(?!$)")
-        df = spark.range(1).select(
-            bpe.merge_pair(syms, left, right).alias("col_form"),
-            F.expr(
-                bpe.merge_pair_sql(
-                    "split('"
-                    + word.replace("\\", "\\\\").replace("'", "\\'")
-                    + "', '(?!$)')",
-                    left,
-                    right,
-                )
-            ).alias("sql_form"),
-        )
-        row = df.collect()[0]
-        assert row["col_form"] == row["sql_form"], (word, left, right)
+    # each word travels as a column, so only merge_pair_sql's own
+    # literals meet the parser
+    words = spark.createDataFrame(
+        [tuple(w for w, _, _ in cases)],
+        ", ".join(f"w{i} string" for i in range(len(cases))),
+    )
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.getAll.get(key)
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(key, mode)
+            cols = []
+            for i, (_, left, right) in enumerate(cases):
+                syms = F.split(F.col(f"w{i}"), "(?!$)")
+                cols += [
+                    bpe.merge_pair(syms, left, right).alias(f"col{i}"),
+                    F.expr(
+                        bpe.merge_pair_sql(f"split(w{i}, '(?!$)')", left, right)
+                    ).alias(f"sql{i}"),
+                ]
+            row = words.select(*cols).collect()[0]
+            for i, (word, left, right) in enumerate(cases):
+                got = row[f"sql{i}"]
+                assert row[f"col{i}"] == got, (mode, word, left, right)
+                if left + right in word:
+                    assert left + right in got, (mode, word, left, right)
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)

@@ -12,7 +12,7 @@ from nba_pipeline_spark.operators.dedup import (
     simhash16,
 )
 from nba_pipeline_spark.operators.similarity import brute_force_topk, ivf_topk
-from nba_pipeline_spark.functions.vectors import to_double_array
+from nba_pipeline_spark.functions.vectors import to_double_array, to_double_array_sql
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -76,7 +76,7 @@ def _emb(spark):
 
 def test_brute_force_topk_finds_planted_duplicate(spark):
     emb = _emb(spark)
-    query = emb.filter(F.col("vec_id") == 5).select(to_double_array(F.col("embedding")).alias("qv"))
+    query = emb.filter(F.col("vec_id") == 5).select(to_double_array("embedding").alias("qv"))
     others = emb.filter(F.col("vec_id") != 5)
     top = brute_force_topk(others, query, "vec_id", "embedding", 3).collect()
     assert top[0]["vec_id"] == 100 and abs(top[0]["sim"] - 1.0) < 1e-9
@@ -85,7 +85,7 @@ def test_brute_force_topk_finds_planted_duplicate(spark):
 def test_ivf_results_subset_of_brute_force(spark):
     emb = _emb(spark)
     ivf = {r["vec_id"] for r in ivf_topk(emb, "vec_id", "embedding", 5, 3, n_cells=2).collect()}
-    query = emb.filter(F.col("vec_id") == 5).select(to_double_array(F.col("embedding")).alias("qv"))
+    query = emb.filter(F.col("vec_id") == 5).select(to_double_array("embedding").alias("qv"))
     brute = {r["vec_id"] for r in brute_force_topk(emb.filter(F.col("vec_id") != 5), query, "vec_id", "embedding", 21).collect()}
     assert ivf and ivf.issubset(brute)
     assert 100 in ivf  # the planted dup shares the query's cell by construction
@@ -277,7 +277,7 @@ def test_multiprobe_lsh_recall_dominates_single_probe(spark):
         for r in brute_force_topk(
             emb.filter(F.col("vec_id") != 0),
             emb.filter(F.col("vec_id") == 0).select(
-                to_double_array(F.col("embedding")).alias("qv")
+                to_double_array("embedding").alias("qv")
             ),
             "vec_id",
             "embedding",
@@ -434,7 +434,7 @@ def test_knn_join_exact_matches_per_query_brute_force(spark):
     # per-query result equals the single-probe brute force
     for qid in (3, 5):
         q = emb.filter(F.col("vec_id") == qid).select(
-            to_double_array(F.col("embedding")).alias("qv")
+            to_double_array("embedding").alias("qv")
         )
         brute = [
             r["vec_id"]
@@ -448,7 +448,7 @@ def test_knn_join_exact_matches_per_query_brute_force(spark):
 
 def test_knn_join_bucketed_subset_of_exact(spark):
     emb = _emb(spark).withColumn(
-        "embedding", to_double_array(F.col("embedding"))
+        "embedding", to_double_array("embedding")
     )
     queries = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
@@ -803,7 +803,7 @@ def test_quantized_ann_recall_vs_exact(spark):
 
     SF = "/root/testdata/sf0.001"
     emb = load_table(spark, SF, "embeddings")
-    v = to_double_array(F.col("embedding"))
+    v = to_double_array("embedding")
     qv = emb.filter(F.col("vec_id") == 0).select(v.alias("qv"))
     exact = [
         r["vec_id"]
@@ -848,13 +848,13 @@ def test_quantized_rerank_is_exact_when_pool_covers(spark):
         quantized_dot,
     )
 
-    v = to_double_array(F.col("embedding"))
+    v = to_double_array("embedding")
     qv = emb.filter(F.col("vec_id") == 0).select(v.alias("qv"))
     exact = brute_force_topk(
         emb.filter(F.col("vec_id") != 0), qv, "vec_id", "embedding", 10
     ).collect()
 
-    codes, scale = int8_codes(v)
+    codes, scale = int8_codes(to_double_array_sql("embedding"))
     q = emb.select("vec_id", v.alias("v"), codes.alias("codes"), scale.alias("s"))
     qrow = q.filter(F.col("vec_id") == 0).select(
         F.col("codes").alias("qcodes"), F.col("s").alias("qs"), F.col("v").alias("qv")
@@ -864,16 +864,16 @@ def test_quantized_rerank_is_exact_when_pool_covers(spark):
         .crossJoin(F.broadcast(qrow))
         .select(
             "vec_id", "v", "qv",
-            (quantized_dot(F.col("codes"), F.col("qcodes"))
+            (quantized_dot("codes", "qcodes")
              * (F.col("s") * F.col("qs"))).alias("qscore"),
         )
         .orderBy(F.col("qscore").desc_nulls_last(), F.col("vec_id").asc())
         .limit(50)
     )
-    from nba_pipeline_spark.functions.vectors import cosine
+    from nba_pipeline_spark.functions.vectors import cosine_expr
 
     rer = (
-        pool.select("vec_id", F.round(cosine(F.col("v"), F.col("qv")), 6).alias("sim6"))
+        pool.select("vec_id", F.round(cosine_expr("v", "qv"), 6).alias("sim6"))
         .orderBy(F.desc("sim6"), F.asc("vec_id"))
         .limit(10)
         .select("vec_id", F.round(F.col("sim6"), 4).alias("sim"))
@@ -919,17 +919,17 @@ def test_ivf_quantized_index_prunes_segments(spark, tmp_path):
         spark, emb, "vec_id", "embedding", 5, 10, cpath, kpath, pool=300
     ).collect()
     # ground truth: exact cosine within query 5's assigned cell
-    e = emb.select("vec_id", to_double_array(F.col("embedding")).alias("v"))
+    e = emb.select("vec_id", to_double_array("embedding").alias("v"))
     cents = M.read_snapshot(spark, cpath)
     assigned = assign_cells(e, cents, "vec_id")
     qcid = assigned.filter(F.col("vec_id") == 5).collect()[0]["cid"]
     cell = assigned.filter((F.col("cid") == qcid) & (F.col("vec_id") != 5))
-    from nba_pipeline_spark.functions.vectors import cosine
+    from nba_pipeline_spark.functions.vectors import cosine_expr
 
     qv = e.filter(F.col("vec_id") == 5).select(F.col("v").alias("qv"))
     truth = (
         cell.crossJoin(F.broadcast(qv))
-        .select("vec_id", F.round(cosine(F.col("v"), F.col("qv")), 6).alias("sim6"))
+        .select("vec_id", F.round(cosine_expr("v", "qv"), 6).alias("sim6"))
         .orderBy(F.desc("sim6"), F.asc("vec_id"))
         .limit(10)
         .select("vec_id", F.round(F.col("sim6"), 4).alias("sim"))
@@ -1094,7 +1094,7 @@ def test_pq_index_recall_floor_and_layout(spark, tmp_path):
     # deterministic recall floor (everything integer -> exact replay)
     qid = 5
     q = emb.filter(F.col("vec_id") == qid).select(
-        to_double_array(F.col("embedding")).alias("qv")
+        to_double_array("embedding").alias("qv")
     )
     exact = {
         r[0]
@@ -1236,7 +1236,7 @@ def test_ivfpq_index_prunes_and_matches_exact_in_cell(spark, tmp_path):
         spark, emb, "vec_id", "embedding", 7, 10, 4, cp, cbp, kp, pool=300
     ).collect()
     # ground truth: exact cosine within query 7's assigned cell
-    e = emb.select("vec_id", to_double_array(F.col("embedding")).alias("v"))
+    e = emb.select("vec_id", to_double_array("embedding").alias("v"))
     cents = M.read_snapshot(spark, cp)
     assigned = SIM.assign_cells(e, cents, "vec_id")
     qcid = assigned.filter(F.col("vec_id") == 7).collect()[0]["cid"]
@@ -1271,7 +1271,7 @@ def test_pq_kmeans_trainer_same_layout_better_recall(spark, tmp_path):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     qid = 5
     q = emb.filter(F.col("vec_id") == qid).select(
-        to_double_array(F.col("embedding")).alias("qv")
+        to_double_array("embedding").alias("qv")
     )
     exact = {
         r[0]
@@ -1324,7 +1324,7 @@ def test_ivfpq_nprobe_widens_recall(spark, tmp_path):
     SIM.build_ivfpq_index(spark, emb, "vec_id", "embedding", n_cells, 4, 16, cp, cbp, kp)
     qid = 9
     q = emb.filter(F.col("vec_id") == qid).select(
-        to_double_array(F.col("embedding")).alias("qv")
+        to_double_array("embedding").alias("qv")
     )
     exact = {
         r[0]
@@ -1763,22 +1763,52 @@ def test_propagate_index_deletes_dv(spark, tmp_path):
 
 
 def test_vector_sql_twins_match_column_builders(spark):
-    """r12: the SQL-text twins (cosine_expr / to_double_array(str) /
-    dot_sql) must produce bit-identical results to the Column/lambda
-    builders on every edge shape — NULL vectors, zero norms, empty
-    arrays, length mismatches, float inputs."""
+    """r12: the SQL-text builders (cosine_expr / to_double_array /
+    dot_sql / norm_sql / dot_fixed_sql) must produce bit-identical
+    results to the Column/lambda builders they replaced on every edge
+    shape — NULL vectors, zero norms, empty arrays, length mismatches,
+    float inputs."""
+    import pytest
     from pyspark.sql import functions as F
 
+    from nba_pipeline_spark.functions.exprs import let
     from nba_pipeline_spark.functions.vectors import (
-        cosine,
         cosine_expr,
         cosine_sql,
-        dot,
+        dot_fixed_sql,
         dot_sql,
+        norm_sql,
         sql_ident,
         to_double_array,
         to_double_array_sql,
     )
+
+    # Column/lambda builders exactly as they were before the SQL-text-only
+    # rewrite
+    def old_tda(c):
+        return F.transform(c, lambda x: x.cast("double"))
+
+    def old_dot(a, b):
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+        )
+
+    def old_dot_fixed(a, b, dims):
+        acc = F.lit(0.0)
+        for i in range(dims):
+            acc = acc + a.getItem(i) * b.getItem(i)
+        return acc
+
+    def old_norm(a):
+        return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+    def old_cosine(a, b):
+        return let(
+            a,
+            lambda aa: let(
+                b, lambda bb: F.try_divide(old_dot(aa, bb), old_norm(aa) * old_norm(bb))
+            ),
+        )
 
     rows = [
         ([1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),
@@ -1788,46 +1818,65 @@ def test_vector_sql_twins_match_column_builders(spark):
         ([], []),                               # empty arrays
         ([1.0, 2.0], [1.0, 2.0, 3.0]),          # length mismatch
     ]
-    df = spark.createDataFrame(rows, "a array<float>, b array<float>")
-    old = df.select(
-        cosine(
-            to_double_array(F.col("a")), to_double_array(F.col("b"))
-        ).alias("c"),
-        dot(
-            to_double_array(F.col("a")), to_double_array(F.col("b"))
-        ).alias("d"),
-        to_double_array(F.col("a")).alias("ta"),
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(rows)],
+        "i int, a array<float>, b array<float>",
+    )
+    oa, ob = old_tda(F.col("a")), old_tda(F.col("b"))
+    ta, tb = to_double_array_sql(sql_ident("a")), to_double_array_sql(sql_ident("b"))
+    old = df.orderBy("i").select(
+        old_cosine(oa, ob).alias("c"),
+        old_dot(oa, ob).alias("d"),
+        old_norm(oa).alias("n"),
+        oa.alias("ta"),
     ).collect()
-    new = df.select(
-        cosine_expr(
-            to_double_array_sql(sql_ident("a")),
-            to_double_array_sql(sql_ident("b")),
-        ).alias("c"),
-        F.expr(
-            dot_sql(
-                to_double_array_sql(sql_ident("a")),
-                to_double_array_sql(sql_ident("b")),
-            )
-        ).alias("d"),
+    new = df.orderBy("i").select(
+        cosine_expr(ta, tb).alias("c"),
+        F.expr(dot_sql(ta, tb)).alias("d"),
+        F.expr(norm_sql(ta)).alias("n"),
         to_double_array(sql_ident("a")).alias("ta"),
     ).collect()
     assert [tuple(r) for r in old] == [tuple(r) for r in new]
+
+    # dot_fixed_sql at the full rows' width (3): equal to the Column
+    # chain and to the HOF fold wherever both sides are 3 long or NULL;
+    # a shorter side fails the subscript (ANSI INVALID_ARRAY_INDEX)
+    # exactly as the Column chain did
+    full = [
+        i
+        for i, (a, b) in enumerate(rows)
+        if a is None or b is None or len(a) == len(b) == 3
+    ]
+    got = df.filter(F.col("i").isin(full)).orderBy("i").select(
+        old_dot_fixed(oa, ob, 3).alias("o"),
+        F.expr(dot_fixed_sql(ta, tb, 3)).alias("n"),
+    ).collect()
+    assert [(r["o"], r["n"]) for r in got] == [(new[i]["d"],) * 2 for i in full]
+
+    for i in sorted(set(range(len(rows))) - set(full)):
+        one = df.filter(F.col("i") == i)
+        for c in (old_dot_fixed(oa, ob, 3), F.expr(dot_fixed_sql(ta, tb, 3))):
+            with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
+                one.select(c).collect()
+
     # plain-name form over double arrays (the rerank call shape)
     dd = spark.createDataFrame(
         [([1.0, 2.0], [2.0, 1.0]), (None, [1.0, 0.0])],
         "v array<double>, qv array<double>",
     )
-    o = dd.select(cosine(F.col("v"), F.col("qv")).alias("c")).collect()
+    o = dd.select(old_cosine(F.col("v"), F.col("qv")).alias("c")).collect()
     n = dd.select(cosine_expr("v", "qv").alias("c")).collect()
     assert [r["c"] for r in o] == [r["c"] for r in n]
     # text is stable enough to compose (no stray lambda-name capture)
     assert "__ca" in cosine_sql("v", "qv") and "0.0D" in dot_sql("v", "qv")
+    assert dot_fixed_sql("v", "qv", 2) == "0.0D + v[0] * qv[0] + v[1] * qv[1]"
+
 
 def test_quantizer_sql_twins_match_column_builders(spark):
-    """r12: the PQ/quantizer SQL-text twins (int8_codes(str),
-    quantized_dot(str), fixed_point(str), _subvectors_dyn(str), the
-    L2-d6 and affine-quantize texts) must be bit-identical to the
-    Column/lambda builders on every edge shape — NULLs, zero vectors,
+    """r12: the PQ/quantizer SQL-text builders (int8_codes,
+    quantized_dot, fixed_point, _subvectors_dyn, the L2-d6 and
+    affine-quantize texts) must be bit-identical to the Column/lambda
+    builders they replaced on every edge shape — NULLs, zero vectors,
     empty arrays, NaN, negative zero, length mismatches, NULL
     elements."""
     from pyspark.sql import functions as F

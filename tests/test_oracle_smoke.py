@@ -1,8 +1,10 @@
 """Default-gate oracle parity: the registry queries whose iterative
-operators run on the driver-local tier at test scale, compared with
-their DuckDB oracles exactly as tools/local_verify.py compares them
-(row count, columns, order-insensitive values, bit-exact floats). The
-full sweep stays in tools/local_verify.py and the soak set."""
+operators run on the driver-local tier at test scale, and one query
+per SQL-text vector builder call site (embedding near-dup, semantic
+decontamination, sign-LSH, SemDeDup, kNN join), compared with their
+DuckDB oracles exactly as tools/local_verify.py compares them (row
+count, columns, order-insensitive values, bit-exact floats). The full
+sweep stays in tools/local_verify.py and the soak set."""
 
 from __future__ import annotations
 
@@ -18,7 +20,17 @@ from local_verify import compare, duck_con  # noqa: E402
 
 from nba_pipeline_spark.plans.queries import REGISTRY  # noqa: E402
 
-QUERIES = ["q_pagerank", "q_dedup_cluster_star", "q_dedup_keep_best"]
+QUERIES = [
+    "q_pagerank",
+    "q_dedup_cluster_star",
+    "q_dedup_keep_best",
+    "q_dedup_embedding",
+    "q_decontaminate_semantic",
+    "q_dedup_embedding_lsh",
+    "q_semdedup",
+    "q_knn_join",
+    "q_ann_lsh",
+]
 
 
 @pytest.fixture(scope="module")

@@ -34,9 +34,6 @@ def test_tune_applies_runtime_conf(spark):
     S.retune(spark)
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    # parser mode pinned: the SQL-text expression twins escape literals
-    # assuming backslash-escape semantics (ADVICE r12)
-    assert spark.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
 
 
 def test_failed_tune_is_not_memoized():
@@ -89,7 +86,7 @@ def test_tune_memoizes_only_when_every_key_took():
     # a pin that sets without raising but reads back different (e.g. a
     # driver-fixed value) keeps the session out of the memo, and the next
     # call re-applies that key alone
-    key = "spark.sql.parser.escapedStringLiterals"
+    key = "spark.sql.legacy.parquet.nanosAsLong"
 
     class _Conf:
         def __init__(self):

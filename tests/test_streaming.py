@@ -869,10 +869,10 @@ def test_ann_cdf_maintain_sink_folds_merges_and_deletes(spark, tmp_path):
     # independent truth: assignment of the FINAL snapshot
     cents = M.read_snapshot(spark, cp).select("cid", "cv")
     e = M.read_snapshot(spark, ep).select(
-        "vec_id", SIM.to_double_array(F.col("embedding")).alias("v")
+        "vec_id", SIM.to_double_array("embedding").alias("v")
     )
     assigned = SIM.assign_cells(e, cents, "vec_id")
-    codes, scale = SIM.int8_codes(F.col("v"))
+    codes, scale = SIM.int8_codes("v")
     want = {
         int(r["vec_id"]): (int(r["cid"]), float(r["s"]), list(r["codes"]))
         for r in assigned.select(
@@ -1065,10 +1065,10 @@ def test_ann_cdf_apply_crash_injection_soak(spark, tmp_path, monkeypatch):
         )
     cents = M.read_snapshot(spark, cp).select("cid", "cv")
     e = M.read_snapshot(spark, ep).select(
-        "vec_id", SIM.to_double_array(F.col("embedding")).alias("v")
+        "vec_id", SIM.to_double_array("embedding").alias("v")
     )
     assigned = SIM.assign_cells(e, cents, "vec_id")
-    codes, scale = SIM.int8_codes(F.col("v"))
+    codes, scale = SIM.int8_codes("v")
     want = {
         int(r["vec_id"]): (int(r["cid"]), float(r["s"]), list(r["codes"]))
         for r in assigned.select(

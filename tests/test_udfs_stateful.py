@@ -14,7 +14,7 @@ from nba_pipeline_spark.functions.udfs import (
     register_parity_udfs,
     zscore_per_group,
 )
-from nba_pipeline_spark.functions.vectors import norm, to_double_array
+from nba_pipeline_spark.functions.vectors import norm_sql
 from nba_pipeline_spark.operators.windows import running_count_with_reset
 from nba_pipeline_spark.streaming.stateful import streaming_period_counter
 from conftest import SF_DIR
@@ -25,7 +25,7 @@ def test_pandas_udf_normalize(spark):
 
     emb = load_table(spark, SF_DIR, "embeddings").limit(50)
     out = emb.select(normalize_embedding(F.col("embedding")).alias("nv"))
-    norms = [r["n"] for r in out.select(norm(F.col("nv")).alias("n")).collect()]
+    norms = [r["n"] for r in out.select(F.expr(norm_sql("nv")).alias("n")).collect()]
     assert all(abs(n - 1.0) < 1e-9 for n in norms)
 
 
