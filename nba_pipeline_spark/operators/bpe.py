@@ -256,7 +256,8 @@ def apply_merges(
 
 def merges_df(spark, merges: list[Merge]) -> DataFrame:
     """Merge list as a DataFrame (rank, left, right, merged, cnt)."""
-    return spark.createDataFrame(
+    return rows_frame(
+        spark,
         [(m.rank, m.left, m.right, m.merged, m.count) for m in merges],
         "rank int, left string, right string, merged string, cnt bigint",
     )

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .partitioning import rows_frame
+
 
 def lookup_join(
     df: DataFrame,
@@ -33,9 +35,7 @@ def lookup_join(
     dict becomes a tiny DataFrame broadcast to every executor — constant
     cost at 100 TB, and the probe stays in whole-stage codegen.
     """
-    lookup = spark.createDataFrame(
-        [(k, v) for k, v in mapping.items()], schema=[key_name, value_col]
-    )
+    lookup = rows_frame(spark, list(mapping.items()), [key_name, value_col])
     out = df.join(
         F.broadcast(lookup), on=df[key_col] == lookup[key_name], how=how
     ).drop(key_name)

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources import manifest as M
+from .partitioning import rows_frame
 
 
 def delta_contributions(
@@ -182,7 +183,7 @@ def matview_sink(
         d = delta_contributions(delta, group_cols, sum_cols)
         cur = M.current_version(spark, mv_path)
         if cur is None:
-            mv = spark.createDataFrame([], _mv_schema(d, group_cols, sum_cols))
+            mv = rows_frame(spark, [], _mv_schema(d, group_cols, sum_cols))
         else:
             mv = M.read_snapshot(spark, mv_path)
         folded = fold_delta(mv, d, group_cols, sum_cols)
@@ -396,8 +397,8 @@ def maintain_join_matview(
                     state_path,
                     lambda tag: M.commit_replace(
                         spark, state_path,
-                        spark.createDataFrame(
-                            [(f_v, d_v)], "f_v long, d_v long"
+                        rows_frame(
+                            spark, [(f_v, d_v)], "f_v long, d_v long"
                         ),
                         tag=tag,
                     ),
@@ -453,8 +454,8 @@ def maintain_join_matview(
             # contract, so the repair is too.
             M.commit_replace(
                 spark, state_path,
-                spark.createDataFrame(
-                    [(f_v1, d_v1)], "f_v long, d_v long"
+                rows_frame(
+                    spark, [(f_v1, d_v1)], "f_v long, d_v long"
                 ),
             )
             return True
@@ -499,7 +500,7 @@ def fold_delta_partitioned(
     g = group_cols[0]
     cur = M.current_version(spark, mv_path)
     if cur is None:
-        base = spark.createDataFrame([], _mv_schema(d, group_cols, sum_cols))
+        base = rows_frame(spark, [], _mv_schema(d, group_cols, sum_cols))
     else:
         touched = [r[g] for r in d.select(g).distinct().collect()]
         if not touched:

@@ -94,7 +94,11 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 # (the pinned pair list, the aggregated edge list, the word table) has
 # at most `local_rows_max(spark)` rows, the operator collects it in ONE
 # job and runs the same round-synchronous arithmetic in plain Python on
-# the driver, handing the result back through `rows_frame`.
+# the driver, handing the result back through `rows_frame`. That helper
+# is the package's only builder of a frame from driver-side rows (the
+# loop results here, the pipeline fixtures, lookup dicts, manifest
+# metadata tables and empty typed frames): it ships Arrow batches, so
+# no Python worker process ever starts for a local frame.
 #
 # Scale safety: the threshold (default 100k rows, a few MB of driver
 # memory; conf key spark.nba_pipeline.iterative.narrowRowsMax) bounds
@@ -129,15 +133,34 @@ def collect_if_small(df: DataFrame) -> list | None:
     return rows if len(rows) <= cap else None
 
 
-def rows_frame(spark, rows: list, schema: StructType) -> DataFrame:
-    """``spark.createDataFrame(rows, schema)`` shipped as Arrow batches.
-    The JVM builds the frame from the batches itself; a plain Python
-    list would travel as a pickled RDD whose re-serialization starts
-    Python worker processes on first use (measured on a 4-core VM: ~200 MB
-    more peak RSS on perfbench's llm_curation, which otherwise starts no
-    Python workers)."""
+def rows_frame(spark, rows: list, schema: StructType | str | list[str]) -> DataFrame:
+    """A frame of driver-side ``rows``, built as ``createDataFrame``
+    builds it but shipped as Arrow batches: the package's only builder
+    of a local frame.
+
+    ``schema`` is a ``StructType``, a DDL string, or a list of column
+    names; with names the types are inferred from the values exactly
+    as ``createDataFrame`` infers them. Rows (tuples, ``Row``s, dicts)
+    go through ``createDataFrame``'s own converters, so the values are
+    the same too: strings are coerced, and naive datetimes are read in
+    the Python process's local time zone. The JVM builds a
+    ``LocalRelation`` from the batches itself. A plain Python list,
+    empty or not, would travel as a pickled RDD whose re-serialization
+    starts Python worker processes (measured on a 4-core VM: ~200 MB
+    more peak RSS on perfbench's llm_curation, and 2.5 s of worker CPU
+    per traced lake_cold pass)."""
     import pyarrow as pa
+    from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in schema.fields]
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    elif not isinstance(schema, StructType):
+        names = schema
+        schema = spark._inferSchemaFromList(rows, names=names)
+        for i, name in enumerate(names):
+            schema.fields[i].name = schema.names[i] = name
+    to_tuple = T._create_converter(schema)
+    internal = [schema.toInternal(to_tuple(r)) for r in rows]
+    cols = [list(c) for c in zip(*internal)] if internal else [[] for _ in schema.fields]
     return spark.createDataFrame(pa.table(cols, schema=to_arrow_schema(schema)), schema)

@@ -45,6 +45,7 @@ from ..functions.vectors import (
     to_double_array,
     to_double_array_sql,
 )
+from .partitioning import rows_frame
 
 
 def _kmeans_centroid_lists(
@@ -110,7 +111,8 @@ def kmeans_centroids(
     feed to `assign_cells` / `semdedup_pairs(centroids=...)` on every
     ingest batch without retraining)."""
     centroids = _kmeans_centroid_lists(emb, id_col, vec_col, k, iterations)
-    return emb.sparkSession.createDataFrame(
+    return rows_frame(
+        emb.sparkSession,
         [(cid, cv) for cid, cv in enumerate(centroids)],
         "cid int, cv array<double>",
     )
@@ -344,7 +346,7 @@ def lsh_topk_multiprobe(
     qb = qrow["bucket"]
     by_margin = sorted(range(n_bits), key=lambda b: (abs(qrow[f"proj{b}"] or 0.0), b))
     probes = [qb] + [qb ^ (1 << b) for b in by_margin[: max(0, n_probe - 1)]]
-    q = emb.sparkSession.createDataFrame([(list(qrow["v"]),)], "qv array<double>")
+    q = rows_frame(emb.sparkSession, [(list(qrow["v"]),)], "qv array<double>")
     cand = bucketed.filter(
         F.col("bucket").isin(probes) & (F.col(id_col) != query_id)
     ).crossJoin(F.broadcast(q))
@@ -830,7 +832,7 @@ def pq_train_codebooks(
         for j, r in enumerate(rows)
         for s in range(m)
     ]
-    return spark.createDataFrame(data, "sub int, code int, cw array<double>")
+    return rows_frame(spark, data, "sub int, code int, cw array<double>")
 
 
 def pq_train_codebooks_kmeans(
@@ -878,7 +880,7 @@ def pq_train_codebooks_kmeans(
         data.extend(
             (s, j, [float(x) for x in cw]) for j, cw in enumerate(cents)
         )
-    return spark.createDataFrame(data, "sub int, code int, cw array<double>")
+    return rows_frame(spark, data, "sub int, code int, cw array<double>")
 
 
 def pq_encode(
@@ -1200,13 +1202,14 @@ def ivfpq_knn_join(
     qv_by_id: dict = {}
     for r in rank_rows:
         qv_by_id.setdefault(r["qid"], [float(x) for x in r["qv"]])
-    qv = spark.createDataFrame(
+    qv = rows_frame(
+        spark,
         sorted(qv_by_id.items()),
         f"qid {id_t}, qv array<double>",
     )
     probe_cids = sorted({cid for _, cid, _ in qcell_rows})
-    qcell_map = spark.createDataFrame(
-        qcell_rows, f"qid {id_t}, cid int, qc bigint"
+    qcell_map = rows_frame(
+        spark, qcell_rows, f"qid {id_t}, cid int, qc bigint"
     )
     qsub = qv.select(
         "qid", F.posexplode(_subvectors_dyn("qv", m)).alias("sub", "qsv")
@@ -1272,7 +1275,8 @@ def ivfpq_knn_join(
             F.lit(None).cast("double").alias("sim"),
         )
     id_t = e.schema[id_col].dataType.simpleString()
-    pairs_df = spark.createDataFrame(
+    pairs_df = rows_frame(
+        spark,
         [(r["qid"], r[id_col]) for r in pool_pairs],
         f"qid {id_t}, {id_col} {id_t}",
     )
@@ -1542,7 +1546,7 @@ def propagate_index_deletes(
     out: dict[str, int] = {}
     paths = list(index_code_paths) + ([emb_path] if emb_path else [])
     for p in paths:
-        key_df = spark.createDataFrame(key_rows, [id_col])
+        key_df = rows_frame(spark, key_rows, [id_col])
         if mode == "cow":
             out[p] = M.commit_delete(spark, p, key_df, [id_col])
         elif mode == "dv":
@@ -1598,7 +1602,7 @@ def corpus_takedown(
 
         def _part(p, key, ids):
             def fn(t):
-                key_df = spark.createDataFrame([(i,) for i in ids], [key])
+                key_df = rows_frame(spark, [(i,) for i in ids], [key])
                 return delete(spark, p, key_df, [key], tag=t)
 
             return (p, fn, p)
@@ -1617,7 +1621,7 @@ def corpus_takedown(
         mode=mode,
         tag=tag,
     )
-    key_df = spark.createDataFrame([(i,) for i in doc_ids], [doc_key])
+    key_df = rows_frame(spark, [(i,) for i in doc_ids], [doc_key])
     if mode == "mor":
         out[docs_path] = M.commit_delete_mor(
             spark, docs_path, key_df, [doc_key],

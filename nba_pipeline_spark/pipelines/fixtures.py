@@ -4,16 +4,21 @@ Tiny in-memory tables mirroring the raw scraped inputs of the reference
 pipeline, including the dirty-data quirks each transform must survive.
 Used by the golden end-to-end tests; the edge scrape itself (HTML fetch)
 is out of engine scope by design (SURVEY.md §2.1 S1: ingest boundary).
+Each frame is built through Arrow (`partitioning.rows_frame`) with an
+explicit schema, so no Python worker process starts.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-GAMES_RAW_COLS = [
-    "Date", "startET", "awayTeam", "pointsAway", "homeTeam", "pointsHome",
-    "attendance", "notes", "seasonStartYear",
-]
+from ..operators.partitioning import rows_frame
+
+GAMES_RAW_SCHEMA = (
+    "Date string, startET string, awayTeam string, pointsAway double, "
+    "homeTeam string, pointsHome double, attendance string, notes string, "
+    "seasonStartYear bigint"
+)
 
 GAMES_RAW = [
     # regular 1996 season rows ('Tue, Oct 29, 1996' shape, games.py:51)
@@ -31,13 +36,13 @@ GAMES_RAW = [
 
 
 def games_raw(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(GAMES_RAW, GAMES_RAW_COLS)
+    return rows_frame(spark, GAMES_RAW, GAMES_RAW_SCHEMA)
 
 
-PBP_RAW_COLS = [
-    "time", "event_away", "point_away", "event_home", "point_home",
-    "score", "game_id", "seq",
-]
+PBP_RAW_SCHEMA = (
+    "time string, event_away string, point_away string, event_home string, "
+    "point_home string, score string, game_id string, seq bigint"
+)
 
 PBP_RAW = [
     # game g1: two periods; 720-second marker starts each period
@@ -57,10 +62,13 @@ PBP_RAW = [
 
 
 def playbyplay_raw(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(PBP_RAW, PBP_RAW_COLS)
+    return rows_frame(spark, PBP_RAW, PBP_RAW_SCHEMA)
 
 
-BOX_RAW_COLS = ["game_id", "teamName", "playerName", "MP", "PTS", "FG%", "seq"]
+BOX_RAW_SCHEMA = (
+    "game_id string, teamName string, playerName string, MP string, "
+    "PTS double, `FG%` double, seq bigint"
+)
 
 BOX_RAW = [
     # starters come before the 'Reserves' marker (boxScores.py:61-76)
@@ -77,13 +85,14 @@ BOX_RAW = [
 
 
 def boxscores_raw(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(BOX_RAW, BOX_RAW_COLS)
+    return rows_frame(spark, BOX_RAW, BOX_RAW_SCHEMA)
 
 
-COACHES_RAW_COLS = [
-    "coachName", "coach_id", "Season", "Age", "Tm", "Lg",
-    "G", "W", "L", "WLpct", "G2", "W2", "L2", "WL2pct",
-]
+COACHES_RAW_SCHEMA = (
+    "coachName string, coach_id bigint, Season string, Age string, "
+    "Tm string, Lg string, G string, W string, L string, WLpct string, "
+    "G2 string, W2 string, L2 string, WL2pct string"
+)
 
 COACHES_RAW = [
     ("Phil Jackson", 1, "1996-97", "51", "CHI", "NBA", "82", "69", "13", ".841", "19", "15", "4", ".789"),
@@ -97,30 +106,35 @@ COACHES_RAW = [
 
 
 def coaches_raw(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(COACHES_RAW, COACHES_RAW_COLS)
+    return rows_frame(spark, COACHES_RAW, COACHES_RAW_SCHEMA)
 
 
-SALARY_CUR_COLS = ["rk", "playerName", "salary"]
+SALARY_CUR_SCHEMA = "rk string, playerName string, salary string"
 SALARY_CUR = [
     ("1", "Michael Jordan", "$33,140,000"),
     ("2", "Patrick Ewing", "$20,500,000"),
 ]
 
-SALARY_HIST_COLS = ["rk", "playerName", "salary", "inflationAdjSalary"]
+SALARY_HIST_SCHEMA = (
+    "rk string, playerName string, salary string, inflationAdjSalary string"
+)
 SALARY_HIST = [
     ("1", "Magic Johnson", "$14,660,000", "$29,100,000"),
 ]
 
 
 def salary_raw_current(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SALARY_CUR, SALARY_CUR_COLS)
+    return rows_frame(spark, SALARY_CUR, SALARY_CUR_SCHEMA)
 
 
 def salary_raw_history(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SALARY_HIST, SALARY_HIST_COLS)
+    return rows_frame(spark, SALARY_HIST, SALARY_HIST_SCHEMA)
 
 
-PLAYERS_RAW_COLS = ["Player", "From", "To", "Pos", "Ht", "Wt", "Birth Date", "Colleges"]
+PLAYERS_RAW_SCHEMA = (
+    "Player string, `From` bigint, `To` bigint, Pos string, Ht string, "
+    "Wt string, `Birth Date` string, Colleges string"
+)
 PLAYERS_RAW = [
     ("Michael Jordan", 1985, 2003, "SG", "6-6", "198", "February 17, 1963", "UNC"),
     ("Magic Johnson", 1980, 1996, "PG", "6-9", "215", "August 14, 1959", "Michigan State"),
@@ -129,4 +143,4 @@ PLAYERS_RAW = [
 
 
 def players_info_raw(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(PLAYERS_RAW, PLAYERS_RAW_COLS)
+    return rows_frame(spark, PLAYERS_RAW, PLAYERS_RAW_SCHEMA)

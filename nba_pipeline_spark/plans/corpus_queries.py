@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..operators import bpe as BPE
-from ..operators.partitioning import fan_out, under_parallelized
+from ..operators.partitioning import fan_out, rows_frame, under_parallelized
 from ..session import tune
 from ..sources import load_table
 from .queries import register
@@ -1229,7 +1229,7 @@ def q_bpe_first_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not merges:
         # degenerate corpus (all 1-char words): no pair to merge; the
         # oracle's argmax CTE is empty too, so both sides return 0 rows
-        return spark.createDataFrame([], out_schema)
+        return rows_frame(spark, [], out_schema)
     m = merges[0]
     words = fan_out(docs).select(
         "doc_id", F.explode(TX.tokenize(F.col("text"))).alias("w")

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..operators import aggregates as OA
 from ..operators import joins as OJ
+from ..operators.partitioning import rows_frame
 from ..sources import load_table
 from ..session import tune
 from .queries import register
@@ -140,7 +141,7 @@ QTY_BANDS = [(0.0, 10.0, "low"), (10.0, 25.0, "mid"), (25.0, 60.0, "high")]
 
 def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
-    bands = spark.createDataFrame(QTY_BANDS, schema=["lo", "hi", "band"])
+    bands = rows_frame(spark, QTY_BANDS, "lo double, hi double, band string")
     joined = OJ.range_join(
         li,
         bands,

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.partitioning import rows_frame
 from ..session import tune
 from ..sources import load_table
 from ..sources import manifest as M
@@ -625,7 +626,8 @@ def q_manifest_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["version"]: M.read_snapshot(spark, lake, version=r["version"]).count()
         for r in h_rows
     }
-    return spark.createDataFrame(
+    return rows_frame(
+        spark,
         [
             (r["version"], r["parent"], r["op"], r["n_tombstones"], counts[r["version"]])
             for r in h_rows
@@ -2838,7 +2840,8 @@ def _unique_lake(spark: SparkSession, sf_dir: str) -> str:
             .agg(F.max("o_orderkey")).collect()[0][0] + 1000
         )
         v = M.current_version(spark, lake)
-        bad = spark.createDataFrame(
+        bad = rows_frame(
+            spark,
             [
                 (k_new, r0["o_custkey"], "X", 1),
                 (k_new, r1["o_custkey"], "X", 1),
@@ -3387,8 +3390,8 @@ def _takedown_stream_stage(spark: SparkSession, sf_dir: str) -> str:
         )
         half = len(victims) // 2
         for i, ids in enumerate([victims[:half], victims[half:]]):
-            spark.createDataFrame(
-                [(k,) for k in ids] or [(None,)], "doc_id long"
+            rows_frame(
+                spark, [(k,) for k in ids] or [(None,)], "doc_id long"
             ).coalesce(1).write.parquet(f"{root}/victims/b{i}")
         q = takedown_ingest_sink(
             spark.readStream.schema("doc_id long")

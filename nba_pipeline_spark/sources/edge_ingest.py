@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..operators.partitioning import rows_frame
+
 FETCH_RESULT_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -107,7 +109,7 @@ def fetch_urls(
     row, with a per-URL error column instead of task failure (one dead
     page must not kill a 10k-page ingest)."""
     n_part = partitions or min(len(urls), 64) or 1
-    url_df = spark.createDataFrame([(u,) for u in urls], schema="url string").repartition(n_part)
+    url_df = rows_frame(spark, [(u,) for u in urls], schema="url string").repartition(n_part)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

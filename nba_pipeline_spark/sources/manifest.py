@@ -77,6 +77,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.partitioning import rows_frame
+
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
 _CDF_DIR = "cdf"  # write-time recorded change segments (r10)
@@ -1453,7 +1455,7 @@ def _bloom_probes(spark: SparkSession, bloom_eq: dict) -> dict:
             out[c] = [_bloom_probe_hashes(spark, vals[0])]
             continue
         rows = (
-            spark.createDataFrame([(v,) for v in vals], ["__probe"])
+            rows_frame(spark, [(v,) for v in vals], ["__probe"])
             .select(*[
                 h.alias(f"h{i}")
                 for i, h in enumerate(_bloom_hash_cols(F.col("__probe")))
@@ -2206,7 +2208,7 @@ def commit_replace_where(
                     _p0,
                 )
             else:
-                old_r = spark.createDataFrame([], logical_df.schema)
+                old_r = rows_frame(spark, [], logical_df.schema)
             delta = _diff_frames(
                 old_r, logical_df, list(cdf_keys), include_values=True
             )
@@ -2999,7 +3001,8 @@ def cluster_partitioned(
             r[part_col]
             for r in df.select(part_col).distinct().collect()
         ]
-        pid_df = spark.createDataFrame(
+        pid_df = rows_frame(
+            spark,
             [(i, p) for i, p in enumerate(parts)],
             schema=df.select(
                 F.lit(0).alias("__pid"), F.col(part_col)
@@ -3812,8 +3815,8 @@ def read_snapshot(
         # LOGICAL schema (widened types included)
         cols = (props.get("schema") or {}).get("cols")
         if cols:
-            return spark.createDataFrame(
-                [], ", ".join(f"`{n}` {t}" for n, t in cols)
+            return rows_frame(
+                spark, [], ", ".join(f"`{n}` {t}" for n, t in cols)
             )
         raise ValueError(
             f"empty table version {v} with no recorded schema: {path}"
@@ -4114,7 +4117,7 @@ def metadata_agg(
                     (bytearray(base64.b85decode(e["sk"])),) for e in ents
                 ]
                 row = (
-                    spark.createDataFrame(sks, "sk binary")
+                    rows_frame(spark, sks, "sk binary")
                     .agg(
                         F.theta_sketch_estimate(
                             F.theta_union_agg(F.col("sk"))
@@ -4266,8 +4269,8 @@ def metadata_agg_by_partition(
         ))
     parts = []
     if cov_rows:
-        raw = spark.createDataFrame(
-            cov_rows, schema=", ".join(f"`{n}` string" for n in out_names)
+        raw = rows_frame(
+            spark, cov_rows, schema=", ".join(f"`{n}` string" for n in out_names)
         )
         typed = raw.select(
             F.col(part_col).cast(fields[part_col]).alias(part_col),
@@ -4417,7 +4420,7 @@ def commit_upsert(
                 ckeys, on=list(keys), how="left_semi"
             )
             if base_version is None:  # fresh lineage, not new_r.limit(0)
-                old_r = spark.createDataFrame([], new_r.schema)
+                old_r = rows_frame(spark, [], new_r.schema)
             else:
                 old_r = base.join(ckeys, on=list(keys), how="left_semi")
             delta = _diff_frames(old_r, new_r, keys, include_values=True)
@@ -4616,7 +4619,7 @@ def commit_upsert_partitioned(
             if touched:
                 old_r = base.join(ckeys, on=list(keys), how="left_semi")
             else:
-                old_r = spark.createDataFrame([], new_r.schema)
+                old_r = rows_frame(spark, [], new_r.schema)
             delta = _diff_frames(
                 _project_logical(old_r, _p0),
                 _project_logical(new_r, _p0),
@@ -4849,7 +4852,7 @@ def commit_upsert_pruned(
                     _p0,
                 )
             else:
-                old_r = spark.createDataFrame([], new_r.schema)
+                old_r = rows_frame(spark, [], new_r.schema)
             delta = _diff_frames(
                 old_r, new_r, logical_keys, include_values=True
             )
@@ -5024,7 +5027,7 @@ def commit_delete(
                 ).limit(0)
             delta = _diff_frames(
                 vict,
-                spark.createDataFrame([], vict.schema),
+                rows_frame(spark, [], vict.schema),
                 logical_keys,
                 include_values=True,
             )
@@ -5177,7 +5180,7 @@ def commit_delete_mor(
             vict = read_snapshot(spark, path, version=base_version).limit(0)
         delta = _diff_frames(
             vict,
-            spark.createDataFrame([], vict.schema),
+            rows_frame(spark, [], vict.schema),
             logical_keys,
             include_values=True,
         )
@@ -5401,7 +5404,7 @@ def commit_delete_dv(
                 .select("file", "pos")
             )
         else:
-            hits = spark.createDataFrame([], "file string, pos bigint")
+            hits = rows_frame(spark, [], "file string, pos bigint")
         dv_seg = _write_segment(hits, path, 1)
         extra = None
         if record_cdf:
@@ -5422,7 +5425,7 @@ def commit_delete_dv(
                 ).limit(0)
             delta = _diff_frames(
                 vict,
-                spark.createDataFrame([], vict.schema),
+                rows_frame(spark, [], vict.schema),
                 logical_keys,
                 include_values=True,
             )
@@ -5624,8 +5627,8 @@ def commit_upsert_mor(
                     _p0,
                 )
             else:
-                vict = spark.createDataFrame(
-                    [], _project_logical(folded, _p0).schema
+                vict = rows_frame(
+                    spark, [], _project_logical(folded, _p0).schema
                 )
             delta = _diff_frames(
                 vict,
@@ -5801,7 +5804,7 @@ def _empty_diff(
             )
             fields.append(T.StructField("old", val))
             fields.append(T.StructField("new", val))
-        return spark.createDataFrame([], T.StructType(fields))
+        return rows_frame(spark, [], T.StructType(fields))
     except Exception:
         return None  # unparseable recorded type: join path handles it
 
@@ -5909,7 +5912,7 @@ def snapshot_diff(
         if not m["segments"]:
             sch = props_to.get("schema")
             ddl = ", ".join(f"{n} {t}" for n, t in sch["cols"]) if sch else ""
-            return spark.createDataFrame([], ddl)
+            return rows_frame(spark, [], ddl)
         raw = _read_with_tombstones(
             spark, path, m["segments"], m, merge_schema=True
         )
@@ -6519,7 +6522,8 @@ def history(spark: SparkSession, path: str) -> DataFrame:
             )
         )
         prev_segs = cur
-    return spark.createDataFrame(
+    return rows_frame(
+        spark,
         rows,
         "version int, parent int, op string, ts double, "
         "n_segments int, n_tombstones int, "
@@ -6551,7 +6555,7 @@ def files(spark: SparkSession, path: str, version: int | None = None) -> DataFra
     # a zero-segment manifest is legal (e.g. set_constraint as the
     # first commit on an empty lake): no counts job, empty table out
     if not m["segments"]:
-        return spark.createDataFrame([], schema_ddl)
+        return rows_frame(spark, [], schema_ddl)
     # ONE job for every segment's row count: a union of per-segment
     # count aggregates — each subtree is a footer-only count, and they
     # run as parallel stages of a single action instead of O(segments)
@@ -6579,7 +6583,7 @@ def files(spark: SparkSession, path: str, version: int | None = None) -> DataFra
                 counts[s],
             )
         )
-    return spark.createDataFrame(rows, schema_ddl)
+    return rows_frame(spark, rows, schema_ddl)
 
 
 def describe_detail(spark: SparkSession, path: str) -> DataFrame:
@@ -6607,7 +6611,8 @@ def describe_detail(spark: SparkSession, path: str) -> DataFrame:
     )
     sch = props.get("schema")
     ddl = ", ".join(f"{n} {t}" for n, t in sch["cols"]) if sch else None
-    return spark.createDataFrame(
+    return rows_frame(
+        spark,
         [
             (
                 version,
@@ -7671,8 +7676,8 @@ def pin_catalog(
     return commit_replace(
         spark,
         catalog_path,
-        spark.createDataFrame(
-            rows, "name string, path string, version long"
+        rows_frame(
+            spark, rows, "name string, path string, version long"
         ),
         tag=tag,
     )

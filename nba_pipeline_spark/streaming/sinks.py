@@ -27,6 +27,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.partitioning import rows_frame
+
 
 def upsert_partitions_sink(
     base_path: str, partition_col: str
@@ -606,8 +608,8 @@ def cdf_matview_sink(
             d = delta_contributions(batch_df, group_cols, sum_cols)
             cur = M.current_version(spark, mv_path)
             if cur is None:
-                mv = spark.createDataFrame(
-                    [], _mv_schema(d, group_cols, sum_cols)
+                mv = rows_frame(
+                    spark, [], _mv_schema(d, group_cols, sum_cols)
                 )
             else:
                 mv = M.read_snapshot(spark, mv_path)

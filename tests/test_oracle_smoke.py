@@ -1,10 +1,13 @@
-"""Default-gate oracle parity: the registry queries whose iterative
-operators run on the driver-local tier at test scale, and one query
-per SQL-text vector builder call site (embedding near-dup, semantic
-decontamination, sign-LSH, SemDeDup, kNN join), compared with their
-DuckDB oracles exactly as tools/local_verify.py compares them (row
-count, columns, order-insensitive values, bit-exact floats). The full
-sweep stays in tools/local_verify.py and the soak set."""
+"""Default-gate oracle parity for three groups of registry queries:
+those whose iterative operators run on the driver-local tier at test
+scale; one per SQL-text vector builder call site (embedding near-dup,
+semantic decontamination, sign-LSH, SemDeDup, kNN join); and those
+whose builders make a local frame through `partitioning.rows_frame`
+(a dict lookup join, a banded range join, a manifest MERGE and the
+manifest history table). Each is compared with its DuckDB oracle
+exactly as tools/local_verify.py compares them (row count, columns,
+order-insensitive values, bit-exact floats). The full sweep stays in
+tools/local_verify.py and the soak set."""
 
 from __future__ import annotations
 
@@ -30,6 +33,10 @@ QUERIES = [
     "q_semdedup",
     "q_knn_join",
     "q_ann_lsh",
+    "q_lookup_join",
+    "q_join_range",
+    "q_manifest_upsert",
+    "q_manifest_history",
 ]
 
 
