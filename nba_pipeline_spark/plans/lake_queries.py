@@ -2865,12 +2865,12 @@ def q_manifest_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declared UNIQUE key enforcement (sources/manifest.py::
     set_unique_key) — the constraint neither Delta nor Iceberg
     enforces: appends validate the batch against itself and, via
-    bloom-pruned point probes, against the table, committing under a
-    strict parent CAS so racing appends serialize. The staged history
-    lands two disjoint key bands and PROVES two refusals (an
-    overlapping batch and an in-batch duplicate — the stage asserts
-    both raise and change nothing). Oracle: the two clean bands the
-    hard way."""
+    bloom-pruned point probes, against the table the commit lands on
+    (inside the commit's build), so racing appends serialize. The
+    staged history lands two disjoint key bands and PROVES two
+    refusals (an overlapping batch and an in-batch duplicate — the
+    stage asserts both raise and change nothing). Oracle: the two
+    clean bands the hard way."""
     tune(spark)
     lake = _unique_lake(spark, sf_dir)
     assert M.unique_key(spark, lake) == ["o_orderkey"]

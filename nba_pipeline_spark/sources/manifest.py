@@ -20,14 +20,18 @@ manifest; nothing a committed manifest points at is ever rewritten.
 **Commit = one atomic file rename.** The manifest is written to a tmp
 name and renamed to ``v<version>.json``. Rename-if-absent doubles as
 optimistic concurrency control: if two writers race to version N, one
-rename fails (destination exists), and the loser re-reads the latest
-version, re-points its parent list, and retries with N+1 — its already
-written data segment is reused, only the pointer retries. (Atomic on
-HDFS/ABFS, where FileContext.rename without OVERWRITE is a single
-atomic fail-on-existing namespace op; on S3 swap the rename for a
-conditional PUT ``If-None-Match:*`` — same one-object commit point.
-On a LOCAL filesystem the fail-on-existing check is exists+rename(2),
-not atomic — test-grade only, one writer per host.)
+rename fails (destination exists). Every write op commits through ONE
+loop, `_commit`: each attempt reads the latest manifest and calls the
+op's ``build(parent)``, which derives everything the new version
+records (segment list, validation, rewritten segments, change segment)
+from that parent — so the loser simply runs the attempt again on
+N+1. Work that does not depend on the parent is done once and reused
+(a plain append's data segment is written once; only the pointer
+retries). (Atomic on HDFS/ABFS, where FileContext.rename without
+OVERWRITE is a single atomic fail-on-existing namespace op; on S3 swap
+the rename for a conditional PUT ``If-None-Match:*`` — same one-object
+commit point. On a LOCAL filesystem the fail-on-existing check is
+exists+rename(2), not atomic — test-grade only, one writer per host.)
 
 **Snapshot isolation for free.** A reader resolves ONE manifest file
 and plans over the segments it lists. Compaction publishes a new
@@ -357,40 +361,65 @@ def _write_segment(
 
 
 class CommitConflict(RuntimeError):
-    """Raised when `expected_parent` no longer matches the latest
-    version — the caller's data segment was derived from a superseded
-    snapshot and must be recomputed (see commit_upsert)."""
+    """A commit that cannot land on the current head: `publish_branch`
+    raises it when main moved past the branch's fork, `clone` and
+    `create_branch` when their empty destination gained a commit, and
+    `wap_ingest` replays its whole cycle on it."""
 
 
-class _ColmapChanged(Exception):
-    """Internal: the column mapping moved between a segment write and
-    its commit (commit_append re-translates and rewrites)."""
+# attempts of the one commit loop before it gives up on a hot lake
+_COMMIT_TRIES = 20
 
 
-class _UniqueChanged(Exception):
-    """Internal: the declared UNIQUE key moved between an append's
-    props read and its commit — a `set_unique_key` landed in the gap,
-    so the batch was validated against the WRONG (possibly empty)
-    constraint. The append loop restarts and revalidates (ADVICE r9:
-    without this, an append racing the declaration commits unvalidated
-    on top of it via the tagless CAS retry)."""
+def _carry(parent: dict | None) -> list[str]:
+    """The parent's segment list — a metadata-only commit's segments."""
+    return list(parent["segments"]) if parent else []
+
+
+def _props(parent: dict | None) -> dict:
+    return dict(parent.get("props", {})) if parent else {}
+
+
+def _version(parent: dict | None) -> int:
+    return parent["version"] if parent else 0
 
 
 def _commit(
     spark: SparkSession,
     path: str,
     op: str,
-    segments_fn,
-    max_tries: int = 20,
+    build,
     tag: str | None = None,
-    expected_parent: int | None = None,
-    meta_fn=None,
-    deletes_fn=None,
-    props_fn=None,
     min_version: int | None = None,
-    extra_keys: dict | None = None,
 ) -> int:
-    """Publish a new manifest via rename-if-absent CAS.
+    """Publish a new manifest via rename-if-absent CAS — the ONE retry
+    loop of the lake. Each attempt lists the versions, reads the parent
+    manifest (None on an empty lake), runs the tag check, calls
+    ``build(parent)`` and renames the new manifest into place; a lost
+    rename runs the attempt again on the new head. Whatever the op
+    commits is therefore derived from the parent it lands on.
+
+    ``build(parent)`` returns a dict of manifest fields: ``segments``
+    (required: the new live segment list) plus whatever differs from
+    the carried-forward defaults —
+
+    - ``meta``: {seg: metadata} for new or changed segments, laid over
+      the parent metadata of every listed segment (new segments start
+      meta-less = never pruned);
+    - ``deletes``: the merge-on-read TOMBSTONE segment list (see
+      commit_delete_mor); by default the parent's carries forward
+      unchanged — an append must never resurrect rows a tombstone
+      killed. Tombstone segments keep their parent metadata (their
+      ``delete_keys`` is what makes them applicable at read time);
+    - ``props``: the new table properties (default: the parent's,
+      verbatim);
+    - any other key (e.g. the recorded change segment ``cdf``) is a
+      version-scoped top-level manifest key, NOT carried forward.
+
+    A bare list is shorthand for ``{"segments": list}``. A build that
+    returns None commits nothing, and `_commit` returns the parent
+    version (0 on an empty lake), as for a replayed tag. An exception
+    raised by build refuses the commit: nothing is published.
 
     `min_version` floors the committed version number (version =
     max(parent + 1, min_version)) — version numbers may SKIP, which
@@ -399,43 +428,16 @@ def _commit(
     numbering and publish adopts the branch head's: the merge-on-read
     ``seq`` fence stays totally ordered across the branch boundary.
 
-    ``segments_fn(parent_manifest | None) -> list[str]`` computes the
-    new live segment list from the parent snapshot; it re-runs on CAS
-    retry so the parent is always the version actually superseded.
-
     `tag` is an idempotency token: it joins the manifest's CUMULATIVE
     ``tags`` list (parent tags + this one), so `committed_tags` answers
     "was this commit already applied?" from the latest manifest alone —
     the streaming sink's replay guard survives vacuum (which keeps the
-    newest manifests, whose tag set is complete by construction).
-
-    `expected_parent` turns the commit into a strict compare-and-swap
-    on a SPECIFIC snapshot: if the latest version moved past it, raise
-    CommitConflict instead of committing data derived from a stale
-    read (required for read-modify-write ops like upsert, where the
-    new segment's CONTENT depends on the parent).
-
-    `meta_fn(parent_manifest | None, segments) -> dict` supplies the
-    per-segment metadata map ({seg: {"part": ..., "stats": ...}}); by
-    default parent metadata is carried forward for surviving segments
-    (new segments start meta-less = never pruned).
-
-    `deletes_fn(parent_manifest | None) -> list[str]` supplies the
-    merge-on-read TOMBSTONE segment list (see commit_delete_mor); by
-    default the parent's tombstones carry forward unchanged — an
-    append must never resurrect rows a tombstone killed. Tombstone
-    segments always keep their parent metadata (their ``delete_keys``
-    is what makes them applicable at read time)."""
+    newest manifests, whose tag set is complete by construction)."""
     mdir = f"{path}/{_MANIFEST_DIR}"
     fs, jmdir = _fs(spark, mdir)
-    fs.mkdirs(jmdir)
-    for _ in range(max_tries):
+    for _ in range(_COMMIT_TRIES):
         versions = _manifest_versions(spark, path)
         parent = versions[-1] if versions else 0
-        if expected_parent is not None and parent != expected_parent:
-            raise CommitConflict(
-                f"expected parent v{expected_parent}, latest is v{parent}: {path}"
-            )
         parent_m = _read_manifest(spark, path, parent) if versions else None
         version = parent + 1
         if min_version is not None and version < min_version:
@@ -443,25 +445,28 @@ def _commit(
         tags = list(parent_m.get("tags", [])) if parent_m else []
         if tag is not None:
             # atomic idempotency: the check runs INSIDE the CAS loop on
-            # the freshly-read parent, so two racing replays of the same
-            # tagged commit can't both land — the loser sees the
-            # winner's tag here on retry and returns its version (the
-            # loser's pre-written segment becomes a vacuumable orphan)
+            # the freshly-read parent and BEFORE build, so a replayed
+            # tagged commit does no work and two racing replays can't
+            # both land — the loser sees the winner's tag here
             if tag in tags:
                 return parent
             tags.append(tag)
             if len(tags) > _MAX_TAGS:
                 tags = tags[-_MAX_TAGS:]
-        segments = segments_fn(parent_m)
+        out = build(parent_m)
+        if out is None:
+            return parent
+        out = {"segments": out} if isinstance(out, list) else dict(out)
+        segments = list(out.pop("segments"))
         parent_meta = dict(parent_m.get("meta", {})) if parent_m else {}
-        if deletes_fn is not None:
-            deletes = list(deletes_fn(parent_m))
+        if "deletes" in out:
+            deletes = list(out.pop("deletes"))
         else:
             deletes = list(parent_m.get("deletes", [])) if parent_m else []
-        if meta_fn is not None:
-            meta = meta_fn(parent_m, segments)
-        else:
-            meta = {s: parent_meta[s] for s in segments if s in parent_meta}
+        meta = {s: parent_meta[s] for s in segments if s in parent_meta}
+        # copies: the seq stamp below must not leak into a build's
+        # memoized metadata (a retry stamps its own version)
+        meta.update({s: dict(m) for s, m in out.pop("meta", {}).items()})
         for s in deletes:  # tombstones keep their delete_keys metadata
             if s not in meta and s in parent_meta:
                 meta[s] = parent_meta[s]
@@ -472,6 +477,9 @@ def _commit(
         for s in list(segments) + deletes:
             if s not in prior:
                 meta.setdefault(s, {}).setdefault("seq", version)
+        # table properties (constraints, owner-defined config) carry
+        # forward verbatim unless build returns new ones
+        props = out.pop("props") if "props" in out else _props(parent_m)
         # commit timestamp, clamped STRICTLY increasing across versions
         # (wall clocks jitter and sub-ms commits tie; AS OF needs ts
         # order == version order — the Delta timestampAsOf adjustment)
@@ -490,23 +498,16 @@ def _commit(
         }
         if deletes:
             manifest["deletes"] = deletes
-        if extra_keys:
-            # version-scoped extras (e.g. the recorded change segment
-            # "cdf") — top-level manifest keys, NOT carried forward
-            manifest.update(extra_keys)
-        # table properties (constraints, owner-defined config) carry
-        # forward verbatim; props_fn(props) -> props mutates them
-        props = dict(parent_m.get("props", {})) if parent_m else {}
-        if props_fn is not None:
-            props = props_fn(props)
+        manifest.update(out)  # version-scoped extras, e.g. "cdf"
         if props:
             manifest["props"] = props
+        fs.mkdirs(jmdir)
         tmp = f"{mdir}/.tmp-{uuid.uuid4().hex}.json"
-        out = fs.create(_jpath(spark, tmp), True)
+        stream = fs.create(_jpath(spark, tmp), True)
         try:
-            out.write(bytearray(json.dumps(manifest).encode("utf-8")))
+            stream.write(bytearray(json.dumps(manifest).encode("utf-8")))
         finally:
-            out.close()
+            stream.close()
         # the commit point: atomic, fails if the version was taken
         if _rename_no_overwrite(spark, tmp, f"{mdir}/v{version:08d}.json"):
             # periodic rollup (VERDICT r11 #2): best-effort, derived
@@ -518,8 +519,10 @@ def _commit(
             except Exception:
                 pass
             return version
-        fs.delete(_jpath(spark, tmp), False)  # lost the race: retry on new parent
-    raise RuntimeError(f"manifest commit lost the CAS race {max_tries} times: {path}")
+        fs.delete(_jpath(spark, tmp), False)  # lost the race: rebuild on the new head
+    raise RuntimeError(
+        f"manifest commit lost the CAS race {_COMMIT_TRIES} times: {path}"
+    )
 
 
 def committed_tags(spark: SparkSession, path: str) -> set[str]:
@@ -577,43 +580,43 @@ def _merge_schema_pairs(
     ]
 
 
-def _schema_props_fn(
-    spark: SparkSession, path: str, df: DataFrame, replace: bool = False
-):
-    """``props_fn`` for a data-writing commit: validates the incoming
-    schema against the table's and records the evolved schema in the
-    manifest. The merge re-runs inside the commit CAS loop on the
-    freshly-read parent props, so a racing additive writer's columns
-    are never lost (and a racing type conflict is caught on retry).
+def _schema_props(
+    spark: SparkSession,
+    path: str,
+    props: dict,
+    df: DataFrame,
+    replace: bool = False,
+) -> dict:
+    """The parent `props` of a data-writing commit with the incoming
+    schema validated against the table's and the evolved schema
+    recorded. Called from the commit's build on the freshly-read
+    parent props, so a racing additive writer's columns are never lost
+    (and a racing type conflict is caught on the retry).
     ``replace=True`` resets the schema to the batch's (snapshot
     overwrite supersedes all prior segments)."""
     incoming = _df_schema_pairs(df)
-
-    def props_fn(props):
-        if replace:
-            out = {**props, "schema": {"cols": incoming}}
-            # a full rewrite lands under the batch's own (logical)
-            # names: any column mapping is materialized and clears
-            out.pop("colmap", None)
-            out.pop("dropped_cols", None)
-            return out
-        sch = props.get("schema")
-        if sch is not None:
-            current = [list(p) for p in sch["cols"]]
-        else:
-            current = _probe_schema(spark, path) or []
-        merged = _merge_schema_pairs(current, incoming, path)
-        # column mapping, name mode: a NEW column may not reuse a
-        # DROPPED column's physical name — old segments still hold the
-        # dropped bytes under that name and the read projection would
-        # resurrect them as the new column's values. (Delta avoids
-        # this with id-based physical names; name mode refuses.)
-        _refuse_physical_reuse(
-            props, [n for n, _ in incoming], path, current=current
-        )
-        return {**props, "schema": {"cols": merged}}
-
-    return props_fn
+    if replace:
+        out = {**props, "schema": {"cols": incoming}}
+        # a full rewrite lands under the batch's own (logical)
+        # names: any column mapping is materialized and clears
+        out.pop("colmap", None)
+        out.pop("dropped_cols", None)
+        return out
+    sch = props.get("schema")
+    if sch is not None:
+        current = [list(p) for p in sch["cols"]]
+    else:
+        current = _probe_schema(spark, path) or []
+    merged = _merge_schema_pairs(current, incoming, path)
+    # column mapping, name mode: a NEW column may not reuse a
+    # DROPPED column's physical name — old segments still hold the
+    # dropped bytes under that name and the read projection would
+    # resurrect them as the new column's values. (Delta avoids
+    # this with id-based physical names; name mode refuses.)
+    _refuse_physical_reuse(
+        props, [n for n, _ in incoming], path, current=current
+    )
+    return {**props, "schema": {"cols": merged}}
 
 
 def _relogical(
@@ -715,24 +718,18 @@ def set_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
     write validates its incoming rows against it (`_check_constraints`
     in the append/replace/merge paths).
 
-    The validation and the commit form one CAS: the commit carries
-    ``expected_parent`` = the version the validation scanned, so a
-    write landing in between (which started before the constraint
-    existed and therefore never checked it) conflicts the commit and
-    the validation re-runs on the new snapshot — the "existing data
-    validated" guarantee holds with no race window."""
+    The validation runs inside the commit's build, on the parent the
+    commit lands on: a write landing after it (which started before
+    the constraint existed and therefore never checked it) loses the
+    rename for this commit, and the validation re-runs on the new
+    snapshot — the "existing data validated" guarantee holds with no
+    race window."""
     from pyspark.sql import functions as F
 
-    def props_fn(props):
-        cons = dict(props.get("constraints", {}))
-        cons[name] = expr
-        return {**props, "constraints": cons}
-
-    for _ in range(20):
-        pinned = current_version(spark, path)
-        if pinned is not None and _read_manifest(spark, path, pinned)["segments"]:
+    def build(parent):
+        if parent and parent["segments"]:
             bad = (
-                read_snapshot(spark, path, version=pinned)
+                read_snapshot(spark, path, version=parent["version"])
                 .filter(~F.coalesce(F.expr(expr), F.lit(False)))
                 .count()
             )
@@ -741,18 +738,15 @@ def set_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
                     f"cannot add constraint {name}: {bad} existing rows "
                     f"violate CHECK ({expr}) in {path}"
                 )
-        try:
-            return _commit(
-                spark, path, "set_constraint",
-                lambda parent: list(parent["segments"]) if parent else [],
-                props_fn=props_fn,
-                expected_parent=pinned or 0,
-            )
-        except CommitConflict:
-            continue  # a write superseded the validated snapshot: re-validate
-    raise RuntimeError(
-        f"set_constraint lost the validate-commit race 20 times: {path}"
-    )
+        props = _props(parent)
+        cons = dict(props.get("constraints", {}))
+        cons[name] = expr
+        return {
+            "segments": _carry(parent),
+            "props": {**props, "constraints": cons},
+        }
+
+    return _commit(spark, path, "set_constraint", build)
 
 
 def drop_constraint(spark: SparkSession, path: str, name: str) -> int:
@@ -761,19 +755,16 @@ def drop_constraint(spark: SparkSession, path: str, name: str) -> int:
     if name not in table_constraints(spark, path):
         raise ValueError(f"no such constraint {name!r} on {path}")
 
-    def props_fn(props):
+    def build(parent):
+        props = _props(parent)
         cons = dict(props.get("constraints", {}))
         cons.pop(name, None)
         out = {**props, "constraints": cons}
         if not cons:
             out.pop("constraints")
-        return out
+        return {"segments": _carry(parent), "props": out}
 
-    return _commit(
-        spark, path, "drop_constraint",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit(spark, path, "drop_constraint", build)
 
 
 def generated_columns(spark: SparkSession, path: str) -> dict[str, str]:
@@ -798,21 +789,16 @@ def set_generated_column(
     columns, partition tagging and pruning ride the generated one.
 
     Guard rails: on a non-empty lake the column must already exist in
-    the schema AND match the expression on every existing row (CAS-
-    pinned validation, same shape as set_constraint) — adding a
-    generated column that old segments would NULL-fill silently
-    diverges, so it refuses with a rewrite-first remediation."""
+    the schema AND match the expression on every existing row (the
+    validation runs in the commit's build, on the parent it lands on —
+    same shape as set_constraint) — adding a generated column that old
+    segments would NULL-fill silently diverges, so it refuses with a
+    rewrite-first remediation."""
     from pyspark.sql import functions as F
 
-    def props_fn(props):
-        gen = dict(props.get("generated", {}))
-        gen[col] = expr
-        return {**props, "generated": gen}
-
-    for _ in range(20):
-        pinned = current_version(spark, path)
-        if pinned is not None and _read_manifest(spark, path, pinned)["segments"]:
-            snap = read_snapshot(spark, path, version=pinned)
+    def build(parent):
+        if parent and parent["segments"]:
+            snap = read_snapshot(spark, path, version=parent["version"])
             if col not in snap.columns:
                 raise SchemaDrift(
                     f"set_generated_column({col!r}): the lake already has "
@@ -828,18 +814,12 @@ def set_generated_column(
                     f"cannot declare {col} GENERATED AS ({expr}): {bad} "
                     f"existing rows disagree in {path}"
                 )
-        try:
-            return _commit(
-                spark, path, "set_generated",
-                lambda parent: list(parent["segments"]) if parent else [],
-                props_fn=props_fn,
-                expected_parent=pinned or 0,
-            )
-        except CommitConflict:
-            continue  # a write superseded the validated snapshot
-    raise RuntimeError(
-        f"set_generated_column lost the validate-commit race 20 times: {path}"
-    )
+        props = _props(parent)
+        gen = dict(props.get("generated", {}))
+        gen[col] = expr
+        return {"segments": _carry(parent), "props": {**props, "generated": gen}}
+
+    return _commit(spark, path, "set_generated", build)
 
 
 def _apply_generated(spark: SparkSession, path: str, df: DataFrame) -> DataFrame:
@@ -903,8 +883,10 @@ def set_table_property(
         spark,
         path,
         "set_property",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=lambda props: {**props, key: value},
+        lambda parent: {
+            "segments": _carry(parent),
+            "props": {**_props(parent), key: value},
+        },
     )
 
 
@@ -912,12 +894,12 @@ def set_unique_key(spark: SparkSession, path: str, cols: list[str]) -> int:
     """Declare a UNIQUE KEY over `cols` — the constraint neither Delta
     nor Iceberg enforces (both punt to MERGE discipline); this lake
     enforces it on the append paths. Existing data must already be
-    unique (CAS-pinned one-job validation, same shape as
+    unique (one-job validation in the commit's build, same shape as
     set_constraint); subsequent appends check the batch against itself
     and against the table — O(batch) when the key carries blooms (the
-    point-probe path), one semi-join otherwise — and commit with a
-    STRICT parent CAS so two racing appends can't both sneak the same
-    key in (the loser revalidates against the winner's snapshot).
+    point-probe path), one semi-join otherwise — inside their own
+    build, so two racing appends can't both sneak the same key in (the
+    loser's rebuild revalidates against the winner's snapshot).
     SQL UNIQUE NULL semantics: rows with any NULL key column never
     conflict. Upserts keyed on these columns preserve uniqueness by
     construction; replace paths re-validate their full new contents."""
@@ -926,13 +908,9 @@ def set_unique_key(spark: SparkSession, path: str, cols: list[str]) -> int:
     if not cols:
         raise ValueError("set_unique_key needs at least one column")
 
-    def props_fn(props):
-        return {**props, "unique": list(cols)}
-
-    for _ in range(20):
-        pinned = current_version(spark, path)
-        if pinned is not None and _read_manifest(spark, path, pinned)["segments"]:
-            snap = read_snapshot(spark, path, version=pinned)
+    def build(parent):
+        if parent and parent["segments"]:
+            snap = read_snapshot(spark, path, version=parent["version"])
             missing = [c for c in cols if c not in snap.columns]
             if missing:
                 raise SchemaDrift(
@@ -955,18 +933,12 @@ def set_unique_key(spark: SparkSession, path: str, cols: list[str]) -> int:
                     f"cannot declare UNIQUE ({', '.join(cols)}): existing "
                     f"rows collide in {path}"
                 )
-        try:
-            return _commit(
-                spark, path, "set_unique",
-                lambda parent: list(parent["segments"]) if parent else [],
-                props_fn=props_fn,
-                expected_parent=pinned or 0,
-            )
-        except CommitConflict:
-            continue  # a write superseded the validated snapshot
-    raise RuntimeError(
-        f"set_unique_key lost the validate-commit race 20 times: {path}"
-    )
+        return {
+            "segments": _carry(parent),
+            "props": {**_props(parent), "unique": list(cols)},
+        }
+
+    return _commit(spark, path, "set_unique", build)
 
 
 def _check_unique(
@@ -1121,9 +1093,9 @@ def _check_constraints(spark: SparkSession, path: str, df: DataFrame) -> None:
 
 
 def _check_schema(spark: SparkSession, path: str, df: DataFrame) -> None:
-    """Eager pre-write schema validation (same merge the commit's
-    props_fn re-runs CAS-consistently): a drifting batch fails BEFORE
-    its segment is written, not as a commit-time orphan."""
+    """Eager pre-write schema validation (same merge `_schema_props`
+    re-runs in the commit's build): a drifting batch fails BEFORE its
+    segment is written, not as a commit-time orphan."""
     cur = table_schema(spark, path)
     if cur is None:
         cur = _probe_schema(spark, path) or []
@@ -1639,130 +1611,40 @@ def commit_append(
     pruning: partition equality, min/max ranges, bloom point lookups,
     and keyword-token blooms respectively (`read_snapshot(part_eq= /
     ranges= / bloom_eq= / token_eq=)`)."""
-    # tag pre-check BEFORE validation or compute: a replayed tagged
-    # batch (the consume_feed / streaming exactly-once discipline) must
-    # no-op here — on a UNIQUE-keyed lake the validation below would
-    # otherwise REFUSE the replay (its keys already landed with the
-    # first delivery) and permanently wedge the consumer (ADVICE r9).
-    # _commit's in-CAS tag check stays the atomic guard for races.
-    if tag is not None and tag in committed_tags(spark, path):
-        return current_version(spark, path)
-    df = _apply_generated(spark, path, df)
-    df = _upcast_to_schema(spark, path, df)
-    _check_constraints(spark, path, df)
-    _check_schema(spark, path, df)
-    # the physical translation below is derived from props READ BEFORE
-    # the segment write, but the commit CAS validates props at commit
-    # time — a rename_column landing in between would strand the
-    # segment under stale physical names (reads would null-fill the
-    # renamed column for it). The mapping check runs INSIDE the CAS
-    # loop; on a mapping change the segment is REWRITTEN under the
-    # fresh mapping and the commit retried (the stale segment becomes
-    # a vacuumable orphan).
-    for _attempt in range(5):
-        props0 = _latest_props(spark, path)
-        cm0, dropped0 = _colmap(props0), set(props0.get("dropped_cols", []))
-        # declared UNIQUE key: validate batch-vs-self and batch-vs-table
-        # pinned at this snapshot, and commit with a STRICT parent CAS
-        # so racing appends can't both land the same key — the loser
-        # falls back here and revalidates against the winner's snapshot
-        uniq = list(props0.get("unique", []))
-        base_v = current_version(spark, path) if uniq else None
-        if uniq:
-            _check_unique(spark, path, df, uniq)
-        # eager twin of the _schema_props_fn resurrection guard: a new
-        # logical column colliding with a dropped or renamed-away
-        # PHYSICAL name must fail with the real diagnosis here, before
-        # _to_physical trips over the duplicate name (the CAS-time
-        # check still backstops races — the mapping-stability check
-        # below restarts this loop if the map moved)
-        _refuse_physical_reuse(props0, df.columns, path)
-        # column-mapped lake: the incoming LOGICAL batch writes under the
-        # original PHYSICAL names so every segment stays uniform; metadata
-        # keys (partition / stats / bloom) follow the physical names the
-        # read-side probe translation expects
-        phys_df = _to_physical(df, props0)
-        partition_t = _translate_probe(props0, partition)
-        stats_t = [
-            _physical(props0, c) for c in stats_cols
-        ] if stats_cols else stats_cols
-        bloom_t = [
-            _physical(props0, c) for c in bloom_cols
-        ] if bloom_cols else bloom_cols
-        tok_t = [
-            _physical(props0, c) for c in token_bloom_cols
-        ] if token_bloom_cols else token_bloom_cols
+
+    def write(phys_df: DataFrame, props: dict) -> dict[str, dict]:
+        # metadata keys (partition / stats / bloom) follow the physical
+        # names the read-side probe translation expects
+        bloom_t = _physical_cols(props, bloom_cols)
         seg = _write_segment(phys_df, path, target_files, bloom_cols=bloom_t)
         seg_meta: dict = {}
+        partition_t = _translate_probe(props, partition)
         if partition_t is not None:
             seg_meta["part"] = {k: _json_safe(v) for k, v in partition_t.items()}
-        if stats_t:
-            seg_meta.update(_stats_meta(phys_df, stats_t))
+        if stats_cols:
+            seg_meta.update(
+                _stats_meta(phys_df, _physical_cols(props, stats_cols))
+            )
         if bloom_t:
             blooms = {c: _segment_bloom(phys_df, c) for c in bloom_t}
             blooms = {c: b for c, b in blooms.items() if b is not None}
             if blooms:
                 seg_meta["bloom"] = blooms
-        if tok_t:
+        if token_bloom_cols:
+            tok_t = _physical_cols(props, token_bloom_cols)
             tblooms = {c: _token_bloom(phys_df, c) for c in tok_t}
             tblooms = {c: b for c, b in tblooms.items() if b is not None}
             if tblooms:
                 seg_meta["tok_bloom"] = tblooms
         if ndv_cols:
-            ndv_t = [_physical(props0, c) for c in ndv_cols]
-            seg_meta["ndv"] = _ndv_meta(phys_df, ndv_t)
+            seg_meta["ndv"] = _ndv_meta(phys_df, _physical_cols(props, ndv_cols))
             if "rows" not in seg_meta:
                 # the advisor's rows/ndv ratio and metadata_agg's
                 # count_rows both need the row count alongside
                 seg_meta["rows"] = phys_df.count()
+        return {seg: seg_meta}
 
-        def meta_fn(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: pm[s] for s in segments if s in pm}
-            if seg_meta:
-                out[seg] = seg_meta
-            return out
-
-        base_props_fn = _schema_props_fn(spark, path, df)
-
-        def props_fn(props):
-            if _colmap(props) != cm0 or set(
-                props.get("dropped_cols", [])
-            ) != dropped0:
-                raise _ColmapChanged()
-            # a set_unique_key landing between the props0 read and this
-            # commit would otherwise slip an UNVALIDATED batch in on the
-            # tagless CAS retry (ADVICE r9 TOCTOU): restart + revalidate
-            if list(props.get("unique", [])) != uniq:
-                raise _UniqueChanged()
-            return base_props_fn(props)
-
-        try:
-            return _commit(
-                spark, path, "append",
-                lambda parent: (parent["segments"] if parent else []) + [seg],
-                tag=tag,
-                meta_fn=meta_fn,
-                props_fn=props_fn,
-                expected_parent=(base_v or 0) if uniq else None,
-            )
-        except _ColmapChanged:
-            # the batch's intent is unambiguous — its logical names were
-            # resolved against props0. Carry that intent forward: each
-            # column's props0-physical identity gets its CURRENT logical
-            # name (a raced rename follows the rename; a raced drop
-            # refuses), then the loop rewrites the segment fresh.
-            df = _relogical(df, props0, _latest_props(spark, path), path)
-            continue
-        except _UniqueChanged:
-            continue  # re-read props, validate under the new UNIQUE key
-        except CommitConflict:
-            if not uniq:
-                raise
-            continue  # unique lake: revalidate against the new head
-    raise CommitConflict(
-        f"column mapping kept changing under commit_append (5 tries): {path}"
-    )
+    return _append(spark, path, df, tag, write)
 
 
 def commit_append_partitioned(
@@ -1789,79 +1671,91 @@ def commit_append_partitioned(
     Column-mapped lakes: the logical batch and the part/stats/bloom
     columns translate to physical names like `commit_append` (segment
     tags stay physical — the probe translation expects that), with the
-    same CAS-time mapping-stability check + rewrite-on-race."""
-    # tag pre-check before validation/compute: replayed tagged batches
-    # no-op instead of tripping UNIQUE validation (see commit_append)
-    if tag is not None and tag in committed_tags(spark, path):
-        return current_version(spark, path)
+    same commit-time mapping check + rewrite-on-race."""
+    return _append(
+        spark,
+        path,
+        df,
+        tag,
+        lambda phys_df, props: _write_partitioned_segments(
+            spark,
+            path,
+            phys_df,
+            _physical(props, part_col),
+            target_files,
+            _physical_cols(props, stats_cols),
+            _physical_cols(props, bloom_cols),
+        ),
+    )
+
+
+def _append(
+    spark: SparkSession, path: str, df: DataFrame, tag: str | None, write
+) -> int:
+    """The one body of `commit_append` and `commit_append_partitioned`:
+    they differ only in `write(physical_batch, props) -> {seg: meta}`,
+    which lands the batch's segments.
+
+    The segments are written ONCE, in the first build, and reused on a
+    lost rename — only the pointer retries (a replayed tag returns
+    before any build, so a replay writes nothing). Two things the
+    write depends on are re-checked against every parent:
+
+    - the column mapping: a column-mapped lake stores the LOGICAL batch
+      under the original PHYSICAL names so every segment stays uniform.
+      A rename_column/drop_column landing after the write would strand
+      the segments under stale physical names (reads would null-fill
+      the renamed column), so a moved mapping re-expresses the batch
+      in the parent's logical names and rewrites the segments (the
+      stale ones become vacuumable orphans);
+    - the declared UNIQUE key: the batch is validated against itself
+      and the parent before the (first) write, and again on every
+      rebuild — a racing append of the same key, or a `set_unique_key`
+      landing in between, is caught against the snapshot the commit
+      actually lands on."""
     df = _apply_generated(spark, path, df)
     df = _upcast_to_schema(spark, path, df)
     _check_constraints(spark, path, df)
     _check_schema(spark, path, df)
-    for _attempt in range(5):
-        props0 = _latest_props(spark, path)
-        cm0, dropped0 = _colmap(props0), set(props0.get("dropped_cols", []))
-        # declared UNIQUE key: same validate + strict-CAS discipline as
-        # commit_append (the loser of a race revalidates and retries)
-        uniq = list(props0.get("unique", []))
-        base_v = current_version(spark, path) if uniq else None
+    written: dict = {}
+
+    def build(parent):
+        nonlocal df
+        props = _props(parent)
+        mapping = (_colmap(props), set(props.get("dropped_cols", [])))
+        if written and written["mapping"] != mapping:
+            # the batch's intent is unambiguous — its logical names were
+            # resolved against the props it was written under. Carry
+            # that intent forward: each column's physical identity gets
+            # its CURRENT logical name (a raced rename follows the
+            # rename; a raced drop refuses), then rewrite fresh.
+            df = _relogical(df, written["props"], props, path)
+            written.clear()
+        uniq = list(props.get("unique", []))
         if uniq:
+            # against the latest version: when that is newer than the
+            # parent, this attempt's rename loses and the rebuild checks
+            # again
             _check_unique(spark, path, df, uniq)
-        _refuse_physical_reuse(props0, df.columns, path)
-        phys_df = _to_physical(df, props0)
-        part_p = _physical(props0, part_col)
-        stats_p = [
-            _physical(props0, c) for c in stats_cols
-        ] if stats_cols else stats_cols
-        bloom_p = [
-            _physical(props0, c) for c in bloom_cols
-        ] if bloom_cols else bloom_cols
-        new_segs = _write_partitioned_segments(
-            spark, path, phys_df, part_p, target_files, stats_p, bloom_p
-        )
-
-        def meta_fn(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: pm[s] for s in segments if s in pm}
-            out.update(new_segs)
-            return out
-
-        base_props_fn = _schema_props_fn(spark, path, df)
-
-        def props_fn(props):
-            if _colmap(props) != cm0 or set(
-                props.get("dropped_cols", [])
-            ) != dropped0:
-                raise _ColmapChanged()
-            # raced set_unique_key: restart + revalidate (commit_append)
-            if list(props.get("unique", [])) != uniq:
-                raise _UniqueChanged()
-            return base_props_fn(props)
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "append",
-                lambda parent: (parent["segments"] if parent else []) + list(new_segs),
-                tag=tag,
-                meta_fn=meta_fn,
-                props_fn=props_fn,
-                expected_parent=(base_v or 0) if uniq else None,
+        if not written:
+            # eager twin of the _schema_props resurrection guard: a new
+            # logical column colliding with a dropped or renamed-away
+            # PHYSICAL name must fail with the real diagnosis here,
+            # before _to_physical trips over the duplicate name
+            _refuse_physical_reuse(props, df.columns, path)
+            written.update(
+                segs=write(_to_physical(df, props), props),
+                props=props,
+                mapping=mapping,
             )
-        except _ColmapChanged:
-            df = _relogical(df, props0, _latest_props(spark, path), path)
-            continue
-        except _UniqueChanged:
-            continue  # re-read props, validate under the new UNIQUE key
-        except CommitConflict:
-            if not uniq:
-                raise
-            continue  # unique lake: revalidate against the new head
-    raise CommitConflict(
-        f"column mapping kept changing under commit_append_partitioned "
-        f"(5 tries): {path}"
-    )
+        segs = written["segs"]
+        return {
+            "segments": _carry(parent) + list(segs),
+            "meta": {s: m for s, m in segs.items() if m},
+            "props": _schema_props(spark, path, props, df),
+        }
+
+    return _commit(spark, path, "append", build, tag=tag)
 
 
 def _write_partitioned_segments(
@@ -1924,11 +1818,13 @@ def commit_replace_partitioned(
         spark,
         path,
         "replace",
-        lambda parent: list(new_segs),
-        deletes_fn=lambda p: [],
+        lambda parent: {
+            "segments": list(new_segs),
+            "meta": new_segs,
+            "deletes": [],
+            "props": _schema_props(spark, path, _props(parent), df, replace=True),
+        },
         tag=tag,
-        meta_fn=lambda parent, segments: dict(new_segs),
-        props_fn=_schema_props_fn(spark, path, df, replace=True),
     )
 
 
@@ -1974,10 +1870,16 @@ def commit_replace(
         if blooms:
             seg_meta["bloom"] = blooms
     return _commit(
-        spark, path, "replace", lambda parent: [seg],
-        deletes_fn=lambda p: [], tag=tag,
-        meta_fn=(lambda parent, segments: {seg: seg_meta}) if seg_meta else None,
-        props_fn=_schema_props_fn(spark, path, df, replace=True),
+        spark,
+        path,
+        "replace",
+        lambda parent: {
+            "segments": [seg],
+            "meta": {seg: seg_meta} if seg_meta else {},
+            "deletes": [],
+            "props": _schema_props(spark, path, _props(parent), df, replace=True),
+        },
+        tag=tag,
     )
 
 
@@ -2032,7 +1934,6 @@ def commit_replace_where(
     partition_by: str | None = None,
     target_files: int | None = None,
     allow_nonmatching_rows: bool = False,
-    max_tries: int = 5,
     record_cdf: bool = False,
     cdf_keys: list[str] | None = None,
 ) -> int:
@@ -2063,8 +1964,9 @@ def commit_replace_where(
     one dropped segment + one appended segment and a KB manifest swap —
     the restatement pattern warehouses run nightly. `partition_by`
     splits the incoming rows into one partition-tagged segment per
-    value (keeping a tagged lake tagged); the commit is a strict
-    parent CAS like MERGE (content depends on the base snapshot).
+    value (keeping a tagged lake tagged); like MERGE, the classification
+    and every write run in the commit's build, on the parent the commit
+    lands on.
     Pending merge-on-read tombstones must be compacted first.
 
     Column-mapped lakes: the scope is DICTS (eq/ranges), so it
@@ -2116,22 +2018,17 @@ def commit_replace_where(
                 "cdf_keys= or declare a UNIQUE key on the lake"
             )
 
-    last_err: Exception | None = None
-    for _ in range(max_tries):
-        base_version = current_version(spark, path)
+    def build(parent):
         untouched: list[str] = []
         dropped: list[str] = []
         rewrite: list[str] = []
         meta: dict = {}
-        if base_version is not None:
-            m = _read_manifest(spark, path, base_version)
-            _require_no_tombstones(m, path, "commit_replace_where")
-            _require_not_widened(
-                dict(m.get("props", {})), path, "replaceWhere"
-            )
-            meta = m.get("meta", {})
-            might = set(_prune_segments(m, eq, ranges))
-            for s in m["segments"]:
+        if parent is not None:
+            _require_no_tombstones(parent, path, "commit_replace_where")
+            _require_not_widened(_props(parent), path, "replaceWhere")
+            meta = parent.get("meta", {})
+            might = set(_prune_segments(parent, eq, ranges))
+            for s in parent["segments"]:
                 if s not in might:
                     untouched.append(s)
                 elif _provably_all_match(meta.get(s, {}), eq, ranges):
@@ -2144,9 +2041,9 @@ def commit_replace_where(
         # segment's NOT-scope survivors). Remainder-vs-remainder needs
         # no check (those rows validated when they landed, and a
         # replace removes rows from the scope, never adds). Runs
-        # BEFORE any segment write so a refusal is atomic; the strict
-        # parent CAS retries it against a moved snapshot.
-        uniq = [_physical(_p0, c) for c in unique_key(spark, path)]
+        # BEFORE any segment write so a refusal is atomic.
+        props = _props(parent)
+        uniq = _physical_cols(props, props.get("unique", []))
         if uniq:
             _check_unique_dups(df, uniq, path, "the replaceWhere batch")
             if untouched or rewrite:
@@ -2192,7 +2089,11 @@ def commit_replace_where(
         elif df.limit(1).count():
             seg = _write_segment(df, path, target_files)
             new_segs[seg] = {}
-        extra = None
+        out = {
+            "segments": untouched + list(new_segs),
+            "meta": {s: sm for s, sm in new_segs.items() if sm},
+            "props": _schema_props(spark, path, props, logical_df),
+        }
         if record_cdf:
             # write-time change segment: old side = the scope-matching
             # rows being replaced (dropped segments read fully — the
@@ -2209,39 +2110,12 @@ def commit_replace_where(
                 )
             else:
                 old_r = rows_frame(spark, [], logical_df.schema)
-            delta = _diff_frames(
-                old_r, logical_df, list(cdf_keys), include_values=True
+            out.update(
+                _record_change_segment(spark, path, old_r, logical_df, cdf_keys)
             )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
+        return out
 
-        def _segments(parent):
-            return untouched + list(new_segs)
-
-        def _meta(parent, segments):
-            out = {s: meta[s] for s in untouched if s in meta}
-            out.update({s: sm for s, sm in new_segs.items() if sm})
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "replace_where",
-                _segments,
-                expected_parent=base_version or 0,
-                meta_fn=_meta,
-                props_fn=_schema_props_fn(spark, path, logical_df),
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_replace_where lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _commit(spark, path, "replace_where", build)
 
 
 def _appends_since(
@@ -2250,35 +2124,56 @@ def _appends_since(
     parent: dict | None,
     base_version: int,
     base_segs: set[str],
-) -> list[str]:
-    """Segments appended between a rewrite's base snapshot and the
-    commit-time parent. Verifies every intervening commit was an
-    APPEND (the segment-list diff is only sound for appends — any op
-    that removes rows invalidates the rewritten data) and raises
-    CommitConflict otherwise, forcing the whole rewrite to re-run
-    against the new snapshot."""
-    m, v = parent, (parent["version"] if parent else 0)
+) -> list[str] | None:
+    """Segments appended between a rewrite's base snapshot and
+    `parent`, or None when some intervening commit was not an APPEND
+    (the segment-list diff is only sound for appends — any op that
+    removes rows invalidates the rewritten data) or its manifest is
+    gone (vacuumed)."""
+    m, v = parent, _version(parent)
     while v > base_version:
         if m is None or m.get("op") != "append":
-            raise CommitConflict(
-                f"non-append commit v{v} landed after rewrite "
-                f"base v{base_version}: re-run against the new snapshot"
-            )
+            return None
         v = m.get("parent") or 0
         try:
             m = _read_manifest(spark, path, v) if v else None
-        except Exception as e:  # intermediate manifest vacuumed
-            raise CommitConflict(str(e))
-    return [
-        s for s in (parent["segments"] if parent else []) if s not in base_segs
-    ]
+        except Exception:  # intermediate manifest vacuumed
+            return None
+    return [s for s in _carry(parent) if s not in base_segs]
+
+
+def _rebased(spark: SparkSession, path: str, rewrite):
+    """`build` for a rewrite that stays valid across APPENDS (compact
+    and the cluster ops). `rewrite(parent)` runs on the first parent;
+    when a later attempt's parent is reached from that base by appends
+    only, the rewrite is kept and the appended segments ride along
+    (their rows are not in the rewrite and carry their own metadata).
+    Any other commit in between re-runs the rewrite on the new parent,
+    so maintenance can never resurrect replaced or deleted rows."""
+    done: dict = {}
+
+    def build(parent):
+        if done:
+            extra = _appends_since(
+                spark, path, parent, done["base"], done["base_segs"]
+            )
+            if extra is not None:
+                out = done["out"]
+                return {**out, "segments": out["segments"] + extra}
+        out = rewrite(parent)
+        if out is not None:
+            done.update(
+                base=_version(parent), base_segs=set(_carry(parent)), out=out
+            )
+        return out
+
+    return build
 
 
 def compact(
     spark: SparkSession,
     path: str,
     target_files: int = 1,
-    max_tries: int = 5,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     part_eq: dict | None = None,
@@ -2287,13 +2182,13 @@ def compact(
     Concurrent readers are unaffected: their resolved manifests keep
     pointing at the old segments, which remain on disk until vacuum.
 
-    Concurrency: a concurrent APPEND survives — the committed segment
-    list is recomputed from the actual parent, keeping the interleaved
-    segment. Any NON-append commit landing after the compaction's base
+    Concurrency (`_rebased`): a concurrent APPEND survives — the
+    committed segment list keeps the interleaved segment. Any
+    NON-append commit landing after the compaction's base
     (replace/upsert/delete — ops that REMOVE rows) invalidates the
-    consolidated segment; the lineage walk below detects it and the
-    whole consolidation re-runs against the new snapshot, so compact
-    can never resurrect replaced or deleted rows.
+    consolidated segment, and the whole consolidation re-runs against
+    the new snapshot, so compact can never resurrect replaced or
+    deleted rows.
 
     Merge-on-read tombstones MATERIALIZE here: the consolidation read
     applies them (anti join per key group), and the new manifest clears
@@ -2323,18 +2218,12 @@ def compact(
     # raw segments, rewrites raw segments — the mapping stays valid);
     # caller-passed skipping columns arrive logical, translate them
     _p0 = _latest_props(spark, path)
-    if stats_cols:
-        stats_cols = [_physical(_p0, c) for c in stats_cols]
-    if bloom_cols:
-        bloom_cols = [_physical(_p0, c) for c in bloom_cols]
-    last_err: Exception | None = None
-    for _ in range(max_tries):
-        versions = _manifest_versions(spark, path)
-        if not versions:
+    stats_cols = _physical_cols(_p0, stats_cols)
+    bloom_cols = _physical_cols(_p0, bloom_cols)
+
+    def rewrite(base):
+        if base is None:
             raise ValueError(f"cannot compact an empty manifest lake: {path}")
-        base_version = versions[-1]
-        base = _read_manifest(spark, path, base_version)
-        base_segs = set(base["segments"])
         base_meta = base.get("meta", {})
         part_tags = [base_meta.get(s, {}).get("part") for s in base["segments"]]
         if base["segments"] and all(p is not None for p in part_tags):
@@ -2377,46 +2266,28 @@ def compact(
                 if blooms:
                     seg_meta["bloom"] = blooms
             new_segs[seg] = seg_meta
+        return {
+            "segments": list(new_segs) + untouched,
+            "meta": {s: m for s, m in new_segs.items() if m},
+        }
 
-        def _segments(parent):
-            extra = _appends_since(spark, path, parent, base_version, base_segs)
-            return list(new_segs) + untouched + extra
+    rebased = _rebased(spark, path, rewrite)
 
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: m for s, m in new_segs.items() if m}
-            for s in segments:
-                if s not in out and s in pm:
-                    out[s] = pm[s]
+    def build(parent):
+        out = rebased(parent)
+        if part_eq is not None:
+            # scoped compact leaves untouched segments that still need
+            # the tombstones and the widened read schema -> both carry
             return out
+        # full compact materialized every tombstone -> clear (appends
+        # interleaved after base carry the SAME tombstone list, so
+        # clearing is exact); it also rewrote every file at the
+        # recorded (widened) types -> the type-widening flag clears and
+        # the gated modify ops come back
+        props = {k: v for k, v in _props(parent).items() if k != "widened"}
+        return {**out, "deletes": [], "props": props}
 
-        try:
-            # deletes cleared: the consolidation read materialized them
-            # (appends interleaved after base carry the SAME tombstone
-            # list forward, so clearing is exact; any other op after
-            # base trips the lineage walk and the whole compact re-runs)
-            return _commit(
-                spark, path, "compact", _segments,
-                meta_fn=_meta,
-                # full compact materialized every tombstone -> clear;
-                # scoped compact leaves untouched segments that still
-                # need them -> carry (the default deletes_fn)
-                deletes_fn=None if part_eq is not None else (lambda p: []),
-                # full compact also rewrote every file at the recorded
-                # (widened) types -> the type-widening flag clears and
-                # the gated modify ops come back; scoped compact keeps
-                # narrow untouched segments -> flag stays
-                props_fn=None if part_eq is not None else (
-                    lambda props: {
-                        k: v for k, v in props.items() if k != "widened"
-                    }
-                ),
-            )
-        except CommitConflict as e:
-            last_err = e  # snapshot moved non-append-wise: redo
-    raise RuntimeError(
-        f"compact lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _commit(spark, path, "compact", build)
 
 
 _NUMERIC_PREFIXES = ("tinyint", "smallint", "int", "bigint", "float", "double", "decimal")
@@ -2514,13 +2385,14 @@ def compact_small(
     tombstones must be compacted first (full `compact` materializes
     them); a widened lake stays widened (untouched segments keep the
     narrow physical type)."""
-    for _ in range(5):
-        v = current_version(spark, path)
-        if v is None:
+    acted = {}
+
+    def build(m):
+        acted["yes"] = False
+        if m is None:
             return None
-        m = _read_manifest(spark, path, v)
         _require_no_tombstones(m, path, "compact_small")
-        props = dict(m.get("props", {}))
+        props = _props(m)
         meta = m.get("meta", {})
         ddl = _widened_ddl(props)
 
@@ -2538,11 +2410,10 @@ def compact_small(
         cands = {k: segs for k, segs in groups.items() if len(segs) >= 2}
         if not cands:
             return None
+        acted["yes"] = True
         new_segs: dict[str, dict] = {}
         consumed: set[str] = set()
-        bloom_t = [
-            _physical(props, c) for c in bloom_cols
-        ] if bloom_cols else None
+        bloom_t = _physical_cols(props, bloom_cols)
         for k, segs in sorted(cands.items()):
             df = _read_segments(
                 spark, path, segs, merge_schema=True, schema_ddl=ddl
@@ -2564,29 +2435,14 @@ def compact_small(
                     sm["bloom"] = blooms
             new_segs[seg] = sm
             consumed.update(segs)
+        return {
+            "segments": [s for s in m["segments"] if s not in consumed]
+            + list(new_segs),
+            "meta": {s: sm for s, sm in new_segs.items() if sm},
+        }
 
-        def _segments(parent):
-            return [
-                s for s in parent["segments"] if s not in consumed
-            ] + list(new_segs)
-
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: pm[s] for s in segments if s in pm}
-            out.update({s: sm for s, sm in new_segs.items() if sm})
-            return out
-
-        try:
-            return _commit(
-                spark, path, "compact_small", _segments,
-                expected_parent=v,
-                meta_fn=_meta,
-            )
-        except CommitConflict:
-            continue  # snapshot moved: re-plan the small tail
-    raise RuntimeError(
-        f"compact_small lost the snapshot race 5 times: {path}"
-    )
+    v = _commit(spark, path, "compact_small", build)
+    return v if acted["yes"] else None
 
 
 def cluster(
@@ -2595,7 +2451,6 @@ def cluster(
     cluster_cols: list[str],
     target_segments: int = 16,
     bits_per_col: int = 8,
-    max_tries: int = 5,
     stats_cols: list[str] | None = None,
     allow_untag: bool = False,
 ) -> int:
@@ -2619,9 +2474,9 @@ def cluster(
     ordinary segments), and one grouped aggregation over the persisted
     shuffle output records per-segment stats. Merge-on-read tombstones
     MATERIALIZE here (the rewrite read applies them and clears the
-    ``deletes`` list), like compact. Concurrency contract is compact's:
-    interleaved appends survive via the append-only lineage walk; any
-    row-removing commit after the base forces a re-run.
+    ``deletes`` list), like compact. Concurrency contract is compact's
+    (`_rebased`): interleaved appends survive; any row-removing commit
+    after the base forces a re-run.
 
     The z-run output segments are UNTAGGED, so clustering a
     partition-tagged lake forfeits partition pruning and partitioned
@@ -2643,17 +2498,14 @@ def cluster(
     from pyspark.sql import functions as F
 
     _p0 = _latest_props(spark, path)
-    cluster_cols = [_physical(_p0, c) for c in cluster_cols]
-    if stats_cols:
-        stats_cols = [_physical(_p0, c) for c in stats_cols]
+    cluster_cols = _physical_cols(_p0, cluster_cols)
+    stats_cols = _physical_cols(_p0, stats_cols)
     all_stats = list(dict.fromkeys(list(cluster_cols) + list(stats_cols or [])))
-    last_err: Exception | None = None
-    for _ in range(max_tries):
-        versions = _manifest_versions(spark, path)
-        if not versions:
+    layout: dict = {}
+
+    def rewrite(base):
+        if base is None:
             raise ValueError(f"cannot cluster an empty manifest lake: {path}")
-        base_version = versions[-1]
-        base = _read_manifest(spark, path, base_version)
         if not allow_untag:
             tagged = [
                 s for s in base["segments"]
@@ -2666,7 +2518,6 @@ def cluster(
                     "partitioned MERGE — pass allow_untag=True to trade "
                     f"partition skipping for z-range skipping: {path}"
                 )
-        base_segs = set(base["segments"])
         new_segs: dict[str, dict] = {}
         zcuts: list[list[float]] = [[] for _ in cluster_cols]
         if base["segments"]:
@@ -2743,48 +2594,36 @@ def cluster(
                 }
             fs.delete(jtmp, True)
 
-        def _segments(parent):
-            extra = _appends_since(spark, path, parent, base_version, base_segs)
-            return list(new_segs) + extra
-
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: m for s, m in new_segs.items() if m}
-            for s in segments:
-                if s not in out and s in pm:
-                    out[s] = pm[s]
-            return out
-
         # the layout spec rides the manifest so cluster_incremental can
         # reproduce the EXACT z mapping (same cuts -> same runs)
-        zspec = {
+        layout["zorder"] = {
             "cols": list(cluster_cols),
             "bits": bits_per_col,
             "cuts": [[float(x) for x in cc] for cc in zcuts],
             "target_segments": target_segments,
             "stats_cols": all_stats,
         }
+        # deletes cleared: the rewrite read materialized them (same
+        # append-only lineage argument as compact)
+        return {
+            "segments": list(new_segs),
+            "meta": {s: m for s, m in new_segs.items() if m},
+            "deletes": [],
+        }
 
-        try:
-            # deletes cleared: the rewrite read materialized them (same
-            # append-only lineage argument as compact)
-            return _commit(
-                spark, path, "cluster", _segments,
-                meta_fn=_meta, deletes_fn=lambda p: [],
-                props_fn=lambda props: {**props, "zorder": zspec},
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"cluster lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    rebased = _rebased(spark, path, rewrite)
+    return _commit(
+        spark,
+        path,
+        "cluster",
+        lambda parent: {
+            **rebased(parent),
+            "props": {**_props(parent), "zorder": layout["zorder"]},
+        },
+    )
 
 
-def cluster_incremental(
-    spark: SparkSession,
-    path: str,
-    max_tries: int = 5,
-) -> int:
+def cluster_incremental(spark: SparkSession, path: str) -> int:
     """Incremental OPTIMIZE: fold segments appended SINCE the last
     `cluster` into the existing z-layout without rewriting settled
     runs — the liquid-clustering maintenance shape. New rows compute
@@ -2799,9 +2638,9 @@ def cluster_incremental(
     sizes drift toward the hot z-cells; re-run full `cluster` when
     `files()` shows the spread (the cuts are quantiles of the ORIGINAL
     distribution — a distribution shift is what full re-clustering is
-    for). Concurrency contract = cluster's: interleaved appends stay
-    unclustered for the next increment; row-removing commits force a
-    re-run.
+    for). Concurrency contract = cluster's (`_rebased`): interleaved
+    appends stay unclustered for the next increment; row-removing
+    commits force a re-run.
 
     Works on column-mapped lakes: the persisted z-order spec records
     PHYSICAL column names (immutable), fresh appends land physical
@@ -2809,13 +2648,9 @@ def cluster_incremental(
     segments — nothing here sees a logical name."""
     from pyspark.sql import functions as F
 
-    last_err: Exception | None = None
-    for _ in range(max_tries):
-        versions = _manifest_versions(spark, path)
-        if not versions:
+    def rewrite(base):
+        if base is None:
             raise ValueError(f"cannot cluster an empty manifest lake: {path}")
-        base_version = versions[-1]
-        base = _read_manifest(spark, path, base_version)
         spec = base.get("props", {}).get("zorder")
         if not spec:
             raise ValueError(
@@ -2851,8 +2686,7 @@ def cluster_incremental(
         }
         fresh = [s for s in base["segments"] if s not in run_of]
         if not fresh:
-            return base_version  # nothing to fold
-        base_segs = set(base["segments"])
+            return None  # nothing to fold: _commit returns the head
         z, n_z = _zorder_from_cuts(cols, bits, spec["cuts"])
         ddl = _widened_ddl(dict(base.get("props", {})))
         df_new = _read_segments(
@@ -2904,30 +2738,16 @@ def cluster_incremental(
             }
         routed.unpersist()
         consumed = set(fresh) | replaced
+        kept = [s for s in base["segments"] if s not in consumed]
+        return {
+            "segments": kept + list(new_segs),
+            "meta": new_segs,
+            "deletes": [],
+        }
 
-        def _segments(parent):
-            extra = _appends_since(spark, path, parent, base_version, base_segs)
-            kept = [s for s in base["segments"] if s not in consumed]
-            return kept + list(new_segs) + extra
-
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = dict(new_segs)
-            for s in segments:
-                if s not in out and s in pm:
-                    out[s] = pm[s]
-            return out
-
-        try:
-            return _commit(
-                spark, path, "cluster_incremental", _segments,
-                meta_fn=_meta, deletes_fn=lambda p: [],
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"cluster_incremental lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _commit(
+        spark, path, "cluster_incremental", _rebased(spark, path, rewrite)
+    )
 
 
 def cluster_partitioned(
@@ -2937,7 +2757,6 @@ def cluster_partitioned(
     cluster_cols: list[str],
     target_segments_per_partition: int = 4,
     bits_per_col: int = 8,
-    max_tries: int = 5,
     stats_cols: list[str] | None = None,
 ) -> int:
     """OPTIMIZE ZORDER *within partitions* — the Delta semantics on a
@@ -2954,8 +2773,8 @@ def cluster_partitioned(
     cluster columns. Partition values map through a driver-built dense
     id (O(partitions) metadata), so directory naming never has to
     round-trip typed values through Hive path encoding. Concurrency =
-    `cluster`'s: interleaved appends survive via the append-only
-    lineage walk; row-removing commits force a re-run. Requires a
+    `cluster`'s (`_rebased`): interleaved appends survive; row-removing
+    commits force a re-run. Requires a
     fully `part_col`-tagged lake and no pending tombstones (same
     contract as partitioned MERGE).
 
@@ -2966,18 +2785,14 @@ def cluster_partitioned(
 
     _p0 = _latest_props(spark, path)
     part_col = _physical(_p0, part_col)
-    cluster_cols = [_physical(_p0, c) for c in cluster_cols]
-    if stats_cols:
-        stats_cols = [_physical(_p0, c) for c in stats_cols]
+    cluster_cols = _physical_cols(_p0, cluster_cols)
+    stats_cols = _physical_cols(_p0, stats_cols)
     all_stats = list(dict.fromkeys(list(cluster_cols) + list(stats_cols or [])))
     n_per = target_segments_per_partition
-    last_err: Exception | None = None
-    for _ in range(max_tries):
-        versions = _manifest_versions(spark, path)
-        if not versions:
+
+    def rewrite(base):
+        if base is None:
             raise ValueError(f"cannot cluster an empty manifest lake: {path}")
-        base_version = versions[-1]
-        base = _read_manifest(spark, path, base_version)
         _require_no_tombstones(base, path, "cluster_partitioned")
         meta0 = base.get("meta", {})
         untagged = [
@@ -2989,7 +2804,6 @@ def cluster_partitioned(
                 f"cluster_partitioned requires every segment tagged on "
                 f"{part_col!r} ({len(untagged)} untagged): {path}"
             )
-        base_segs = set(base["segments"])
         df = _read_segments(
             spark,
             path,
@@ -3076,29 +2890,15 @@ def cluster_partitioned(
         if not new_segs:  # 0-row snapshot: keep reads valid
             seg = _write_segment(df.limit(0), path, 1)
             new_segs[seg] = {}
+        return {
+            "segments": list(new_segs),
+            "meta": {s: m for s, m in new_segs.items() if m},
+            "deletes": [],
+        }
 
-        def _segments(parent):
-            extra = _appends_since(spark, path, parent, base_version, base_segs)
-            return list(new_segs) + extra
-
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: m for s, m in new_segs.items() if m}
-            for s in segments:
-                if s not in out and s in pm:
-                    out[s] = pm[s]
-            return out
-
-        try:
-            return _commit(
-                spark, path, "cluster_partitioned", _segments,
-                meta_fn=_meta, deletes_fn=lambda p: [],
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"cluster_partitioned lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _commit(
+        spark, path, "cluster_partitioned", _rebased(spark, path, rewrite)
+    )
 
 
 def _is_abs_ref(s: str) -> bool:
@@ -3206,13 +3006,8 @@ def widen_column_type(
     the same honest-gate + one-command remediation as tombstone
     materialization. Time travel to pre-widening versions still reads
     (and types) the old schema."""
-    for _ in range(20):
-        pinned = current_version(spark, path)
-        props = (
-            dict(_read_manifest(spark, path, pinned).get("props", {}))
-            if pinned is not None
-            else {}
-        )
+    def build(parent):
+        props = _props(parent)
         sch = (props.get("schema") or {}).get("cols")
         if not sch:
             raise ValueError(
@@ -3223,33 +3018,20 @@ def widen_column_type(
             raise ValueError(f"widen_column_type: no column {col!r} in {path}")
         old = types[col]
         if old == new_type:
-            return pinned  # no-op
+            return None  # no-op: _commit returns the head version
         if not _is_widening(old, new_type):
             raise ValueError(
                 f"widen_column_type: {old} -> {new_type} is not a "
                 "supported widening (tinyint<smallint<int<bigint, "
                 "float<double, int-or-narrower->double)"
             )
+        cols = [[n, new_type if n == col else t] for n, t in sch]
+        return {
+            "segments": _carry(parent),
+            "props": {**props, "schema": {"cols": cols}, "widened": True},
+        }
 
-        def props_fn(p):
-            cols = [
-                [n, new_type if n == col else t]
-                for n, t in (p.get("schema") or {}).get("cols", [])
-            ]
-            return {**p, "schema": {"cols": cols}, "widened": True}
-
-        try:
-            return _commit(
-                spark, path, "widen_type",
-                lambda parent: list(parent["segments"]) if parent else [],
-                props_fn=props_fn,
-                expected_parent=pinned or 0,
-            )
-        except CommitConflict:
-            continue
-    raise RuntimeError(
-        f"widen_column_type lost the CAS race 20 times: {path}"
-    )
+    return _commit(spark, path, "widen_type", build)
 
 
 def _widened_ddl(props: dict) -> str | None:
@@ -3423,6 +3205,31 @@ def _read_with_tombstones(
     return out
 
 
+def _visible_victims(
+    spark: SparkSession,
+    path: str,
+    parent: dict,
+    touched: list[str],
+    key_df: DataFrame,
+    keys: list[str],
+    props: dict,
+) -> DataFrame:
+    """The currently-VISIBLE rows of the `touched` segments that hold a
+    key of `key_df`, under logical names — the old side of a recorded
+    delete or MoR merge. Pending tombstones apply: a row an earlier
+    delete already killed must not be emitted as deleted again. With
+    no touched segment: an empty frame of the parent's snapshot
+    schema."""
+    if not touched:
+        return read_snapshot(spark, path, version=parent["version"]).limit(0)
+    return _project_logical(
+        _read_with_tombstones(spark, path, touched, parent).join(
+            key_df, on=list(keys), how="left_semi"
+        ),
+        props,
+    )
+
+
 def _part_tag_disjoint(have, want) -> bool:
     """True iff a segment's partition tag PROVABLY can't equal `want`:
     exactly one side NULL (NULL is its own partition), or comparable
@@ -3569,6 +3376,10 @@ def _physical(props: dict, col: str) -> str:
     return _colmap(props).get(col, col)
 
 
+def _physical_cols(props: dict, cols: list[str] | None) -> list[str] | None:
+    return [_physical(props, c) for c in cols] if cols else cols
+
+
 def _translate_probe(props: dict, probe: dict | None) -> dict | None:
     if probe is None or not _has_colmap(props):
         return probe
@@ -3609,22 +3420,17 @@ def _to_physical(df: DataFrame, props: dict) -> DataFrame:
     return df.withColumnsRenamed(renames) if renames else df
 
 
-def _clear_colmap_after(inner_props_fn):
-    """Wrap a props_fn so the commit also clears the column mapping —
-    for full-rewrite ops whose output segment is written under the
-    LOGICAL names (upsert): the mapping is materialized by the
-    rewrite."""
-
-    def props_fn(props):
-        out = dict(inner_props_fn(props))
-        out.pop("colmap", None)
-        out.pop("dropped_cols", None)
-        # a consolidated rewrite also materializes TYPE WIDENING: the
-        # new segment is written at the recorded wide types
-        out.pop("widened", None)
-        return out
-
-    return props_fn
+def _clear_colmap(props: dict) -> dict:
+    """`props` with the column mapping cleared — for full-rewrite ops
+    whose output segment is written under the LOGICAL names (upsert):
+    the mapping is materialized by the rewrite."""
+    out = dict(props)
+    out.pop("colmap", None)
+    out.pop("dropped_cols", None)
+    # a consolidated rewrite also materializes TYPE WIDENING: the
+    # new segment is written at the recorded wide types
+    out.pop("widened", None)
+    return out
 
 
 def _latest_props(spark: SparkSession, path: str) -> dict:
@@ -3660,8 +3466,8 @@ def rename_column(spark: SparkSession, path: str, old: str, new: str) -> int:
                 f"rename, and re-add against {new!r}: {path}"
             )
 
-    def props_fn(p):
-        cur = dict(p)
+    def build(parent):
+        cur = _props(parent)
         sch2 = {"cols": [[new if n == old else n, t] for n, t in cur["schema"]["cols"]]}
         cm = _colmap(cur)
         physical = cm.pop(old, old)
@@ -3672,13 +3478,9 @@ def rename_column(spark: SparkSession, path: str, old: str, new: str) -> int:
             out["colmap"] = cm
         else:
             out.pop("colmap", None)
-        return out
+        return {"segments": _carry(parent), "props": out}
 
-    return _commit(
-        spark, path, "rename_column",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit(spark, path, "rename_column", build)
 
 
 def drop_column(spark: SparkSession, path: str, name: str) -> int:
@@ -3700,8 +3502,8 @@ def drop_column(spark: SparkSession, path: str, name: str) -> int:
                 f"constraint first: {path}"
             )
 
-    def props_fn(p):
-        cur = dict(p)
+    def build(parent):
+        cur = _props(parent)
         cm = _colmap(cur)
         physical = cm.pop(name, name)
         sch2 = {"cols": [[n, t] for n, t in cur["schema"]["cols"] if n != name]}
@@ -3711,13 +3513,9 @@ def drop_column(spark: SparkSession, path: str, name: str) -> int:
             out["colmap"] = cm
         else:
             out.pop("colmap", None)
-        return out
+        return {"segments": _carry(parent), "props": out}
 
-    return _commit(
-        spark, path, "drop_column",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit(spark, path, "drop_column", build)
 
 
 def _sortable_keys(keys_in: dict | None) -> dict | None:
@@ -4326,7 +4124,6 @@ def commit_upsert(
     keys: list[str],
     version_col: str,
     target_files: int | None = None,
-    max_tries: int = 5,
     allow_untag: bool = False,
     tag: str | None = None,
     record_cdf: bool = False,
@@ -4335,10 +4132,10 @@ def commit_upsert(
     read the current snapshot, fold `changes` with
     ``operators.cdc.merge_upsert``, publish the merged table as a new
     snapshot. Because the new segment's CONTENT depends on the parent
-    snapshot, the commit is a strict CAS on that parent
-    (`expected_parent`); losing the race re-reads and re-merges rather
-    than committing stale data — the orphaned segment of a lost
-    attempt is invisible and vacuumable.
+    snapshot, the merge runs in the commit's build on the parent it
+    lands on; losing the race re-reads and re-merges rather than
+    committing stale data — the orphaned segment of a lost attempt is
+    invisible and vacuumable.
 
     Scale note (documented trade): this rewrites the TABLE as one
     consolidated snapshot — correct and simple, right for dimension
@@ -4360,23 +4157,15 @@ def commit_upsert(
     `read_feed` / `consume_feed` / MV refresh then reads it instead of
     re-diffing the rewrite width. The restatement-heavy-CDC
     optimization SCALE.md r10 names; unique-key premise as usual."""
-    # tag pre-check before compute: a replayed tagged MERGE must no-op
-    # without re-merging (and without re-running UNIQUE validation on a
-    # snapshot that already contains it) — see commit_append
-    if tag is not None and tag in committed_tags(spark, path):
-        return current_version(spark, path)
     _check_constraints(spark, path, changes)
     _check_schema(spark, path, changes.drop(version_col))
     from ..operators.cdc import merge_upsert
 
-    last_err: Exception | None = None
-    for _ in range(max_tries):
-        base_version = current_version(spark, path)
-        if base_version is not None and not allow_untag:
-            m = _read_manifest(spark, path, base_version)
+    def build(parent):
+        if parent is not None and not allow_untag:
             tagged = [
-                s for s in m["segments"]
-                if "part" in m.get("meta", {}).get(s, {})
+                s for s in parent["segments"]
+                if "part" in parent.get("meta", {}).get(s, {})
             ]
             if tagged:
                 raise ValueError(
@@ -4385,27 +4174,31 @@ def commit_upsert(
                     "partitioned MERGE — use commit_upsert_partitioned, or "
                     f"pass allow_untag=True to untag deliberately: {path}"
                 )
-        if base_version is None:
+        if parent is None:
             # empty lake: an upsert is just the changes, latest per key
             merged = merge_upsert(
                 changes.limit(0).drop(version_col), changes, keys, version_col
             )
         else:
-            base = read_snapshot(spark, path, version=base_version)
+            base = read_snapshot(spark, path, version=parent["version"])
             merged = merge_upsert(base, changes, keys, version_col)
         # declared UNIQUE key (VERDICT r9 #1): the merged output IS the
         # new table, so one self-duplicate check on it validates the
         # whole constraint. Skipped when the merge keys are a subset of
         # the UNIQUE columns — merge_upsert emits at most one row per
         # key tuple, so uniqueness holds by construction. Runs BEFORE
-        # the segment write: a refusal is atomic (no version, no data);
-        # the strict parent CAS below re-runs it if a set_unique_key
-        # lands mid-flight (the conflict retry re-reads the props).
-        uniq = unique_key(spark, path)
+        # the segment write: a refusal is atomic (no version, no data).
+        props = _props(parent)
+        uniq = list(props.get("unique", []))
         if uniq and not set(keys) <= set(uniq):
             _check_unique_dups(merged, uniq, path, "the MERGE output")
         seg = _write_segment(merged, path, target_files)
-        extra = None
+        out = {
+            "segments": [seg],
+            # tombstones cleared: the snapshot read above applied them
+            "deletes": [],
+            "props": _clear_colmap(_schema_props(spark, path, props, merged)),
+        }
         if record_cdf:
             # the write-time change segment: the SAME diff core
             # snapshot_diff runs post-hoc, restricted to the change
@@ -4419,37 +4212,14 @@ def commit_upsert(
             new_r = _read_segments(spark, path, [seg]).join(
                 ckeys, on=list(keys), how="left_semi"
             )
-            if base_version is None:  # fresh lineage, not new_r.limit(0)
+            if parent is None:  # fresh lineage, not new_r.limit(0)
                 old_r = rows_frame(spark, [], new_r.schema)
             else:
                 old_r = base.join(ckeys, on=list(keys), how="left_semi")
-            delta = _diff_frames(old_r, new_r, keys, include_values=True)
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
-        try:
-            # tombstones cleared: the snapshot read above applied them,
-            # and the strict parent CAS forbids interleaved commits
-            return _commit(
-                spark,
-                path,
-                "upsert",
-                lambda parent: [seg],
-                expected_parent=base_version or 0,
-                deletes_fn=lambda p: [],
-                tag=tag,
-                props_fn=_clear_colmap_after(
-                    _schema_props_fn(spark, path, merged)
-                ),
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e  # re-read the moved snapshot and re-merge
-    raise RuntimeError(
-        f"commit_upsert lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+            out.update(_record_change_segment(spark, path, old_r, new_r, keys))
+        return out
+
+    return _commit(spark, path, "upsert", build, tag=tag)
 
 
 def commit_upsert_partitioned(
@@ -4460,7 +4230,6 @@ def commit_upsert_partitioned(
     version_col: str,
     part_col: str,
     target_files: int | None = None,
-    max_tries: int = 5,
     check_stable_partitions: bool = True,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
@@ -4494,9 +4263,10 @@ def commit_upsert_partitioned(
     driver list (one distinct job over the CHANGES, which are
     batch-sized by premise); untouched segments transfer into the new
     manifest by name — zero data movement; touched partitions read ←
-    merge_upsert ← write one fresh tagged segment each. The commit is
-    the same strict parent CAS as `commit_upsert`: racing commits force
-    a re-read + re-merge, so concurrent appends are never lost. This is
+    merge_upsert ← write one fresh tagged segment each. Like
+    `commit_upsert`, the classification, merge and writes run in the
+    commit's build on the parent it lands on: racing commits force a
+    re-read + re-merge, so concurrent appends are never lost. This is
     the file-level-skipping MERGE that `commit_upsert`'s docstring
     points to — at 100 TB a CDC batch touching 3 of 10,000 daily
     partitions rewrites 3.
@@ -4509,11 +4279,6 @@ def commit_upsert_partitioned(
     the rewritten segments land physical like any append. Schema
     evolution/validation still sees the LOGICAL batch (constraints and
     the resurrection guard speak logical names)."""
-    # tag pre-check BEFORE any compute: a replayed micro-batch (the
-    # streaming index-maintenance sink) must not re-merge, re-write a
-    # stray segment, or pay the stability scan just to no-op at CAS
-    if tag is not None and tag in committed_tags(spark, path):
-        return current_version(spark, path)
     _check_constraints(spark, path, changes)
     _check_schema(spark, path, changes.drop(version_col))
     from pyspark.sql import functions as F
@@ -4526,28 +4291,23 @@ def commit_upsert_partitioned(
     changes = _to_physical(changes, _p0)
     part_col = _physical(_p0, part_col)
     keys = [_physical(_p0, k) for k in keys]
-    if stats_cols:
-        stats_cols = [_physical(_p0, c) for c in stats_cols]
-    if bloom_cols:
-        bloom_cols = [_physical(_p0, c) for c in bloom_cols]
-    last_err: Exception | None = None
-    for _ in range(max_tries):
-        base_version = current_version(spark, path)
-        parts = [
-            _json_safe(r[part_col])
-            for r in changes.select(part_col).distinct().collect()
-        ]
+    stats_cols = _physical_cols(_p0, stats_cols)
+    bloom_cols = _physical_cols(_p0, bloom_cols)
+    parts = [
+        _json_safe(r[part_col])
+        for r in changes.select(part_col).distinct().collect()
+    ]
+
+    def build(parent):
         touched: list[str] = []
         untouched: list[str] = []
-        meta: dict = {}
-        if base_version is not None:
-            m = _read_manifest(spark, path, base_version)
-            _require_no_tombstones(m, path, "commit_upsert_partitioned")
+        if parent is not None:
+            _require_no_tombstones(parent, path, "commit_upsert_partitioned")
             _require_not_widened(
-                dict(m.get("props", {})), path, "commit_upsert_partitioned"
+                _props(parent), path, "commit_upsert_partitioned"
             )
-            meta = m.get("meta", {})
-            for s in m["segments"]:
+            meta = parent.get("meta", {})
+            for s in parent["segments"]:
                 part = meta.get(s, {}).get("part", {})
                 if part_col not in part:
                     raise ValueError(
@@ -4592,7 +4352,8 @@ def commit_upsert_partitioned(
         # change keys (the stability scan just proved absent from
         # untouched), so no collision is possible. UNIQUE cols
         # translate to physical like every probe (merged is physical).
-        uniq = [_physical(_p0, c) for c in unique_key(spark, path)]
+        props = _props(parent)
+        uniq = _physical_cols(props, props.get("unique", []))
         if uniq:
             if not set(keys) <= set(uniq):
                 _check_unique_dups(
@@ -4606,7 +4367,7 @@ def commit_upsert_partitioned(
                     _read_segments(spark, path, untouched),
                     "the MERGE output",
                 )
-        extra = None
+        out: dict = {}
         if record_cdf:
             # the write-time change segment (see commit_upsert):
             # restricted to the change keys — carried rows inside the
@@ -4620,17 +4381,13 @@ def commit_upsert_partitioned(
                 old_r = base.join(ckeys, on=list(keys), how="left_semi")
             else:
                 old_r = rows_frame(spark, [], new_r.schema)
-            delta = _diff_frames(
+            out = _record_change_segment(
+                spark,
+                path,
                 _project_logical(old_r, _p0),
                 _project_logical(new_r, _p0),
                 logical_keys,
-                include_values=True,
             )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
         new_segs: dict[str, dict] = {}
         for p in parts:
             part_df = merged.filter(  # eqNullSafe: NULL is a valid partition
@@ -4649,34 +4406,16 @@ def commit_upsert_partitioned(
                 if blooms:
                     seg_meta["bloom"] = blooms
             new_segs[seg] = seg_meta
+        return {
+            **out,
+            "segments": untouched + list(new_segs),
+            "meta": new_segs,
+            "props": _schema_props(
+                spark, path, props, logical_changes.drop(version_col)
+            ),
+        }
 
-        def _segments(parent):
-            return untouched + list(new_segs)
-
-        def _meta(parent, segments):
-            out = {s: meta[s] for s in untouched if s in meta}
-            out.update(new_segs)
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "upsert_partitioned",
-                _segments,
-                tag=tag,
-                expected_parent=base_version or 0,
-                meta_fn=_meta,
-                props_fn=_schema_props_fn(
-                    spark, path, logical_changes.drop(version_col)
-                ),
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_upsert_partitioned lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _commit(spark, path, "upsert_partitioned", build, tag=tag)
 
 
 def _segments_overlapping_keys(
@@ -4728,7 +4467,6 @@ def commit_upsert_pruned(
     version_col: str,
     stats_key: str | None = None,
     target_files: int | None = None,
-    max_tries: int = 5,
     record_cdf: bool = False,
 ) -> int:
     """Segment-skipping MERGE — the documented step up from
@@ -4751,7 +4489,8 @@ def commit_upsert_pruned(
     overlap). Partition-tagged lakes must use
     `commit_upsert_partitioned` (this op's merged segment carries
     stats, not partition tags); pending MoR tombstones must be
-    compacted first. Strict parent CAS like `commit_upsert`.
+    compacted first. Like `commit_upsert`, the classification, merge
+    and writes run in the commit's build on the parent it lands on.
 
     Column-mapped lakes: same stance as the partitioned variant —
     name-transfer is sound (segments are uniform-physical), the
@@ -4779,27 +4518,21 @@ def commit_upsert_pruned(
     stats_key = stats_key or keys[0]
     if stats_key not in keys:
         raise ValueError(f"stats_key {stats_key!r} must be one of the merge keys {keys}")
-    last_err: Exception | None = None
-    for _ in range(max_tries):
-        base_version = current_version(spark, path)
+    def build(parent):
         touched: list[str] = []
         untouched: list[str] = []
-        meta: dict = {}
-        if base_version is not None:
-            m = _read_manifest(spark, path, base_version)
-            _require_no_tombstones(m, path, "commit_upsert_pruned")
-            _require_not_widened(
-                dict(m.get("props", {})), path, "commit_upsert_pruned"
-            )
-            meta = m.get("meta", {})
-            if any("part" in meta.get(s, {}) for s in m["segments"]):
+        if parent is not None:
+            _require_no_tombstones(parent, path, "commit_upsert_pruned")
+            _require_not_widened(_props(parent), path, "commit_upsert_pruned")
+            meta = parent.get("meta", {})
+            if any("part" in meta.get(s, {}) for s in parent["segments"]):
                 raise ValueError(
                     "commit_upsert_pruned on a partition-tagged lake would "
                     "strand an untagged merged segment — use "
                     f"commit_upsert_partitioned: {path}"
                 )
             touched, untouched = _segments_overlapping_keys(
-                spark, m, changes.select(stats_key).distinct(), stats_key
+                spark, parent, changes.select(stats_key).distinct(), stats_key
             )
         if touched:
             base = _read_segments(spark, path, touched)
@@ -4815,7 +4548,8 @@ def commit_upsert_pruned(
         # is keyed on stats_key ∈ keys, so an untouched segment
         # provably holds no merged key tuple (base rows by the unique
         # table invariant; change rows by the stats proof).
-        uniq = [_physical(_p0, c) for c in unique_key(spark, path)]
+        props = _props(parent)
+        uniq = _physical_cols(props, props.get("unique", []))
         if uniq and not set(keys) <= set(uniq):
             _check_unique_dups(merged, uniq, path, "the MERGE output")
             if untouched:
@@ -4825,12 +4559,18 @@ def commit_upsert_pruned(
                     "the MERGE output",
                 )
         seg = _write_segment(merged, path, target_files)
-        # stats for the NEXT merge's pruning, computed from the written
-        # files (cheap rescan; re-running the merge plan would be worse)
-        new_stats = _stats_meta(
-            _read_segments(spark, path, [seg]), [stats_key]
-        )
-        extra = None
+        out = {
+            "segments": untouched + [seg],
+            # stats for the NEXT merge's pruning, computed from the
+            # written files (cheap rescan; re-running the merge plan
+            # would be worse)
+            "meta": {
+                seg: _stats_meta(_read_segments(spark, path, [seg]), [stats_key])
+            },
+            "props": _schema_props(
+                spark, path, props, logical_changes.drop(version_col)
+            ),
+        }
         if record_cdf:
             # write-time change segment (LOGICAL names, the
             # snapshot_diff contract): old side = the touched segments
@@ -4853,41 +4593,12 @@ def commit_upsert_pruned(
                 )
             else:
                 old_r = rows_frame(spark, [], new_r.schema)
-            delta = _diff_frames(
-                old_r, new_r, logical_keys, include_values=True
+            out.update(
+                _record_change_segment(spark, path, old_r, new_r, logical_keys)
             )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
+        return out
 
-        def _segments(parent):
-            return untouched + [seg]
-
-        def _meta(parent, segments):
-            out = {s: meta[s] for s in untouched if s in meta}
-            out[seg] = dict(new_stats)
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "upsert_pruned",
-                _segments,
-                expected_parent=base_version or 0,
-                meta_fn=_meta,
-                props_fn=_schema_props_fn(
-                    spark, path, logical_changes.drop(version_col)
-                ),
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_upsert_pruned lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _commit(spark, path, "upsert_pruned", build)
 
 
 def _bloom_refine_touched(
@@ -4940,7 +4651,6 @@ def commit_delete(
     keys: list[str],
     stats_key: str | None = None,
     target_files: int | None = None,
-    max_tries: int = 5,
     bloom_probe_cap: int = 1024,
     record_cdf: bool = False,
     tag: str | None = None,
@@ -4958,7 +4668,8 @@ def commit_delete(
     the manifest. Untouched segments transfer by name — the
     takedown/GDPR path on a 100 TB lake rewrites the few segments that
     hold the keys, not the table. NULL delete keys match no row (SQL
-    semantics). Strict parent CAS; time travel keeps pre-delete
+    semantics). The classification and rewrite run in the commit's
+    build, on the parent it lands on; time travel keeps pre-delete
     versions readable until vacuum (point-in-time obligations are the
     caller's retention policy).
 
@@ -4975,10 +4686,6 @@ def commit_delete(
     victims are one semi-join of the TOUCHED segments the delete reads
     anyway, so the recording costs O(deleted rows), and downstream
     single-step diffs skip re-reading the rewrite width."""
-    from pyspark.sql import functions as F  # noqa: F401  (parity w/ siblings)
-
-    if tag is not None and tag in committed_tags(spark, path):
-        return current_version(spark, path)
     _p0 = _latest_props(spark, path)
     logical_keys = list(keys)
     deletes = _to_physical(deletes, _p0)
@@ -4987,17 +4694,13 @@ def commit_delete(
     stats_key = stats_key or keys[0]
     if stats_key not in keys:
         raise ValueError(f"stats_key {stats_key!r} must be one of the delete keys {keys}")
-    last_err: Exception | None = None
     key_df = deletes.select(*keys).distinct().localCheckpoint(eager=True)
-    for _ in range(max_tries):
-        base_version = current_version(spark, path)
-        if base_version is None:
+
+    def build(m):
+        if m is None:
             raise ValueError(f"cannot delete from an empty manifest lake: {path}")
-        m = _read_manifest(spark, path, base_version)
         _require_no_tombstones(m, path, "commit_delete")
-        _require_not_widened(
-            dict(m.get("props", {})), path, "commit_delete"
-        )
+        _require_not_widened(_props(m), path, "commit_delete")
         meta = m.get("meta", {})
         touched, untouched = _segments_overlapping_keys(
             spark, m, key_df.select(stats_key), stats_key
@@ -5008,34 +4711,16 @@ def commit_delete(
             spark, m, touched, key_df, stats_key, bloom_probe_cap
         )
         untouched = untouched + cleared
-        extra = None
+        out: dict = {}
         if record_cdf:
             # the write-time change segment: deleted rows with their
-            # old values (LOGICAL names, the snapshot_diff contract) —
-            # only the touched segments are read, and they're the ones
-            # the rewrite below reads anyway
-            if touched:
-                vict = _project_logical(
-                    _read_segments(spark, path, touched).join(
-                        key_df, on=list(keys), how="left_semi"
-                    ),
-                    _p0,
-                )
-            else:
-                vict = read_snapshot(
-                    spark, path, version=base_version
-                ).limit(0)
-            delta = _diff_frames(
-                vict,
-                rows_frame(spark, [], vict.schema),
+            # old values — only the touched segments are read, and
+            # they're the ones the rewrite below reads anyway
+            vict = _visible_victims(spark, path, m, touched, key_df, keys, _p0)
+            out = _record_change_segment(
+                spark, path, vict, rows_frame(spark, [], vict.schema),
                 logical_keys,
-                include_values=True,
             )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
         new_segs: dict[str, dict] = {}
         for s in touched:
             remaining = _read_segments(spark, path, [s]).join(
@@ -5047,31 +4732,13 @@ def commit_delete(
             new_segs[ns] = {
                 k: v for k, v in meta.get(s, {}).items() if k != "seq"
             }
+        return {
+            **out,
+            "segments": untouched + list(new_segs),
+            "meta": {s: mm for s, mm in new_segs.items() if mm},
+        }
 
-        def _segments(parent):
-            return untouched + list(new_segs)
-
-        def _meta(parent, segments):
-            out = {s: meta[s] for s in untouched if s in meta}
-            out.update({s: mm for s, mm in new_segs.items() if mm})
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "delete",
-                _segments,
-                expected_parent=base_version,
-                meta_fn=_meta,
-                tag=tag,
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_delete lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _commit(spark, path, "delete", build, tag=tag)
 
 
 def commit_delete_mor(
@@ -5094,8 +4761,9 @@ def commit_delete_mor(
 
     Tombstones are sequence-scoped: they mask only segments committed
     BEFORE them, so re-appending a deleted key later works, and racing
-    appends are never retro-masked. No parent CAS needed — the
-    tombstone's content doesn't depend on the snapshot it lands on.
+    appends are never retro-masked. The tombstone's content doesn't
+    depend on the snapshot it lands on, so it is written once and a
+    lost race retries only the pointer.
     `tag` gives streaming replays the usual idempotency token. The
     physical delete happens at compact+vacuum; until then deleted rows
     remain on disk (and in time-travel versions) — retention policy
@@ -5117,94 +4785,47 @@ def commit_delete_mor(
     logical_keys = list(keys)
     deletes = _to_physical(deletes, _p0)
     keys = [_physical(_p0, k) for k in keys]
+    if record_cdf:
+        sk = _physical(_p0, stats_key) if stats_key else keys[0]
+        if sk not in keys:
+            raise ValueError(
+                f"stats_key {stats_key!r} must be one of the delete keys"
+            )
+        key_df = deletes.select(*keys).distinct().localCheckpoint(eager=True)
     seg = _write_segment(deletes.select(*keys).distinct(), path, 1)
 
-    def _segments(parent):
-        return list(parent["segments"]) if parent else []
-
-    def _deletes(parent):
-        prior = list(parent.get("deletes", [])) if parent else []
-        return prior + [seg]
-
-    def _meta(parent, segments):
-        pm = dict(parent.get("meta", {})) if parent else {}
-        out = {s: pm[s] for s in segments if s in pm}
-        out[seg] = {"delete_keys": list(keys)}
-        return out
-
-    if not record_cdf:
-        return _commit(
-            spark,
-            path,
-            "delete_mor",
-            _segments,
-            tag=tag,
-            meta_fn=_meta,
-            deletes_fn=_deletes,
-        )
-    # recorded path: the victims depend on the parent snapshot, so —
-    # unlike the bare tombstone commit — this one is a strict parent
-    # CAS (an interleaved append's rows WOULD be masked by this
-    # tombstone, and a raceless commit would record a stale victim set)
-    sk = _physical(_p0, stats_key) if stats_key else keys[0]
-    if sk not in keys:
-        raise ValueError(
-            f"stats_key {stats_key!r} must be one of the delete keys"
-        )
-    last_err: Exception | None = None
-    key_df = deletes.select(*keys).distinct().localCheckpoint(eager=True)
-    for _ in range(5):
-        base_version = current_version(spark, path)
-        if base_version is None:
+    def build(parent):
+        out = {
+            "segments": _carry(parent),
+            "deletes": (list(parent.get("deletes", [])) if parent else []) + [seg],
+            "meta": {seg: {"delete_keys": list(keys)}},
+        }
+        if not record_cdf:
+            return out
+        # recorded path: unlike the bare tombstone, the victims depend
+        # on the parent snapshot (an interleaved append's rows WOULD be
+        # masked by this tombstone), so they resolve here, on the
+        # parent the commit lands on
+        if parent is None:
             raise ValueError(
                 f"cannot delete from an empty manifest lake: {path}"
             )
-        m = _read_manifest(spark, path, base_version)
         touched, _untch = _segments_overlapping_keys(
-            spark, m, key_df.select(sk), sk
+            spark, parent, key_df.select(sk), sk
         )
         touched, _clr = _bloom_refine_touched(
-            spark, m, touched, key_df, sk, 1024
+            spark, parent, touched, key_df, sk, 1024
         )
-        if touched:
-            # victims = currently-VISIBLE rows holding a delete key:
-            # pending tombstones must apply (a row an earlier MoR
-            # delete already killed must not be re-emitted as deleted)
-            vict = _project_logical(
-                _read_with_tombstones(spark, path, touched, m).join(
-                    key_df, on=list(keys), how="left_semi"
-                ),
-                _p0,
+        vict = _visible_victims(spark, path, parent, touched, key_df, keys, _p0)
+        out.update(
+            _record_change_segment(
+                spark, path, vict, rows_frame(spark, [], vict.schema),
+                logical_keys,
             )
-        else:
-            vict = read_snapshot(spark, path, version=base_version).limit(0)
-        delta = _diff_frames(
-            vict,
-            rows_frame(spark, [], vict.schema),
-            logical_keys,
-            include_values=True,
         )
-        cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-        delta.write.mode("overwrite").parquet(
-            f"{path}/{_CDF_DIR}/{cdf_seg}"
-        )
-        try:
-            return _commit(
-                spark,
-                path,
-                "delete_mor",
-                _segments,
-                tag=tag,
-                meta_fn=_meta,
-                deletes_fn=_deletes,
-                expected_parent=base_version,
-                extra_keys={"cdf": cdf_seg},
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_delete_mor(record_cdf) lost the snapshot race 5 times: {path}"
-    ) from last_err
+        return out
+
+    return _commit(spark, path, "delete_mor", build, tag=tag)
 
 
 def commit_multi(
@@ -5328,7 +4949,6 @@ def commit_delete_dv(
     deletes: DataFrame,
     keys: list[str],
     stats_key: str | None = None,
-    max_tries: int = 5,
     bloom_probe_cap: int = 1024,
     tag: str | None = None,
     record_cdf: bool = False,
@@ -5351,8 +4971,9 @@ def commit_delete_dv(
     re-appended later is never masked (equality tombstones get this
     from sequence scoping; DVs get it structurally) — and absent keys
     simply produce no positions. Because positions reference the
-    parent's physical files, the commit is a strict parent CAS (a
-    racing compaction would re-home the rows). `compact` materializes
+    parent's physical files, they resolve in the commit's build on the
+    parent it lands on (a racing compaction would re-home the rows).
+    `compact` materializes
     DVs exactly like equality tombstones and clears the list; vacuum
     keeps DV segments as long as a retained manifest references them.
 
@@ -5367,8 +4988,6 @@ def commit_delete_dv(
     other delete tiers on the recorded O(changes) feed."""
     from pyspark.sql import functions as F
 
-    if tag is not None and tag in committed_tags(spark, path):
-        return current_version(spark, path)
     _p0 = _latest_props(spark, path)
     logical_keys = list(keys)
     deletes = _to_physical(deletes, _p0)
@@ -5379,12 +4998,10 @@ def commit_delete_dv(
             f"stats_key {stats_key!r} must be one of the delete keys {keys}"
         )
     key_df = deletes.select(*keys).distinct().localCheckpoint(eager=True)
-    last_err: Exception | None = None
-    for _ in range(max_tries):
-        base_version = current_version(spark, path)
-        if base_version is None:
+
+    def build(m):
+        if m is None:
             raise ValueError(f"cannot delete from an empty manifest lake: {path}")
-        m = _read_manifest(spark, path, base_version)
         touched, _untch = _segments_overlapping_keys(
             spark, m, key_df.select(sk), sk
         )
@@ -5392,7 +5009,7 @@ def commit_delete_dv(
             spark, m, touched, key_df, sk, bloom_probe_cap
         )
         if touched:
-            ddl = _widened_ddl(dict(m.get("props", {})))
+            ddl = _widened_ddl(_props(m))
             raw = _read_segments(spark, path, touched, schema_ddl=ddl)
             hits = (
                 raw.select(
@@ -5406,68 +5023,28 @@ def commit_delete_dv(
         else:
             hits = rows_frame(spark, [], "file string, pos bigint")
         dv_seg = _write_segment(hits, path, 1)
-        extra = None
-        if record_cdf:
-            # victims for the recorded feed = currently-VISIBLE rows
-            # (existing tombstones applied — a row an earlier delete
-            # killed must not re-emit; the raw position scan above may
-            # legitimately carry redundant already-masked positions)
-            if touched:
-                vict = _project_logical(
-                    _read_with_tombstones(spark, path, touched, m).join(
-                        key_df, on=list(keys), how="left_semi"
-                    ),
-                    _p0,
-                )
-            else:
-                vict = read_snapshot(
-                    spark, path, version=base_version
-                ).limit(0)
-            delta = _diff_frames(
-                vict,
-                rows_frame(spark, [], vict.schema),
-                logical_keys,
-                include_values=True,
-            )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
-
-        def _segments(parent):
-            return list(parent["segments"]) if parent else []
-
-        def _deletes(parent):
-            prior = list(parent.get("deletes", [])) if parent else []
-            return prior + [dv_seg]
-
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: pm[s] for s in segments if s in pm}
+        out = {
+            "segments": _carry(m),
+            "deletes": list(m.get("deletes", [])) + [dv_seg],
             # dv marker drives the readers; dv_segs lets the pyarrow
             # planner skip irrelevant data segments without reading
             # the DV parquet (the anti-join scopes by file anyway)
-            out[dv_seg] = {"dv": True, "dv_segs": list(touched)}
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "delete_dv",
-                _segments,
-                tag=tag,
-                meta_fn=_meta,
-                deletes_fn=_deletes,
-                expected_parent=base_version,
-                extra_keys=extra,
+            "meta": {dv_seg: {"dv": True, "dv_segs": list(touched)}},
+        }
+        if record_cdf:
+            # victims for the recorded feed = currently-VISIBLE rows
+            # (the raw position scan above may legitimately carry
+            # redundant already-masked positions)
+            vict = _visible_victims(spark, path, m, touched, key_df, keys, _p0)
+            out.update(
+                _record_change_segment(
+                    spark, path, vict, rows_frame(spark, [], vict.schema),
+                    logical_keys,
+                )
             )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"commit_delete_dv lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+        return out
+
+    return _commit(spark, path, "delete_dv", build, tag=tag)
 
 
 def commit_upsert_mor(
@@ -5478,7 +5055,6 @@ def commit_upsert_mor(
     version_col: str,
     stats_key: str | None = None,
     target_files: int | None = None,
-    max_tries: int = 5,
     bloom_probe_cap: int = 1024,
     tag: str | None = None,
     record_cdf: bool = False,
@@ -5521,17 +5097,16 @@ def commit_upsert_mor(
     (one row per key by construction; any survivor sharing the uniq
     tuple shares the key tuple and is therefore masked).
 
-    Because positions reference the parent's physical files, the
-    commit is a strict parent CAS. Column-mapped lakes translate keys
-    and batch to physical names; positions are physical by nature.
+    Because positions reference the parent's physical files, they
+    resolve in the commit's build on the parent it lands on.
+    Column-mapped lakes translate keys and batch to physical names;
+    positions are physical by nature.
 
     ``record_cdf=True`` is nearly free here — THE BATCH IS THE DELTA:
     old side = currently-visible victims (the tombstone-applied read
     of the touched segments, restricted to the batch keys), new side
     = the folded batch itself; one `_diff_frames` of O(batch) rows,
     no post-hoc table diff."""
-    if tag is not None and tag in committed_tags(spark, path):
-        return current_version(spark, path)
     changes = _upcast_to_schema(spark, path, changes)  # before validation
     _check_constraints(spark, path, changes)
     _check_schema(spark, path, changes.drop(version_col))
@@ -5557,14 +5132,8 @@ def commit_upsert_mor(
         changes.limit(0).drop(version_col), changes, keys, version_col
     ).localCheckpoint(eager=True)
     key_df = folded.select(*keys).distinct()
-    last_err: Exception | None = None
-    for _ in range(max_tries):
-        base_version = current_version(spark, path)
-        m = (
-            _read_manifest(spark, path, base_version)
-            if base_version is not None
-            else None
-        )
+
+    def build(m):
         touched: list[str] = []
         if m is not None:
             if any(
@@ -5582,7 +5151,8 @@ def commit_upsert_mor(
             touched, _clr = _bloom_refine_touched(
                 spark, m, touched, key_df, sk, bloom_probe_cap
             )
-        uniq = [_physical(_p0, c) for c in unique_key(spark, path)]
+        props = _props(m)
+        uniq = _physical_cols(props, props.get("unique", []))
         if uniq and not set(keys) <= set(uniq):
             _check_unique_dups(folded, uniq, path, "the MERGE batch")
             if m is not None:
@@ -5594,8 +5164,9 @@ def commit_upsert_mor(
                 )
         dv_seg = None
         if touched:
-            ddl = _widened_ddl(dict(m.get("props", {})))
-            raw = _read_segments(spark, path, touched, schema_ddl=ddl)
+            raw = _read_segments(
+                spark, path, touched, schema_ddl=_widened_ddl(props)
+            )
             hits = (
                 raw.select(
                     _dv_relpath(F.col("_metadata.file_path")).alias("file"),
@@ -5613,71 +5184,40 @@ def commit_upsert_mor(
             if _read_segments(spark, path, [cand]).limit(1).count():
                 dv_seg = cand
         new_seg = _write_segment(folded, path, target_files)
-        new_stats = _stats_meta(
-            _read_segments(spark, path, [new_seg]), [sk]
-        )
-        extra = None
+        meta = {new_seg: _stats_meta(_read_segments(spark, path, [new_seg]), [sk])}
+        if dv_seg:
+            meta[dv_seg] = {"dv": True, "dv_segs": list(touched)}
+        out = {
+            "segments": _carry(m) + [new_seg],
+            "deletes": (list(m.get("deletes", [])) if m else [])
+            + ([dv_seg] if dv_seg else []),
+            "meta": meta,
+            "props": _schema_props(spark, path, props, logical_changes),
+        }
         if record_cdf:
             # the batch IS the delta: visible victims vs folded rows
             if touched:
-                vict = _project_logical(
-                    _read_with_tombstones(spark, path, touched, m).join(
-                        key_df, on=list(keys), how="left_semi"
-                    ),
-                    _p0,
+                vict = _visible_victims(
+                    spark, path, m, touched, key_df, keys, _p0
                 )
             else:
                 vict = rows_frame(
                     spark, [], _project_logical(folded, _p0).schema
                 )
-            delta = _diff_frames(
-                vict,
-                _project_logical(
-                    _read_segments(spark, path, [new_seg]), _p0
-                ),
-                logical_keys,
-                include_values=True,
+            out.update(
+                _record_change_segment(
+                    spark,
+                    path,
+                    vict,
+                    _project_logical(
+                        _read_segments(spark, path, [new_seg]), _p0
+                    ),
+                    logical_keys,
+                )
             )
-            cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-            delta.write.mode("overwrite").parquet(
-                f"{path}/{_CDF_DIR}/{cdf_seg}"
-            )
-            extra = {"cdf": cdf_seg}
+        return out
 
-        def _segments(parent):
-            prior = list(parent["segments"]) if parent else []
-            return prior + [new_seg]
-
-        def _deletes(parent):
-            prior = list(parent.get("deletes", [])) if parent else []
-            return prior + ([dv_seg] if dv_seg else [])
-
-        def _meta(parent, segments):
-            pm = dict(parent.get("meta", {})) if parent else {}
-            out = {s: pm[s] for s in segments if s in pm}
-            if dv_seg:
-                out[dv_seg] = {"dv": True, "dv_segs": list(touched)}
-            out[new_seg] = dict(new_stats)
-            return out
-
-        try:
-            return _commit(
-                spark,
-                path,
-                "upsert_mor",
-                _segments,
-                tag=tag,
-                meta_fn=_meta,
-                deletes_fn=_deletes,
-                expected_parent=base_version if base_version is not None else 0,
-                props_fn=_schema_props_fn(spark, path, logical_changes),
-                extra_keys=extra,
-            )
-        except CommitConflict as e:
-            last_err = e  # positions reference a superseded parent
-    raise RuntimeError(
-        f"commit_upsert_mor lost the snapshot race {max_tries} times: {path}"
-    ) from last_err
+    return _commit(spark, path, "upsert_mor", build, tag=tag)
 
 
 def manifest_append_sink(path: str, target_files: int | None = None):
@@ -5994,6 +5534,23 @@ def _diff_frames(
         j.select(*out_keys, op.alias("op"), *extra)
         .filter(F.col("op").isNotNull())
     )
+
+
+def _record_change_segment(
+    spark: SparkSession,
+    path: str,
+    old: DataFrame,
+    new: DataFrame,
+    keys: list[str],
+) -> dict:
+    """Write a commit's valued delta (`old` -> `new` on `keys`, LOGICAL
+    names — the snapshot_diff contract) as a write-time change segment
+    under ``cdf/``; returns the manifest extra that records it."""
+    seg = f"seg-{uuid.uuid4().hex[:12]}"
+    _diff_frames(old, new, list(keys), include_values=True).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/{_CDF_DIR}/{seg}")
+    return {"cdf": seg}
 
 
 def _props_triples(props: dict):
@@ -6701,36 +6258,32 @@ def restore(
     key; raises if neither exists). Documented trades: the otherwise
     metadata-only commit now reads both snapshots once (the diff a
     downstream consumer would otherwise run per-consumer), and the
-    commit becomes a strict parent CAS (the recorded delta depends on
-    the parent state — plain restore keeps its raceless last-writer-
-    wins). Refused across a schema change between the two versions
-    (the recorded frame must carry the CURRENT schema, which restore
-    keeps in force)."""
+    recorded delta depends on the parent state, so it is computed in
+    the commit's build on the parent the restore lands on (plain
+    restore keeps its raceless last-writer-wins). Refused across a
+    schema change between the two versions (the recorded frame must
+    carry the CURRENT schema, which restore keeps in force)."""
     if (version is None) == (ts is None):
         raise ValueError("restore: pass exactly one of version= / ts=")
     if ts is not None:
         version = version_as_of_timestamp(spark, path, ts)
     target = _read_manifest(spark, path, version)  # raises if vacuumed
-    carried = _state_meta(target)
+    state = {
+        "segments": list(target["segments"]),
+        "meta": _state_meta(target),
+        "deletes": list(target.get("deletes", [])),
+    }
     if not record_cdf:
-        return _commit(
-            spark,
-            path,
-            "restore",
-            lambda parent: list(target["segments"]),
-            meta_fn=lambda parent, segments: carried,
-            deletes_fn=lambda parent: list(target.get("deletes", [])),
-        )
+        return _commit(spark, path, "restore", lambda parent: state)
     cdf_keys = list(cdf_keys) if cdf_keys else unique_key(spark, path)
     if not cdf_keys:
         raise ValueError(
             "restore(record_cdf=True) needs row identity: pass cdf_keys= "
             "or declare a UNIQUE key on the lake"
         )
-    last_err: Exception | None = None
-    for _ in range(5):
-        base_version = current_version(spark, path)
-        old_r = read_snapshot(spark, path, version=base_version)
+
+    def build(parent):
+        old_r = read_snapshot(spark, path, version=_version(parent))
         new_r = read_snapshot(spark, path, version=version)
         if old_r.dtypes != new_r.dtypes:
             # (name, type) pairs, not names alone: a type widening
@@ -6744,25 +6297,12 @@ def restore(
                 f"{new_r.dtypes}) — restore without recording and let "
                 "consumers fall back to the computed diff"
             )
-        delta = _diff_frames(old_r, new_r, list(cdf_keys), include_values=True)
-        cdf_seg = f"seg-{uuid.uuid4().hex[:12]}"
-        delta.write.mode("overwrite").parquet(f"{path}/{_CDF_DIR}/{cdf_seg}")
-        try:
-            return _commit(
-                spark,
-                path,
-                "restore",
-                lambda parent: list(target["segments"]),
-                meta_fn=lambda parent, segments: carried,
-                deletes_fn=lambda parent: list(target.get("deletes", [])),
-                expected_parent=base_version or 0,
-                extra_keys={"cdf": cdf_seg},
-            )
-        except CommitConflict as e:
-            last_err = e
-    raise RuntimeError(
-        f"restore(record_cdf) lost the snapshot race 5 times: {path}"
-    ) from last_err
+        return {
+            **state,
+            **_record_change_segment(spark, path, old_r, new_r, cdf_keys),
+        }
+
+    return _commit(spark, path, "restore", build)
 
 
 def clone(
@@ -6843,25 +6383,39 @@ def clone(
         def ref(s: str) -> str:
             return _seg_path(src_path, s)
 
-    segs = [ref(s) for s in target["segments"]]
-    dels = [ref(s) for s in target.get("deletes", [])]
-    meta = {ref(s): m for s, m in src_meta.items()}
-    src_props = dict(target.get("props", {}))
     return _commit(
         spark,
         dst_path,
         "clone",
-        lambda parent: segs,
-        meta_fn=lambda parent, segments: meta,
-        deletes_fn=lambda parent: dels,
-        # table properties travel with the clone (CREATE TABLE CLONE
-        # copies properties): schema enforcement and CHECK constraints
-        # keep applying to writes against the cloned table
-        props_fn=lambda props: src_props,
-        # strict CAS on the empty table: a writer racing the clone into
-        # the same destination must fail it, not be silently replaced
-        expected_parent=0,
+        _create(
+            dst_path,
+            {
+                "segments": [ref(s) for s in target["segments"]],
+                "meta": {ref(s): m for s, m in src_meta.items()},
+                "deletes": [ref(s) for s in target.get("deletes", [])],
+                # table properties travel with the clone (CREATE TABLE
+                # CLONE copies properties): schema enforcement and CHECK
+                # constraints keep applying to writes against the clone
+                "props": dict(target.get("props", {})),
+            },
+        ),
     )
+
+
+def _create(path: str, state: dict):
+    """`build` for a table-create commit (clone, branch fork): commits
+    `state` on an EMPTY lake only — a writer racing the create into the
+    same destination fails it with CommitConflict, it is never silently
+    replaced."""
+
+    def build(parent):
+        if parent is not None:
+            raise CommitConflict(
+                f"expected parent v0, latest is v{parent['version']}: {path}"
+            )
+        return state
+
+    return build
 
 
 # ----------------------------------------------------------------------
@@ -6908,20 +6462,19 @@ def create_branch(
         if version is None:
             raise ValueError(f"cannot branch an empty lake: {path}")
     target = _read_manifest(spark, path, version)
-    segs = [_seg_path(path, s) for s in target["segments"]]
-    dels = [_seg_path(path, s) for s in target.get("deletes", [])]
-    meta = {_seg_path(path, s): m for s, m in _state_meta(target).items()}
     props = dict(target.get("props", {}))
     props["wap_fork"] = {"src": path, "version": int(version)}
+    state = {
+        "segments": [_seg_path(path, s) for s in target["segments"]],
+        "meta": {_seg_path(path, s): m for s, m in _state_meta(target).items()},
+        "deletes": [_seg_path(path, s) for s in target.get("deletes", [])],
+        "props": props,
+    }
     _commit(
         spark,
         bpath,
         "branch-fork",
-        lambda parent: segs,
-        meta_fn=lambda parent, segments: meta,
-        deletes_fn=lambda parent: dels,
-        props_fn=lambda p: props,
-        expected_parent=0,
+        _create(bpath, state),
         # the branch CONTINUES main's version numbering (its first
         # commit mirrors the fork version) so merge-on-read seq fences
         # stay totally ordered across branch and publish
@@ -6968,13 +6521,18 @@ def publish_branch(
             f"branch {name} carries no fork stamp for {path} — not a "
             "create_branch product"
         )
-    main_v = current_version(spark, path)
-    if main_v != fork["version"]:
-        raise CommitConflict(
-            f"publish_branch({name}): main is at v{main_v}, branch forked "
-            f"at v{fork['version']} — fast-forward only; re-branch from "
-            "the current head and replay the writes"
-        )
+
+    def fast_forward_only(main_v) -> None:
+        if main_v != fork["version"]:
+            raise CommitConflict(
+                f"publish_branch({name}): main is at v{main_v}, branch "
+                f"forked at v{fork['version']} — fast-forward only; "
+                "re-branch from the current head and replay the writes"
+            )
+
+    # checked before the copies below, and again on the parent the
+    # publish lands on
+    fast_forward_only(current_version(spark, path))
 
     main_prefix = f"{path}/{_DATA_DIR}/"
     fs, _ = _fs(spark, path)
@@ -7006,18 +6564,22 @@ def publish_branch(
         translated[s] = out
         return out
 
-    segs = [xlate(s) for s in bm["segments"]]
-    dels = [xlate(s) for s in bm.get("deletes", [])]
-    meta = {xlate(s): m for s, m in _state_meta(bm).items()}
+    state = {
+        "segments": [xlate(s) for s in bm["segments"]],
+        "meta": {xlate(s): m for s, m in _state_meta(bm).items()},
+        "deletes": [xlate(s) for s in bm.get("deletes", [])],
+        "props": props,
+    }
+
+    def build(parent):
+        fast_forward_only(parent["version"] if parent else None)
+        return state
+
     v = _commit(
         spark,
         path,
         "publish",
-        lambda parent: segs,
-        expected_parent=fork["version"],
-        meta_fn=lambda parent, segments: meta,
-        deletes_fn=lambda parent: dels,
-        props_fn=lambda p: props,
+        build,
         # main adopts the branch head's version number (numbers may
         # skip): every branch-stamped seq stays <= the publish version
         min_version=int(bv),
@@ -7037,32 +6599,26 @@ def set_expectation(
     appends are NOT gated — expectations are the quarantine contract
     of the audited-ingestion path, not a hard invariant."""
 
-    def props_fn(props):
+    def build(parent):
+        props = _props(parent)
         ex = dict(props.get("expectations", {}))
         ex[name] = expr
-        return {**props, "expectations": ex}
+        return {"segments": _carry(parent), "props": {**props, "expectations": ex}}
 
-    return _commit(
-        spark, path, "set_expectation",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit(spark, path, "set_expectation", build)
 
 
 def drop_expectation(spark: SparkSession, path: str, name: str) -> int:
     if name not in table_expectations(spark, path):
         raise ValueError(f"no such expectation {name!r} on {path}")
 
-    def props_fn(props):
+    def build(parent):
+        props = _props(parent)
         ex = dict(props.get("expectations", {}))
         ex.pop(name, None)
-        return {**props, "expectations": ex}
+        return {"segments": _carry(parent), "props": {**props, "expectations": ex}}
 
-    return _commit(
-        spark, path, "drop_expectation",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit(spark, path, "drop_expectation", build)
 
 
 def table_expectations(spark: SparkSession, path: str) -> dict[str, str]:
@@ -7101,7 +6657,6 @@ def wap_ingest(
     audit=None,
     keys: list[str] = None,
     quarantine: str | None = None,
-    max_tries: int = 3,
     **append_kwargs,
 ) -> int:
     """The whole write-audit-publish loop as one call: fork a branch,
@@ -7144,7 +6699,7 @@ def wap_ingest(
     # re-append the same flagged rows to the quarantine lake (and a
     # fully-failed call would still leave one copy behind per attempt)
     qtag = f"wap-quarantine-{uuid.uuid4().hex}"
-    for attempt in range(max_tries):
+    for _ in range(_COMMIT_TRIES):
         name = f"wap-{uuid.uuid4().hex[:8]}"
         b = create_branch(spark, path, name)
         try:
@@ -7168,7 +6723,7 @@ def wap_ingest(
             drop_branch(spark, path, name)
             raise
     raise CommitConflict(
-        f"wap_ingest lost the fast-forward race {max_tries} times: {path}"
+        f"wap_ingest lost the fast-forward race {_COMMIT_TRIES} times: {path}"
     ) from last
 
 
@@ -7220,17 +6775,14 @@ def register_catalog(
     if catalog_path in registered_catalogs(spark, path):
         return v
 
-    def props_fn(props):
+    def build(parent):
+        props = _props(parent)
         cats = list(props.get("catalogs", []))
         if catalog_path not in cats:
             cats = cats + [catalog_path]
-        return {**props, "catalogs": cats}
+        return {"segments": _carry(parent), "props": {**props, "catalogs": cats}}
 
-    return _commit(
-        spark, path, "register_catalog",
-        lambda parent: list(parent["segments"]) if parent else [],
-        props_fn=props_fn,
-    )
+    return _commit(spark, path, "register_catalog", build)
 
 
 def plan_maintenance(

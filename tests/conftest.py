@@ -59,3 +59,30 @@ def spark():
 
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def race_before_rename(monkeypatch):
+    """Arm ONE racing write in the only window a manifest commit has
+    left: between its `build` and the rename that publishes it.
+    `arm(fire)` wraps `manifest._rename_no_overwrite`; the next commit
+    point first un-patches itself, then runs `fire()` (a commit that
+    lands first) and only then attempts its own rename, which loses —
+    so `_commit` rebuilds on the new head. Returns a list that gets one
+    entry when the race fired."""
+    from nba_pipeline_spark.sources import manifest as M
+
+    real = M._rename_no_overwrite
+    fired: list = []
+
+    def arm(fire):
+        def hook(spark, src, dst):
+            monkeypatch.setattr(M, "_rename_no_overwrite", real)
+            fire()
+            fired.append(dst)
+            return real(spark, src, dst)
+
+        monkeypatch.setattr(M, "_rename_no_overwrite", hook)
+        return fired
+
+    return arm

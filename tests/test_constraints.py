@@ -98,30 +98,25 @@ def test_constraint_as_first_commit_and_empty_metadata_tables(spark, tmp_path):
         M.commit_append(spark, p, _rows(spark, [(2, -1, 0)]))
 
 
-def test_set_constraint_revalidates_after_racing_write(spark, lake, monkeypatch):
-    # a write landing between validation and the constraint commit is
-    # caught by the expected_parent CAS; the validation re-runs on the
-    # new snapshot and refuses when that write violates the constraint
-    real_commit = M._commit
-    state = {"raced": False}
+def test_set_constraint_revalidates_after_racing_write(
+    spark, lake, race_before_rename
+):
+    # a write landing between validation and the constraint commit
+    # makes the commit's rename lose; the rebuild re-runs the
+    # validation on the new snapshot and refuses when that write
+    # violates the constraint
+    def racing_append():
+        # lands AFTER validation, BEFORE the rename — it passes the
+        # existing amt_pos check but violates the constraint being added
+        M.commit_append(spark, lake, _rows(spark, [(9, 500, 0)]))
 
-    def racing_commit(spark_, path, op, *a, **kw):
-        if op == "set_constraint" and not state["raced"]:
-            state["raced"] = True
-            # sneak in an append AFTER validation, BEFORE commit — it
-            # passes the existing amt_pos check but violates the
-            # constraint being added
-            M.commit_append(
-                spark_, path, _rows(spark_, [(9, 500, 0)])
-            )
-        return real_commit(spark_, path, op, *a, **kw)
-
-    monkeypatch.setattr(M, "_commit", racing_commit)
+    fired = race_before_rename(racing_append)
     with pytest.raises(M.ConstraintViolation, match="neg_check"):
         M.set_constraint(spark, lake, "neg_check", "amt < 100")
-    assert state["raced"]
+    assert fired
     # the raced write's rows exist, and the constraint was NOT added
     assert "neg_check" not in M.table_constraints(spark, lake)
+    assert M.read_snapshot(spark, lake).filter("k = 9").count() == 1
 
 
 # ------------------------------------------------------ UNIQUE keys (r9)

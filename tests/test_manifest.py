@@ -235,11 +235,13 @@ def test_manifest_tags_survive_vacuum(spark, tmp_path):
     assert M.committed_tags(spark, lake) == {"batch=0", "batch=1", "batch=2"}
 
 
-def test_commit_upsert_merges_and_retries_on_conflict(spark, tmp_path):
+def test_commit_upsert_merges_and_retries_on_conflict(
+    spark, tmp_path, race_before_rename
+):
     """SCD1 MERGE into the lake: updates win per key by version,
     inserts land, untouched rows persist; a snapshot that moves between
-    the read and the commit forces a re-merge (CommitConflict path) so
-    no concurrent append is lost."""
+    the merge and its rename forces a re-merge on the new head so no
+    concurrent append is lost."""
     lake = str(tmp_path / "lake")
     M.commit_append(
         spark,
@@ -254,11 +256,21 @@ def test_commit_upsert_merges_and_retries_on_conflict(spark, tmp_path):
     got = {(r["k"], r["v"], r["x"]) for r in M.read_snapshot(spark, lake).collect()}
     assert got == {(1, "a", 10), (2, "b2", 21), (3, "c", 30)}
 
-    # conflict path: CAS against a stale parent raises CommitConflict
-    import pytest
-
-    with pytest.raises(M.CommitConflict):
-        M._commit(spark, lake, "upsert", lambda p: [], expected_parent=1)
+    # race path: an append lands after the merge, before its rename —
+    # the merge re-runs on the new head and the appended row survives
+    fired = race_before_rename(
+        lambda: M.commit_append(
+            spark, lake,
+            spark.createDataFrame([(4, "d", 40)], "k int, v string, x int"),
+        )
+    )
+    more = spark.createDataFrame(
+        [(1, "a2", 11, 6)], "k int, v string, x int, ver int"
+    )
+    assert M.commit_upsert(spark, lake, more, ["k"], "ver") == 4
+    assert fired
+    got = {(r["k"], r["v"], r["x"]) for r in M.read_snapshot(spark, lake).collect()}
+    assert got == {(1, "a2", 11), (2, "b2", 21), (3, "c", 30), (4, "d", 40)}
 
     # time travel still sees the pre-merge table
     pre = {(r["k"], r["v"], r["x"]) for r in M.read_snapshot(spark, lake, 1).collect()}
@@ -1093,10 +1105,12 @@ def test_cluster_zorder_prunes_both_dimensions(spark, tmp_path):
     assert {tuple(r) for r in pruned} == {t for t in want if 8 <= t[1] <= 13}
 
 
-def test_cluster_materializes_tombstones_and_survives_append(spark, tmp_path):
+def test_cluster_materializes_tombstones_and_survives_append(
+    spark, tmp_path, race_before_rename
+):
     """cluster() applies pending merge-on-read tombstones (deletes list
     clears — it is a compaction) and an append racing the rewrite
-    survives through the CAS retry, like compact."""
+    survives through the commit loop's rebuild, like compact."""
     lake = str(tmp_path / "lake")
     M.commit_append(spark, lake, _grid(spark, 12))
     M.commit_delete_mor(
@@ -1111,23 +1125,15 @@ def test_cluster_materializes_tombstones_and_survives_append(spark, tmp_path):
     got = {(r["a"], r["b"]) for r in M.read_snapshot(spark, lake).collect()}
     assert got == {(a, b) for a in range(12) for b in range(12) if a != 3}
 
-    # racing append: commit lands between the rewrite read and commit
-    orig_commit = M._commit
-    appended = []
-
-    def racy_commit(spark_, path_, op, segments_fn, **kw):
-        if op == "cluster" and not appended:
-            appended.append(True)
-            M.commit_append(
-                spark_, path_, spark_.createDataFrame([(99, 99, 0)], "a int, b int, payload long")
-            )
-        return orig_commit(spark_, path_, op, segments_fn, **kw)
-
-    M._commit = racy_commit
-    try:
-        M.cluster(spark, lake, ["a", "b"], target_segments=4, bits_per_col=4)
-    finally:
-        M._commit = orig_commit
+    # racing append: commit lands between the rewrite and its rename
+    fired = race_before_rename(
+        lambda: M.commit_append(
+            spark, lake,
+            spark.createDataFrame([(99, 99, 0)], "a int, b int, payload long"),
+        )
+    )
+    M.cluster(spark, lake, ["a", "b"], target_segments=4, bits_per_col=4)
+    assert fired
     got = {(r["a"], r["b"]) for r in M.read_snapshot(spark, lake).collect()}
     assert (99, 99) in got and (3, 0) not in got and (4, 4) in got
 
@@ -2206,3 +2212,136 @@ def test_segment_schema_cache_matches_inference(spark, tmp_path):
     r3 = M.read_snapshot(spark, lake)
     assert [f.name for f in r3.schema.fields] == ["id", "s", "x"]
     assert sorted(r3.collect()) == sorted(df2.collect())
+
+
+# ---------------------------------------------------------------------
+# One commit loop: a racing writer can land only between an op's build
+# and its manifest rename. The rebuild on the new head must give the
+# same table as running the op after the racing write.
+# ---------------------------------------------------------------------
+
+
+def _race_rows(spark, rows):
+    return spark.createDataFrame(rows, "k int, p int, v string")
+
+
+def _race_plain(spark, lake):
+    rows = [(k, k % 2, f"v{k}") for k in range(12)]
+    M.commit_append(spark, lake, _race_rows(spark, rows), stats_cols=["k"])
+
+
+def _race_tagged(spark, lake):
+    rows = [(k, k % 2, f"v{k}") for k in range(12)]
+    M.commit_append_partitioned(spark, lake, _race_rows(spark, rows), "p")
+
+
+def _race_append_plain(spark, lake):
+    M.commit_append(
+        spark, lake, _race_rows(spark, [(100, 0, "r")]), stats_cols=["k"]
+    )
+
+
+def _race_append_tagged(spark, lake):
+    M.commit_append(
+        spark, lake, _race_rows(spark, [(100, 0, "r")]), partition={"p": 0}
+    )
+
+
+def _race_changes(spark):
+    return spark.createDataFrame(
+        [(1, 1, "u1", 1), (50, 0, "n50", 1)], "k int, p int, v string, ver int"
+    )
+
+
+def _race_keys(spark):
+    return spark.createDataFrame([(1,), (2,)], "k int")
+
+
+_RACE_CASES = {
+    "commit_upsert": (
+        "upsert", _race_plain, _race_append_plain,
+        lambda s, p: M.commit_upsert(s, p, _race_changes(s), ["k"], "ver"),
+    ),
+    "commit_upsert_partitioned": (
+        "upsert_partitioned", _race_tagged, _race_append_tagged,
+        lambda s, p: M.commit_upsert_partitioned(
+            s, p, _race_changes(s), ["k"], "ver", "p"
+        ),
+    ),
+    "commit_upsert_pruned": (
+        "upsert_pruned", _race_plain, _race_append_plain,
+        lambda s, p: M.commit_upsert_pruned(s, p, _race_changes(s), ["k"], "ver"),
+    ),
+    "commit_delete": (
+        "delete", _race_plain, _race_append_plain,
+        lambda s, p: M.commit_delete(s, p, _race_keys(s), ["k"]),
+    ),
+    "commit_delete_dv": (
+        "delete_dv", _race_plain, _race_append_plain,
+        lambda s, p: M.commit_delete_dv(s, p, _race_keys(s), ["k"]),
+    ),
+    "commit_upsert_mor": (
+        "upsert_mor", _race_plain, _race_append_plain,
+        lambda s, p: M.commit_upsert_mor(s, p, _race_changes(s), ["k"], "ver"),
+    ),
+    "commit_replace_where": (
+        # the racing row lands INSIDE the scope: the rebuild replaces it
+        "replace_where", _race_tagged, _race_append_tagged,
+        lambda s, p: M.commit_replace_where(
+            s, p, _race_rows(s, [(200, 0, "rw")]), eq={"p": 0},
+            partition_by="p",
+        ),
+    ),
+    "compact": (
+        "compact", _race_plain, _race_append_plain,
+        lambda s, p: M.compact(s, p),
+    ),
+    "cluster": (
+        "cluster", _race_plain, _race_append_plain,
+        lambda s, p: M.cluster(s, p, ["k", "p"], target_segments=2, bits_per_col=2),
+    ),
+    "set_constraint": (
+        "set_constraint", _race_plain, _race_append_plain,
+        lambda s, p: M.set_constraint(s, p, "k_nonneg", "k >= 0"),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_RACE_CASES))
+def test_rebuild_after_racing_append_matches_op_after_it(
+    spark, tmp_path, monkeypatch, race_before_rename, case
+):
+    op_name, setup, racing_append, run = _RACE_CASES[case]
+    raced, serial = str(tmp_path / "raced"), str(tmp_path / "serial")
+    for lake in (raced, serial):
+        setup(spark, lake)
+    # the reference: the racing append first, then the op
+    racing_append(spark, serial)
+    run(spark, serial)
+
+    builds: list = []
+    real_commit = M._commit
+
+    def counting_commit(spark_, path, op, build, **kw):
+        def counted(parent):
+            if op == op_name:
+                builds.append(parent["version"] if parent else 0)
+            return build(parent)
+
+        return real_commit(spark_, path, op, counted, **kw)
+
+    monkeypatch.setattr(M, "_commit", counting_commit)
+    fired = race_before_rename(lambda: racing_append(spark, raced))
+    run(spark, raced)
+    assert fired
+    # built on the original head (v1), then rebuilt on the racing
+    # append's (v2)
+    assert builds == [1, 2]
+
+    def state(lake):
+        return (
+            sorted(tuple(r) for r in M.read_snapshot(spark, lake).collect()),
+            M.table_constraints(spark, lake),
+        )
+
+    assert state(raced) == state(serial)

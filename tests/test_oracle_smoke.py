@@ -1,10 +1,13 @@
-"""Default-gate oracle parity for three groups of registry queries:
+"""Default-gate oracle parity for four groups of registry queries:
 those whose iterative operators run on the driver-local tier at test
 scale; one per SQL-text vector builder call site (embedding near-dup,
-semantic decontamination, sign-LSH, SemDeDup, kNN join); and those
-whose builders make a local frame through `partitioning.rows_frame`
-(a dict lookup join, a banded range join, a manifest MERGE and the
-manifest history table). Each is compared with its DuckDB oracle
+semantic decontamination, sign-LSH, SemDeDup, kNN join); those whose
+builders make a local frame through `partitioning.rows_frame` (a dict
+lookup join, a banded range join, a manifest MERGE and the manifest
+history table); and manifest-lake queries whose staging runs the write
+ops that commit through `_commit`'s build (recorded change segments on
+every path, DV delete, MoR merge, partitioned MERGE on a column-mapped
+lake, UNIQUE and CHECK enforcement). Each is compared with its DuckDB oracle
 exactly as tools/local_verify.py compares them (row count, columns,
 order-insensitive values, bit-exact floats). The full sweep stays in
 tools/local_verify.py and the soak set."""
@@ -37,6 +40,12 @@ QUERIES = [
     "q_join_range",
     "q_manifest_upsert",
     "q_manifest_history",
+    "q_cdf_recorded_all_paths",
+    "q_manifest_delete_dv",
+    "q_manifest_merge_mor",
+    "q_manifest_merge_mapped",
+    "q_manifest_unique",
+    "q_manifest_constraints",
 ]
 
 
