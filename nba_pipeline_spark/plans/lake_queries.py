@@ -2163,8 +2163,8 @@ def q_manifest_sql_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DataSource WRITE path end-to-end (sources/lake_datasource.py
     ::ManifestLakeWriter): executors stream Arrow batches into staged
     parquet files, commit messages carry per-file min/max/null/row
-    stats, and the driver-side pure-Python CAS (os.link no-overwrite)
-    publishes one manifest version per save() — exactly-once under
+    stats, and the driver-side commit (the lake's one `_commit` loop,
+    JVM-free) publishes one manifest version per save() — exactly-once under
     task retry because only reported files move into the segment. The
     returned frame is a METADATA-ONLY aggregate over the written lake
     (allow_scan=False), so the oracle match proves the whole loop:

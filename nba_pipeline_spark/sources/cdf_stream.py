@@ -46,8 +46,9 @@ equality loop since Acero has no nested kernels. The output schema is
 pinned at stream start; restart to pick up additive evolution.
 
 JVM-less by construction like the sibling sources: planning runs in a
-Python worker (pyarrow.fs for manifests; KB-sized JSON), reads run in
-executors (pyarrow parquet + the lake_datasource tombstone anti-join).
+Python worker (manifest_store for the KB-sized JSON manifests), reads
+run in executors (pyarrow parquet + the lake_datasource tombstone
+anti-join).
 
 Reference parity: the reference recomputes warehouse tables wholesale
 per DAG run (gcs_to_bq_dag.py:6); this is the streaming change feed a
@@ -64,16 +65,16 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .lake_stream import (
+from . import manifest_store as store
+from .lake_stream import _join, _pa_type, _schema_triples_at, _start_floor
+from .manifest_store import (
+    _CDF_DIR,
     _DATA_DIR,
-    _join,
-    _manifest,
-    _pa_type,
+    _is_widening,
     _pafs,
-    _versions,
+    _props_triples,
+    _RetentionGap,
 )
-
-_CDF_DIR = "cdf"  # write-time recorded change segments (manifest.py)
 
 # visibility-preserving rewrite ops: segments move, rows don't
 _DATACHANGE_FALSE = {
@@ -81,32 +82,15 @@ _DATACHANGE_FALSE = {
     "cluster", "cluster_partitioned", "cluster_incremental",
 }
 
-# the lake's metadata-only widening chains (manifest.widen_column_type
-# — duplicated here so stream planning stays pyspark-import-free)
-_WIDEN_CHAINS = (
-    ["tinyint", "smallint", "int", "bigint"],
-    ["float", "double"],
-    ["tinyint", "smallint", "int", "double"],
-)
 
-
-def _widens(old: str, new: str) -> bool:
-    for chain in _WIDEN_CHAINS:
-        if old in chain and new in chain and chain.index(old) < chain.index(new):
-            return True
-    return False
-
-
-def _schema_triples(path: str, v: int) -> list[list[str]]:
-    props = _manifest(path, v).get("props", {})
-    sch = props.get("schema")
-    if not sch:
+def _schema_triples(path: str, v: int) -> list[tuple[str, str, str]]:
+    trip = _schema_triples_at(path, v)
+    if not trip:
         raise ValueError(
             f"manifest_cdf: lake at {path} has no recorded schema — "
             "make one write so the schema is stamped, then restart"
         )
-    cm = dict(props.get("colmap", {}))
-    return [[n, t, cm.get(n, n)] for n, t in sch["cols"]]
+    return trip
 
 
 def _seg_files(path: str, s: str, base_dir: str = _DATA_DIR) -> list[str]:
@@ -173,7 +157,7 @@ class ManifestCDFDataSource(DataSource):
         keys = [k for k in str(self.options.get("keys", "")).split(",") if k]
         if not path or not keys:
             raise ValueError("manifest_cdf requires path and keys options")
-        vs = _versions(path)
+        vs = store.versions(path)
         if not vs:
             raise ValueError(f"manifest_cdf: no commits at {path}")
         triples = _schema_triples(path, vs[-1])
@@ -205,39 +189,9 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         self._path = path
         self._keys = keys
         self._shards = max(int(options.get("cdf_shards", "1")), 1)
-        sv = options.get("starting_version")
-        sts = options.get("starting_timestamp")
-        if sv is not None and sts is not None:
-            raise ValueError(
-                "manifest_cdf: pass starting_version OR "
-                "starting_timestamp, not both"
-            )
-        if sv is not None and str(sv).lower() == "latest":
-            vs = _versions(path)
-            self._start = vs[-1] if vs else 0
-        elif sv is not None:
-            # version N's changes included; 0 means "from the
-            # beginning" (Delta startingVersion=0 parity — without the
-            # clamp the first batch would plan version 0 and raise
-            # _RetentionGap on a lake whose numbering starts at 1)
-            self._start = max(int(sv) - 1, 0)
-        elif sts is not None:
-            # newest commit strictly BEFORE ts is the exclusive floor
-            # (Delta startingTimestamp: commits at-or-after ts stream)
-            ts = float(sts)
-            floor = 0
-            for v in _versions(path):
-                try:
-                    m_ts = float(_manifest(path, v).get("ts", 0.0))
-                except Exception:
-                    continue
-                if m_ts < ts:
-                    floor = v
-            self._start = floor
-        else:
-            self._start = 0
+        self._start = _start_floor("manifest_cdf", path, options)
         # value schema pinned at stream start (restart to widen)
-        vs = _versions(path)
+        vs = store.versions(path)
         if not vs:
             raise ValueError(f"manifest_cdf: no commits at {path}")
         self._triples = _schema_triples(path, vs[-1])
@@ -246,7 +200,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        vs = _versions(self._path)
+        vs = store.versions(self._path)
         return {"version": vs[-1] if vs else 0}
 
     def _rec_plan(self, m1: dict):
@@ -274,12 +228,9 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         files = _seg_files(self._path, seg, base_dir=_CDF_DIR)
         if not files:
             return None
-        props = m1.get("props", {})
-        rsch = props.get("schema")
-        if not rsch:
+        rec_trip = _props_triples(m1.get("props", {}))
+        if not rec_trip:
             return None
-        rcm = dict(props.get("colmap", {}))
-        rec_trip = [[n, t, rcm.get(n, n)] for n, t in rsch["cols"]]
         rec_name = {phys: n for n, t, phys in rec_trip}
         rec_type = {phys: t for n, t, phys in rec_trip}
         plan: dict = {}
@@ -291,7 +242,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                 plan[n_now] = (None, t_now)
                 continue
             rt = rec_type[phys]
-            if rt != t_now and not _widens(rt, t_now):
+            if rt != t_now and not _is_widening(rt, t_now):
                 return None
             plan[n_now] = (rn, t_now)
         rec_keys = [plan[k][0] for k in self._keys]
@@ -320,7 +271,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         return files, plan, identity
 
     def _plan_version(self, v: int) -> list:
-        m1 = _manifest(self._path, v)
+        m1 = store.read_manifest(self._path, v)
         if m1.get("op") in _DATACHANGE_FALSE:
             return []
         rec = self._rec_plan(m1)
@@ -344,7 +295,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         # whose manifest truly IS vacuumed still raises _RetentionGap —
         # that one is real (the base state is unreconstructable).
         par = m1.get("parent")
-        m0 = _manifest(self._path, par) if par else None
+        m0 = store.read_manifest(self._path, par) if par else None
         segs0 = list(m0["segments"]) if m0 else []
         segs1 = list(m1["segments"])
         dels0 = list(m0.get("deletes", [])) if m0 else []
@@ -395,7 +346,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         # (manifest.py min_version) and a dense probe of a skipped
         # number would wedge the stream with a spurious _RetentionGap
         lo, hi = int(start.get("version", 0)), int(end.get("version", 0))
-        vs = _versions(self._path)
+        vs = store.versions(self._path)
         have = set(vs)
         parts = []
         for v in vs:
@@ -409,10 +360,8 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                 # path in _plan_version would otherwise serve v
                 # without ever probing the parent, silently skipping
                 # the vacuumed window.
-                par = _manifest(self._path, v).get("parent") or 0
+                par = store.read_manifest(self._path, v).get("parent") or 0
                 if par and par > lo and par not in have:
-                    from .lake_stream import _RetentionGap
-
                     raise _RetentionGap(self._path, par)
                 parts.extend(self._plan_version(v))
         return parts or [InputPartition(None)]

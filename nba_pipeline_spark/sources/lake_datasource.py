@@ -14,12 +14,13 @@ returned as unhandled, so pruning is a pure hint and semantics never
 depend on it.
 
 Planning runs in a Python worker with no Py4J gateway (same constraint
-as the streaming source — sources/lake_stream.py), so everything here
-goes through pyarrow.fs + the KB-sized JSON manifests; the pruning
-logic itself is imported from sources/manifest.py (pure-Python
-functions, engine-free). Bloom probes can't be HASHED on this path
-(xxhash64 semantics are not reimplemented — see
-manifest._bloom_probe_hashes), but ``read_lake(bloom_keys=...)``
+as the streaming source — sources/lake_stream.py), so the KB-sized
+JSON manifests are read through sources/manifest_store.py and data
+through pyarrow.fs; the pruning logic itself is imported from
+sources/manifest.py (pure-Python functions, engine-free). Bloom
+probes can't be HASHED on this path (xxhash64 semantics are not
+reimplemented — see manifest._bloom_probe_hashes), but
+``read_lake(bloom_keys=...)``
 hashes them driver-side (where Py4J exists) and ships the positions
 as a read option, so point queries through plain SQL still skip
 bloom-negative segments.
@@ -68,19 +69,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .lake_stream import (
-    _DATA_DIR,
-    _join,
-    _manifest,
-    _pa_type,
-    _pafs,
-    _schema_triples_at,
-    _versions,
-)
+from . import manifest_store as store
+from .lake_stream import _join, _pa_type, _schema_triples_at
+from .manifest_store import _DATA_DIR, _pafs
 
 
 def _pinned_version(path: str, options) -> int:
-    vs = _versions(path)
+    vs = store.versions(path)
     if not vs:
         raise ValueError(f"manifest_lake: no commits at {path}")
     v = options.get("version")
@@ -110,7 +105,7 @@ class ManifestLakeDataSource(DataSource):
         if not path:
             raise ValueError("manifest_lake requires a path option")
         v = _pinned_version(path, self.options)
-        sch = _manifest(path, v).get("props", {}).get("schema")
+        sch = store.read_manifest(path, v).get("props", {}).get("schema")
         if not sch:
             raise ValueError(
                 f"manifest_lake: lake at {path} has no recorded schema "
@@ -137,7 +132,7 @@ class ManifestLakeReader(DataSourceReader):
         self._path = path
         self._version = _pinned_version(path, options)
         # pinned at planning: snapshot isolation for the whole scan
-        self._m = _manifest(path, self._version)
+        self._m = store.read_manifest(path, self._version)
         # driver-hashed bloom probes shipped through read_lake's
         # bloom_keys= (planning here cannot hash — no engine): JSON
         # {logical_col: [[h1..hk], ...]}, full 64-bit engine hashes
@@ -566,11 +561,14 @@ def read_lake(
 # metadata_agg and range skipping working.
 #
 # The commit runs in the driver-side Python worker — NO Py4J, like
-# planning — so the manifest CAS is pure Python: tmp-write then
-# ``os.link`` (atomic no-overwrite on POSIX), retry on EEXIST. That
-# is sound for LOCAL/file:// lakes only; object-store URIs refuse at
-# writer creation with commit_append guidance (a conditional-put CAS
-# is store-specific and not exposed through pyarrow.fs). Lakes with
+# planning — and publishes through the lake's one commit loop,
+# ``manifest._commit(None, ...)``: the manifest store's local commit
+# point (tmp write, then a hard link: atomic, fails if the version is
+# taken) serializes it against every JVM-side op on the same lake, and
+# a lost race rebuilds on the new head. That is sound for
+# LOCAL/file:// lakes only; object-store URIs refuse at writer
+# creation with commit_append guidance (a conditional-put CAS is
+# store-specific and not exposed through pyarrow.fs). Lakes with
 # CHECK constraints also refuse: enforcing them takes an engine job
 # this worker cannot run — honest gate, not silent skip. Column
 # mapping: appends translate logical→physical like every other write;
@@ -581,16 +579,15 @@ def read_lake(
 
 def _local_root(path: str) -> str:
     """Filesystem path for a local lake URI; raises for remote."""
-    if path.startswith("file://"):
-        return path[len("file://"):]
-    if "://" in path:
+    root = store.local_path(path)
+    if root is None:
         raise ValueError(
             "manifest_lake writer: only local/file:// lakes commit "
             "through the Python writer (the no-overwrite CAS is POSIX "
             "link-based) — write object-store lakes via "
             f"manifest.commit_append: {path}"
         )
-    return path
+    return root
 
 
 class _LakeWriteMessage(WriterCommitMessage):
@@ -617,8 +614,8 @@ class ManifestLakeWriter(DataSourceArrowWriter):
         self._stats_cols = want.split(",") if want else []
         self._schema = schema  # StructType (logical names)
         self._staging = f"{self._root}/{_DATA_DIR}/.staging-{uuid.uuid4().hex[:12]}"
-        vs = _versions(self._path)
-        props = _manifest(self._path, vs[-1]).get("props", {}) if vs else {}
+        vs = store.versions(self._path)
+        props = store.read_manifest(self._path, vs[-1]).get("props", {}) if vs else {}
         if props.get("constraints"):
             raise ValueError(
                 "manifest_lake writer: lake has CHECK constraints, which "
@@ -747,10 +744,8 @@ class ManifestLakeWriter(DataSourceArrowWriter):
     # --------------------------------------------------- driver side
 
     def commit(self, messages) -> None:
-        import json
         import os
         import shutil
-        import time
         import uuid
 
         files = [m for m in messages if m is not None and m.file]
@@ -800,22 +795,14 @@ class ManifestLakeWriter(DataSourceArrowWriter):
                     nl[c] = nl.get(c, 0) + n
             seg_meta = {"stats": st, "rows": rows_total, "nulls": nl}
 
-        mdir = f"{self._root}/{_MANIFEST_DIR_LOCAL}"
-        os.makedirs(mdir, exist_ok=True)
+        from .manifest import _carry, _commit, _props
+
         schema_cols = [
             [f.name, f.dataType.simpleString()] for f in self._schema.fields
         ]
-        for _ in range(20):
-            vs = _versions(self._path)
-            parent = vs[-1] if vs else 0
-            pm = _manifest(self._path, parent) if vs else None
-            tags = list(pm.get("tags", [])) if pm else []
-            if self._tag is not None:
-                if self._tag in tags:
-                    shutil.rmtree(seg_dir, ignore_errors=True)
-                    return  # replayed tagged write: no-op, seg orphaned
-                tags.append(self._tag)
-            props = dict(pm.get("props", {})) if pm else {}
+
+        def build(pm):
+            props = _props(pm)
             if not self._overwrite and dict(props.get("colmap", {})) != dict(
                 self._props0.get("colmap", {})
             ):
@@ -825,9 +812,6 @@ class ManifestLakeWriter(DataSourceArrowWriter):
                     f"names; re-run the write: {self._path}"
                 )
             if self._overwrite:
-                segments = [seg]
-                meta = {seg: dict(seg_meta)}
-                deletes: list = []
                 props.pop("colmap", None)
                 props.pop("dropped_cols", None)
                 # an overwrite rewrote every file at the supplied schema,
@@ -835,63 +819,34 @@ class ManifestLakeWriter(DataSourceArrowWriter):
                 # commit_replace's full-rewrite semantics)
                 props.pop("widened", None)
                 props["schema"] = {"cols": schema_cols}
+                return {
+                    "segments": [seg], "meta": {seg: seg_meta},
+                    "deletes": [], "props": props,
+                }
+            rec = (props.get("schema") or {}).get("cols")
+            if rec:
+                extra = [p for p in schema_cols if p[0] not in
+                         {n for n, _ in rec}]
+                props["schema"] = {"cols": list(rec) + extra}
             else:
-                segments = list(pm["segments"]) + [seg] if pm else [seg]
-                pmeta = dict(pm.get("meta", {})) if pm else {}
-                meta = {s: pmeta[s] for s in segments if s in pmeta}
-                meta[seg] = dict(seg_meta)
-                deletes = list(pm.get("deletes", [])) if pm else []
-                for s in deletes:
-                    if s not in meta and s in pmeta:
-                        meta[s] = pmeta[s]
-                rec = (props.get("schema") or {}).get("cols")
-                if rec:
-                    extra = [p for p in schema_cols if p[0] not in
-                             {n for n, _ in rec}]
-                    props["schema"] = {"cols": list(rec) + extra}
-                else:
-                    props["schema"] = {"cols": schema_cols}
-            version = parent + 1
-            meta.setdefault(seg, {}).setdefault("seq", version)
-            ts = max(
-                time.time(),
-                (float(pm.get("ts", 0.0)) if pm else 0.0) + 1e-6,
-            )
-            manifest = {
-                "version": version,
-                "parent": parent if vs else None,
-                "op": "replace" if self._overwrite else "append",
-                "ts": ts,
-                "segments": segments,
-                "tags": tags,
-                "meta": meta,
+                props["schema"] = {"cols": schema_cols}
+            return {
+                "segments": _carry(pm) + [seg], "meta": {seg: seg_meta},
+                "props": props,
             }
-            if deletes:
-                manifest["deletes"] = deletes
-            if props:
-                manifest["props"] = props
-            tmp = f"{mdir}/.tmp-{uuid.uuid4().hex}.json"
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh)
-            final = f"{mdir}/v{version:08d}.json"
-            try:
-                os.link(tmp, final)  # atomic no-overwrite: the CAS point
-                os.unlink(tmp)
-                return
-            except FileExistsError:
-                os.unlink(tmp)
-                continue  # lost the race: retry on the new parent
-        raise RuntimeError(
-            f"manifest_lake writer lost the CAS race 20 times: {self._path}"
-        )
+
+        op = "replace" if self._overwrite else "append"
+        v = _commit(None, self._path, op, build, tag=self._tag)
+        if self._tag is not None and seg not in store.read_manifest(
+            self._path, v
+        )["segments"]:
+            shutil.rmtree(seg_dir, ignore_errors=True)  # replayed tagged write
 
     def abort(self, messages) -> None:
         import shutil
 
         shutil.rmtree(self._staging, ignore_errors=True)
 
-
-_MANIFEST_DIR_LOCAL = "_manifests"
 
 
 def _py_json_safe(v):
@@ -919,7 +874,7 @@ def _max_opt(a, b):
 class ManifestLakeStreamWriter(ManifestLakeWriter, DataSourceStreamArrowWriter):
     """``df.writeStream.format("manifest_lake")`` — the streaming twin
     of the batch writer: same staged-Arrow-file protocol per
-    microbatch, same pure-Python manifest CAS, with EXACTLY-ONCE
+    microbatch, same `_commit` publish, with EXACTLY-ONCE
     replay via a ``{checkpoint_tag}={batchId}`` idempotency tag (a
     restarted query re-delivers its last batch; the tag makes the
     replayed commit a no-op — the same guard the foreachBatch sinks

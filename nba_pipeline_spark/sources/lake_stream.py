@@ -24,18 +24,18 @@ are included; "latest" streams only post-start commits; earlier
 offsets are never planned, so a stream can begin on a vacuumed lake
 (serve history with a batch read_snapshot, stream from here).
 
-All I/O goes through ``pyarrow.fs`` resolved from the lake URI — NOT
-``os.listdir``/local-path reads — so the source plans and reads
-against ``file://``, ``s3://`` and ``gs://`` lakes alike (hdfs via
-libhdfs where deployed). pyarrow rather than the Hadoop FS API
-because a Python DataSource's planning methods run in a Python worker
-with no Py4J gateway: ``spark._jvm`` is unreachable here by
-construction, and pyarrow's native filesystems are the public,
-JVM-free equivalent. Metadata access is KB-sized JSON manifests; data
-access is pyarrow parquet in executors. At 100 TB the per-trigger
-work is O(newly appended files) — the same floor as Spark's own
-file-stream source, minus its unbounded seen-file ledger (the version
-offset IS the ledger).
+A Python DataSource's planning methods run in a Python worker with no
+Py4J gateway (``spark._jvm`` is unreachable here by construction), so
+nothing here touches the Hadoop FS API. Metadata — KB-sized JSON
+manifests — is listed and read through ``manifest_store`` (plain
+``os`` on local lakes, ``pyarrow.fs`` on object stores), the same
+module every other lake reader and writer uses. Data is read with
+pyarrow parquet in executors, through ``pyarrow.fs`` resolved from
+the lake URI, so the source plans and reads against ``file://``,
+``s3://`` and ``gs://`` lakes alike (hdfs via libhdfs where
+deployed). At 100 TB the per-trigger work is O(newly appended files)
+— the same floor as Spark's own file-stream source, minus its
+unbounded seen-file ledger (the version offset IS the ledger).
 
 Schema comes from the manifest's recorded schema (commit-time schema
 enforcement stamps it; sources/manifest.py). Files predating an
@@ -49,16 +49,14 @@ streaming-source contract), never an arrow schema mismatch.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
 )
 
-_MANIFEST_DIR = "_manifests"
-_DATA_DIR = "data"
+from . import manifest_store as store
+from .manifest_store import _DATA_DIR, _pafs, _props_triples, _RetentionGap
 
 # Spark simpleString -> pyarrow type, for null-filling columns a
 # pre-evolution file lacks. Exotic nested types raise — a lake whose
@@ -90,90 +88,58 @@ def _pa_type(simple: str, fname: str, col: str):
     )
 
 
-def _pafs(path: str):
-    """(pyarrow FileSystem, normalized path) for a lake/file URI —
-    scheme-dispatched (file/s3/gs native; hdfs via libhdfs), falling
-    back to the local filesystem for bare paths."""
-    from pyarrow import fs as pafs
-
-    return pafs.FileSystem.from_uri(path)
-
-
 def _join(base: str, *parts: str) -> str:
     return "/".join([base.rstrip("/"), *parts])
 
 
+def _schema_triples_at(path: str, v: int) -> list[tuple[str, str, str]]:
+    """(logical, type, physical) per column of version v; [] for a lake
+    that predates schema recording."""
+    return _props_triples(store.read_manifest(path, v).get("props", {})) or []
 
 
-def _versions(path: str) -> list[int]:
-    from pyarrow import fs as pafs
-
-    fs, norm = _pafs(path)
-    mdir = _join(norm, _MANIFEST_DIR)
-    sel = pafs.FileSelector(mdir, allow_not_found=True)
-    out = []
-    for info in fs.get_file_info(sel):
-        name = info.base_name
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                out.append(int(name[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _manifest(path: str, v: int) -> dict:
-    from pyarrow import fs as pafs
-
-    fs, norm = _pafs(path)
-    mfile = _join(norm, _MANIFEST_DIR, f"v{v:08d}.json")
-    try:
-        with fs.open_input_stream(mfile) as fh:
-            return json.loads(fh.read().decode("utf-8"))
-    except (FileNotFoundError, OSError) as e:
-        # only a PROVABLY-absent manifest is a retention gap; a
-        # transient store error must surface raw, not masquerade as
-        # "restart from a snapshot" advice
-        info = fs.get_file_info(mfile)
-        if info.type == pafs.FileType.NotFound:
-            raise _RetentionGap(path, v) from e
-        raise
-
-
-class _RetentionGap(ValueError):
-    """A manifest in the requested offset range no longer exists —
-    vacuum reclaimed it. Raised with restart guidance instead of a raw
-    FileNotFoundError (a stream starting at version 0, or resuming a
-    checkpoint older than the lake's retention, hits this)."""
-
-    def __init__(self, path: str, v: int) -> None:
-        super().__init__(
-            f"manifest_stream: version {v} of {path} is outside the "
-            "lake's retention (its manifest was vacuumed) — restart the "
-            "stream with a fresh checkpoint from the current snapshot "
-            "(batch-read read_snapshot() for the base, then stream from "
-            "the current version)"
+def _start_floor(fmt: str, path: str, options) -> int:
+    """The exclusive start offset of a stream over the lake — Delta
+    startingVersion / startingTimestamp parity. Offsets BEFORE it are
+    never planned, so a stream can begin on a vacuumed lake (serve the
+    history via a batch read_snapshot, then stream from here). Unset =
+    0, the beginning; "latest" = only commits made after the stream
+    starts."""
+    sv = options.get("starting_version")
+    sts = options.get("starting_timestamp")
+    if sv is not None and sts is not None:
+        raise ValueError(
+            f"{fmt}: pass starting_version OR starting_timestamp, not both"
         )
-        self.version = v
-
-
-def _schema_triples_at(path: str, v: int) -> list[list[str]]:
-    """[logical, type, physical] per column — physical differs under
-    column mapping (renamed columns keep their original name inside
-    the immutable segment files; sources/manifest.py colmap)."""
-    props = _manifest(path, v).get("props", {})
-    sch = props.get("schema")
-    if not sch:
-        return []
-    cm = dict(props.get("colmap", {}))
-    return [[n, t, cm.get(n, n)] for n, t in sch["cols"]]
+    if sv is not None and str(sv).lower() == "latest":
+        vs = store.versions(path)
+        return vs[-1] if vs else 0
+    if sv is not None:
+        # "start AT version N" (version N's changes are included); 0 =
+        # "from the beginning", clamped so the first batch never plans
+        # a version 0 the lake does not have
+        return max(int(sv) - 1, 0)
+    if sts is None:
+        return 0
+    # newest commit strictly BEFORE ts is the exclusive floor: commits
+    # at-or-after ts stream
+    ts = float(sts)
+    floor = 0
+    for v in store.versions(path):
+        try:
+            m_ts = float(store.read_manifest(path, v).get("ts", 0.0))
+        except _RetentionGap:
+            continue  # vacuumed: can't predate ts usefully
+        if m_ts < ts:
+            floor = v
+    return floor
 
 
 def _schema_ddl(path: str) -> str:
-    vs = _versions(path)
+    vs = store.versions(path)
     if not vs:
         raise ValueError(f"manifest_stream: no commits at {path}")
-    sch = _manifest(path, vs[-1]).get("props", {}).get("schema")
+    sch = store.read_manifest(path, vs[-1]).get("props", {}).get("schema")
     if not sch:
         raise ValueError(
             f"manifest_stream: lake at {path} has no recorded schema "
@@ -213,42 +179,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         self._ignore_changes = (
             str(options.get("ignore_changes", "false")).lower() == "true"
         )
-        # Delta parity: startingVersion / startingTimestamp. Offsets
-        # BEFORE the starting point are never planned, so a stream can
-        # begin on a vacuumed lake (serve the history via a batch
-        # read_snapshot, then stream from here). "latest" = only
-        # commits made after the stream starts.
-        sv = options.get("starting_version")
-        sts = options.get("starting_timestamp")
-        if sv is not None and sts is not None:
-            raise ValueError(
-                "manifest_stream: pass starting_version OR "
-                "starting_timestamp, not both"
-            )
-        self._start_version: int | None
-        if sv is None and sts is None:
-            self._start_version = None
-        elif sv is not None and str(sv).lower() == "latest":
-            vs = _versions(path)
-            self._start_version = vs[-1] if vs else 0
-        elif sv is not None:
-            # "start AT version N" (Delta startingVersion semantics:
-            # version N's changes are included); 0 = "from the
-            # beginning", clamped so the floor is never negative
-            self._start_version = max(int(sv) - 1, 0)
-        else:
-            # newest commit strictly BEFORE ts is the exclusive floor:
-            # commits at-or-after ts stream (Delta startingTimestamp)
-            ts = float(sts)
-            floor = 0
-            for v in _versions(path):
-                try:
-                    m_ts = float(_manifest(path, v).get("ts", 0.0))
-                except _RetentionGap:
-                    continue  # vacuumed: can't predate ts usefully
-                if m_ts < ts:
-                    floor = v
-            self._start_version = floor
+        self._start_version = _start_floor("manifest_stream", path, options)
         # the reader's DECLARED output columns, pinned at stream start:
         # batches must project down to exactly these (minus the
         # attribution column we append ourselves)
@@ -259,7 +190,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         )
 
     def initialOffset(self) -> dict:
-        return {"version": self._start_version or 0}
+        return {"version": self._start_version}
 
     def latestOffset(self) -> dict:
         # No rate limiting: the Python DataSource API has no admission
@@ -269,7 +200,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         # regressing the offset after restart = duplicate emission.
         # Chunked backfills: batch-read read_snapshot() for history,
         # then stream with starting_version.
-        vs = _versions(self._path)
+        vs = store.versions(self._path)
         return {"version": vs[-1] if vs else 0}
 
     def _new_files(self, v: int) -> list[tuple[str, int]]:
@@ -277,7 +208,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         (or skips under ignore_changes) for non-append commits."""
         from pyarrow import fs as pafs
 
-        cur = _manifest(self._path, v)
+        cur = store.read_manifest(self._path, v)
         prev_segs: set = set()
         prev_dels: list = []
         # predecessor = the manifest's recorded parent, not v-1:
@@ -285,7 +216,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         # dense probe would spuriously raise _RetentionGap
         par = cur.get("parent")
         if par:
-            prev = _manifest(self._path, par)
+            prev = store.read_manifest(self._path, par)
             prev_segs = set(prev["segments"])
             prev_dels = list(prev.get("deletes", []))
         removed = prev_segs - set(cur["segments"])
@@ -355,7 +286,7 @@ class ManifestStreamReader(DataSourceStreamReader):
                 )
         parts = []
         # only versions that EXIST in (lo, hi] — numbering may skip
-        for v in _versions(self._path):
+        for v in store.versions(self._path):
             if not (lo < v <= hi):
                 continue
             parts.extend(

@@ -17,21 +17,24 @@ Segments are IMMUTABLE once referenced: every operation (append,
 replace, compact) writes NEW segment dirs and then publishes a new
 manifest; nothing a committed manifest points at is ever rewritten.
 
-**Commit = one atomic file rename.** The manifest is written to a tmp
-name and renamed to ``v<version>.json``. Rename-if-absent doubles as
-optimistic concurrency control: if two writers race to version N, one
-rename fails (destination exists). Every write op commits through ONE
+**Commit = one atomic publish-if-absent.** The manifest is written to
+a tmp name and published as ``v<version>.json`` only if that name is
+free. Publish-if-absent doubles as optimistic concurrency control: if
+two writers race to version N, one publish fails (destination exists).
+Every write op commits through ONE
 loop, `_commit`: each attempt reads the latest manifest and calls the
 op's ``build(parent)``, which derives everything the new version
 records (segment list, validation, rewritten segments, change segment)
 from that parent — so the loser simply runs the attempt again on
 N+1. Work that does not depend on the parent is done once and reused
 (a plain append's data segment is written once; only the pointer
-retries). (Atomic on HDFS/ABFS, where FileContext.rename without
-OVERWRITE is a single atomic fail-on-existing namespace op; on S3 swap
-the rename for a conditional PUT ``If-None-Match:*`` — same one-object
-commit point. On a LOCAL filesystem the fail-on-existing check is
-exists+rename(2), not atomic — test-grade only, one writer per host.)
+retries). The commit point lives in `manifest_store.write_if_absent`:
+on a local lake it is a hard link of the written tmp file, atomic and
+fail-on-existing, so any number of local writers (the JVM-side ops and
+the Python datasource writer alike) serialize through it; on HDFS/ABFS
+it is FileContext.rename without OVERWRITE, a single atomic
+fail-on-existing namespace op; on S3 swap the rename for a conditional
+PUT ``If-None-Match:*`` — same one-object commit point.
 
 **Snapshot isolation for free.** A reader resolves ONE manifest file
 and plans over the segments it lists. Compaction publishes a new
@@ -41,10 +44,10 @@ untouched — no maintenance window. Old segments die only in `vacuum`,
 which retains the last ``keep_versions`` manifests and removes
 segments no retained manifest references (plus dead partial writes).
 
-**Crash anywhere is safe**: a crash before the rename leaves an orphan
+**Crash anywhere is safe**: a crash before the publish leaves an orphan
 segment and/or tmp manifest that no committed manifest references —
 invisible to every reader, reclaimed by vacuum. A crash after the
-rename is a completed commit.
+publish is a completed commit.
 
 At 100 TB: the manifest holds directory names, not per-file entries, so
 it stays KB-sized; resolution is one small-file read on the driver;
@@ -82,10 +85,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.partitioning import rows_frame
+from . import manifest_store as store
+from .manifest_store import (
+    _CDF_DIR,
+    _DATA_DIR,
+    _MANIFEST_DIR,
+    _is_widening,
+    _props_triples,
+)
 
-_MANIFEST_DIR = "_manifests"
-_DATA_DIR = "data"
-_CDF_DIR = "cdf"  # write-time recorded change segments (r10)
 # Idempotency-tag retention: each manifest keeps the most recent
 # _MAX_TAGS tags (insertion order). Replay guards only need to cover
 # the possible redelivery horizon — a handful of batches — so 10k is
@@ -103,40 +111,14 @@ def _fs(spark: SparkSession, p: str):
     return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
 
 
-def _manifest_versions(spark: SparkSession, path: str) -> list[int]:
-    """Committed versions, ascending. A ``.tmp`` file is an
-    uncommitted write in flight — never listed."""
-    mdir = f"{path}/{_MANIFEST_DIR}"
-    fs, jp = _fs(spark, mdir)
-    if not fs.exists(jp):
-        return []
-    out = []
-    for st in fs.listStatus(jp):
-        name = st.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                out.append(int(name[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
+def _manifest_versions(spark: SparkSession | None, path: str) -> list[int]:
+    return store.versions(path, spark)
 
 
-def _read_manifest(spark: SparkSession, path: str, version: int) -> dict:
-    mfile = f"{path}/{_MANIFEST_DIR}/v{version:08d}.json"
-    fs, jp = _fs(spark, mfile)
-    stream = fs.open(jp)
-    try:
-        # py4j byte[] args are pass-by-value (a Python-side buffer
-        # never sees Java-side writes), so drain via commons-io
-        content = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return json.loads(content)
+def _read_manifest(spark: SparkSession | None, path: str, version: int) -> dict:
+    return store.read_manifest(path, version, spark)
 
 
-_CKPT_FILE = "_ckpt.json"
 _CKPT_INTERVAL = 32  # auto-rollup cadence; table prop "ckpt_interval"
 
 
@@ -171,23 +153,12 @@ def _ckpt_entry(m: dict, epochs: dict, epoch_ids: dict) -> dict:
     return e
 
 
-def _read_ckpt(spark: SparkSession, path: str) -> dict | None:
+def _read_ckpt(spark: SparkSession | None, path: str) -> dict | None:
     """The rollup checkpoint, or None. Derived state: absent, stale or
     unparseable never fails a read — consumers fall back to the
     per-version manifests they would have read anyway."""
-    ckfile = f"{path}/{_MANIFEST_DIR}/{_CKPT_FILE}"
-    fs, jp = _fs(spark, ckfile)
     try:
-        if not fs.exists(jp):
-            return None
-        stream = fs.open(jp)
-        try:
-            content = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        ck = json.loads(content)
+        ck = store.read_json(store.ckpt_file(path), spark)
         return ck if isinstance(ck.get("entries"), dict) else None
     except Exception:
         return None
@@ -238,17 +209,7 @@ def checkpoint_manifest(spark: SparkSession, path: str) -> int:
                 _read_manifest(spark, path, v), epochs, epoch_ids
             )
     ck = {"version": versions[-1], "entries": entries, "epochs": epochs}
-    ckfile = f"{path}/{_MANIFEST_DIR}/{_CKPT_FILE}"
-    fs, _jp = _fs(spark, ckfile)
-    # ".tmp-" prefix so a crashed write is collected by vacuum's
-    # stale-tmp sweep like any torn manifest write
-    tmp = f"{path}/{_MANIFEST_DIR}/.tmp-ckpt-{uuid.uuid4().hex[:8]}"
-    out = fs.create(_jpath(spark, tmp), True)
-    try:
-        out.write(bytearray(json.dumps(ck).encode("utf-8")))
-    finally:
-        out.close()
-    _rename_overwrite(spark, tmp, ckfile)
+    store.write_replace(store.ckpt_file(path), ck, spark)
     return versions[-1]
 
 
@@ -284,50 +245,6 @@ def _walk_entries(
                 "props": dict(m.get("props", {}) or {}),
             }
     return out
-
-
-def _rename_no_overwrite(spark: SparkSession, src: str, dst: str) -> bool:
-    """Atomic rename that FAILS if `dst` exists — the commit primitive.
-    ``FileSystem.rename`` can't be trusted for this (RawLocalFileSystem
-    delegates to POSIX rename(2), which silently replaces the
-    destination); ``FileContext.rename`` without the OVERWRITE option
-    enforces fail-on-existing on every implementation (atomic on
-    HDFS/ABFS — the same primitive Delta's HDFSLogStore commits with)."""
-    jvm = spark._jvm
-    jdst = _jpath(spark, dst)
-    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        jdst.toUri(), spark._jsc.hadoopConfiguration()
-    )
-    opts = spark.sparkContext._gateway.new_array(
-        jvm.org.apache.hadoop.fs.Options.Rename, 0
-    )
-    try:
-        fc.rename(_jpath(spark, src), jdst, opts)
-        return True
-    except Exception as e:  # Py4JJavaError: lost the CAS race
-        msg = str(e)
-        if "AlreadyExists" in msg or "already exists" in msg:
-            return False
-        raise
-
-
-def _rename_overwrite(spark: SparkSession, src: str, dst: str) -> None:
-    """Atomic rename that REPLACES `dst` — the checkpoint primitive
-    (last-writer-wins state files, not CAS commits). FileContext with
-    Options.Rename.OVERWRITE gives replace semantics on every
-    implementation (plain FileSystem.rename refuses an existing
-    destination on HDFS but replaces it on the local FS — unusable for
-    a portable overwrite)."""
-    jvm = spark._jvm
-    jdst = _jpath(spark, dst)
-    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        jdst.toUri(), spark._jsc.hadoopConfiguration()
-    )
-    opts = spark.sparkContext._gateway.new_array(
-        jvm.org.apache.hadoop.fs.Options.Rename, 1
-    )
-    opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-    fc.rename(_jpath(spark, src), jdst, opts)
 
 
 def _write_segment(
@@ -385,19 +302,22 @@ def _version(parent: dict | None) -> int:
 
 
 def _commit(
-    spark: SparkSession,
+    spark: SparkSession | None,
     path: str,
     op: str,
     build,
     tag: str | None = None,
     min_version: int | None = None,
 ) -> int:
-    """Publish a new manifest via rename-if-absent CAS — the ONE retry
-    loop of the lake. Each attempt lists the versions, reads the parent
-    manifest (None on an empty lake), runs the tag check, calls
-    ``build(parent)`` and renames the new manifest into place; a lost
-    rename runs the attempt again on the new head. Whatever the op
-    commits is therefore derived from the parent it lands on.
+    """Publish a new manifest via write-if-absent CAS — the ONE retry
+    loop of the lake (the Python datasource writer commits through it
+    too). Each attempt lists the versions, reads the parent manifest
+    (None on an empty lake), runs the tag check, calls
+    ``build(parent)`` and publishes the new manifest with
+    `manifest_store.write_if_absent`; a lost publish runs the attempt
+    again on the new head. Whatever the op commits is therefore derived
+    from the parent it lands on. All metadata I/O goes through the
+    store, so `spark` may be None on a local lake.
 
     ``build(parent)`` returns a dict of manifest fields: ``segments``
     (required: the new live segment list) plus whatever differs from
@@ -433,8 +353,6 @@ def _commit(
     "was this commit already applied?" from the latest manifest alone —
     the streaming sink's replay guard survives vacuum (which keeps the
     newest manifests, whose tag set is complete by construction)."""
-    mdir = f"{path}/{_MANIFEST_DIR}"
-    fs, jmdir = _fs(spark, mdir)
     for _ in range(_COMMIT_TRIES):
         versions = _manifest_versions(spark, path)
         parent = versions[-1] if versions else 0
@@ -501,15 +419,9 @@ def _commit(
         manifest.update(out)  # version-scoped extras, e.g. "cdf"
         if props:
             manifest["props"] = props
-        fs.mkdirs(jmdir)
-        tmp = f"{mdir}/.tmp-{uuid.uuid4().hex}.json"
-        stream = fs.create(_jpath(spark, tmp), True)
-        try:
-            stream.write(bytearray(json.dumps(manifest).encode("utf-8")))
-        finally:
-            stream.close()
-        # the commit point: atomic, fails if the version was taken
-        if _rename_no_overwrite(spark, tmp, f"{mdir}/v{version:08d}.json"):
+        # the commit point: atomic, fails if the version was taken (a
+        # lost race runs the attempt again on the new head)
+        if store.write_if_absent(store.manifest_file(path, version), manifest, spark):
             # periodic rollup (VERDICT r11 #2): best-effort, derived
             # state — a failure never un-commits the version
             try:
@@ -519,7 +431,6 @@ def _commit(
             except Exception:
                 pass
             return version
-        fs.delete(_jpath(spark, tmp), False)  # lost the race: rebuild on the new head
     raise RuntimeError(
         f"manifest commit lost the CAS race {_COMMIT_TRIES} times: {path}"
     )
@@ -546,11 +457,7 @@ def table_schema(spark: SparkSession, path: str) -> list[list[str]] | None:
     """The table schema as ordered [name, type] pairs from the latest
     manifest (None for fresh/pre-feature lakes — stamped forward on the
     next write)."""
-    versions = _manifest_versions(spark, path)
-    if not versions:
-        return None
-    props = _read_manifest(spark, path, versions[-1]).get("props", {})
-    sch = props.get("schema")
+    sch = _latest_props(spark, path).get("schema")
     return [list(p) for p in sch["cols"]] if sch else None
 
 
@@ -703,11 +610,7 @@ def _probe_schema(spark: SparkSession, path: str) -> list[list[str]] | None:
 def table_constraints(spark: SparkSession, path: str) -> dict[str, str]:
     """Name -> SQL expression of the table's CHECK constraints (empty
     for a fresh or constraint-less lake)."""
-    versions = _manifest_versions(spark, path)
-    if not versions:
-        return {}
-    props = _read_manifest(spark, path, versions[-1]).get("props", {})
-    return dict(props.get("constraints", {}))
+    return dict(_latest_props(spark, path).get("constraints", {}))
 
 
 def set_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
@@ -2970,22 +2873,6 @@ def _segments_schema(spark: SparkSession, paths: list[str]):
         sch = spark.read.parquet(*paths).schema
         _SEG_SCHEMA_CACHE[key] = sch
     return sch
-
-
-_WIDEN_CHAINS = (
-    ["tinyint", "smallint", "int", "bigint"],
-    ["float", "double"],
-    # every int32-or-narrower integer is exactly representable in a
-    # double; bigint is NOT (2^53) and never widens to double
-    ["tinyint", "smallint", "int", "double"],
-)
-
-
-def _is_widening(old: str, new: str) -> bool:
-    for chain in _WIDEN_CHAINS:
-        if old in chain and new in chain and chain.index(old) < chain.index(new):
-            return True
-    return False
 
 
 def widen_column_type(
@@ -5553,16 +5440,6 @@ def _record_change_segment(
     return {"cdf": seg}
 
 
-def _props_triples(props: dict):
-    """[(logical, type, physical)] per column of a props dict, or None
-    when the lake predates schema recording."""
-    sch = props.get("schema")
-    if not sch:
-        return None
-    cm = dict(props.get("colmap", {}))
-    return [(n, t, cm.get(n, n)) for n, t in sch["cols"]]
-
-
 def _identity_chain(
     spark: SparkSession,
     path: str,
@@ -5804,24 +5681,16 @@ def consume_feed(
     checkpoint is last-writer-wins by design, like a streaming query's
     checkpoint dir).
 
-    The checkpoint goes through the Hadoop FileSystem API (same seam
-    as every other lake I/O — manifest reads, cdc view snapshots), so
-    `state_path` may live on hdfs/s3a/gcs next to the lake, not just
-    driver-local disk; the commit point is a tmp write + overwrite
-    rename (FileContext.rename(OVERWRITE) — atomic where the store
-    provides it, and last-writer-wins is the declared contract)."""
+    The checkpoint goes through the manifest store like the lake's own
+    metadata, so `state_path` may live on hdfs/s3a/gcs next to the
+    lake, not just driver-local disk; the commit point is
+    `manifest_store.write_replace` (a tmp write + atomic replace —
+    last-writer-wins is the declared contract)."""
     state_file = f"{state_path}/high_water.json"
-    fs, state_jp = _fs(spark, state_file)
-    hw = 0
-    if fs.exists(state_jp):
-        stream = fs.open(state_jp)
-        try:
-            content = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        hw = int(json.loads(content)["version"])
+    try:
+        hw = int(store.read_json(state_file, spark)["version"])
+    except FileNotFoundError:
+        hw = 0
     latest = current_version(spark, path) or 0
     done = 0
     cur_trip = _props_triples(_latest_props(spark, path))
@@ -5893,14 +5762,7 @@ def consume_feed(
             "version", F.lit(v)
         )  # same (key..., op, version) schema as read_feed
         process(delta, v)
-        fs.mkdirs(_jpath(spark, state_path))
-        tmp = f"{state_file}.tmp-{uuid.uuid4().hex[:8]}"
-        out = fs.create(_jpath(spark, tmp), True)
-        try:
-            out.write(bytearray(json.dumps({"version": v}).encode("utf-8")))
-        finally:
-            out.close()
-        _rename_overwrite(spark, tmp, state_file)  # the commit point
+        store.write_replace(state_file, {"version": v}, spark)  # the commit point
         done += 1
     return done
 
@@ -5942,18 +5804,9 @@ def backfill_snapshot_chunks(
     `keep_versions`/retain-hours accordingly (the usual CDC-bootstrap
     contract)."""
     state_file = f"{state_path}/backfill.json"
-    fs, state_jp = _fs(spark, state_file)
-    state: dict | None = None
-    if fs.exists(state_jp):
-        stream = fs.open(state_jp)
-        try:
-            content = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        state = json.loads(content)
-    if state is None:
+    try:
+        state = store.read_json(state_file, spark)
+    except FileNotFoundError:
         v = current_version(spark, path)
         if v is None:
             raise ValueError(f"cannot backfill an empty manifest lake: {path}")
@@ -5973,18 +5826,8 @@ def backfill_snapshot_chunks(
             df = _read_with_tombstones(spark, path, group, m, merge_schema=True)
             df = _project_logical(df, props)
             process(df, i, len(chunks))
-        fs.mkdirs(_jpath(spark, state_path))
-        tmp = f"{state_file}.tmp-{uuid.uuid4().hex[:8]}"
-        out = fs.create(_jpath(spark, tmp), True)
-        try:
-            out.write(
-                bytearray(
-                    json.dumps({"version": v, "done": i + 1}).encode("utf-8")
-                )
-            )
-        finally:
-            out.close()
-        _rename_overwrite(spark, tmp, state_file)  # the commit point
+        # the commit point
+        store.write_replace(state_file, {"version": v, "done": i + 1}, spark)
     return v
 
 
@@ -7108,12 +6951,12 @@ def vacuum(
                 live_cdf.add(m["cdf"])
     for v in versions:
         if v not in keep and not dry_run:
-            fs.delete(_jpath(spark, f"{path}/{_MANIFEST_DIR}/v{v:08d}.json"), False)
+            fs.delete(_jpath(spark, store.manifest_file(path, v)), False)
     # stray tmp manifests from crashed commits — but only STALE ones:
     # a fresh .tmp may belong to an in-flight concurrent commit whose
-    # rename hasn't happened yet; deleting it would turn that writer's
+    # publish hasn't happened yet; deleting it would turn that writer's
     # clean CAS loss into a FileNotFound error. 10 minutes is far past
-    # any write-to-rename window (the tmp write is one small file).
+    # any write-to-publish window (the tmp write is one small file).
     now_ms = spark._jvm.java.lang.System.currentTimeMillis()
     mdir = f"{path}/{_MANIFEST_DIR}"
     for st in fs.listStatus(_jpath(spark, mdir)):
@@ -7130,14 +6973,7 @@ def vacuum(
             # surviving fresh tmp: whatever segments it references may
             # commit any moment — treat them as live
             try:
-                stream = fs.open(st.getPath())
-                try:
-                    content = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                        stream, "UTF-8"
-                    )
-                finally:
-                    stream.close()
-                pending = json.loads(content)
+                pending = store.read_json(st.getPath().toString(), spark)
                 live.update(pending.get("segments", []))
                 live.update(pending.get("deletes", []))
             except Exception:

@@ -64,25 +64,25 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture
 def race_before_rename(monkeypatch):
     """Arm ONE racing write in the only window a manifest commit has
-    left: between its `build` and the rename that publishes it.
-    `arm(fire)` wraps `manifest._rename_no_overwrite`; the next commit
-    point first un-patches itself, then runs `fire()` (a commit that
-    lands first) and only then attempts its own rename, which loses —
-    so `_commit` rebuilds on the new head. Returns a list that gets one
-    entry when the race fired."""
-    from nba_pipeline_spark.sources import manifest as M
+    left: between its `build` and the write-if-absent that publishes
+    it. `arm(fire)` wraps `manifest_store.write_if_absent`; the next
+    commit point first un-patches itself, then runs `fire()` (a commit
+    that lands first) and only then attempts its own publish, which
+    loses — so `_commit` rebuilds on the new head. Returns a list that
+    gets one entry when the race fired."""
+    from nba_pipeline_spark.sources import manifest_store as store
 
-    real = M._rename_no_overwrite
+    real = store.write_if_absent
     fired: list = []
 
     def arm(fire):
-        def hook(spark, src, dst):
-            monkeypatch.setattr(M, "_rename_no_overwrite", real)
+        def hook(file, obj, spark=None):
+            monkeypatch.setattr(store, "write_if_absent", real)
             fire()
-            fired.append(dst)
-            return real(spark, src, dst)
+            fired.append(file)
+            return real(file, obj, spark)
 
-        monkeypatch.setattr(M, "_rename_no_overwrite", hook)
+        monkeypatch.setattr(store, "write_if_absent", hook)
         return fired
 
     return arm

@@ -474,9 +474,9 @@ def test_cdf_stream_survives_skipped_version_numbers(spark, tmp_path):
     M.commit_append(spark, bpath, _rows(spark, [(3, "b", 30)]))     # b v3
     M.publish_branch(spark, lake, "wap")                            # main v3!
     vs = M.list_versions(spark, lake) if hasattr(M, "list_versions") else None
-    from nba_pipeline_spark.sources.lake_stream import _versions
+    from nba_pipeline_spark.sources.manifest_store import versions
 
-    assert _versions(lake) == [1, 3], _versions(lake)  # 2 skipped
+    assert versions(lake) == [1, 3], versions(lake)  # 2 skipped
     got: list = []
     _run(spark, lake, str(tmp_path / "ck"), got)
     assert _flat(got) == {

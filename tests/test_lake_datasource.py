@@ -440,6 +440,26 @@ def test_writer_concurrent_appends_serialize(spark, tmp_path):
     assert len(M._manifest_versions(spark, lake)) == 5
 
 
+def test_writer_commit_in_commit_append_window_both_land(
+    spark, tmp_path, race_before_rename
+):
+    """A datasource writer commits (in its own Python worker) between
+    commit_append's build and its publish. The writer and the JVM-side
+    op share one commit point, so commit_append's publish loses, it
+    rebuilds on the writer's version, and both commits land."""
+    register_lake_source(spark)
+    lake = str(tmp_path / "wlake")
+    M.commit_append(spark, lake, _src(spark, 0, 10))
+    fired = race_before_rename(lambda: _write(_src(spark, 10, 20), lake))
+    assert M.commit_append(spark, lake, _src(spark, 20, 30)) == 3
+    assert fired
+    ops = [M._read_manifest(spark, lake, v)["op"] for v in (1, 2, 3)]
+    assert ops == ["append", "append", "append"]
+    assert len(M._read_manifest(spark, lake, 3)["segments"]) == 3
+    got = sorted(r["k"] for r in M.read_snapshot(spark, lake).collect())
+    assert got == list(range(30))
+
+
 def test_writer_stats_merge_null_first_batch(spark, tmp_path):
     """Executor-side stats merge is None-tolerant: a task whose FIRST
     Arrow batch is all-NULL in a stats column ([None, None]) must not

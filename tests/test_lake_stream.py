@@ -330,9 +330,9 @@ def test_manifest_stream_survives_skipped_version_numbers(spark, tmp_path):
     M.commit_append(spark, bpath, _rows(spark, [(2, "b")]))      # b v2
     M.commit_append(spark, bpath, _rows(spark, [(3, "c")]))      # b v3
     M.publish_branch(spark, lake, "wap")                         # main v3
-    from nba_pipeline_spark.sources.lake_stream import _versions
+    from nba_pipeline_spark.sources.manifest_store import versions
 
-    assert _versions(lake) == [1, 3]
+    assert versions(lake) == [1, 3]
     got: list = []
     _run_available(spark, lake, ckpt, got)
     assert {(r["k"], r["v"], r["_commit_version"]) for r in got} == {

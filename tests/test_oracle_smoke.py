@@ -7,7 +7,9 @@ lookup join, a banded range join, a manifest MERGE and the manifest
 history table); and manifest-lake queries whose staging runs the write
 ops that commit through `_commit`'s build (recorded change segments on
 every path, DV delete, MoR merge, partitioned MERGE on a column-mapped
-lake, UNIQUE and CHECK enforcement). Each is compared with its DuckDB oracle
+lake, UNIQUE and CHECK enforcement), plus the Python datasource writer
+and both stream readers, which list, read and commit through the same
+manifest store. Each is compared with its DuckDB oracle
 exactly as tools/local_verify.py compares them (row count, columns,
 order-insensitive values, bit-exact floats). The full sweep stays in
 tools/local_verify.py and the soak set."""
@@ -46,6 +48,9 @@ QUERIES = [
     "q_manifest_merge_mapped",
     "q_manifest_unique",
     "q_manifest_constraints",
+    "q_manifest_sql_write",
+    "q_manifest_stream_write",
+    "q_manifest_cdf",
 ]
 
 
