@@ -530,7 +530,7 @@ def build_ivf_quantized_index(
         F.col("cid"),
         scale.alias("s"),
         codes.alias("codes"),
-    ).localCheckpoint(eager=True)  # one assignment pass, k per-cell writes
+    ).localCheckpoint(eager=True)  # one assignment pass, one keyed write
     M.commit_replace(spark, centroids_path, centroids)
     M.commit_replace_partitioned(
         spark,

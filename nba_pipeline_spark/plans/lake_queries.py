@@ -1698,7 +1698,7 @@ register(
 
 def _statsagg_lake(spark: SparkSession, sf_dir: str) -> str:
     """orders in three key bands, every append recording rows/min-max/
-    null-count metadata (one agg job per write — see _stats_meta), plus
+    null-count metadata (one agg per write — see manifest._stats_meta), plus
     a deliberately nullable derived column so COUNT(col) has NULLs to
     subtract."""
     lake = _stage_dir(sf_dir, "orders", "manifest_statsagg")
@@ -2023,7 +2023,7 @@ def _token_lake(spark: SparkSession, sf_dir: str) -> str:
 
 def q_manifest_token_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyword search with MANIFEST-level segment skipping
-    (sources/manifest.py::_token_bloom / read_snapshot(token_eq=)):
+    (sources/manifest.py::_segment_blooms / read_snapshot(token_eq=)):
     "which segments mention this term" is answered from per-segment
     token blooms before any file is listed — the grep-at-100TB /
     contamination-attribution probe. Pruning quality is asserted
@@ -2526,7 +2526,7 @@ def _sql_bloom_lake(spark: SparkSession, sf_dir: str) -> str:
     id blooms: every segment's [min, max] spans the whole key range,
     so stats can prove nothing — only the blooms can skip. Sixteen
     bands (not four) because manifest blooms are CAPACITY-BOUNDED
-    (~32k keys at 16 bits/key under the 2^19-bit cap — _segment_bloom
+    (~32k keys at 16 bits/key under the 2^19-bit cap — _fold_bloom
     soundly omits beyond that): at sf0.1 a 4-band segment carries
     37.5k keys and gets no bloom. The 100 TB lesson in miniature —
     size segments to the bloom budget or point skipping silently

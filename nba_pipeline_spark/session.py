@@ -92,6 +92,21 @@ def retune(spark: SparkSession) -> SparkSession:
     return tune(spark)
 
 
+def register_data_source(spark: SparkSession, source: type) -> None:
+    """Register a Python DataSource class (idempotent). Its workers
+    unpickle the class by reference, so they must import this package:
+    the package's parent dir goes on their PYTHONPATH first, through
+    the SparkContext environment that every wrapped Python function
+    hands to its workers. A driver that found the package only through
+    its own sys.path (another cwd, no PYTHONPATH) then works too."""
+    env = spark.sparkContext.environment
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([*paths, root])
+    spark.dataSource.register(source)
+
+
 def get_spark(app_name: str = "nba_pipeline_spark", cores: int | None = None) -> SparkSession:
     """Local session for tests/bench. Cluster deploys pass their own conf."""
     if cores is None:

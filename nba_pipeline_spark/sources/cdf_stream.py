@@ -65,6 +65,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..session import register_data_source
 from . import manifest_store as store
 from .lake_stream import _join, _pa_type, _schema_triples_at, _start_floor
 from .manifest_store import (
@@ -686,4 +687,4 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
 
 def register_cdf_stream(spark) -> None:
     """Idempotent registration of format("manifest_cdf")."""
-    spark.dataSource.register(ManifestCDFDataSource)
+    register_data_source(spark, ManifestCDFDataSource)

@@ -69,6 +69,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from ..session import register_data_source
 from . import manifest_store as store
 from .lake_stream import _join, _pa_type, _schema_triples_at
 from .manifest_store import _DATA_DIR, _pafs
@@ -501,7 +502,7 @@ def register_lake_source(spark) -> None:
     the engine-wide Python-source filter pushdown flag (a reader that
     implements pushFilters fails analysis while it's off)."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(ManifestLakeDataSource)
+    register_data_source(spark, ManifestLakeDataSource)
 
 
 def read_lake(

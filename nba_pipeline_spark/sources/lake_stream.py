@@ -55,6 +55,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..session import register_data_source
 from . import manifest_store as store
 from .manifest_store import _DATA_DIR, _pafs, _props_triples, _RetentionGap
 
@@ -339,7 +340,7 @@ class ManifestStreamReader(DataSourceStreamReader):
 
 def register_lake_stream(spark) -> None:
     """Idempotent registration of format("manifest_stream")."""
-    spark.dataSource.register(ManifestStreamDataSource)
+    register_data_source(spark, ManifestStreamDataSource)
 
 
 def stream_after_backfill(

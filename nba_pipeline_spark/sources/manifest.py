@@ -253,12 +253,18 @@ def _write_segment(
     target_files: int | None,
     bloom_cols: list[str] | None = None,
     expected_ndv: int | None = None,
+    partition_by: str | None = None,
 ) -> str:
-    seg = f"seg-{uuid.uuid4().hex[:12]}"
+    """Write `df` to a new dir under ``data/`` and return its name: a
+    segment, or with `partition_by` the tmp dir `_write_segments`
+    renames the partition dirs out of."""
+    seg = f"{'.tmp' if partition_by else 'seg'}-{uuid.uuid4().hex[:12]}"
     w = (df.coalesce(target_files) if target_files else df).write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(partition_by)
     # FILE-level parquet blooms on the declared point-lookup columns:
     # the documented hand-off from the manifest-level bloom, which is
-    # omitted past ~32k distinct keys (see _segment_bloom) — for
+    # omitted past ~32k distinct keys (see _fold_bloom) — for
     # oversize segments the parquet reader's own bloom consumption
     # takes over on point predicates INSIDE the segments the manifest
     # keeps. No read-side change (Spark's vectorized reader consumes
@@ -1078,19 +1084,77 @@ def _bloom_hash_cols(col):
     return [F.xxhash64(s, F.lit(seed)) for seed in range(_BLOOM_HASHES)]
 
 
-def _segment_bloom(df: DataFrame, col: str) -> dict | None:
-    """{"bits": m, "b64": bitmap} sized to the segment's distinct key
-    count, or None when the segment is too large for a useful
-    manifest-level bloom.
+def _segment_blooms(
+    df: DataFrame, by: list[str], kinds: list[tuple[str, str]], keys: list
+) -> dict[tuple, dict]:
+    """{key: {kind: {col: bloom}}} for each of `keys` (tuples of the
+    values of the `by` columns), where
+    `kinds` lists ("bloom", col) and ("tok_bloom", col) pairs. A token
+    bloom covers the lowercased WHITESPACE TOKENS of a string column:
+    "which segments mention this term" answered from the manifest (the
+    decontamination / attribution / grep-at-100TB probe); per-segment
+    distinct tokens are vocabulary-bounded, so these stay small where a
+    doc-id bloom would saturate.
 
-    ONE aggregation pass over the segment (AQE runs it as at most two
-    scheduler jobs — shuffle materialize + final): bit positions are
-    computed at the MAX bitmap size and partial-aggregated map-side
-    into 64-bit words (``bit_or`` per word), so at most 2^19/64 = 8192
-    (word, bits) rows reach the driver — no distinct-count pre-job
-    (which scanned the data a second time), no 0.5 M-row position
-    collect.
-    The distinct-key count is then ESTIMATED from the fill ratio
+    ONE aggregation for every column and group (AQE runs it as at most
+    two scheduler jobs): bit positions are computed at the MAX bitmap
+    size, offset by the column's index times that size, and
+    partial-aggregated map-side into 64-bit words (``bit_or`` per
+    group and word), so at most 2^19/64 = 8192 rows per group and
+    column reach the driver. `_fold_bloom` sizes each bitmap."""
+    from pyspark.sql import functions as F
+
+    m_max = _BLOOM_MAX_BITS
+
+    def positions(col, i):
+        return [F.pmod(h, F.lit(m_max)) + i * m_max for h in _bloom_hash_cols(col)]
+
+    arrays = []
+    for i, (kind, c) in enumerate(kinds):
+        if kind == "bloom":
+            arrays.append(F.array(*positions(F.col(c), i)))
+        else:
+            toks = F.filter(F.split(F.lower(F.col(c)), r"\s+"), lambda t: t != "")
+            arrays.append(F.coalesce(  # NULL text has no tokens
+                F.flatten(F.transform(toks, lambda t: F.array(*positions(t, i)))),
+                F.array().cast("array<bigint>"),
+            ))
+    rows = (
+        df.select(*by, F.explode(F.concat(*arrays)).alias("__v"))
+        .select(
+            *by,
+            (F.col("__v") / 64).cast("long").alias("__w"),
+            # shiftleft via expr: the F.shiftleft wrapper takes only a
+            # literal int shift, the SQL function takes a column
+            F.expr("shiftleft(cast(1 as bigint), cast(__v % 64 as int))").alias("__b"),
+        )
+        .groupBy(*by, "__w")
+        .agg(F.bit_or("__b").alias("__bits"))
+        .collect()
+    )
+    words: dict = {}
+    for r in rows:
+        i, w = divmod(int(r["__w"]), m_max // 64)
+        k = tuple(r[c] for c in by)
+        words.setdefault((k, i), {})[w] = int(r["__bits"])
+    out: dict = {}
+    for k in keys:
+        meta: dict = {}
+        for i, (kind, c) in enumerate(kinds):
+            b = _fold_bloom(words.get((k, i), {}))
+            if b is not None:
+                meta.setdefault(kind, {})[c] = b
+        out[k] = meta
+    return out
+
+
+def _fold_bloom(words: dict[int, int]) -> dict | None:
+    """{"bits": m, "b64": bitmap} from one segment column's words at the
+    MAX bitmap size ({word index: bits}), sized to the segment's
+    distinct key count, or None when the segment is too large for a
+    useful manifest-level bloom.
+
+    The distinct-key count is ESTIMATED from the fill ratio
     (n ≈ -(m/k)·ln(1−t/m), the standard bloom-occupancy inversion) to
     pick the adaptive target size, and the bitmap FOLDS down by
     OR-halving: with power-of-two sizes, (h mod M) mod (M/2) ==
@@ -1099,32 +1163,12 @@ def _segment_bloom(df: DataFrame, col: str) -> dict | None:
     import base64
     import math
 
-    from pyspark.sql import functions as F
-
     m_max = _BLOOM_MAX_BITS
-    rows = (
-        df.select(
-            F.explode(
-                F.array(
-                    *[F.pmod(h, F.lit(m_max)) for h in _bloom_hash_cols(F.col(col))]
-                )
-            ).alias("p")
-        )
-        .select(
-            (F.col("p") / 64).cast("long").alias("w"),
-            # shiftleft via expr: the F.shiftleft wrapper takes only a
-            # literal int shift, the SQL function takes a column
-            F.expr("shiftleft(cast(1 as bigint), cast(p % 64 as int))").alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or("b").alias("bits"))
-        .collect()
-    )
     bitmap = 0
     t = 0  # set-bit count at max size
-    for r in rows:
-        word = int(r["bits"]) & 0xFFFFFFFFFFFFFFFF  # two's-complement -> unsigned
-        bitmap |= word << (64 * int(r["w"]))
+    for w, bits in words.items():
+        word = bits & 0xFFFFFFFFFFFFFFFF  # two's-complement -> unsigned
+        bitmap |= word << (64 * w)
         t += word.bit_count()
     if t >= m_max:
         return None  # fully saturated (cannot happen below ~75k keys)
@@ -1280,25 +1324,6 @@ def _bloom_probe_hashes(spark: SparkSession, value) -> list[int]:
     return [int(row[f"h{i}"]) for i in range(_BLOOM_HASHES)]
 
 
-def _token_bloom(df: DataFrame, col: str) -> dict | None:
-    """Segment bloom over the WHITESPACE TOKENS of a string column
-    (lowercased) — keyword-search segment skipping: "which segments
-    mention this term" answered from the manifest, the decontamination
-    / attribution / grep-at-100TB probe. Same adaptive sizing and
-    single-agg-job build as `_segment_bloom`; per-segment distinct
-    tokens are vocabulary-bounded, so these stay small where a doc-id
-    bloom would saturate."""
-    from pyspark.sql import functions as F
-
-    toks = (
-        df.select(
-            F.explode(F.split(F.lower(F.col(col)), r"\s+")).alias(col)
-        )
-        .filter(F.col(col) != "")
-    )
-    return _segment_bloom(toks, col)
-
-
 def _bloom_probes(spark: SparkSession, bloom_eq: dict) -> dict:
     """{col: [probe-hash-list, ...]} for a `bloom_eq` whose values are
     scalars OR collections (any-of semantics — the dim-driven join
@@ -1369,10 +1394,15 @@ def _bloom_maybe_contains(entry: dict, hashes: list[int]) -> bool:
     return all((bitmap >> (h % m)) & 1 for h in hashes)
 
 
-def _stats_meta(df: DataFrame, stats_cols: list[str]) -> dict:
-    """Segment-level statistics for the written frame — ONE agg job
-    (numeric / string / date columns; the write-time cost of read-time
-    data skipping AND metadata-only aggregation):
+def _stats_meta(
+    df: DataFrame, by: list[str], stats_cols: list[str]
+) -> list[tuple[tuple, dict]]:
+    """[(values of the `by` columns, stats)] — segment-level statistics
+    for each group of the written frame in ONE aggregation, whatever
+    the number of groups (no `by`: the one global row, also for 0
+    rows).
+    Numeric / string / date columns; the write-time cost of read-time
+    data skipping AND metadata-only aggregation:
 
       {"stats": {col: [min, max]},   # range pruning (_prune_segments)
        "rows": n,                    # metadata_agg COUNT(*)
@@ -1382,7 +1412,7 @@ def _stats_meta(df: DataFrame, stats_cols: list[str]) -> dict:
     would compute); an all-NULL column records [None, None]."""
     from pyspark.sql import functions as F
 
-    row = df.agg(
+    rows = df.groupBy(*by).agg(
         F.count(F.lit(1)).alias("__rows"),
         *[F.min(c).alias(f"__mn_{c}") for c in stats_cols],
         *[F.max(c).alias(f"__mx_{c}") for c in stats_cols],
@@ -1390,15 +1420,122 @@ def _stats_meta(df: DataFrame, stats_cols: list[str]) -> dict:
             F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}")
             for c in stats_cols
         ],
-    ).collect()[0]
-    return {
-        "stats": {
-            c: [_json_safe(row[f"__mn_{c}"]), _json_safe(row[f"__mx_{c}"])]
-            for c in stats_cols
-        },
-        "rows": int(row["__rows"]),
-        "nulls": {c: int(row[f"__nl_{c}"] or 0) for c in stats_cols},
-    }
+    ).collect()
+    return [
+        (
+            tuple(r[c] for c in by),
+            {
+                "stats": {
+                    c: [_json_safe(r[f"__mn_{c}"]), _json_safe(r[f"__mx_{c}"])]
+                    for c in stats_cols
+                },
+                "rows": int(r["__rows"]),
+                "nulls": {c: int(r[f"__nl_{c}"] or 0) for c in stats_cols},
+            },
+        )
+        for r in rows
+    ]
+
+
+def _write_segments(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    key: list | None = None,
+    sort: list[str] | None = None,
+    target_files: int | None = None,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    token_bloom_cols: list[str] | None = None,
+    file_blooms: bool = True,
+    expected_ndv: int | None = None,
+) -> list[tuple[tuple, str, dict]]:
+    """The one segment writer: lands `df` in new data segments and
+    computes their manifest metadata, returning [(key values, segment,
+    metadata)].
+
+    Without `key`, `df` is ONE segment written straight to its dir
+    (`_write_segment`, coalesced to `target_files`) and the key values
+    are ``()``. With `key` (a
+    list of Columns), each distinct key tuple (NULL is a value) becomes
+    one segment, in a fixed number of jobs whatever the number of
+    segments: the tuples come out of the stats aggregation, a broadcast
+    join copies each row's tuple into a dense int ``__p``, the frame is
+    written ONCE with ``partitionBy("__p")`` into a tmp dir under
+    ``data/``, and each ``__p=<i>`` dir is renamed into its own
+    ``data/seg-<uuid>``, so the manifest layout and every reader stay
+    as they are. The dense id keeps typed values (NULL, '/', '=', '%',
+    non-ASCII) out of directory names, and a key computed from helper
+    columns (a z-run id) never reaches the files. `sort` names helper
+    columns that order the rows inside each keyed segment and are not
+    written (the z value of the cluster ops). Segments come back in key
+    order, NULL first.
+
+    Metadata takes at most two grouped aggregations: `_stats_meta`
+    (``stats``/``rows``/``nulls``, recorded when `stats_cols` is given)
+    and `_segment_blooms` (every ``bloom`` and ``tok_bloom`` column).
+    `bloom_cols` also get FILE-level parquet blooms unless
+    `file_blooms=False` (see `_write_segment`)."""
+    from pyspark.sql import functions as F
+
+    stats_cols, sort = list(stats_cols or []), list(sort or [])
+    kinds = [("bloom", c) for c in bloom_cols or []]
+    kinds += [("tok_bloom", c) for c in token_bloom_cols or []]
+    file_bloom_cols = bloom_cols if file_blooms else None
+    if key is None:
+        seg = _write_segment(
+            df, path, target_files,
+            bloom_cols=file_bloom_cols, expected_ndv=expected_ndv,
+        )
+        stats = _stats_meta(df, [], stats_cols) if stats_cols else [((), {})]
+        placed, meta_df, by = [((), seg)], df, []
+    else:
+        kcols = [f"__k{i}" for i in range(len(key))]
+        kdf = df.select("*", *[k.alias(c) for c, k in zip(kcols, key)])
+        stats = sorted(
+            _stats_meta(kdf, kcols, stats_cols),
+            key=lambda ks: [(v is not None, v) for v in ks[0]],
+        )
+        if not stats:
+            return []
+        jcols = [f"__j{i}" for i in range(len(key))]
+        ids = rows_frame(
+            spark,
+            [(i, *k) for i, (k, _) in enumerate(stats)],
+            kdf.select(
+                F.lit(0).alias("__p"),
+                *[F.col(c).alias(j) for c, j in zip(kcols, jcols)],
+            ).schema,
+        )
+        on = F.lit(True)
+        for c, j in zip(kcols, jcols):
+            on = on & F.col(c).eqNullSafe(F.col(j))
+        meta_df = kdf.join(F.broadcast(ids), on).drop(*kcols, *jcols)
+        tmp = _write_segment(
+            meta_df.sortWithinPartitions("__p", *sort).drop(*sort), path, None,
+            bloom_cols=file_bloom_cols, expected_ndv=expected_ndv,
+            partition_by="__p",
+        )
+        fs, jtmp = _fs(spark, f"{path}/{_DATA_DIR}/{tmp}")
+        placed = []
+        for i, (k, _) in enumerate(stats):
+            seg = f"seg-{uuid.uuid4().hex[:12]}"
+            if not fs.rename(
+                _jpath(spark, f"{path}/{_DATA_DIR}/{tmp}/__p={i}"),
+                _jpath(spark, f"{path}/{_DATA_DIR}/{seg}"),
+            ):
+                raise RuntimeError(f"failed to place the segment for key {k}")
+            placed.append(((i,), seg))
+        fs.delete(jtmp, True)
+        by = ["__p"]
+    blooms = (
+        _segment_blooms(meta_df, by, kinds, [g for g, _ in placed])
+        if kinds else {}
+    )
+    return [
+        (k, seg, {**(st if stats_cols else {}), **blooms.get(g, {})})
+        for (k, st), (g, seg) in zip(stats, placed)
+    ]
 
 
 _NDV_BITMAP_MAX_BUCKETS = 64  # ~2.1M-value span; zlib keeps it small
@@ -1518,27 +1655,18 @@ def commit_append(
     def write(phys_df: DataFrame, props: dict) -> dict[str, dict]:
         # metadata keys (partition / stats / bloom) follow the physical
         # names the read-side probe translation expects
-        bloom_t = _physical_cols(props, bloom_cols)
-        seg = _write_segment(phys_df, path, target_files, bloom_cols=bloom_t)
-        seg_meta: dict = {}
         partition_t = _translate_probe(props, partition)
+        seg_meta: dict = {}
         if partition_t is not None:
             seg_meta["part"] = {k: _json_safe(v) for k, v in partition_t.items()}
-        if stats_cols:
-            seg_meta.update(
-                _stats_meta(phys_df, _physical_cols(props, stats_cols))
-            )
-        if bloom_t:
-            blooms = {c: _segment_bloom(phys_df, c) for c in bloom_t}
-            blooms = {c: b for c, b in blooms.items() if b is not None}
-            if blooms:
-                seg_meta["bloom"] = blooms
-        if token_bloom_cols:
-            tok_t = _physical_cols(props, token_bloom_cols)
-            tblooms = {c: _token_bloom(phys_df, c) for c in tok_t}
-            tblooms = {c: b for c, b in tblooms.items() if b is not None}
-            if tblooms:
-                seg_meta["tok_bloom"] = tblooms
+        [(_, seg, m)] = _write_segments(
+            spark, path, phys_df,
+            target_files=target_files,
+            stats_cols=_physical_cols(props, stats_cols),
+            bloom_cols=_physical_cols(props, bloom_cols),
+            token_bloom_cols=_physical_cols(props, token_bloom_cols),
+        )
+        seg_meta.update(m)
         if ndv_cols:
             seg_meta["ndv"] = _ndv_meta(phys_df, _physical_cols(props, ndv_cols))
             if "rows" not in seg_meta:
@@ -1555,7 +1683,6 @@ def commit_append_partitioned(
     path: str,
     df: DataFrame,
     part_col: str,
-    target_files: int | None = None,
     tag: str | None = None,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
@@ -1567,27 +1694,27 @@ def commit_append_partitioned(
     partial states between loop iterations and burns a manifest CAS per
     partition — here the batch lands all-or-nothing in a single
     version, ready for partition-scoped MERGE / replaceWhere / pruning.
-    The distinct-value job is O(partitions in the batch) driver-side
-    metadata, batch-sized by premise (a 100 TB daily load appends a
-    handful of date partitions).
+    The segments land through the one keyed `_write_segments` pass: the
+    same number of jobs for 3 partitions or 3,000.
 
     Column-mapped lakes: the logical batch and the part/stats/bloom
     columns translate to physical names like `commit_append` (segment
     tags stay physical — the probe translation expects that), with the
     same commit-time mapping check + rewrite-on-race."""
+    from pyspark.sql import functions as F
+
     return _append(
         spark,
         path,
         df,
         tag,
-        lambda phys_df, props: _write_partitioned_segments(
-            spark,
-            path,
-            phys_df,
+        lambda phys_df, props: _tagged(
             _physical(props, part_col),
-            target_files,
-            _physical_cols(props, stats_cols),
-            _physical_cols(props, bloom_cols),
+            _write_segments(
+                spark, path, phys_df, [F.col(_physical(props, part_col))],
+                stats_cols=_physical_cols(props, stats_cols),
+                bloom_cols=_physical_cols(props, bloom_cols),
+            ),
         ),
     )
 
@@ -1661,37 +1788,12 @@ def _append(
     return _commit(spark, path, "append", build, tag=tag)
 
 
-def _write_partitioned_segments(
-    spark: SparkSession,
-    path: str,
-    df: DataFrame,
-    part_col: str,
-    target_files: int | None,
-    stats_cols: list[str] | None,
-    bloom_cols: list[str] | None,
-) -> dict[str, dict]:
-    """One partition-tagged segment (with optional stats/blooms) per
-    distinct `part_col` value — the shared write step of the
-    partitioned append/replace commits."""
-    from pyspark.sql import functions as F
-
-    parts = [
-        _json_safe(r[part_col]) for r in df.select(part_col).distinct().collect()
-    ]
-    new_segs: dict[str, dict] = {}
-    for p in parts:
-        part_df = df.filter(F.col(part_col).eqNullSafe(F.lit(p)))
-        seg = _write_segment(part_df, path, target_files, bloom_cols=bloom_cols)
-        seg_meta: dict = {"part": {part_col: p}}
-        if stats_cols:
-            seg_meta.update(_stats_meta(part_df, stats_cols))
-        if bloom_cols:
-            blooms = {c: _segment_bloom(part_df, c) for c in bloom_cols}
-            blooms = {c: b for c, b in blooms.items() if b is not None}
-            if blooms:
-                seg_meta["bloom"] = blooms
-        new_segs[seg] = seg_meta
-    return new_segs
+def _tagged(part_col: str, written: list) -> dict[str, dict]:
+    """{segment: metadata} for a `_write_segments` pass keyed on
+    `part_col` alone: each segment tagged with its partition value."""
+    return {
+        seg: {"part": {part_col: _json_safe(k[0])}, **m} for k, seg, m in written
+    }
 
 
 def commit_replace_partitioned(
@@ -1699,7 +1801,6 @@ def commit_replace_partitioned(
     path: str,
     df: DataFrame,
     part_col: str,
-    target_files: int | None = None,
     tag: str | None = None,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
@@ -1711,12 +1812,20 @@ def commit_replace_partitioned(
     snapshot-isolated for the whole rebuild and never see a partial
     index; the superseded segments stay readable via time travel until
     vacuum). Pending merge-on-read tombstones drop — the new contents
-    supersede everything they applied to."""
+    supersede everything they applied to.
+
+    Execution: one keyed `_write_segments` pass — a stats aggregation
+    that also finds the partition values, ONE `partitionBy` write, and
+    one bloom aggregation — so the job count does not grow with the
+    number of cells."""
+    from pyspark.sql import functions as F
+
     _check_constraints(spark, path, df)
     _check_unique_self(spark, path, df)
-    new_segs = _write_partitioned_segments(
-        spark, path, df, part_col, target_files, stats_cols, bloom_cols
-    )
+    new_segs = _tagged(part_col, _write_segments(
+        spark, path, df, [F.col(part_col)],
+        stats_cols=stats_cols, bloom_cols=bloom_cols,
+    ))
     return _commit(
         spark,
         path,
@@ -1759,19 +1868,14 @@ def commit_replace(
     _check_constraints(spark, path, df)
     _check_unique_self(spark, path, df)
     ndv = df.count() if (bloom_cols and file_blooms) else None
-    seg = _write_segment(
-        df, path, target_files,
-        bloom_cols=bloom_cols if file_blooms else None,
+    [(_, seg, seg_meta)] = _write_segments(
+        spark, path, df,
+        target_files=target_files,
+        stats_cols=stats_cols,
+        bloom_cols=bloom_cols,
+        file_blooms=file_blooms,
         expected_ndv=ndv,
     )
-    seg_meta: dict = {}
-    if stats_cols:
-        seg_meta.update(_stats_meta(df, stats_cols))
-    if bloom_cols:
-        blooms = {c: _segment_bloom(df, c) for c in bloom_cols}
-        blooms = {c: b for c, b in blooms.items() if b is not None}
-        if blooms:
-            seg_meta["bloom"] = blooms
     return _commit(
         spark,
         path,
@@ -1835,7 +1939,6 @@ def commit_replace_where(
     eq: dict | None = None,
     ranges: dict | None = None,
     partition_by: str | None = None,
-    target_files: int | None = None,
     allow_nonmatching_rows: bool = False,
     record_cdf: bool = False,
     cdf_keys: list[str] | None = None,
@@ -1867,9 +1970,9 @@ def commit_replace_where(
     one dropped segment + one appended segment and a KB manifest swap —
     the restatement pattern warehouses run nightly. `partition_by`
     splits the incoming rows into one partition-tagged segment per
-    value (keeping a tagged lake tagged); like MERGE, the classification
-    and every write run in the commit's build, on the parent the commit
-    lands on.
+    value (keeping a tagged lake tagged) in one keyed `_write_segments`
+    pass; like MERGE, the classification and every write run in the
+    commit's build, on the parent the commit lands on.
     Pending merge-on-read tombstones must be compacted first.
 
     Column-mapped lakes: the scope is DICTS (eq/ranges), so it
@@ -1971,27 +2074,18 @@ def commit_replace_where(
             kept = _read_segments(spark, path, [s]).filter(
                 ~F.coalesce(pred_phys, F.lit(False))
             )
-            seg = _write_segment(kept, path, target_files)
+            seg = _write_segment(kept, path, None)
             # subset rows: old tag/stats/bloom remain sound superset
             # bounds (seq is restamped by _commit for the new name)
             new_segs[seg] = {
                 k: v for k, v in meta.get(s, {}).items() if k != "seq"
             }
         if partition_by is not None:
-            parts = [
-                _json_safe(r[partition_by])
-                for r in df.select(partition_by).distinct().collect()
-            ]
-            for p in parts:
-                seg = _write_segment(
-                    df.filter(F.col(partition_by).eqNullSafe(F.lit(p))),
-                    path,
-                    target_files,
-                )
-                new_segs[seg] = {"part": {partition_by: p}}
+            new_segs.update(_tagged(partition_by, _write_segments(
+                spark, path, df, [F.col(partition_by)]
+            )))
         elif df.limit(1).count():
-            seg = _write_segment(df, path, target_files)
-            new_segs[seg] = {}
+            new_segs[_write_segment(df, path, None)] = {}
         out = {
             "segments": untouched + list(new_segs),
             "meta": {s: sm for s, sm in new_segs.items() if sm},
@@ -2107,7 +2201,8 @@ def compact(
     lookups degrade to full-segment scans after maintenance unless the
     caller passes `stats_cols` / `bloom_cols`, which regenerate the
     skipping metadata for each consolidated segment at the usual
-    commit-time cost (one agg job per kind).
+    commit-time cost (`_write_segments`: one stats aggregation, and one
+    aggregation for all the bloom columns).
 
     `part_eq` scopes the compaction (OPTIMIZE ... WHERE parity): only
     partition-tagged segments matching every given key consolidate;
@@ -2159,16 +2254,13 @@ def compact(
             df = _read_with_tombstones(
                 spark, path, group, base, merge_schema=True
             )
-            seg = _write_segment(df, path, target_files, bloom_cols=bloom_cols)
-            seg_meta: dict = {"part": part} if part is not None else {}
-            if stats_cols:
-                seg_meta.update(_stats_meta(df, stats_cols))
-            if bloom_cols:
-                blooms = {c: _segment_bloom(df, c) for c in bloom_cols}
-                blooms = {c: b for c, b in blooms.items() if b is not None}
-                if blooms:
-                    seg_meta["bloom"] = blooms
-            new_segs[seg] = seg_meta
+            [(_, seg, m)] = _write_segments(
+                spark, path, df,
+                target_files=target_files,
+                stats_cols=stats_cols,
+                bloom_cols=bloom_cols,
+            )
+            new_segs[seg] = m if part is None else {"part": part, **m}
         return {
             "segments": list(new_segs) + untouched,
             "meta": {s: m for s, m in new_segs.items() if m},
@@ -2321,22 +2413,16 @@ def compact_small(
             df = _read_segments(
                 spark, path, segs, merge_schema=True, schema_ddl=ddl
             )
-            seg = _write_segment(df, path, target_files, bloom_cols=bloom_t)
-            sm: dict = {}
-            part = meta.get(segs[0], {}).get("part")
-            if part is not None:
-                sm["part"] = part
-            stats_cols = sorted(
-                {c for s in segs for c in meta.get(s, {}).get("stats", {})}
+            [(_, seg, sm)] = _write_segments(
+                spark, path, df,
+                target_files=target_files,
+                stats_cols=sorted(
+                    {c for s in segs for c in meta.get(s, {}).get("stats", {})}
+                ),
+                bloom_cols=bloom_t,
             )
-            if stats_cols:
-                sm.update(_stats_meta(df, stats_cols))
-            if bloom_t:
-                blooms = {c: _segment_bloom(df, c) for c in bloom_t}
-                blooms = {c: b for c, b in blooms.items() if b is not None}
-                if blooms:
-                    sm["bloom"] = blooms
-            new_segs[seg] = sm
+            part = meta.get(segs[0], {}).get("part")
+            new_segs[seg] = sm if part is None else {"part": part, **sm}
             consumed.update(segs)
         return {
             "segments": [s for s in m["segments"] if s not in consumed]
@@ -2372,10 +2458,10 @@ def cluster(
     subsequent scan touching a fraction of the key space.
 
     Execution: ONE pass computes z (pure bitwise/HOF Column exprs) and
-    range-partitions by z-run; the write lands all segments in a single
-    job via `partitionBy` on the z-run id (renamed into place as
-    ordinary segments), and one grouped aggregation over the persisted
-    shuffle output records per-segment stats. Merge-on-read tombstones
+    range-partitions by z-run into a persisted frame; a keyed
+    `_write_segments` pass on the z-run id then records per-segment
+    stats in one grouped aggregation and lands every segment, z-sorted
+    inside, in a single `partitionBy` write. Merge-on-read tombstones
     MATERIALIZE here (the rewrite read applies them and clears the
     ``deletes`` list), like compact. Concurrency contract is compact's
     (`_rebased`): interleaved appends survive; any row-removing commit
@@ -2428,74 +2514,26 @@ def cluster(
                 spark, path, base["segments"], base, merge_schema=True
             )
             z, n_z, zcuts = _zorder_exprs(df, list(cluster_cols), bits_per_col)
+            zrun = F.least(
+                F.lit(target_segments - 1),
+                F.floor(F.col("__z") * target_segments / F.lit(n_z)),
+            ).cast("int")
             prepared = (
                 df.withColumn("__z", z)
-                .withColumn(
-                    "__zrun",
-                    F.least(
-                        F.lit(target_segments - 1),
-                        F.floor(F.col("__z") * target_segments / F.lit(n_z)),
-                    ).cast("int"),
-                )
-                .repartitionByRange(target_segments, "__zrun", "__z")
-                .sortWithinPartitions("__zrun", "__z")
+                .repartitionByRange(target_segments, zrun, F.col("__z"))
                 .persist()
             )
-            tmp = f"{path}/{_DATA_DIR}/.cluster-{uuid.uuid4().hex[:12]}"
-            prepared.drop("__z").write.partitionBy("__zrun").mode(
-                "overwrite"
-            ).parquet(tmp)
-            stats = {
-                int(r["__zrun"]): {
-                    "stats": {
-                        c: [
-                            _json_safe(r[f"__mn_{c}"]),
-                            _json_safe(r[f"__mx_{c}"]),
-                        ]
-                        for c in all_stats
-                    },
-                    "rows": int(r["__rows"]),
-                    "nulls": {
-                        c: int(r[f"__nl_{c}"] or 0) for c in all_stats
-                    },
+            for (run,), seg, m in _write_segments(
+                spark, path, prepared, [zrun], sort=["__z"], stats_cols=all_stats
+            ):
+                new_segs[seg] = {
+                    **m, "cluster": {"cols": list(cluster_cols), "zrun": run}
                 }
-                for r in prepared.groupBy("__zrun")
-                .agg(
-                    F.count(F.lit(1)).alias("__rows"),
-                    *[F.min(c).alias(f"__mn_{c}") for c in all_stats],
-                    *[F.max(c).alias(f"__mx_{c}") for c in all_stats],
-                    *[
-                        F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}")
-                        for c in all_stats
-                    ],
-                )
-                .collect()
-            }
             prepared.unpersist()
-            fs, jtmp = _fs(spark, tmp)
-            runs = sorted(
-                int(st.getPath().getName().split("=", 1)[1])
-                for st in fs.listStatus(jtmp)
-                if st.isDirectory() and st.getPath().getName().startswith("__zrun=")
-            )
-            if not runs:
+            if not new_segs:
                 # 0-row snapshot (e.g. all rows tombstoned): keep one
                 # empty schema-preserving segment so reads stay valid
-                seg = _write_segment(df.limit(0), path, 1)
-                new_segs[seg] = {}
-            for run in runs:
-                seg = f"seg-{uuid.uuid4().hex[:12]}"
-                ok = fs.rename(
-                    _jpath(spark, f"{tmp}/__zrun={run}"),
-                    _jpath(spark, f"{path}/{_DATA_DIR}/{seg}"),
-                )
-                if not ok:
-                    raise RuntimeError(f"failed to place segment for z-run {run}")
-                new_segs[seg] = {
-                    **stats[run],
-                    "cluster": {"cols": list(cluster_cols), "zrun": run},
-                }
-            fs.delete(jtmp, True)
+                new_segs[_write_segment(df.limit(0), path, 1)] = {}
 
         # the layout spec rides the manifest so cluster_incremental can
         # reproduce the EXACT z mapping (same cuts -> same runs)
@@ -2619,26 +2657,15 @@ def cluster_incremental(spark: SparkSession, path: str) -> int:
                     spark, path, olds, merge_schema=True, schema_ddl=ddl
                 ).unionByName(part, allowMissingColumns=True)
             zc, _ = _zorder_from_cuts(cols, bits, spec["cuts"])
-            merged = part.withColumn("__z", zc).sortWithinPartitions("__z")
-            seg = _write_segment(merged.drop("__z"), path, 1)
-            st = merged.agg(
-                F.count(F.lit(1)).alias("__rows"),
-                *[F.min(c).alias(f"__mn_{c}") for c in all_stats],
-                *[F.max(c).alias(f"__mx_{c}") for c in all_stats],
-                *[
-                    F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}")
-                    for c in all_stats
-                ],
-            ).collect()[0]
-            new_segs[seg] = {
-                "stats": {
-                    c: [_json_safe(st[f"__mn_{c}"]), _json_safe(st[f"__mx_{c}"])]
-                    for c in all_stats
-                },
-                "rows": int(st["__rows"]),
-                "nulls": {c: int(st[f"__nl_{c}"] or 0) for c in all_stats},
-                "cluster": {"cols": cols, "zrun": run},
-            }
+            # one z-sorted file: sort AFTER the coalesce, which would
+            # otherwise just concatenate separately sorted partitions
+            merged = (
+                part.coalesce(1).withColumn("__z", zc).sortWithinPartitions("__z")
+            )
+            [(_, seg, m)] = _write_segments(
+                spark, path, merged.drop("__z"), stats_cols=all_stats
+            )
+            new_segs[seg] = {**m, "cluster": {"cols": cols, "zrun": run}}
         routed.unpersist()
         consumed = set(fresh) | replaced
         kept = [s for s in base["segments"] if s not in consumed]
@@ -2670,12 +2697,12 @@ def cluster_partitioned(
     lakes for exactly that reason).
 
     One pass over the table: the z interleave and the per-partition
-    z-run id are computed as Column exprs, the write lands every
-    (partition, z-run) directory in a single `partitionBy` job, and
-    one grouped aggregation records per-segment min/max stats on the
-    cluster columns. Partition values map through a driver-built dense
-    id (O(partitions) metadata), so directory naming never has to
-    round-trip typed values through Hive path encoding. Concurrency =
+    z-run id are computed as Column exprs and the table is
+    range-partitioned by (partition, z-run, z) into a persisted frame;
+    a `_write_segments` pass keyed on (partition, z-run) records
+    per-segment min/max stats in one grouped aggregation and lands
+    every segment in a single `partitionBy` write. Its dense segment id
+    keeps typed partition values out of directory names. Concurrency =
     `cluster`'s (`_rebased`): interleaved appends survive; row-removing
     commits force a re-run. Requires a
     fully `part_col`-tagged lake and no pending tombstones (same
@@ -2714,85 +2741,34 @@ def cluster_partitioned(
             merge_schema=True,
             schema_ddl=_widened_ddl(dict(base.get("props", {}))),
         )
-        parts = [
-            r[part_col]
-            for r in df.select(part_col).distinct().collect()
-        ]
-        pid_df = rows_frame(
-            spark,
-            [(i, p) for i, p in enumerate(parts)],
-            schema=df.select(
-                F.lit(0).alias("__pid"), F.col(part_col)
-            ).schema,
-        )
         z, n_z, _cuts_unused = _zorder_exprs(df, list(cluster_cols), bits_per_col)
+        zrun = F.least(
+            F.lit(n_per - 1), F.floor(F.col("__z") * n_per / F.lit(n_z))
+        ).cast("int")
+        n_parts = len({
+            json.dumps(meta0[s]["part"][part_col], default=str)
+            for s in base["segments"]
+        })
         prepared = (
-            df.join(
-                F.broadcast(pid_df),
-                on=df[part_col].eqNullSafe(pid_df[part_col]),
-            )
-            .drop(pid_df[part_col])
-            .withColumn("__z", z)
-            .withColumn(
-                "__zrun",
-                F.least(
-                    F.lit(n_per - 1),
-                    F.floor(F.col("__z") * n_per / F.lit(n_z)),
-                ).cast("int"),
-            )
+            df.withColumn("__z", z)
             .repartitionByRange(
-                max(1, len(parts)) * n_per, "__pid", "__zrun", "__z"
+                max(1, n_parts) * n_per, F.col(part_col), zrun, F.col("__z")
             )
-            .sortWithinPartitions("__pid", "__zrun", "__z")
             .persist()
         )
-        tmp = f"{path}/{_DATA_DIR}/.clusterp-{uuid.uuid4().hex[:12]}"
-        prepared.drop("__z").write.partitionBy("__pid", "__zrun").mode(
-            "overwrite"
-        ).parquet(tmp)
-        stats = {
-            (int(r["__pid"]), int(r["__zrun"])): {
-                "stats": {
-                    c: [_json_safe(r[f"__mn_{c}"]), _json_safe(r[f"__mx_{c}"])]
-                    for c in all_stats
-                },
-                "rows": int(r["__rows"]),
-                "nulls": {c: int(r[f"__nl_{c}"] or 0) for c in all_stats},
-            }
-            for r in prepared.groupBy("__pid", "__zrun")
-            .agg(
-                F.count(F.lit(1)).alias("__rows"),
-                *[F.min(c).alias(f"__mn_{c}") for c in all_stats],
-                *[F.max(c).alias(f"__mx_{c}") for c in all_stats],
-                *[
-                    F.sum(F.col(c).isNull().cast("long")).alias(f"__nl_{c}")
-                    for c in all_stats
-                ],
-            )
-            .collect()
-        }
-        prepared.unpersist()
-        fs, jtmp = _fs(spark, tmp)
         new_segs: dict[str, dict] = {}
-        for (pid, run), seg_stats in sorted(stats.items()):
-            seg = f"seg-{uuid.uuid4().hex[:12]}"
-            ok = fs.rename(
-                _jpath(spark, f"{tmp}/__pid={pid}/__zrun={run}"),
-                _jpath(spark, f"{path}/{_DATA_DIR}/{seg}"),
-            )
-            if not ok:
-                raise RuntimeError(
-                    f"failed to place segment for partition {pid} z-run {run}"
-                )
+        for (p, _), seg, m in _write_segments(
+            spark, path, prepared, [F.col(part_col), zrun],
+            sort=["__z"], stats_cols=all_stats,
+        ):
             new_segs[seg] = {
-                "part": {part_col: _json_safe(parts[pid])},
-                **seg_stats,
+                "part": {part_col: _json_safe(p)},
+                **m,
                 "cluster": {"cols": list(cluster_cols)},
             }
-        fs.delete(jtmp, True)
+        prepared.unpersist()
         if not new_segs:  # 0-row snapshot: keep reads valid
-            seg = _write_segment(df.limit(0), path, 1)
-            new_segs[seg] = {}
+            new_segs[_write_segment(df.limit(0), path, 1)] = {}
         return {
             "segments": list(new_segs),
             "meta": {s: m for s, m in new_segs.items() if m},
@@ -4116,7 +4092,6 @@ def commit_upsert_partitioned(
     keys: list[str],
     version_col: str,
     part_col: str,
-    target_files: int | None = None,
     check_stable_partitions: bool = True,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
@@ -4150,7 +4125,8 @@ def commit_upsert_partitioned(
     driver list (one distinct job over the CHANGES, which are
     batch-sized by premise); untouched segments transfer into the new
     manifest by name — zero data movement; touched partitions read ←
-    merge_upsert ← write one fresh tagged segment each. Like
+    merge_upsert ← one keyed `_write_segments` pass, which writes one
+    fresh tagged segment per partition in a fixed number of jobs. Like
     `commit_upsert`, the classification, merge and writes run in the
     commit's build on the parent it lands on: racing commits force a
     re-read + re-merge, so concurrent appends are never lost. This is
@@ -4275,24 +4251,14 @@ def commit_upsert_partitioned(
                 _project_logical(new_r, _p0),
                 logical_keys,
             )
-        new_segs: dict[str, dict] = {}
-        for p in parts:
-            part_df = merged.filter(  # eqNullSafe: NULL is a valid partition
-                F.col(part_col).eqNullSafe(F.lit(p))
-            )
-            seg = _write_segment(part_df, path, target_files, bloom_cols=bloom_cols)
-            seg_meta: dict = {"part": {part_col: p}}
-            # regenerate skipping metadata on the rewritten partitions
-            # (index-maintenance callers keep blooms/stats fresh so
-            # point lookups survive MERGE, like compact's stats_cols)
-            if stats_cols:
-                seg_meta.update(_stats_meta(part_df, stats_cols))
-            if bloom_cols:
-                blooms = {c: _segment_bloom(part_df, c) for c in bloom_cols}
-                blooms = {c: b for c, b in blooms.items() if b is not None}
-                if blooms:
-                    seg_meta["bloom"] = blooms
-            new_segs[seg] = seg_meta
+        # one keyed pass over the merged partitions; it regenerates the
+        # skipping metadata on them (index-maintenance callers keep
+        # blooms/stats fresh so point lookups survive MERGE, like
+        # compact's stats_cols)
+        new_segs = _tagged(part_col, _write_segments(
+            spark, path, merged, [F.col(part_col)],
+            stats_cols=stats_cols, bloom_cols=bloom_cols,
+        ))
         return {
             **out,
             "segments": untouched + list(new_segs),
@@ -4452,7 +4418,9 @@ def commit_upsert_pruned(
             # written files (cheap rescan; re-running the merge plan
             # would be worse)
             "meta": {
-                seg: _stats_meta(_read_segments(spark, path, [seg]), [stats_key])
+                seg: _stats_meta(
+                    _read_segments(spark, path, [seg]), [], [stats_key]
+                )[0][1]
             },
             "props": _schema_props(
                 spark, path, props, logical_changes.drop(version_col)
@@ -5071,7 +5039,8 @@ def commit_upsert_mor(
             if _read_segments(spark, path, [cand]).limit(1).count():
                 dv_seg = cand
         new_seg = _write_segment(folded, path, target_files)
-        meta = {new_seg: _stats_meta(_read_segments(spark, path, [new_seg]), [sk])}
+        [(_, st)] = _stats_meta(_read_segments(spark, path, [new_seg]), [], [sk])
+        meta = {new_seg: st}
         if dv_seg:
             meta[dv_seg] = {"dv": True, "dv_segs": list(touched)}
         out = {

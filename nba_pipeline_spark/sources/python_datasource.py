@@ -23,7 +23,6 @@ EXECUTORS — the scrape itself parallelizes).
 from __future__ import annotations
 
 import os
-from pathlib import Path
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -32,9 +31,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-# Repo root pinned at import time so executor-side read() can restore
-# sys.path when the worker process lacks the driver's path mutations.
-_ROOT = str(Path(__file__).resolve().parents[2])
+from ..session import register_data_source
 
 
 class HtmlTablesDataSource(DataSource):
@@ -120,10 +117,6 @@ class HtmlTablesReader(DataSourceReader):
         return [InputPartition(f) for f in files]
 
     def read(self, partition):
-        import sys
-
-        if _ROOT not in sys.path:  # executor process: restore the path
-            sys.path.insert(0, _ROOT)
         from nba_pipeline_spark.sources.html_parse import parse_tables
 
         fname = partition.value
@@ -179,10 +172,6 @@ class HtmlTablesStreamReader(DataSourceStreamReader):
         return [InputPartition(os.path.join(self._dir, f)) for f in batch]
 
     def read(self, partition):
-        import sys
-
-        if _ROOT not in sys.path:
-            sys.path.insert(0, _ROOT)
         from nba_pipeline_spark.sources.html_parse import parse_tables
 
         fname = partition.value
@@ -217,4 +206,4 @@ def register_html_source(spark) -> None:
     query. Pinned in tests/test_lake_datasource.py (the lake source
     documents the same engine behavior)."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(HtmlTablesDataSource)
+    register_data_source(spark, HtmlTablesDataSource)

@@ -677,3 +677,44 @@ def test_cdf_stream_vacuumed_window_raises(spark, tmp_path):
     # step fine even though v2's manifest is gone
     parts = rdr.partitions({"version": 2}, {"version": 3})
     assert {p.value[0] for p in parts} == {"rec"}
+
+
+def test_query_runs_from_any_cwd(tmp_path):
+    """A driver that found the package only through its own sys.path
+    (cwd elsewhere, no PYTHONPATH) still runs a Python DataSource
+    query: registration puts the package's parent dir on the workers'
+    PYTHONPATH, so they can import the pickled source class."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from conftest import SF_DIR
+
+    from nba_pipeline_spark.plans.relational_queries import _stage_dir
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    sf = tmp_path / "sf"  # a fresh source dir stages a fresh lake
+    sf.mkdir()
+    (sf / "orders.parquet").symlink_to(Path(SF_DIR) / "orders.parquet")
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from nba_pipeline_spark.session import get_spark\n"
+        "from nba_pipeline_spark.plans.queries import REGISTRY\n"
+        "spark = get_spark('any_cwd', cores=2)\n"
+        f"print('ROWS', REGISTRY['q_cdf_matview'].fn(spark, {str(sf)!r}).count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    try:
+        r = subprocess.run(
+            [sys.executable, "-c", script], cwd="/tmp", env=env,
+            capture_output=True, text=True, timeout=600,
+        )
+    finally:
+        shutil.rmtree(os.path.dirname(_stage_dir(str(sf), "orders", "x")),
+                      ignore_errors=True)
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "ROWS 3" in r.stdout

@@ -215,8 +215,8 @@ def test_append_rewrites_segment_when_rename_races_the_commit(spark, lake):
     orig = man._write_segment
     fired = {"n": 0}
 
-    def hooked(df, path, target_files=None, bloom_cols=None):
-        seg = orig(df, path, target_files, bloom_cols=bloom_cols)
+    def hooked(df, path, target_files=None, **kw):
+        seg = orig(df, path, target_files, **kw)
         if fired["n"] == 0:
             fired["n"] += 1
             # the race: rename lands AFTER the segment is written but

@@ -2345,3 +2345,146 @@ def test_rebuild_after_racing_append_matches_op_after_it(
         )
 
     assert state(raced) == state(serial)
+
+
+def _jobs(spark) -> int:
+    """Jobs the driver has submitted so far: the status-store count
+    perfbench/tracing.py reads."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() + 1 if jobs.size() else 0
+
+
+def _partitioned_op(op: str, spark, lake: str, n_parts: int):
+    """Stage `lake` for one partitioned write op and return the op."""
+    df = spark.range(96).select(
+        F.col("id").alias("vec_id"), (F.col("id") % n_parts).alias("cell")
+    )
+    meta = {"stats_cols": ["vec_id"], "bloom_cols": ["vec_id"]}
+    if op == "append":
+        return lambda: M.commit_append_partitioned(spark, lake, df, "cell", **meta)
+    if op == "replace":
+        return lambda: M.commit_replace_partitioned(spark, lake, df, "cell", **meta)
+    if op == "upsert":
+        M.commit_append_partitioned(spark, lake, df, "cell")
+        changes = df.withColumn("ver", F.lit(1))
+        return lambda: M.commit_upsert_partitioned(
+            spark, lake, changes, ["vec_id"], "ver", "cell", **meta
+        )
+    M.commit_append(spark, lake, df, stats_cols=["cell"])  # dropped whole
+    return lambda: M.commit_replace_where(
+        spark, lake, df, ranges={"cell": (0, n_parts)}, partition_by="cell"
+    )
+
+
+@pytest.mark.parametrize("op", ["append", "replace", "upsert", "replace_where"])
+def test_partitioned_write_jobs_do_not_grow_with_partitions(spark, tmp_path, op):
+    """Every multi-segment commit lands in one keyed `_write_segments`
+    pass: the same number of Spark jobs for 8 partitions as for 32,
+    and still one tagged segment per partition value."""
+    jobs = {}
+    for n in (8, 32):
+        lake = str(tmp_path / f"p{n}")
+        run = _partitioned_op(op, spark, lake, n)
+        before = _jobs(spark)
+        v = run()
+        jobs[n] = _jobs(spark) - before
+        m = M._read_manifest(spark, lake, v)
+        tags = sorted(m["meta"][s]["part"]["cell"] for s in m["segments"])
+        assert tags == list(range(n))
+    assert jobs[8] == jobs[32], jobs
+
+
+def test_keyed_segments_record_the_keyless_metadata(spark, tmp_path):
+    """A keyed `_write_segments` pass records for each segment exactly
+    what the key-less path (`commit_append(partition=...)`) records for
+    that group's rows: part, stats, rows, nulls, bloom and tok_bloom,
+    with bit-identical bloom bitmaps, over partition values a directory
+    name would mangle (NULL, non-ASCII, '/', '=', '%'). The id blooms
+    also equal bitmaps built from the driver-side XXH64 twin."""
+    import random
+
+    vals = [None, "a/b", "k=v", "50%", "日本"]
+    rng = random.Random(7)
+    rows = [
+        (
+            i,
+            vals[i % 5],
+            None if i % 11 == 0 else
+            f"The {rng.choice(['quick', 'LAZY', 'fox'])} {i % 13} {vals[i % 5]}",
+            None if i % 5 == 0 else rng.randrange(1000),
+        )
+        for i in range(400)
+    ]
+    df = spark.createDataFrame(rows, "id long, grp string, txt string, v long")
+    cols = {
+        "stats_cols": ["id", "v", "grp"],
+        "bloom_cols": ["id", "grp"],
+        "token_bloom_cols": ["txt"],
+    }
+    lake = str(tmp_path / "keyed")
+    keyed = M._write_segments(spark, lake, df, [F.col("grp")], **cols)
+    assert [k for k, _, _ in keyed] == [
+        (None,), ("50%",), ("a/b",), ("k=v",), ("日本",)
+    ]
+    for i, ((g,), seg, meta) in enumerate(keyed):
+        part = df.filter(F.col("grp").eqNullSafe(F.lit(g)))
+        one = str(tmp_path / f"one{i}")
+        M.commit_append(spark, one, part, partition={"grp": g}, **cols)
+        m = M._read_manifest(spark, one, 1)
+        want = {k: x for k, x in m["meta"][m["segments"][0]].items() if k != "seq"}
+        assert {"part": {"grp": g}, **meta} == want
+        got = M._read_segments(spark, lake, [seg])
+        assert got.columns == df.columns
+        assert sorted(got.collect()) == sorted(part.collect())
+        words: dict = {}
+        for r in part.select("id").collect():
+            for h in M._local_probe_hashes(r["id"]):
+                p = h % M._BLOOM_MAX_BITS
+                words[p // 64] = words.get(p // 64, 0) | (1 << (p % 64))
+        assert meta["bloom"]["id"] == M._fold_bloom(words)
+    assert not [d for d in os.listdir(f"{lake}/data") if d.startswith(".")]
+
+
+def test_cluster_segments_are_z_sorted_inside(spark, tmp_path):
+    """The one `partitionBy` write of `cluster`, and each run that
+    `cluster_incremental` rewrites, keep every segment's rows in z
+    order, file by file, and write no helper column."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    lake = str(tmp_path / "lake")
+    M.commit_append(spark, lake, _grid(spark, 24).repartition(3))
+    v = M.cluster(spark, lake, ["a", "b"], target_segments=4, bits_per_col=4)
+    spec = M._read_manifest(spark, lake, v)["props"]["zorder"]
+    k = len(spec["cols"])
+
+    def z(row):
+        out = 0
+        for j, (c, cuts) in enumerate(zip(spec["cols"], spec["cuts"])):
+            bucket = sum(1 for x in cuts if float(row[c]) >= x)
+            for i in range(spec["bits"]):
+                out |= ((bucket >> i) & 1) << (i * k + j)
+        return out
+
+    def check(version):
+        m = M._read_manifest(spark, lake, version)
+        n_files = 0
+        for s in m["segments"]:
+            for f in glob.glob(f"{lake}/data/{s}/*.parquet"):
+                t = pq.read_table(f)
+                assert t.column_names == ["a", "b", "payload"]
+                zs = [z(r) for r in t.to_pylist()]
+                assert zs == sorted(zs), (version, s, f)
+                n_files += 1
+        assert len(m["segments"]) == 4 and n_files >= 4
+
+    check(v)
+    fresh = [(a, b, -1) for a in range(0, 24, 3) for b in range(0, 24, 5)]
+    M.commit_append(
+        spark, lake,
+        spark.createDataFrame(fresh, "a int, b int, payload long").repartition(3),
+    )
+    check(M.cluster_incremental(spark, lake))

@@ -9,7 +9,10 @@ ops that commit through `_commit`'s build (recorded change segments on
 every path, DV delete, MoR merge, partitioned MERGE on a column-mapped
 lake, UNIQUE and CHECK enforcement), plus the Python datasource writer
 and both stream readers, which list, read and commit through the same
-manifest store. Each is compared with its DuckDB oracle
+manifest store, and the multi-segment writes of the one keyed segment
+writer (partitioned append, replaceWhere with partition_by, z-order
+within partitions, incremental z-order, the IVF codes lake). Each is
+compared with its DuckDB oracle
 exactly as tools/local_verify.py compares them (row count, columns,
 order-insensitive values, bit-exact floats). The full sweep stays in
 tools/local_verify.py and the soak set."""
@@ -51,6 +54,10 @@ QUERIES = [
     "q_manifest_sql_write",
     "q_manifest_stream_write",
     "q_manifest_cdf",
+    "q_manifest_replace_where",
+    "q_manifest_zorder_partitioned",
+    "q_manifest_zorder_incremental",
+    "q_ann_ivf_quantized",
 ]
 
 
