@@ -4,25 +4,35 @@ Airflow orchestration (reference: data_ingestion/dags/scrape_data_to_gcs.py
 catchup over seasons 1997-2023, max_active_runs=3; gcs_to_bq_dag.py —
 load tasks downstream of ingest).
 
-Deliberately NOT a scheduler: SURVEY §3 scopes the engine to plain
-callables, and the schedule semantics survive as Trigger.AvailableNow
-incremental loads (streaming/). What an engine user still needs from
-the DAG layer is the execution contract, which this provides:
+Not a scheduler: SURVEY §3 scopes the engine to plain callables, and
+the schedule semantics survive as Trigger.AvailableNow incremental
+loads (streaming/). What an engine user still needs from the DAG layer
+is the execution contract, which this provides:
 
-- dependency-ordered execution (topological, stable by declaration
-  order — Airflow's upstream>>downstream);
+- dependency-driven execution: a task starts as soon as every task it
+  depends on has succeeded, on its own thread, so independent chains
+  run side by side (the reference's parallel per-dataset tasks). A
+  task is mostly driver work (plan building, footer and manifest I/O,
+  commits); overlapping those leaves Spark's scheduler several jobs to
+  interleave on its task slots. Concurrency is the DAG's own width;
 - per-task retries (Airflow ``retries=`` on the reference operators);
-- downstream skip on failure (Airflow's upstream_failed state);
+- downstream skip on failure (Airflow's upstream_failed state); a
+  failed task's siblings still run;
 - backfill: run the same DAG once per parameter (the reference's
   ``catchup=True`` season loop, scrape_data_to_gcs.py:271-275), with
   per-run isolation so one bad season doesn't stop the sweep.
 
 Tasks share a mutable context dict (xcom analog): each task's return
-value lands in ``ctx[task.name]`` for downstream tasks to read.
+value lands in ``ctx[task.name]`` for downstream tasks to read; a task
+reads only its deps' entries, which are set before it starts. Worker
+threads inherit the caller's Spark local properties (job description,
+job group, scheduler pool), as JVM threads would.
 """
 
 from __future__ import annotations
 
+import queue
+import threading
 import time
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
@@ -99,38 +109,78 @@ class Dag:
 
     def run(self, params: Any = None, context: dict | None = None) -> DagRun:
         """Execute once. ``params`` lands in ctx['params']; each task's
-        return value in ctx[task.name]."""
+        return value in ctx[task.name]. A task starts, on its own
+        thread, as soon as all its deps have finished and none failed;
+        ``runs`` lists the tasks in ``order``."""
         ctx = dict(context or {})
         ctx["params"] = params
-        result = DagRun(params=params, context=ctx)
-        for t in self.order:
-            bad_up = [
-                d
-                for d in t.deps
-                if result.runs[d].state in ("failed", "upstream_failed")
-            ]
-            if bad_up:
-                result.runs[t.name] = TaskRun(t.name, "upstream_failed")
-                continue
-            run = TaskRun(t.name, "failed")
-            t0 = time.perf_counter()
-            for attempt in range(t.retries + 1):
-                run.attempts = attempt + 1
-                try:
-                    ctx[t.name] = t.fn(ctx)
-                    run.state, run.error = "success", None
-                    break
-                except Exception as e:  # noqa: BLE001 — retry/record by design
-                    run.error = f"{type(e).__name__}: {e}"
-                    if attempt < t.retries and t.retry_wait_s:
-                        time.sleep(t.retry_wait_s)
-            run.elapsed_s = round(time.perf_counter() - t0, 3)
-            result.runs[t.name] = run
-        return result
+        runs: dict[str, TaskRun] = {}
+        finished: queue.SimpleQueue = queue.SimpleQueue()
+
+        def work(t: Task) -> None:
+            try:
+                finished.put(_attempt(t, ctx))
+            except BaseException as e:  # an interrupt: re-raised by run
+                finished.put(e)
+
+        pending = list(self.order)
+        running = 0
+        while pending or running:
+            waiting = []
+            for t in pending:
+                if any(d not in runs for d in t.deps):
+                    waiting.append(t)
+                elif any(
+                    runs[d].state in ("failed", "upstream_failed") for d in t.deps
+                ):
+                    runs[t.name] = TaskRun(t.name, "upstream_failed")
+                else:
+                    _thread(lambda t=t: work(t)).start()
+                    running += 1
+            if len(waiting) == len(pending) and running:
+                done = finished.get()
+                if isinstance(done, BaseException):
+                    raise done
+                runs[done.name] = done
+                running -= 1
+            pending = waiting
+        return DagRun(
+            params=params,
+            runs={t.name: runs[t.name] for t in self.order},
+            context=ctx,
+        )
 
     def backfill(self, params_list: Iterable[Any], context: dict | None = None) -> list[DagRun]:
         """The reference's catchup loop (one DAG run per season,
-        scrape_data_to_gcs.py:271-275): sequential, isolated — a failed
-        run records its state and the sweep continues. Intra-run
-        parallelism belongs to Spark, not the orchestrator."""
+        scrape_data_to_gcs.py:271-275): one season at a time, isolated
+        — a failed run records its state and the sweep continues."""
         return [self.run(p, context=context) for p in params_list]
+
+
+def _attempt(t: Task, ctx: dict) -> TaskRun:
+    """Run `t` with its retries; its result lands in ``ctx[t.name]``."""
+    run = TaskRun(t.name, "failed")
+    t0 = time.perf_counter()
+    for attempt in range(t.retries + 1):
+        run.attempts = attempt + 1
+        try:
+            ctx[t.name] = t.fn(ctx)
+            run.state, run.error = "success", None
+            break
+        except Exception as e:  # noqa: BLE001 — retry/record by design
+            run.error = f"{type(e).__name__}: {e}"
+            if attempt < t.retries and t.retry_wait_s:
+                time.sleep(t.retry_wait_s)
+    run.elapsed_s = round(time.perf_counter() - t0, 3)
+    return run
+
+
+def _thread(target: Callable[[], None]) -> threading.Thread:
+    """A worker thread that starts with the caller's Spark local
+    properties while a SparkContext is active; a plain thread
+    otherwise (no Spark in the process, or its context stopped)."""
+    from pyspark import InheritableThread, SparkContext
+
+    if SparkContext._active_spark_context is None:
+        return threading.Thread(target=target, daemon=True)
+    return InheritableThread(target, daemon=True)

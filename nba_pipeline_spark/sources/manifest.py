@@ -79,6 +79,7 @@ tombstones, sequence-scoped so later appends are never retro-masked;
 from __future__ import annotations
 
 import json
+import shutil
 import time
 import uuid
 
@@ -1964,7 +1965,9 @@ def commit_replace_where(
       fully inside every range) -> dropped wholesale, zero reads;
     - anything else -> rewritten keeping only ``NOT scope`` rows. The
       surviving rows are a subset, so the old tag/stats/bloom metadata
-      stays a SOUND (superset) bound and carries forward unchanged.
+      stays a SOUND (superset) bound and carries forward unchanged. A
+      rewrite left with no rows (its footers' row counts say so) is
+      not listed and its dir is removed.
 
     At 100 TB with date-partitioned segments, re-stating one day is
     one dropped segment + one appended segment and a KB manifest swap —
@@ -2070,11 +2073,16 @@ def commit_replace_where(
                     spark, path, uniq, df, remainder, "the replaceWhere batch"
                 )
         new_segs: dict[str, dict] = {}
+        emptied: list[str] = []
         for s in rewrite:
             kept = _read_segments(spark, path, [s]).filter(
                 ~F.coalesce(pred_phys, F.lit(False))
             )
             seg = _write_segment(kept, path, None)
+            footers = _footers(_seg_path(path, seg))
+            if footers is not None and not sum(f.num_rows for f in footers):
+                emptied.append(seg)  # every row was in the scope
+                continue
             # subset rows: old tag/stats/bloom remain sound superset
             # bounds (seq is restamped by _commit for the new name)
             new_segs[seg] = {
@@ -2086,6 +2094,10 @@ def commit_replace_where(
             )))
         elif df.limit(1).count():
             new_segs[_write_segment(df, path, None)] = {}
+        if emptied and not (untouched or new_segs):
+            new_segs[emptied.pop()] = {}  # a 0-row version stays readable
+        for seg in emptied:
+            shutil.rmtree(_seg_path(path, seg))
         out = {
             "segments": untouched + list(new_segs),
             "meta": {s: sm for s, sm in new_segs.items() if sm},
@@ -2812,12 +2824,10 @@ def _read_segments(
     elif merge_schema:
         reader = reader.option("mergeSchema", "true")
     else:
-        # r12 (guide §6/§7.3): segments are immutable CoW files, so the
-        # schema spark would infer for a given file set is pure metadata
-        # — memoize it per (file identities, inference confs) and skip
-        # the footer re-read on repeat reads of the same version. Data
-        # is still scanned fresh at every execution; a new version is a
-        # new file set and misses the cache.
+        # segments are immutable CoW files, so the schema of a given
+        # file set is pure metadata: `_segments_schema` reads it from
+        # the footers (or infers it once) and memoizes it per file set.
+        # Data is still scanned fresh at every execution.
         sch = _segments_schema(spark, paths)
         if sch is not None:
             reader = reader.schema(sch)
@@ -2826,8 +2836,18 @@ def _read_segments(
 
 _SEG_SCHEMA_CACHE: dict[tuple, object] = {}
 
+# the footer key Spark's parquet writer stores the row schema under
+# (ParquetReadSupport.SPARK_METADATA_KEY) and its reader's
+# readSchemaFromFooter prefers to the parquet schema
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 def _segments_schema(spark: SparkSession, paths: list[str]):
+    """The schema ``spark.read.parquet(*paths)`` would infer for local
+    segment dirs, memoized per (dir identities, inference confs); None
+    for a non-local segment (plain inference then). A fresh file set is
+    first tried from its footers (`_footer_schema`, no Spark job); when
+    they do not settle it, Spark infers it (one job)."""
     import os
 
     ids = []
@@ -2846,9 +2866,84 @@ def _segments_schema(spark: SparkSession, paths: list[str]):
     )
     sch = _SEG_SCHEMA_CACHE.get(key)
     if sch is None:
-        sch = spark.read.parquet(*paths).schema
+        sch = _footer_schema(paths) or spark.read.parquet(*paths).schema
         _SEG_SCHEMA_CACHE[key] = sch
     return sch
+
+
+def _footers(d: str) -> list | None:
+    """The parquet footers (``pyarrow.parquet.FileMetaData``) of the
+    data files in local dir `d`: the names Spark's file index keeps
+    (not ``_``/``.``-prefixed, not ``._COPYING_``). None when `d` is
+    not a readable dir of plain data files: it holds a subdir or a
+    summary file (``_metadata``), or a footer does not parse."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = []
+    try:
+        with os.scandir(d) as entries:
+            for e in entries:
+                n = e.name
+                if n.startswith(("_metadata", "_common_metadata")):
+                    return None
+                if (
+                    n.startswith(".") or n.endswith("._COPYING_")
+                    or (n.startswith("_") and "=" not in n)
+                ):
+                    continue
+                if not e.is_file():
+                    return None
+                out.append(pq.read_metadata(e.path))
+    except (OSError, ValueError):
+        return None
+    return out
+
+
+def _footer_schema(paths: list[str]):
+    """The read schema of segment dirs `paths` from their footers alone:
+    the Spark row schema each data file stores under
+    `_SPARK_ROW_METADATA`, made nullable as Spark's file sources make
+    it. Spark infers a set's schema from one of its files, so the
+    footers settle it only when every data file carries the key and
+    all of them agree; None otherwise (a pyarrow-written segment has
+    no key, a mixed set has several schemas, an empty set has none)."""
+    from pyspark.sql.types import StructType
+
+    blobs = set()
+    for p in paths:
+        footers = _footers(p)
+        if footers is None:
+            return None
+        for md in footers:
+            blobs.add((md.metadata or {}).get(_SPARK_ROW_METADATA))
+    if not blobs or None in blobs:
+        return None
+    try:
+        schemas = [
+            _as_nullable(StructType.fromJson(json.loads(b))) for b in blobs
+        ]
+    except (ValueError, KeyError, TypeError):
+        return None
+    return schemas[0] if all(s == schemas[0] for s in schemas) else None
+
+
+def _as_nullable(t):
+    """Spark's ``DataType.asNullable``: every field, array element and
+    map value nullable, at every depth."""
+    from pyspark.sql import types as T
+
+    if isinstance(t, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
 
 
 def widen_column_type(

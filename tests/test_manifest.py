@@ -1234,6 +1234,34 @@ def test_replace_where_enforces_scope_on_input(spark, tmp_path):
         M.commit_replace_where(spark, lake, stray)
 
 
+def test_replace_where_drops_a_rewrite_left_empty(spark, tmp_path):
+    """A segment replaceWhere must rewrite (untagged, no stats proving
+    it all-matching) whose every row is in the scope leaves no 0-row
+    segment behind: the new version lists only the 8 tagged incoming
+    segments and the emptied rewrite's dir is removed. A scope that
+    empties the whole table still keeps one 0-row segment, so the
+    version reads."""
+    lake = str(tmp_path / "lake")
+    df = spark.range(96).select(
+        F.col("id").alias("vec_id"), (F.col("id") % 8).alias("cell")
+    )
+    M.commit_append(spark, lake, df)
+    old = M.resolve_segments(spark, lake)
+    v = M.commit_replace_where(
+        spark, lake, df, ranges={"cell": (0, 8)}, partition_by="cell"
+    )
+    m = M._read_manifest(spark, lake, v)
+    assert sorted(m["meta"][s]["part"]["cell"] for s in m["segments"]) == list(range(8))
+    assert set(os.listdir(f"{lake}/data")) == set(old) | set(m["segments"])
+    assert M.read_snapshot(spark, lake).count() == 96
+
+    gone = str(tmp_path / "gone")
+    M.commit_append(spark, gone, df)
+    v = M.commit_replace_where(spark, gone, df.limit(0), ranges={"cell": (0, 8)})
+    assert len(M._read_manifest(spark, gone, v)["segments"]) == 1
+    assert M.read_snapshot(spark, gone).count() == 0
+
+
 def test_replace_where_null_partition_and_tombstone_guard(spark, tmp_path):
     """eq={col: None} names the NULL partition; pending MoR tombstones
     refuse the op (compact first)."""
@@ -2488,3 +2516,139 @@ def test_cluster_segments_are_z_sorted_inside(spark, tmp_path):
         spark.createDataFrame(fresh, "a int, b int, payload long").repartition(3),
     )
     check(M.cluster_incremental(spark, lake))
+
+
+# ---------------------------------------------------------------------
+# Segment schemas from the footers: a fresh version's read schema comes
+# from the Spark row schema its writer stored in every data file's
+# footer, with no Spark job; anything else falls back to inference.
+# ---------------------------------------------------------------------
+
+_RICH = (
+    "id int, t string, ver int, ts timestamp, d decimal(12,3), "
+    "arr array<int>, m map<string,double>, st struct<a:int,b:string>"
+)
+
+
+def _rich(spark, lo, hi, ver=0):
+    import datetime as dt
+    from decimal import Decimal
+
+    return spark.createDataFrame(
+        [
+            (
+                i, f"d{i}", ver,
+                dt.datetime(2020, 1, 1) + dt.timedelta(hours=i),
+                Decimal(i) / 8, [i, None], {"k": float(i)},
+                (i % 3, None if i % 2 else f"s{i}"),
+            )
+            for i in range(lo, hi)
+        ],
+        _RICH,
+    )
+
+
+def _assert_footer_schemas_match_inference(spark, lake):
+    """Each current segment's `_segments_schema` equals Spark's own
+    inference, and so does the whole segment set's."""
+    paths = [M._seg_path(lake, s) for s in M.resolve_segments(spark, lake)]
+    for p in paths:
+        assert M._segments_schema(spark, [p]) == spark.read.parquet(p).schema, p
+    if M._footer_schema(paths) is not None:
+        assert M._segments_schema(spark, paths) == spark.read.parquet(*paths).schema
+
+
+def test_footer_schema_equals_inference_across_write_ops(spark, tmp_path):
+    from nba_pipeline_spark.sources.lake_datasource import register_lake_source
+
+    lake = str(tmp_path / "lake")
+    steps = [
+        lambda: M.commit_append(spark, lake, _rich(spark, 0, 6), stats_cols=["id"]),
+        lambda: M.commit_append_partitioned(
+            spark, lake, _rich(spark, 6, 12), "ver"
+        ),
+        lambda: M.commit_append(
+            spark, lake, _rich(spark, 12, 18), partition={"ver": 0},
+            stats_cols=["id"], bloom_cols=["t"],
+        ),
+        lambda: M.cluster(
+            spark, lake, ["id", "ver"], target_segments=2, allow_untag=True
+        ),
+        lambda: M.commit_upsert(spark, lake, _rich(spark, 3, 9, ver=1), ["id"], "ver"),
+        lambda: M.commit_upsert_mor(
+            spark, lake, _rich(spark, 15, 21, ver=2).withColumn("seq", F.lit(1)),
+            ["id"], "seq",
+        ),
+        lambda: M.commit_delete_dv(
+            spark, lake, spark.createDataFrame([(4,), (16,)], "id int"), ["id"]
+        ),
+    ]
+    for step in steps:
+        step()
+        _assert_footer_schemas_match_inference(spark, lake)
+    segs = [M._seg_path(lake, s) for s in M.resolve_segments(spark, lake)]
+    assert M._footer_schema(segs) is not None  # every op above is Spark-written
+
+    # type widening: narrow int files beside wide bigint files is a
+    # mixed set (the read itself passes the recorded schema instead)
+    wide = str(tmp_path / "wide")
+    M.commit_append(spark, wide, spark.range(4).selectExpr("cast(id as int) id"))
+    M.widen_column_type(spark, wide, "id", "bigint")
+    M.commit_append(spark, wide, spark.range(4, 8))
+    _assert_footer_schemas_match_inference(spark, wide)
+    segs = [M._seg_path(wide, s) for s in M.resolve_segments(spark, wide)]
+    assert M._footer_schema(segs) is None
+
+    # the Python datasource writer lands pyarrow-written segments: no
+    # Spark row schema in their footers, so inference decides
+    register_lake_source(spark)
+    ds = str(tmp_path / "ds")
+    spark.range(5).selectExpr("id", "cast(id as string) t").write.format(
+        "manifest_lake"
+    ).option("path", ds).mode("append").save()
+    _assert_footer_schemas_match_inference(spark, ds)
+    segs = [M._seg_path(ds, s) for s in M.resolve_segments(spark, ds)]
+    assert M._footer_schema(segs) is None
+
+
+def test_footer_schema_falls_back_for_mixed_and_file_less_sets(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    spark.range(3).selectExpr("id", "'x' s").write.parquet(a)
+    spark.range(3).selectExpr("id", "1.5 s").write.parquet(b)
+    assert M._footer_schema([a]) is not None
+    assert M._footer_schema([a, b]) is None  # two row schemas: mixed
+    # files that differ only in nullability read as one schema
+    c = str(tmp_path / "c")
+    spark.createDataFrame([(5, "z")], "id bigint, s string").write.parquet(c)
+    assert M._footer_schema([a, c]) == spark.read.parquet(a, c).schema
+    # a pyarrow file beside Spark files: one file lacks the key
+    pq.write_table(pa.table({"id": [7], "s": ["y"]}), f"{a}/part-pyarrow.parquet")
+    assert M._footer_schema([a]) is None
+    assert M._segments_schema(spark, [a]) == spark.read.parquet(a).schema
+    # no data files (only a marker) and a subdir are not settled by footers
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    assert M._footers(str(empty)) == []
+    assert M._footer_schema([str(empty)]) is None
+    nested = tmp_path / "nested"
+    spark.range(2).write.parquet(str(nested / "k=1"))
+    assert M._footers(str(nested)) is None
+
+
+def test_fresh_version_read_issues_no_job(spark, tmp_path):
+    """Building `read_snapshot` on a version just committed takes its
+    schema from the segment footers: no Spark job runs."""
+    lake = str(tmp_path / "lake")
+    M.commit_append(spark, lake, _rich(spark, 0, 5), stats_cols=["id"])
+    M.commit_append(spark, lake, _rich(spark, 5, 9))
+    before = _jobs(spark)
+    df = M.read_snapshot(spark, lake)
+    assert _jobs(spark) == before
+    assert df.schema == spark.read.parquet(
+        *[M._seg_path(lake, s) for s in M.resolve_segments(spark, lake)]
+    ).schema
+    assert df.count() == 9

@@ -14,11 +14,17 @@ writer (partitioned append, replaceWhere with partition_by, z-order
 within partitions, incremental z-order, the IVF codes lake). Each is
 compared with its DuckDB oracle
 exactly as tools/local_verify.py compares them (row count, columns,
-order-insensitive values, bit-exact floats). The full sweep stays in
-tools/local_verify.py and the soak set."""
+order-insensitive values, bit-exact floats). The queries read a fresh
+symlinked alias of SF_DIR, made once per module: the package keys its
+staged lakes on the sf_dir path, so every stage they read is built by
+the code under test, never reused from an earlier run. The oracles
+read SF_DIR itself. The full sweep stays in tools/local_verify.py and
+the soak set."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import sys
 from pathlib import Path
 
@@ -62,6 +68,18 @@ QUERIES = [
 
 
 @pytest.fixture(scope="module")
+def sf_alias(tmp_path_factory):
+    """A fresh name for SF_DIR; its staged lakes and stream sources are
+    removed at teardown."""
+    alias = str(tmp_path_factory.mktemp("oracle_smoke") / "sf")
+    os.symlink(SF_DIR, alias)
+    yield alias
+    tag = alias.strip("/").replace("/", "_")
+    for root in ("/tmp/nba_spark_lake", "/tmp/nba_stream_src"):
+        shutil.rmtree(f"{root}/{tag}", ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
 def duck():
     con = duck_con(SF_DIR)
     yield con
@@ -69,9 +87,9 @@ def duck():
 
 
 @pytest.mark.parametrize("name", QUERIES)
-def test_oracle_parity(spark, duck, name):
+def test_oracle_parity(spark, duck, sf_alias, name):
     spec = REGISTRY[name]
-    got = spec.fn(spark, SF_DIR).toPandas()
+    got = spec.fn(spark, sf_alias).toPandas()
     want = duck.execute(spec.oracle).fetchdf()
     assert len(got) > 0
     assert compare(name, got, want) == []

@@ -1,8 +1,13 @@
 """Job-runner contract (reference Airflow DAG semantics re-expressed:
-ordering, retries, upstream-failure skip, season backfill). Pure
-Python — no Spark session needed."""
+ordering, concurrent ready tasks, retries, upstream-failure skip,
+season backfill). The contract tests are pure Python; the CLI, submit
+and season-DAG tests use the session."""
 
 from __future__ import annotations
+
+import os
+import threading
+import time
 
 import pytest
 
@@ -87,6 +92,209 @@ def test_backfill_isolates_failed_seasons():
     runs = dag.backfill([1996, 1997, 1998, 1999])
     assert [r.ok for r in runs] == [True, True, False, True]
     assert runs[3].context["ingest"] == 19990
+
+
+def test_independent_tasks_run_concurrently():
+    """Two tasks with no path between them are in flight together: each
+    waits at a two-party barrier that only the other can release."""
+    meet = threading.Barrier(2, timeout=10)
+
+    def side(ctx):
+        return meet.wait()
+
+    dag = Dag(
+        "w",
+        [
+            Task("root", lambda ctx: 1),
+            Task("left", side, deps=("root",)),
+            Task("right", side, deps=("root",)),
+            Task("join", lambda ctx: ctx["left"] + ctx["right"], deps=("left", "right")),
+        ],
+    )
+    run = dag.run()
+    assert run.ok, run.runs
+    assert run.context["join"] == 1  # barrier indices 0 and 1
+
+
+def test_wide_dag_loses_no_result_under_fast_switching():
+    """Stress: more concurrent tasks than cores, thread switches forced
+    often; every task's result reaches ctx and the join sees all."""
+    import sys
+
+    width = 4 * (os.cpu_count() or 4)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        dag = Dag(
+            "wide",
+            [Task(f"t{i}", lambda ctx, i=i: [i] * 100) for i in range(width)]
+            + [
+                Task(
+                    "join",
+                    lambda ctx: sum(sum(ctx[f"t{i}"]) for i in range(width)),
+                    deps=tuple(f"t{i}" for i in range(width)),
+                )
+            ],
+        )
+        for _ in range(5):
+            run = dag.run()
+            assert run.ok
+            assert run.context["join"] == 100 * width * (width - 1) // 2
+    finally:
+        sys.setswitchinterval(old)
+
+
+def test_concurrent_failure_skips_only_its_descendants():
+    """A task that fails while its sibling is still running marks only
+    its own descendants upstream_failed; the sibling's chain finishes."""
+    meet = threading.Barrier(2, timeout=10)
+
+    def bad(ctx):
+        meet.wait()
+        raise ValueError("dead page")
+
+    def slow_ok(ctx):
+        meet.wait()
+        time.sleep(0.2)  # still running when `bad` has failed
+        return "ok"
+
+    dag = Dag(
+        "f",
+        [
+            Task("bad", bad),
+            Task("child_of_bad", lambda ctx: 1, deps=("bad",)),
+            Task("grandchild", lambda ctx: 1, deps=("child_of_bad",)),
+            Task("sibling", slow_ok),
+            Task("after_sibling", lambda ctx: ctx["sibling"] * 2, deps=("sibling",)),
+            Task("both", lambda ctx: 1, deps=("child_of_bad", "sibling")),
+        ],
+    )
+    run = dag.run()
+    states = {n: r.state for n, r in run.runs.items()}
+    assert states == {
+        "bad": "failed",
+        "child_of_bad": "upstream_failed",
+        "grandchild": "upstream_failed",
+        "sibling": "success",
+        "after_sibling": "success",
+        "both": "upstream_failed",
+    }
+    assert run.context["after_sibling"] == "okok"
+    assert run.runs["child_of_bad"].attempts == 0
+
+
+def test_runs_keep_declaration_order_when_tasks_finish_out_of_order():
+    """`runs` lists the tasks in `order` even when later tasks finish
+    first."""
+    done = []
+
+    def step(name, wait=0.0):
+        def fn(ctx):
+            time.sleep(wait)
+            done.append(name)
+            return name
+
+        return fn
+
+    dag = Dag(
+        "o",
+        [
+            Task("slow", step("slow", 0.2)),
+            Task("fast", step("fast")),
+            Task("after_fast", step("after_fast"), deps=("fast",)),
+            Task("after_slow", step("after_slow"), deps=("slow",)),
+        ],
+    )
+    run = dag.run()
+    assert run.ok
+    assert done.index("after_fast") < done.index("slow")
+    assert list(run.runs) == [t.name for t in dag.order]
+    assert [t.name for t in dag.order] == ["slow", "fast", "after_slow", "after_fast"]
+    assert run.runs["slow"].elapsed_s >= 0.2
+
+
+def test_retries_are_counted_beside_a_concurrent_sibling():
+    """Retries, their wait and the attempt count are per task, whatever
+    runs beside it."""
+    calls = {"flaky": 0}
+
+    def flaky(ctx):
+        calls["flaky"] += 1
+        if calls["flaky"] < 3:
+            raise RuntimeError("transient")
+        return "ok"
+
+    def hopeless(ctx):
+        raise RuntimeError("gone")
+
+    dag = Dag(
+        "r",
+        [
+            Task("flaky", flaky, retries=3, retry_wait_s=0.05),
+            Task("hopeless", hopeless, retries=2),
+            Task("plain", lambda ctx: 1),
+        ],
+    )
+    run = dag.run()
+    assert run.runs["flaky"].state == "success"
+    assert run.runs["flaky"].attempts == 3 and run.runs["flaky"].error is None
+    assert run.runs["flaky"].elapsed_s >= 0.1  # two waits
+    assert run.runs["hopeless"].state == "failed"
+    assert run.runs["hopeless"].attempts == 3
+    assert run.runs["hopeless"].error == "RuntimeError: gone"
+    assert run.runs["plain"].attempts == 1
+
+
+def test_season_dag_tables_equal_direct_builds(spark, tmp_path):
+    """The season DAG's three raw tables, written by concurrent tasks,
+    hold exactly the rows of the builders called directly."""
+    from pyspark.sql import functions as F
+
+    from nba_pipeline_spark.pipelines import fixtures as FX
+    from nba_pipeline_spark.pipelines.boxscores import build_boxscores
+    from nba_pipeline_spark.pipelines.games import build_games
+    from nba_pipeline_spark.pipelines.playbyplay import build_playbyplay
+    from nba_pipeline_spark.pipelines.submit import season_dag
+
+    out = str(tmp_path / "lake")
+    run = season_dag(spark, out).run(2018)
+    assert run.ok, run.runs
+    games = FX.games_raw(spark).filter(F.col("seasonStartYear") == 2018)
+    want = {
+        "games": build_games(games, spark).drop("seasonStartYear"),
+        "playbyplay": build_playbyplay(FX.playbyplay_raw(spark)),
+        "boxscores": build_boxscores(FX.boxscores_raw(spark)),
+    }
+    for name, w in want.items():
+        got = spark.read.parquet(f"{out}/raw/{name}/seasonStartYear=2018")
+        got = got.select(*w.columns)
+        assert got.count() == w.count() > 0, name
+        assert got.exceptAll(w).count() == 0 and w.exceptAll(got).count() == 0, name
+
+
+def test_dag_jobs_carry_the_callers_job_description(spark, tmp_path):
+    """Every Spark job the DAG's task threads submit shows the job
+    description the caller set on its own thread."""
+    from nba_pipeline_spark.pipelines.submit import season_dag
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId(): jobs.apply(i) for i in range(jobs.size())}
+
+    before = set(job_ids())
+    sc.setJobDescription("season dag 2018")
+    try:
+        assert season_dag(spark, str(tmp_path / "lake")).run(2018).ok
+    finally:
+        sc.setJobDescription(None)
+    new = {i: j for i, j in job_ids().items() if i not in before}
+    assert new
+    descs = {j.description().getOrElse(None) for j in new.values()}
+    assert descs == {"season dag 2018"}
 
 
 def test_cli_pipeline_and_query(spark, tmp_path):
