@@ -39,6 +39,7 @@ from ..functions.vectors import (
     norm_sql,
     sql_ident,
     to_double_array,
+    to_double_array_sql,
 )
 from .partitioning import fan_out
 
@@ -838,10 +839,11 @@ def embedding_neardup_pairs(
     self-join on low-cardinality block keys lands in as many tasks as
     there are DISTINCT BLOCKS (then AQE byte-coalesces tiny partitions
     to ONE task while each pair still costs a 64-term dot) — the
-    broadcast plan keeps probe parallelism at fan_out width with zero
-    shuffle. Leave False when the corpus doesn't fit an executor; the
-    blocked SMJ is the 100 TB path (parallelism = #blocks, which is
-    large at scale).
+    broadcast plan round-robins the probe side to core width and never
+    shuffles the pair join. It takes the caller's size verdict as given:
+    no second estimate is made here. Leave False when the corpus doesn't
+    fit an executor; the blocked SMJ is the 100 TB path (parallelism =
+    #blocks, which is large at scale).
 
     ``max_block`` is the hot-block cap (see ``semdedup_pairs``): blocks
     holding more than `max_block` rows — one degenerate IVF cell /
@@ -854,9 +856,11 @@ def embedding_neardup_pairs(
     """
     # Norms are per-ROW quantities: materialize them before the pair
     # join so each is computed n times, not n² times per pair.
-    docs = df.select(
-        F.col(id_col), *block_cols, to_double_array(sql_ident(vec_col)).alias("v")
-    ).withColumn("nrm", F.expr(norm_sql("v")))
+    ident = sql_ident(id_col)
+    keys = [sql_ident(c) for c in block_cols]
+    docs = df.selectExpr(
+        ident, *keys, f"{to_double_array_sql(sql_ident(vec_col))} AS v"
+    ).selectExpr("*", f"{norm_sql('v')} AS nrm")
     if max_block is not None:
         counts = docs.groupBy(*block_cols).agg(F.count(F.lit(1)).alias("__n"))
         hot = F.col("__n") > max_block
@@ -875,21 +879,20 @@ def embedding_neardup_pairs(
         )
     else:
         docs_gated = docs
-    probe = fan_out(docs_gated) if broadcast_build else docs_gated
-    a = probe.alias("a")
-    b = (F.broadcast(docs) if broadcast_build else docs).alias("b")
-    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    sim = F.try_divide(F.expr(dot_sql("`a`.`v`", "`b`.`v`")), F.col("a.nrm") * F.col("b.nrm"))
+    if broadcast_build:
+        # the caller's size estimate put the corpus under the broadcast
+        # bar, so the probe fans out to core width as in semdedup_pairs,
+        # without fan_out's second estimate of the same scan
+        probe = docs_gated.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        a, b = probe.alias("a"), F.broadcast(docs).alias("b")
+    else:
+        a, b = docs_gated.alias("a"), docs.alias("b")
+    cond = " AND ".join([f"a.{ident} < b.{ident}"] + [f"a.{k} = b.{k}" for k in keys])
+    sim = f"try_divide({dot_sql('a.v', 'b.v')}, a.nrm * b.nrm)"
     return (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.round(sim, 4).alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
+        a.join(b, F.expr(cond))
+        .selectExpr(f"a.{ident} AS id_a", f"b.{ident} AS id_b", f"round({sim}, 4) AS sim")
+        .where(f"sim >= {float(threshold)!r}D")
     )
 
 
@@ -1453,22 +1456,19 @@ def semantic_decontaminate(
     LOWEST eval id (the struct array is sorted by eid, array_position
     returns the first match) — engine-portable, mirrored by the
     oracle's (sim6 DESC, eid ASC) row_number."""
-    is_eval = F.col(eval_col).cast("boolean")
+    ident, vec = sql_ident(id_col), to_double_array_sql(sql_ident(vec_col))
+    is_eval = f"CAST({sql_ident(eval_col)} AS BOOLEAN)"
     # eval norms precomputed once in the broadcast structs; train norm
     # computed once per row — identical arithmetic (dot / (na * nb),
     # try_divide NULL-safety on zero norms) to functions.vectors.cosine_sql
     # with the two norm aggregates hoisted out of the per-eval loop
     ev = (
-        emb.filter(is_eval)
-        .select(to_double_array(sql_ident(vec_col)).alias("v"), F.col(id_col))
-        .select(
-            F.struct(
-                F.col(id_col).alias("eid"),
-                F.col("v").alias("evv"),
-                F.expr(norm_sql("v")).alias("en"),
-            ).alias("e")
+        emb.where(is_eval)
+        .selectExpr(f"{ident} AS eid", f"{vec} AS evv")
+        .selectExpr(
+            "sort_array(collect_list(named_struct("
+            f"'eid', eid, 'evv', evv, 'en', {norm_sql('evv')}))) AS evals"
         )
-        .agg(F.sort_array(F.collect_list("e")).alias("evals"))
     )
     # fan_out (r13): the scoring pass below is the whole cost of this
     # operator (|train| x |eval| dot products) and it is NARROW — an
@@ -1477,32 +1477,27 @@ def semantic_decontaminate(
     # exist (measured at 10x sf0.1: 131 s at 32 cores == 134 s at 8).
     # Round-robin fan-out is guarded: a real at-scale scan already has
     # more partitions than cores and is untouched.
-    tr = fan_out(emb.filter(~is_eval)).select(
-        F.col(id_col), to_double_array(sql_ident(vec_col)).alias("__tv")
-    ).withColumn("__tn", F.expr(norm_sql("__tv")))
+    tr = (
+        fan_out(emb.where(f"NOT {is_eval}"))
+        .selectExpr(ident, f"{vec} AS __tv")
+        .selectExpr("*", f"{norm_sql('__tv')} AS __tn")
+    )
     sims = (
         "transform(evals, __e -> round(try_divide("
         f"{dot_sql('__tv', '__e.evv')}, __tn * __e.en), 6))"
     )
-    scored = (
-        tr.crossJoin(F.broadcast(ev))
-        .select(F.col(id_col), F.col("evals"), F.expr(sims).alias("sims"))
-        .withColumn("sim6", F.array_max("sims"))
-    )
     return (
-        scored.filter(F.col("sim6") >= F.lit(threshold))
-        .select(
-            F.col(id_col).alias("train_id"),
-            F.element_at(
-                F.col("evals"),
-                F.array_position(F.col("sims"), F.col("sim6")).cast("int"),
-            )["eid"].alias("eval_id"),
-            # scaled-integer score: round(x, 4) on doubles splits
-            # engines at .xxx5 grid points (SCALE.md "Numeric
-            # determinism"); floor(x*1e4 + 0.5) is pure IEEE ops both
-            # engines execute identically
-            F.floor(F.col("sim6") * 10000 + F.lit(0.5))
-            .cast("bigint")
-            .alias("sim_e4"),
+        tr.crossJoin(F.broadcast(ev))
+        .selectExpr(ident, "evals", f"{sims} AS sims")
+        .selectExpr("*", "array_max(sims) AS sim6")
+        .where(f"sim6 >= {float(threshold)!r}D")
+        # scaled-integer score: round(x, 4) on doubles splits engines at
+        # .xxx5 grid points (SCALE.md "Numeric determinism");
+        # floor(x*1e4 + 0.5) is pure IEEE ops both engines execute
+        # identically
+        .selectExpr(
+            f"{ident} AS train_id",
+            "element_at(evals, CAST(array_position(sims, sim6) AS INT)).eid AS eval_id",
+            "CAST(floor(sim6 * 10000 + 0.5D) AS BIGINT) AS sim_e4",
         )
     )

@@ -19,7 +19,7 @@ Scale notes (100 TB):
   converges in O(log^2 n) rounds with the same join+min primitive.
 
 Small graphs: every operator here first pins its loop input (the pair
-list, or pagerank's aggregated edge list) and offers it to
+list, or pagerank's aggregated edges and out-weights) and offers it to
 `partitioning.collect_if_small`. At or under `local_rows_max` rows
 (default 100k) the rows come back in one job and the loop runs on the
 driver (`_cc_local`, `_star_local`, `_pagerank_local`), replaying the
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from ..functions.vectors import sql_ident
 from .partitioning import collect_if_small, rows_frame
 
 
@@ -124,13 +125,14 @@ def connected_components(
         # 12.3 s -> 5.6 s edge prep at sf0.1)
         .localCheckpoint(eager=True)
     )
-    # lazy from here down (r12, guide §1.3): each checkpoint still cuts
-    # the SQL plan immediately, but materializes inside the next action
-    # that computes it (the convergence probe's join reads EVERY
-    # partition — its exchange is a full computation) instead of a
-    # separately scheduled job per checkpoint. Only the raw pin above
-    # stays eager: its upstream (e.g. minhash banding) is expensive and
-    # two lazy consumers racing in one job could compute it twice.
+    # lazy from here down (r12, guide §1.3): each checkpoint cuts the SQL
+    # plan at the call. Under adaptive execution the call also runs every
+    # shuffle stage of its plan; only the final stage is left to the next
+    # action that reads it (the convergence probe's join reads EVERY
+    # partition), so no separately scheduled job per checkpoint. Only the
+    # raw pin above stays eager: its upstream (e.g. minhash banding) is
+    # expensive and two lazy consumers racing in one job could compute
+    # it twice.
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # driver-local tier (partitioning.collect_if_small): a provably tiny
     # pair list is collected in one job and propagated on the driver
@@ -255,8 +257,9 @@ def connected_components_star(
             )
     else:
         # canonical big -> small orientation (small-star form). Lazy
-        # checkpoint: the prev_n count below computes every partition and
-        # materializes it in the same job (one job instead of two — r12).
+        # checkpoint: under adaptive execution the call runs the distinct's
+        # shuffle stage, and the prev_n count below runs the final stage
+        # and materializes it in the same job (r12).
         e = (
             raw.filter(F.col("u") != F.col("v"))
             .select(
@@ -299,8 +302,9 @@ def connected_components_star(
         prev_n = e.count()
         for _ in range(max_iter):
             rounds += 1
-            # lazy checkpoint: the next action computes all partitions,
-            # so materialization and the convergence probe are ONE job
+            # lazy checkpoint: under adaptive execution the call runs the
+            # round's shuffle stages; the final stage rides the
+            # convergence probe's action, so it and the probe are ONE job
             # instead of an eager-checkpoint job + a probe job (r12,
             # guide §1.3)
             new = _small(_large(e)).localCheckpoint(eager=False)
@@ -384,24 +388,25 @@ def _round12(x: float) -> float:
 
 
 def _pagerank_local(rows: list, iterations: int, damping: float) -> list:
-    """`pagerank`'s power iteration on the driver over collected
-    (src, dst, w, out_w) rows, replaying the Spark loop's arithmetic
+    """`pagerank`'s power iteration on the driver over its collected
+    (src, dst, w, per_src) rows, replaying the Spark loop's arithmetic
     step for step: same double expressions in the same order, the same
     12-dp rounding points, contributions summed as exact decimals and
-    cast to double where the Spark plan casts. `out_w` is Spark's own
-    aggregate, so the one order-dependent float sum is not redone here.
-    Returns (node, rank) rows."""
-    nodes = dict.fromkeys(x for r in rows for x in (r[0], r[1]))
+    cast to double where the Spark plan casts. A per_src row's w is
+    Spark's own out-weight sum, so the one order-dependent float sum is
+    not redone here. Returns (node, rank) rows."""
+    edge_rows = [r for r in rows if not r[3]]
+    nodes = dict.fromkeys(x for r in edge_rows for x in (r[0], r[1]))
     n = len(nodes)
     if n == 0:
         return []
     nf = float(n)
     out_w = dict.fromkeys(nodes, 0.0)
     for r in rows:
-        if r[3] is not None:
-            out_w[r[0]] = r[3]
+        if r[3] and r[2] is not None:
+            out_w[r[0]] = r[2]
     # a NULL weight contributes NULL, which SUM skips
-    edges = [(r[0], r[1], r[2]) for r in rows if r[2] is not None]
+    edges = [r[:3] for r in edge_rows if r[2] is not None]
     dangling = [v for v in nodes if out_w[v] == 0]
     base = _round12((1.0 - damping) / nf)
     rank = dict.fromkeys(nodes, _round12(1.0 / nf))
@@ -450,54 +455,56 @@ def pagerank(
     crossed back in (broadcast). Node count N is a driver scalar — the
     only collect, O(1) rows.
 
-    An edge list of at most `local_rows_max` rows is instead collected
-    once, together with Spark's out-weight aggregate, and iterated on
-    the driver by `_pagerank_local` in the same arithmetic — the
-    determinism contract above is what makes the two bit-identical.
+    When the aggregated edges and their sources' out-weight rows number
+    at most `local_rows_max` in all, they are instead collected once and
+    iterated on the driver by `_pagerank_local` in the same arithmetic —
+    the determinism contract above is what makes the two bit-identical.
     """
-    w = F.col(weight).cast("double") if weight else F.lit(1.0)
-    # lazy checkpoints throughout (r12, guide §1.3): every localCheckpoint
-    # here still cuts the SQL plan immediately, but materialization rides
-    # the NEXT action that touches it (the size probe for e, nodes.count
-    # for nodes; the first iteration's dangling-broadcast build for
-    # deg/ranks) instead of paying a separately scheduled job per
-    # checkpoint
+    w = f"CAST({sql_ident(weight)} AS DOUBLE)" if weight else "1.0D"
+    # One grouping-sets aggregation, one shuffle: each (src, dst) row
+    # holds the edge's summed weight, and each per_src row (dst NULL)
+    # holds that source's out-weight. The local tier's size probe
+    # collects this pinned frame and the wide path's deg reads the same
+    # per_src rows, so both paths iterate over one Spark-computed
+    # out-weight. Under adaptive execution even this lazy
+    # localCheckpoint runs every shuffle stage of its plan at the call;
+    # only the final stage rides the next action (the probe's collect,
+    # or nodes.count on the wide path).
     e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
+        edges.selectExpr(
+            f"{sql_ident(src)} AS src", f"{sql_ident(dst)} AS dst", f"{w} AS w"
+        )
+        .where("src IS NOT NULL AND dst IS NOT NULL")
+        .groupingSets([["src", "dst"], ["src"]], "src", "dst")
+        .agg(F.expr("sum(w) AS w"), F.expr("grouping(dst) = 1 AS per_src"))
         .localCheckpoint(eager=False)
     )
-    out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    arcs = e.where("NOT per_src")
+    nodes = arcs.selectExpr("explode(array(src, dst)) AS node")
     # driver-local tier (partitioning.collect_if_small): a provably tiny
-    # edge list is collected in one job, WITH Spark's own out-weight
-    # aggregate, and iterated on the driver in the same arithmetic
-    local = collect_if_small(e.join(out_w, "src"))
+    # pinned frame is collected in one job and iterated on the driver in
+    # the same arithmetic
+    local = collect_if_small(e)
     if local is not None:
         return rows_frame(
             e.sparkSession,
             _pagerank_local(local, iterations, damping),
             StructType([nodes.schema["node"], StructField("rank", DoubleType())]),
         )
-    nodes = nodes.localCheckpoint(eager=False)
+    nodes = nodes.distinct().localCheckpoint(eager=False)
     n = nodes.count()
     if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    deg = nodes.join(out_w, nodes["node"] == out_w["src"], "left").select(
-        "node", F.coalesce("out_w", F.lit(0.0)).alias("out_w")
-    ).localCheckpoint(eager=False)
+        return nodes.selectExpr("node", "0.0D AS rank")
+    deg = (
+        nodes.join(e.where("per_src").selectExpr("src AS node", "w AS out_w"), "node", "left")
+        .selectExpr("node", "coalesce(out_w, 0.0D) AS out_w")
+        .localCheckpoint(eager=False)
+    )
 
     # base and the uniform init are rounded by the ENGINE's ROUND (not
     # Python's banker's rounding) so the oracle's SQL ROUND replays them
-    nf = F.lit(float(n))
-    base = F.round((F.lit(1.0) - F.lit(damping)) / nf, 12)
-    ranks = deg.select("node", "out_w", F.round(F.lit(1.0) / nf, 12).alias("rank"))
+    nf, d = f"{float(n)!r}D", f"{float(damping)!r}D"
+    ranks = deg.selectExpr("node", "out_w", f"round(1.0D / {nf}, 12) AS rank")
     # dangling-mass structure probe (r12, guide §2.4): whether any
     # node has zero out-weight is a property of the GRAPH, not of
     # the ranks — when none does, every iteration's dangling
@@ -506,49 +513,34 @@ def pagerank(
     # `iterations` broadcast-aggregate builds over the rank table.
     # Graphs with dangling nodes keep the per-iteration aggregate
     # (its input changes every step).
-    has_dangling = deg.filter(F.col("out_w") == 0).limit(1).count() > 0
+    has_dangling = deg.where("out_w = 0").limit(1).count() > 0
     for _ in range(iterations):
         contrib = (
-            e.join(ranks, e["src"] == ranks["node"])
-            .select(
-                F.col("dst"),
-                F.round(F.col("rank") * F.col("w") / F.col("out_w"), 12)
-                .cast("decimal(38,12)")
-                .alias("c"),
-            )
+            arcs.join(ranks, F.expr("src = node"))
+            .selectExpr("dst", "CAST(round(rank * w / out_w, 12) AS DECIMAL(38,12)) AS c")
             .groupBy("dst")
-            .agg(F.sum("c").alias("cs"))
+            .agg(F.expr("sum(c) AS cs"))
         )
-        nxt = deg.join(contrib, deg["node"] == contrib["dst"], "left")
+        nxt = deg.join(contrib, F.expr("node = dst"), "left")
+        dm = "0.0D"
         if has_dangling:
-            dangling = ranks.filter(F.col("out_w") == 0).agg(
-                F.coalesce(
-                    F.sum(F.round(F.col("rank") / F.lit(float(n)), 12).cast("decimal(38,12)")),
-                    F.lit(0).cast("decimal(38,12)"),
-                ).alias("dm")
+            dangling = ranks.where("out_w = 0").selectExpr(
+                f"coalesce(sum(CAST(round(rank / {nf}, 12) AS DECIMAL(38,12))),"
+                " CAST(0 AS DECIMAL(38,12))) AS dm"
             )
-            nxt = nxt.crossJoin(F.broadcast(dangling))
-            dm = F.col("dm").cast("double")
-        else:
-            dm = F.lit(0.0)
+            nxt, dm = nxt.crossJoin(F.broadcast(dangling)), "CAST(dm AS DOUBLE)"
         ranks = (
-            nxt.select(
+            nxt.selectExpr(
                 "node",
                 "out_w",
-                F.round(
-                    base
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("cs").cast("double"), F.lit(0.0))
-                        + dm
-                    ),
-                    12,
-                ).alias("rank"),
+                f"round(round((1.0D - {d}) / {nf}, 12)"
+                f" + {d} * (coalesce(CAST(cs AS DOUBLE), 0.0D) + {dm}), 12) AS rank",
             )
-            # lazy: iteration k's ranks materialize inside iteration
-            # k+1's dangling-broadcast build (or the caller's action for
-            # the last one) — one job per iteration instead of an eager
-            # checkpoint job PLUS the broadcast job (r12, guide §1.3)
+            # lazy: under adaptive execution the call runs this
+            # iteration's shuffle and broadcast stages; only the final
+            # stage rides iteration k+1's dangling-broadcast build (or
+            # the caller's action for the last one), not a job of its own
+            # (r12, guide §1.3)
             .localCheckpoint(eager=False)
         )
     return ranks.select("node", "rank")

@@ -383,16 +383,16 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     power iterations replay bit-identically in the oracle."""
     from ..operators.graph import pagerank
 
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc_nulls_first(), F.col("event_id").asc_nulls_first()
+    # one unit-weight edge per transition: pagerank drops NULL endpoints
+    # and sums duplicate (src, dst) pairs, so an edge's weight is its
+    # transition count (exact in double)
+    transitions = _t(spark, sf_dir, "events").selectExpr(
+        "lag(event_type) OVER (PARTITION BY user_id"
+        " ORDER BY ts ASC NULLS FIRST, event_id ASC NULLS FIRST) AS src",
+        "event_type AS dst",
     )
-    tr = ev.select(
-        F.lag("event_type").over(w).alias("src"), F.col("event_type").alias("dst")
-    ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    edges = tr.groupBy("src", "dst").agg(F.count("*").cast("double").alias("w"))
-    pr = pagerank(edges, iterations=PR_ITERS, damping=PR_DAMPING, weight="w")
-    return pr.select("node", F.round("rank", 6).alias("rank"))
+    pr = pagerank(transitions, iterations=PR_ITERS, damping=PR_DAMPING)
+    return pr.selectExpr("node", "round(rank, 6) AS rank")
 
 
 def _pagerank_oracle() -> str:

@@ -491,11 +491,12 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # broadcast_build only when the whole corpus fits an executor (same
     # 64 MB bar the session sets for dim-table auto-broadcast): the
-    # broadcast plan keeps probe parallelism at fan_out width with zero
-    # shuffle and wins at bench scale, but broadcasting a 100 TB corpus
-    # OOMs every executor — past the bar this picks the blocked
-    # sort-merge self-join, whose parallelism is #blocks (large at
-    # scale; at TB+ feed IVF cells / LSH buckets as block_cols).
+    # broadcast plan fans the probe out to core width and wins at bench
+    # scale, but broadcasting a 100 TB corpus OOMs every executor — past
+    # the bar this picks the blocked sort-merge self-join, whose
+    # parallelism is #blocks (large at scale; at TB+ feed IVF cells /
+    # LSH buckets as block_cols). This is the query's one plan-size
+    # estimate: the operator's probe fan-out takes the same verdict.
     small = plan_size_bytes(emb) <= (64 << 20)
     return OD.embedding_neardup_pairs(
         emb, "embedding", "vec_id", block_cols=["label"], threshold=0.3,
@@ -762,7 +763,7 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is never shuffled."""
     emb = load_table(spark, sf_dir, "embeddings")
     return OD.semantic_decontaminate(
-        emb.withColumn("is_eval", F.col("vec_id") % SEM_EVAL_MOD == 0),
+        emb.selectExpr("*", f"vec_id % {SEM_EVAL_MOD} = 0 AS is_eval"),
         "vec_id", "embedding", "is_eval", SEM_THRESH,
     )
 

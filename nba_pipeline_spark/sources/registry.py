@@ -118,9 +118,11 @@ TABLES = tuple(SCHEMAS)
 # METADATA — memoizing it per (file identity, inference-relevant confs)
 # and handing it back to the reader skips re-inference while the data is
 # still scanned fresh from parquet at every execution (no rows, results
-# or intermediates are cached; the driver regenerating the testdata
-# changes mtime/size and invalidates the entry; conf keys cover the
-# session settings that change what inference returns).
+# or intermediates are cached; conf keys cover the session settings that
+# change what inference returns). The identity is the stat of what the
+# path resolves to, not the path string: a symlinked alias of an sf dir
+# shares its target's entry, and regenerating the testdata changes
+# inode, mtime or size and so misses.
 _READ_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
 
 
@@ -132,7 +134,8 @@ def _inferred_schema(spark: SparkSession, path: str) -> T.StructType | None:
     except OSError:
         return None  # non-local path: fall back to plain inference
     key = (
-        path,
+        st.st_dev,
+        st.st_ino,
         st.st_mtime_ns,
         st.st_size,
         spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),

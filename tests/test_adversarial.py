@@ -47,6 +47,10 @@ QUERIES = [
     "q_pii_redact",
     "q_repetition_filter",
     "q_dedup_cluster",
+    # identical vectors (argmax ties at cosine 1.0) and junk events
+    "q_pagerank",
+    "q_dedup_embedding",
+    "q_decontaminate_semantic",
 ]
 
 

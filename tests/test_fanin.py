@@ -123,9 +123,11 @@ def _pagerank_rows(edges, **kw):
     return sorted(map(tuple, graph.pagerank(edges, **kw).collect()))
 
 
-@pytest.mark.parametrize("weights", ["integral", "dyadic", "unweighted"])
+@pytest.mark.parametrize("weights", ["integral", "dyadic", "fractional", "unweighted"])
 def test_pagerank_identical_on_random_graphs(spark, weights):
-    rng = random.Random({"integral": 1, "dyadic": 2, "unweighted": 3}[weights])
+    rng = random.Random(
+        {"integral": 1, "dyadic": 2, "fractional": 4, "unweighted": 3}[weights]
+    )
     n = 12
     edges = [(f"n{rng.randrange(n)}", f"n{rng.randrange(n)}") for _ in range(40)]
     if weights != "unweighted":
@@ -135,11 +137,14 @@ def test_pagerank_identical_on_random_graphs(spark, weights):
     w = {
         "integral": lambda: float(rng.randint(1, 9)),
         "dyadic": lambda: rng.randint(1, 64) / 16.0,
+        # non-dyadic: a per-source sum of these depends on the order it
+        # is added in, so both paths must read Spark's one out-weight sum
+        "fractional": lambda: rng.random() * 10 ** rng.randint(-3, 3),
         "unweighted": lambda: 1.0,
     }[weights]
     df = spark.createDataFrame(
         [(s, d, w()) for s, d in edges], "src string, dst string, w double"
-    )
+    ).repartition(4)
     kw = {"iterations": 4, "weight": None if weights == "unweighted" else "w"}
     local, wide = _local_and_wide(spark, lambda: _pagerank_rows(df, **kw))
     assert local == wide
@@ -214,3 +219,20 @@ def test_bpe_train_identical_on_random_corpus(spark):
     local, wide = _local_and_wide(spark, run)
     assert local == wide
     assert len(local[0]) == 12
+
+
+def test_pagerank_builder_job_budget(spark):
+    # q_pagerank's builder pins one aggregate that holds both the edge
+    # weights and each source's out-weight, and the local tier collects
+    # that frame: the pin's two shuffle stages (the transition window's
+    # and the aggregate's) plus one collect. A probe that joined a
+    # separate out-weight aggregate back in cost two more jobs.
+    from conftest import SF_DIR
+    from nba_pipeline_spark.plans.queries import REGISTRY
+    from nba_pipeline_spark.sources import load_table
+
+    load_table(spark, SF_DIR, "events")  # the schema memo's one inference job
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    REGISTRY["q_pagerank"].fn(spark, SF_DIR)
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) <= 3

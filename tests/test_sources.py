@@ -308,3 +308,38 @@ def test_load_table_schema_cache_matches_inference(spark, tmp_path):
     shutil.copy(str(d / "tmp_out" / part), p)
     s2 = R._inferred_schema(spark, p)
     assert [f.name for f in s2.fields] == ["r_regionkey", "r_name", "extra"]
+
+
+def test_schema_memo_keys_on_the_file_not_its_name(spark, tmp_path):
+    """A second name for the same file (a symlinked sf alias, as the
+    benchmark gives every cold pass) reuses the memoized schema with no
+    inference job; a file rewritten under the same name does not."""
+    import os
+    import shutil
+
+    from nba_pipeline_spark.sources import registry as R
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    p = d / "region.parquet"
+    shutil.copy(f"{SF_DIR}/region.parquet", p)
+    alias = tmp_path / "alias"
+    os.symlink(d, alias)
+    tracker = spark.sparkContext.statusTracker()
+
+    s1 = R._inferred_schema(spark, str(p))
+    entries = len(R._READ_SCHEMA_CACHE)
+    jobs = set(tracker.getJobIdsForGroup(None))
+    assert R._inferred_schema(spark, str(alias / "region.parquet")) == s1
+    assert len(R._READ_SCHEMA_CACHE) == entries
+    assert set(tracker.getJobIdsForGroup(None)) == jobs
+
+    # a rewrite lands a new file under the old name: a miss, re-inferred
+    out = tmp_path / "out"
+    spark.createDataFrame([(1, "x", 2.0)], "r_regionkey int, r_name string, extra double") \
+        .coalesce(1).write.parquet(str(out))
+    part = next(f for f in os.listdir(out) if f.endswith(".parquet"))
+    os.replace(out / part, p)
+    s2 = R._inferred_schema(spark, str(alias / "region.parquet"))
+    assert s2.names == ["r_regionkey", "r_name", "extra"]
+    assert len(R._READ_SCHEMA_CACHE) == entries + 1
