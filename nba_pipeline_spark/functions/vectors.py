@@ -28,6 +28,16 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def sql_str(s: str) -> str:
+    """A Python string as Spark SQL text that evaluates to `s` in both
+    parser modes (`spark.sql.parser.escapedStringLiterals` on or off):
+    a plain quoted literal when `s` holds no backslash or quote, else
+    its UTF-8 bytes as hex digits decoded in-plan (constant-folded)."""
+    if "\\" not in s and "'" not in s:
+        return f"'{s}'"
+    return f"decode(unhex('{s.encode().hex()}'), 'UTF-8')"
+
+
 def to_double_array_sql(a: str) -> str:
     return f"transform({a}, __td -> cast(__td as double))"
 

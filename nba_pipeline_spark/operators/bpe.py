@@ -53,6 +53,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectors import sql_str
 from .partitioning import collect_if_small, rows_frame
 
 
@@ -91,16 +92,6 @@ def merge_pair(syms: Column, left: str, right: str) -> Column:
     )
 
 
-def _sql_str(s: str) -> str:
-    """A Python string as Spark SQL text that evaluates to `s` in both
-    parser modes (`spark.sql.parser.escapedStringLiterals` on or off):
-    a plain quoted literal when `s` holds no backslash or quote, else
-    its UTF-8 bytes as hex digits decoded in-plan (constant-folded)."""
-    if "\\" not in s and "'" not in s:
-        return f"'{s}'"
-    return f"decode(unhex('{s.encode().hex()}'), 'UTF-8')"
-
-
 def merge_pair_sql(syms: str, left: str, right: str) -> str:
     """Text twin of `merge_pair` (r12, guide §1.2 driver overhead —
     same pattern as functions/vectors.py's *_sql helpers): the fold is
@@ -112,8 +103,8 @@ def merge_pair_sql(syms: str, left: str, right: str) -> str:
     decoded hex literal — differential-pinned in tests/test_bpe.py
     under both parser modes.
     `syms` is SQL text (a quoted column name); left/right are raw
-    symbol strings, rendered by `_sql_str`."""
-    lt, rt, both = _sql_str(left), _sql_str(right), _sql_str(left + right)
+    symbol strings, rendered by `sql_str`."""
+    lt, rt, both = sql_str(left), sql_str(right), sql_str(left + right)
     return (
         f"aggregate({syms}, CAST(array() AS array<string>), "
         f"(__macc, __ms) -> CASE WHEN size(__macc) > 0 "

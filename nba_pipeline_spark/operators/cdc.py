@@ -15,7 +15,8 @@ changelog. No UDFs, no driver-side loops.
 Scale notes:
 - ``merge_upsert``: unionByName is free (no shuffle); the row_number
   window shuffles once on `keys` — same cost as the groupBy any
-  engine needs for last-writer-wins. Skewed keys follow the same
+  engine needs for last-writer-wins. Its plan is SQL text, one Dataset
+  op per layer: every commit_upsert* and sink batch builds it. Skewed keys follow the same
   salting recipe as `salted_join` if a hot key dominates the changelog.
 - ``apply_changelog``: latest-change dedup shuffles the changelog on
   `keys` (changelog << base, cheap); the anti join of base vs changed
@@ -37,6 +38,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.vectors import sql_ident
+
 
 def merge_upsert(
     base: DataFrame,
@@ -53,19 +56,19 @@ def merge_upsert(
     `tiebreak` columns when versions can collide (ordering is pinned
     NULLS LAST on every sort key so both engines agree).
     """
-    b = base.withColumn("__src", F.lit(0)).withColumn(
-        "__ver", F.lit(None).cast("bigint")
+    ver = sql_ident(version_col)
+    b = base.selectExpr("*", "0 AS __src", "CAST(NULL AS BIGINT) AS __ver")
+    cols = [sql_ident(c) for c in changes.columns if c != version_col]
+    c = changes.selectExpr(*cols, "1 AS __src", f"CAST({ver} AS BIGINT) AS __ver")
+    u = b.unionByName(c, allowMissingColumns=True)
+    order = ["__src", "__ver"] + [sql_ident(t) for t in tiebreak]
+    w = (
+        f"PARTITION BY {', '.join(map(sql_ident, keys))} "
+        f"ORDER BY {' DESC NULLS LAST, '.join(order)} DESC NULLS LAST"
     )
-    c = changes.withColumn("__src", F.lit(1)).withColumn(
-        "__ver", F.col(version_col).cast("bigint")
-    )
-    u = b.unionByName(c.drop(version_col), allowMissingColumns=True)
-    order = [F.col("__src").desc(), F.col("__ver").desc_nulls_last()]
-    order += [F.col(t).desc_nulls_last() for t in tiebreak]
-    w = Window.partitionBy(*keys).orderBy(*order)
     return (
-        u.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        u.selectExpr("*", f"row_number() OVER ({w}) AS __rn")
+        .where("__rn = 1")
         .drop("__rn", "__src", "__ver")
     )
 

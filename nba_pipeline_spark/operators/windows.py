@@ -10,12 +10,19 @@ Scale notes: ``Window.partitionBy(key).orderBy(seq)`` shuffles once on
 the key and sorts within partitions — linear scale-out. A global
 ``Window.orderBy`` collapses to ONE task; it is deliberately not
 offered here (see ``ordered_surrogate`` for the bounded exception).
+
+The three reference scans are built as SQL text: the ``*_sql`` helpers
+return one window expression each, so a builder can put several of
+them in one projection; their DataFrame forms parse that text with one
+``F.expr``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+
+from ..functions.vectors import sql_ident, sql_str
 
 
 def _running(part: list[str], order: list[str]) -> WindowSpec:
@@ -26,37 +33,54 @@ def _running(part: list[str], order: list[str]) -> WindowSpec:
     )
 
 
+def _over(part: list[str], order: list[str], upto: str = "") -> str:
+    """``OVER (PARTITION BY part ORDER BY order [ROWS ... AND upto])``."""
+    frame = f" ROWS BETWEEN UNBOUNDED PRECEDING AND {upto}" if upto else ""
+    by = ", ".join(map(sql_ident, order))
+    return f"OVER (PARTITION BY {', '.join(map(sql_ident, part))} ORDER BY {by}{frame})"
+
+
+def _lit(v) -> str:
+    return sql_str(v) if isinstance(v, str) else f"{v!r}D" if isinstance(v, float) else str(v)
+
+
 def running_sum(df: DataFrame, part: list[str], order: list[str], value: Column, out: str) -> DataFrame:
     """W1 core: cumulative sum per group in explicit order."""
     return df.withColumn(out, F.sum(value).over(_running(part, order)))
 
 
-def running_count_with_reset(
-    df: DataFrame, part: list[str], order: list[str], reset: Column, out: str, start: int = 1
-) -> DataFrame:
+def running_count_with_reset_sql(part: list[str], order: list[str], reset: str, start: int = 1) -> str:
     """W1: counter that starts at ``start`` per group and increments at
-    every row where ``reset`` holds — the period-number scan
-    (playByplay.py:19-41: 1 at each new game_id, +1 at each
-    periodTime==720 marker after the first).
+    every row where the SQL predicate ``reset`` holds — the
+    period-number scan (playByplay.py:19-41: 1 at each new game_id, +1
+    at each periodTime==720 marker after the first).
 
     The first row of the group never increments even if it matches
     ``reset`` (the reference's game-start special case).
     """
-    w = _running(part, order)
-    rn = F.row_number().over(Window.partitionBy(*part).orderBy(*order))
-    inc = F.when((rn != 1) & reset, F.lit(1)).otherwise(F.lit(0))
-    return df.withColumn(out, F.lit(start) + F.sum(inc).over(w))
+    rn = f"row_number() {_over(part, order)}"
+    inc = f"CASE WHEN {rn} != 1 AND ({reset}) THEN 1 ELSE 0 END"
+    return f"{start} + sum({inc}) {_over(part, order, 'CURRENT ROW')}"
+
+
+def running_count_with_reset(
+    df: DataFrame, part: list[str], order: list[str], reset: str, out: str, start: int = 1
+) -> DataFrame:
+    return df.withColumn(out, F.expr(running_count_with_reset_sql(part, order, reset, start)))
+
+
+def forward_fill_sql(part: list[str], order: list[str], value: str, default=None) -> str:
+    """W2: last non-null of the SQL expression ``value`` carried forward
+    (score carry, playByplay.py:43-65); ``default`` fills the leading
+    run (game-start 0)."""
+    filled = f"last({value}, true) {_over(part, order, 'CURRENT ROW')}"
+    return filled if default is None else f"coalesce({filled}, {_lit(default)})"
 
 
 def forward_fill(
-    df: DataFrame, part: list[str], order: list[str], value: Column, out: str, default=None
+    df: DataFrame, part: list[str], order: list[str], value: str, out: str, default=None
 ) -> DataFrame:
-    """W2: last non-null carried forward (score carry,
-    playByplay.py:43-65); ``default`` fills the leading run (game-start 0)."""
-    filled = F.last(value, ignorenulls=True).over(_running(part, order))
-    if default is not None:
-        filled = F.coalesce(filled, F.lit(default))
-    return df.withColumn(out, filled)
+    return df.withColumn(out, F.expr(forward_fill_sql(part, order, value, default)))
 
 
 def marker_flag_fill(
@@ -72,23 +96,17 @@ def marker_flag_fill(
     """W3: marker rows set the flag for FOLLOWING rows ('Reserves' -> 0,
     'Team Totals' -> 1, boxScores.py:61-76); non-marker rows carry the
     previous flag; rows before any marker get ``first_default``; marker
-    rows themselves are dropped (boxScores.py:79).
+    rows themselves are dropped (boxScores.py:79). One projection, then
+    one filter.
     """
-    cases = F.when(F.lit(False), F.lit(None))
-    for mv, flag in marker_value.items():
-        cases = cases.when(F.col(marker_col) == F.lit(mv), F.lit(flag))
-    tagged = df.withColumn("__marker_flag", cases)
-    w = (
-        Window.partitionBy(*part)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    filled = tagged.withColumn(
-        out,
-        F.coalesce(F.last("__marker_flag", ignorenulls=True).over(w), F.lit(first_default)),
-    ).drop("__marker_flag")
+    col = sql_ident(marker_col)
+    cases = " ".join(f"WHEN {col} = {_lit(mv)} THEN {_lit(f)}" for mv, f in marker_value.items())
+    prev = _over(part, order, "1 PRECEDING")
+    flag = f"coalesce(last(CASE {cases} END, true) {prev}, {_lit(first_default)})"
+    filled = df.withColumn(out, F.expr(flag))
     if drop_markers:
-        filled = filled.filter(~F.col(marker_col).isin(list(marker_value)))
+        markers = ", ".join(map(_lit, marker_value))
+        filled = filled.where(f"NOT {col} IN ({markers})")
     return filled
 
 

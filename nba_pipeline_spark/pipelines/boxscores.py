@@ -6,16 +6,16 @@ Reference chain: per-game fetch -> two-level header flatten
 (:61-76) -> drop marker rows (:79) -> drop percentage cols (:80).
 
 Spark version: the isStarter scan is the marker_flag_fill window over
-(game_id, teamName, seq).
+(game_id, teamName, seq): one projection and one filter, then one
+projection for the parsed minutes and the surrogate key.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.scalar import mmss_to_seconds, surrogate_key
-from ..operators.projections import drop_columns
+from ..functions.vectors import sql_ident
 from ..operators.windows import marker_flag_fill
 
 
@@ -32,9 +32,9 @@ def build_boxscores(box_raw: DataFrame) -> DataFrame:
         out="isStarter",
         first_default=1,
     )
-    df = drop_columns(df, ["FG%", "3P%", "FT%"])  # boxScores.py:80
-    df = df.withColumn("secondsPlayed", mmss_to_seconds(F.col("MP")))
-    df = df.withColumn(
-        "boxscore_id", surrogate_key(F.col("game_id"), F.col("teamName"), F.col("playerName"))
+    keep = [sql_ident(c) for c in df.columns if c not in ("FG%", "3P%", "FT%")]  # boxScores.py:80
+    return df.selectExpr(
+        *keep,
+        f"{mmss_to_seconds('MP')} AS secondsPlayed",
+        f"{surrogate_key('game_id', 'teamName', 'playerName')} AS boxscore_id",
     )
-    return df

@@ -29,11 +29,11 @@ def build_coaches(coaches_raw: DataFrame) -> DataFrame:
         },
     )
     # M9 FIRST: classify coach rows while non-numeric G_reg still present
-    df = df.withColumn("coachType", coach_type(F.col("G_reg")))
+    df = df.withColumn("coachType", F.expr(coach_type("G_reg")))
     # F5: keep only 'YYYY-YY' season rows (drops 'Career')
     df = df.filter(split_arity_predicate("Season", "-", 2))
     # M1: season start year
-    df = df.withColumn("seasonStartYear", season_start_year(F.col("Season")))
+    df = df.withColumn("seasonStartYear", F.expr(season_start_year("Season")))
     # F6: reference's isNumber filter drops rows whose G_reg isn't numeric
     # AFTER using them for coachType — head-coach season rows remain
     head = filter_castable(df, "G_reg", "int")

@@ -8,19 +8,17 @@ dict lookup -> isRegular flag (games.py:56-65) -> drop 2018 exhibition
 games (games.py:70-72) -> sort by datetime + uuid4 game_id
 (games.py:82-83) -> positional rename (games.py:86-87).
 
-Spark version: one declarative chain; the dict lookup is a broadcast
-join; the surrogate key is a hash of the natural key (retry-safe,
-SURVEY §4) instead of uuid4.
+Spark version: one declarative chain, one Dataset op per plan layer
+in SQL text; the dict lookup is a ``CASE`` literal (no join, no job);
+the surrogate key is a hash of the natural key (retry-safe, SURVEY §4)
+instead of uuid4.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions.scalar import parse_date, surrogate_key
-from ..operators.filters import filter_neq
-from ..operators.joins import lookup_join
 
 # games.py:56-61 playoffStart dict (fixture-relevant subset; full 26-entry
 # map loads from config at real ingest)
@@ -32,36 +30,25 @@ PLAYOFF_START = {
 
 
 def build_games(games_raw: DataFrame, spark: SparkSession) -> DataFrame:
-    df = filter_neq(games_raw, "Date", "Playoffs")
-    df = df.withColumn("datetime", parse_date(F.col("Date")).cast("timestamp"))
-    # J2 broadcast lookup: season -> playoff start date
-    df = lookup_join(
-        df,
-        spark,
-        {k: v for k, v in PLAYOFF_START.items()},
-        key_col="seasonStartYear",
-        value_col="playoff_start",
+    # J2 lookup as a literal: season -> playoff start date (NULL if absent)
+    whens = " ".join(f"WHEN {y} THEN '{d}'" for y, d in PLAYOFF_START.items())
+    playoff_start = f"CAST(CASE seasonStartYear {whens} END AS TIMESTAMP)"
+    df = games_raw.selectExpr("*", f"CAST({parse_date('Date')} AS TIMESTAMP) AS datetime")
+    # F1: drop 'Playoffs' header rows (games.py:50); F4: drop pre-season
+    # exhibition games mislabeled into 2018 (games.py:70-72: keep
+    # datetime > 2018-10-01 OR season != 2018)
+    df = df.where(
+        "Date != 'Playoffs' AND (datetime > CAST('2018-10-01' AS TIMESTAMP)"
+        " OR seasonStartYear != 2018)"
     )
-    # M7: isRegular = datetime before the season's playoff start (games.py:63-65)
-    df = df.withColumn(
-        "isRegular",
-        (F.col("playoff_start").cast("timestamp") > F.col("datetime")).cast("int"),
-    ).drop("playoff_start")
-    # F4: drop pre-season exhibition games mislabeled into 2018
-    # (games.py:70-72: keep datetime > 2018-10-01 OR season != 2018)
-    df = df.filter(
-        (F.col("datetime") > F.lit("2018-10-01").cast("timestamp"))
-        | (F.col("seasonStartYear") != 2018)
-    )
-    # M10: deterministic surrogate key over the natural key
-    df = df.withColumn(
-        "game_id",
-        surrogate_key(F.col("datetime"), F.col("awayTeam"), F.col("homeTeam")),
-    )
-    return df.select(
+    return df.selectExpr(
         "seasonStartYear", "awayTeam", "pointsAway", "homeTeam", "pointsHome",
         # scraped attendance can carry thousands separators / blanks —
         # tolerate, don't abort (ANSI cast would kill the build)
-        F.regexp_replace(F.col("attendance"), ",", "").try_cast("int").alias("attendance"),
-        "notes", "startET", "datetime", "isRegular", "game_id",
+        "try_cast(regexp_replace(attendance, ',', '') AS INT) AS attendance",
+        "notes", "startET", "datetime",
+        # M7: isRegular = datetime before the season's playoff start (games.py:63-65)
+        f"CAST({playoff_start} > datetime AS INT) AS isRegular",
+        # M10: deterministic surrogate key over the natural key
+        f"{surrogate_key('datetime', 'awayTeam', 'homeTeam')} AS game_id",
     )

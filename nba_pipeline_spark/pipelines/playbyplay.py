@@ -10,44 +10,42 @@ scan (:19-41) -> score forward-fill scan (:43-65) -> duplicate null-out
 
 Spark version: the three sequential scans become window functions over
 (game_id, seq) — the explicit ordering contract replacing scrape order.
-One shuffle on game_id serves all three windows.
+One shuffle on game_id serves all three windows. The plan is four
+Dataset ops in SQL text: the time parse, the header filter, one
+projection holding the windows and the null-out, and the play id.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.scalar import mmss_to_seconds, null_out_dupes, score_pair, surrogate_key
-from ..operators.filters import filter_castable
-from ..operators.windows import forward_fill, running_count_with_reset
+from ..operators.windows import forward_fill_sql, running_count_with_reset_sql
 
 ORDER = ["seq"]
 PART = ["game_id"]
 
 
 def build_playbyplay(pbp_raw: DataFrame) -> DataFrame:
-    df = pbp_raw.withColumn("periodTime", mmss_to_seconds(F.col("time")))
+    df = pbp_raw.selectExpr("*", f"{mmss_to_seconds('time')} AS periodTime")
     # F7: drop embedded header rows whose time doesn't parse
-    df = filter_castable(df.withColumn("pt_str", F.col("periodTime").cast("string")), "pt_str").drop("pt_str")
-    # W1: period number — +1 at every 12:00 (=720s) marker after the first row
-    df = running_count_with_reset(
-        df, PART, ORDER, reset=F.col("periodTime") == 720, out="period"
+    df = df.where("periodTime IS NOT NULL")
+    # M3: parse 'a-b' score
+    away, home = score_pair("score")
+    df = df.selectExpr(
+        "game_id", "seq", "periodTime",
+        # W1: period number — +1 at every 12:00 (=720s) marker after the first row
+        f"{running_count_with_reset_sql(PART, ORDER, 'periodTime = 720')} AS period",
+        # W2: carry last known score; 0 at game start
+        f"{forward_fill_sql(PART, ORDER, away, default=0)} AS awayPoints",
+        f"{forward_fill_sql(PART, ORDER, home, default=0)} AS homePoints",
+        # M8: null-out scraped artifacts where event text duplicates point text
+        "event_away",
+        f"{null_out_dupes('event_away', 'point_away', 'point_away')} AS point_away",
+        "event_home",
+        f"{null_out_dupes('event_home', 'point_home', 'point_home')} AS point_home",
+        "score",
     )
-    # M3 + W2: parse 'a-b' score; carry last known; 0 at game start
-    away, home = score_pair(F.col("score"))
-    df = forward_fill(df, PART, ORDER, away, "awayPoints", default=0)
-    df = forward_fill(df, PART, ORDER, home, "homePoints", default=0)
-    # M8: null-out scraped artifacts where event text duplicates point text
-    df = df.withColumn(
-        "point_away", null_out_dupes(F.col("event_away"), F.col("point_away"), F.col("point_away"))
-    ).withColumn(
-        "point_home", null_out_dupes(F.col("event_home"), F.col("point_home"), F.col("point_home"))
-    )
-    # M10: deterministic play id
-    df = df.withColumn("play_id", surrogate_key(F.col("game_id"), F.col("seq")))
-    return df.select(
-        "play_id", "game_id", "seq", "periodTime", "period",
-        "awayPoints", "homePoints", "event_away", "point_away",
-        "event_home", "point_home", "score",
-    )
+    # M10: deterministic play id, hashed above the windows so their
+    # shuffle does not carry it
+    return df.selectExpr(f"{surrogate_key('game_id', 'seq')} AS play_id", "*")

@@ -17,8 +17,8 @@ from ..operators.projections import rename_columns
 
 def build_players(players_raw: DataFrame) -> DataFrame:
     df = rename_columns(players_raw, {"Player": "playerName", "Birth Date": "birthDateRaw"})
-    feet = split_part(F.col("Ht"), "-", 0).try_cast("int")
-    inches = split_part(F.col("Ht"), "-", 1).try_cast("int")
+    feet = F.expr(split_part("Ht", "-", 0)).try_cast("int")
+    inches = F.expr(split_part("Ht", "-", 1)).try_cast("int")
     return df.select(
         "playerName",
         F.col("From").cast("int").alias("fromYear"),

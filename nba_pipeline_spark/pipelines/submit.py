@@ -29,7 +29,6 @@ import sys
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..session import tune
 from ..sources.cloud import save_as_warehouse_table
@@ -99,16 +98,15 @@ def season_dag(spark: SparkSession, out_dir: str, retries: int = 1) -> Dag:
         return int(ctx["params"])
 
     def ingest_games(ctx: dict) -> DataFrame:
-        return fixtures.games_raw(spark).filter(
-            F.col("seasonStartYear") == _season(ctx)
-        )
+        return fixtures.games_raw(spark).where(f"seasonStartYear = {_season(ctx)}")
 
     def write_season(name: str, partition_cols: list[str]):
         def fn(ctx: dict) -> str:
             # per-season partition dir: backfill overwrites its own
-            # season only, never a sibling's (Airflow catchup semantics)
+            # season only, never a sibling's (Airflow catchup semantics);
+            # the season lives in the path, not in the rows
             path = f"{out_dir}/raw/{name}/seasonStartYear={_season(ctx)}"
-            df = ctx[f"build_{name}"].drop("seasonStartYear")
+            df = ctx[f"build_{name}"]
             if partition_cols:
                 write_partitioned(df, path, partition_cols)
             else:
@@ -122,33 +120,31 @@ def season_dag(spark: SparkSession, out_dir: str, retries: int = 1) -> Dag:
     # them) — the dep on build_games preserves that ordering; the
     # fixture bytes are season-agnostic so the production swap point
     # is the ingest callable, not the DAG shape.
-    def build_pbp_for_season(ctx: dict) -> DataFrame:
-        return build_playbyplay(fixtures.playbyplay_raw(spark)).withColumn(
-            "seasonStartYear", F.lit(_season(ctx))
-        )
-
-    def build_box_for_season(ctx: dict) -> DataFrame:
-        return build_boxscores(fixtures.boxscores_raw(spark)).withColumn(
-            "seasonStartYear", F.lit(_season(ctx))
-        )
-
     return Dag(
         "nba_seasonal",
         [
             Task("ingest_games", ingest_games, retries=retries),
             Task(
                 "build_games",
-                lambda c: build_games(c["ingest_games"], spark),
+                lambda c: build_games(c["ingest_games"], spark).drop("seasonStartYear"),
                 deps=("ingest_games",),
             ),
             Task("write_games", write_season("games", []), deps=("build_games",)),
-            Task("build_playbyplay", build_pbp_for_season, deps=("build_games",)),
+            Task(
+                "build_playbyplay",
+                lambda c: build_playbyplay(fixtures.playbyplay_raw(spark)),
+                deps=("build_games",),
+            ),
             Task(
                 "write_playbyplay",
                 write_season("playbyplay", ["game_id"]),
                 deps=("build_playbyplay",),
             ),
-            Task("build_boxscores", build_box_for_season, deps=("build_games",)),
+            Task(
+                "build_boxscores",
+                lambda c: build_boxscores(fixtures.boxscores_raw(spark)),
+                deps=("build_games",),
+            ),
             Task(
                 "write_boxscores",
                 write_season("boxscores", ["game_id"]),

@@ -225,9 +225,7 @@ def q_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = F.when(
         (F.col("l_discount") > 0.05) & (F.col("l_returnflag") == "A"), F.lit("disc-returned")
     ).otherwise(F.col("l_returnflag"))
-    tax_clean = S.null_out_dupes(
-        target=F.col("l_tax"), compare=F.col("l_discount"), other=F.col("l_tax")
-    )
+    tax_clean = F.expr(S.null_out_dupes(target="l_tax", compare="l_discount", other="l_tax"))
     return li.select(
         "l_orderkey", "l_linenumber", seg.alias("seg"), tax_clean.alias("tax_clean")
     )
@@ -250,7 +248,7 @@ register(
 
 def q_trycast_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").withColumn("g_reg", _mixed_str())
-    return li.select("l_orderkey", "l_linenumber", S.coach_type(F.col("g_reg")).alias("coach_type"))
+    return li.selectExpr("l_orderkey", "l_linenumber", f"{S.coach_type('g_reg')} AS coach_type")
 
 
 register(
@@ -276,9 +274,9 @@ register(
 
 def q_str_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
-    score = F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"))
+    score = "concat_ws('-', l_orderkey, l_linenumber)"
     a, b = S.score_pair(score)
-    return li.select(score.alias("score"), a.alias("away"), b.alias("home"))
+    return li.selectExpr(f"{score} AS score", f"{a} AS away", f"{b} AS home")
 
 
 register(
@@ -302,7 +300,7 @@ def q_str_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(".0"),
     )
     out = ev.withColumn("t", t)
-    return out.select("event_id", "t", S.mmss_to_seconds(F.col("t")).alias("secs"))
+    return out.select("event_id", "t", F.expr(S.mmss_to_seconds("t")).alias("secs"))
 
 
 register(
@@ -326,12 +324,9 @@ register(
 
 def q_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
-    parts = S.date_parts(F.col("o_orderdate"))
-    return orders.select(
-        "o_orderkey",
-        parts["year"].alias("y"),
-        parts["month"].alias("m"),
-        parts["day"].alias("d"),
+    parts = S.date_parts("o_orderdate")
+    return orders.selectExpr(
+        "o_orderkey", f"{parts['year']} AS y", f"{parts['month']} AS m", f"{parts['day']} AS d"
     )
 
 
@@ -347,7 +342,7 @@ def q_date_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     pretty = F.date_format(F.col("o_orderdate"), "EEE, MMM d, yyyy")
     out = orders.withColumn("pretty", pretty)
-    return out.select("o_orderkey", "pretty", S.parse_date(F.col("pretty")).alias("d"))
+    return out.select("o_orderkey", "pretty", F.expr(S.parse_date("pretty")).alias("d"))
 
 
 register(
@@ -390,10 +385,8 @@ register(
 
 def q_surrogate_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        S.surrogate_key(F.col("l_orderkey"), F.col("l_linenumber")).alias("play_id"),
+    return li.selectExpr(
+        "l_orderkey", "l_linenumber", f"{S.surrogate_key('l_orderkey', 'l_linenumber')} AS play_id"
     )
 
 

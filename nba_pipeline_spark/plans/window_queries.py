@@ -52,9 +52,7 @@ def q_win_running_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
     every marker row after the first. Here: per user, +1 at every
     'signup' event after the user's first event."""
     ev = _ev(spark, sf_dir)
-    out = OW.running_count_with_reset(
-        ev, ["user_id"], ORDER, F.col("event_type") == "signup", "period"
-    )
+    out = OW.running_count_with_reset(ev, ["user_id"], ORDER, "event_type = 'signup'", "period")
     return out.select("event_id", "user_id", "period")
 
 
@@ -84,7 +82,7 @@ def q_win_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """playByplay.py:43-65 score carry: parseable score -> value, else
     carry previous, 0 at start. Here 'error' events have no usable value."""
     ev = _ev(spark, sf_dir)
-    v = F.when(F.col("event_type") != "error", F.col("value"))
+    v = "CASE WHEN event_type != 'error' THEN value END"
     out = OW.forward_fill(ev, ["user_id"], ORDER, v, "filled_value", default=0.0)
     return out.select("event_id", "user_id", F.round("filled_value", 4).alias("filled_value"))
 

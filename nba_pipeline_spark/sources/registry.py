@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.vectors import sql_ident
+
 # Explicit schemas for the driver testdata tables (FIXTURES.md §A).
 # Inference is banned inside the engine; these are asserted on read.
 SCHEMAS: dict[str, T.StructType] = {
@@ -169,16 +171,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # - timestamp[us] without isAdjustedToUTC → TimestampNTZType under
     #   spark.sql.parquet.inferTimestampNTZ; session tz is UTC, so the cast
     #   preserves the wall-clock values byte-for-byte.
+    # All of them land in one order-keeping projection, built only when
+    # some column needs one.
+    fixes = {}
     for field in SCHEMAS[name].fields:
         if isinstance(field.dataType, T.TimestampType):
-            got = df.schema[field.name].dataType
+            got, q = df.schema[field.name].dataType, sql_ident(field.name)
             if isinstance(got, T.LongType):
-                df = df.withColumn(
-                    field.name, F.timestamp_micros(F.expr(f"{field.name} div 1000"))
-                )
+                fixes[field.name] = f"timestamp_micros({q} div 1000) AS {q}"
             elif isinstance(got, T.TimestampNTZType):
-                df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    return df
+                fixes[field.name] = f"CAST({q} AS TIMESTAMP) AS {q}"
+    return df.selectExpr(*(fixes.get(c, sql_ident(c)) for c in expected)) if fixes else df
 
 
 def parquet_ts_encoding(path: str, col: str) -> str:

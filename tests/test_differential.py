@@ -33,7 +33,7 @@ def test_forward_fill_matches_duckdb(spark, seed):
     pdf = _rand_events(np.random.default_rng(seed), 60)
     df = spark.createDataFrame(pdf.astype({"k": int, "seq": int}))
     got = (
-        forward_fill(df, ["k"], ["seq"], F.col("v"), "f", default=-1.0)
+        forward_fill(df, ["k"], ["seq"], "v", "f", default=-1.0)
         .select("k", "seq", "f")
         .toPandas()
         .sort_values(["k", "seq"], ignore_index=True)
@@ -55,7 +55,7 @@ def test_running_reset_matches_duckdb(spark, seed):
     pdf = _rand_events(np.random.default_rng(seed), 60)
     df = spark.createDataFrame(pdf.astype({"k": int, "seq": int}))
     got = (
-        running_count_with_reset(df, ["k"], ["seq"], F.col("reset"), "period")
+        running_count_with_reset(df, ["k"], ["seq"], "reset", "period")
         .select("k", "seq", "period")
         .toPandas()
         .sort_values(["k", "seq"], ignore_index=True)

@@ -153,6 +153,23 @@ def test_pagerank_identical_on_random_graphs(spark, weights):
         assert any(node.startswith("sink") for node, _ in local)
 
 
+def test_pagerank_local_reads_the_collected_out_weights():
+    # The local tier must iterate over the out-weight Spark summed (the
+    # per_src rows), never re-sum the edge rows on the driver: a float
+    # sum in another order can differ from the wide path's deg, and the
+    # 12-dp rounding hides such a split from the graph-level tests. Here
+    # the per_src row disagrees with its edges' sum on purpose, so only
+    # a reader of that row sees the larger out-weight.
+    edges = [("a", "b", 1.0, False), ("a", "c", 1.0, False)]
+
+    def ranks(out_w):
+        return dict(graph._pagerank_local(edges + [("a", None, out_w, True)], 1, 0.85))
+
+    summed, collected = ranks(2.0), ranks(4.0)
+    assert collected["b"] < summed["b"] and collected["c"] < summed["c"]
+    assert collected["a"] == summed["a"]
+
+
 def test_round12_matches_spark_round(spark):
     # Spark's ROUND(x, 12) and CAST(x AS DECIMAL(38,12)) on a double are
     # BigDecimal(Double.toString(x)) at scale 12, HALF_UP; the local

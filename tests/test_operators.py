@@ -31,10 +31,10 @@ def test_scalar_functions(spark):
     )
     r = one(
         df.select(
-            mmss_to_seconds(F.col("t")).alias("secs"),
-            season_start_year(F.col("season")).alias("y"),
-            parse_date(F.col("date")).alias("d"),
-            *[c.alias(n) for n, c in zip(("a", "h"), score_pair(F.col("score")))],
+            F.expr(mmss_to_seconds("t")).alias("secs"),
+            F.expr(season_start_year("season")).alias("y"),
+            F.expr(parse_date("date")).alias("d"),
+            *[F.expr(c).alias(n) for n, c in zip(("a", "h"), score_pair("score"))],
         )
     )
     assert r["secs"] == 11 * 60 + 43
@@ -45,7 +45,7 @@ def test_scalar_functions(spark):
 
 def test_mmss_null_on_junk(spark):
     df = spark.createDataFrame([("1st Q",), ("ot",)], ["t"])
-    got = [r[0] for r in df.select(mmss_to_seconds(F.col("t"))).collect()]
+    got = [r[0] for r in df.select(F.expr(mmss_to_seconds("t"))).collect()]
     assert got == [None, None]
 
 
@@ -54,7 +54,7 @@ def test_coach_type_dispatch(spark):
         [("82",), ("Assistant Coach",), ("Player Development",), ("Assistant Coach (interim)",)],
         ["g"],
     )
-    got = [r[0] for r in df.select(coach_type(F.col("g"))).collect()]
+    got = [r[0] for r in df.select(F.expr(coach_type("g"))).collect()]
     assert got == ["Head Coach", "Assistant Coach", "Player Development", "Assistant Coach"]
 
 
@@ -63,7 +63,7 @@ def test_fix_hornets_case(spark):
         [(2010, "Charlotte Hornets", "CHA"), (2015, "Charlotte Hornets", "CHA"), (2010, "Utah Jazz", "UTA")],
         ["season", "team", "abbrev"],
     )
-    got = [r[0] for r in df.select(fix_hornets(F.col("season"), F.col("team"), F.col("abbrev"))).collect()]
+    got = [r[0] for r in df.select(F.expr(fix_hornets("season", "team", "abbrev"))).collect()]
     assert got == ["CHH", "CHA", "UTA"]
 
 
@@ -73,21 +73,21 @@ def test_null_out_dupes_edges(spark):
         ["event", "point"],
     )
     got = [r[0] for r in df.select(
-        null_out_dupes(F.col("event"), F.col("point"), F.col("point"))
+        F.expr(null_out_dupes("event", "point", "point"))
     ).collect()]
     assert got == [None, "2", None]
 
 
 def test_surrogate_key_deterministic_and_distinct(spark):
     df = spark.createDataFrame([(1, "a"), (1, "a"), (2, "b")], ["k", "v"])
-    keys = [r[0] for r in df.select(surrogate_key(F.col("k"), F.col("v"))).collect()]
+    keys = [r[0] for r in df.select(F.expr(surrogate_key("k", "v"))).collect()]
     assert keys[0] == keys[1] and keys[0] != keys[2] and len(keys[0]) == 64
 
 
 def test_surrogate_key_separator_no_collision(spark):
     # ('ab','c') must not collide with ('a','bc') — the \\x1f separator
     df = spark.createDataFrame([("ab", "c"), ("a", "bc")], ["x", "y"])
-    keys = [r[0] for r in df.select(surrogate_key(F.col("x"), F.col("y"))).collect()]
+    keys = [r[0] for r in df.select(F.expr(surrogate_key("x", "y"))).collect()]
     assert keys[0] != keys[1]
 
 

@@ -93,3 +93,47 @@ def test_players_pipeline(spark):
     assert by_name["Michael Jordan"]["heightInches"] == 78
     assert by_name["Tall Center"]["heightInches"] == 86
     assert str(by_name["Michael Jordan"]["birthDate"]) == "1963-02-17"
+
+
+# Schema strings (types and nullability) and sha256 digests of the sorted
+# JSON rows of the three season builders on the fixtures. A rewrite of a
+# builder's plan must reproduce these exactly.
+SEASON_PINS = {
+    "games": (
+        "seasonStartYear bigint, awayTeam string, pointsAway double, "
+        "homeTeam string, pointsHome double, attendance int, notes string, "
+        "startET string, datetime timestamp, isRegular int, game_id string",
+        "6cfcd5aef739007f75aab0e67917a4bb812d5ebfa9caf4058d4f5ff0cbbe5ce2",
+    ),
+    "playbyplay": (
+        "play_id string, game_id string, seq bigint, periodTime int, "
+        "period bigint, awayPoints int NOT NULL, homePoints int NOT NULL, "
+        "event_away string, point_away string, event_home string, "
+        "point_home string, score string",
+        "245533d11a2a8b4e52d86569ad030def1afaea1078f8833634313ce2609c64ea",
+    ),
+    "boxscores": (
+        "game_id string, teamName string, playerName string, MP string, "
+        "PTS double, seq bigint, isStarter int NOT NULL, secondsPlayed int, "
+        "boxscore_id string",
+        "98a007dcf30632976aea6503e7b6332c4f9b05e77dc41921769bb409a7662024",
+    ),
+}
+
+
+def test_season_builders_pinned_schema_and_rows(spark):
+    import hashlib
+
+    built = {
+        "games": build_games(FX.games_raw(spark), spark),
+        "playbyplay": build_playbyplay(FX.playbyplay_raw(spark)),
+        "boxscores": build_boxscores(FX.boxscores_raw(spark)),
+    }
+    for name, df in built.items():
+        schema = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}{'' if f.nullable else ' NOT NULL'}"
+            for f in df.schema
+        )
+        rows = sorted(r[0] for r in df.selectExpr("to_json(struct(*))").collect())
+        digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
+        assert (schema, digest) == SEASON_PINS[name], name

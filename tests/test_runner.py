@@ -272,6 +272,24 @@ def test_season_dag_tables_equal_direct_builds(spark, tmp_path):
         assert got.exceptAll(w).count() == 0 and w.exceptAll(got).count() == 0, name
 
 
+def test_season_dag_job_budget(spark, tmp_path):
+    """A warm season-DAG run issues at most 5 Spark jobs: the playoff
+    lookup is a literal, not a broadcast join with a job of its own."""
+    from nba_pipeline_spark.pipelines.submit import season_dag
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    assert season_dag(spark, str(tmp_path / "warm")).run(2018).ok
+    before = job_ids()
+    assert season_dag(spark, str(tmp_path / "lake")).run(2018).ok
+    assert len(job_ids() - before) <= 5
+
+
 def test_dag_jobs_carry_the_callers_job_description(spark, tmp_path):
     """Every Spark job the DAG's task threads submit shows the job
     description the caller set on its own thread."""

@@ -3,6 +3,8 @@ cloud sink gating."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -343,3 +345,36 @@ def test_schema_memo_keys_on_the_file_not_its_name(spark, tmp_path):
     s2 = R._inferred_schema(spark, str(alias / "region.parquet"))
     assert s2.names == ["r_regionkey", "r_name", "extra"]
     assert len(R._READ_SCHEMA_CACHE) == entries + 1
+
+
+@pytest.mark.parametrize("encoding", ["ntz", "nanos", "utc"])
+def test_load_table_normalizes_every_timestamp_encoding(spark, tmp_path, encoding):
+    """events.ts written as timestamp[us] without a zone (read as
+    TimestampNTZ), TIMESTAMP(NANOS) (read as long) or UTC-adjusted
+    timestamp[us] loads as one schema and one row set: the pinned
+    schema string and sha256 of the sorted JSON rows."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = Path(__file__).resolve().parent.parent / "perfbench/testdata/sf0.001/events.parquet"
+    t = pq.read_table(src)
+    typ = {"ntz": pa.timestamp("us"), "nanos": pa.timestamp("ns"),
+           "utc": pa.timestamp("us", tz="UTC")}[encoding]
+    t = t.set_column(t.schema.get_field_index("ts"), "ts", t.column("ts").cast(typ))
+    pq.write_table(t, tmp_path / "events.parquet")
+    df = load_table(spark, str(tmp_path), "events")
+    schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}{'' if f.nullable else ' NOT NULL'}"
+        for f in df.schema
+    )
+    rows = sorted(r[0] for r in df.selectExpr("to_json(struct(*))").collect())
+    assert schema == (
+        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+        "value double, props string"
+    )
+    assert len(rows) == 1000
+    assert hashlib.sha256("\n".join(rows).encode()).hexdigest() == (
+        "757a5dded82489d476fdec822b057a16b42430a8ac0a0010433cc46e3d65a804"
+    )

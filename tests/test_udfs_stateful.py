@@ -50,7 +50,7 @@ def test_registered_udf_matches_builtin(spark):
     ).collect()
     from nba_pipeline_spark.functions.scalar import mmss_to_seconds
 
-    want = df.select(mmss_to_seconds(F.col("t")).alias("s")).collect()
+    want = df.select(F.expr(mmss_to_seconds("t")).alias("s")).collect()
     assert [r["s"] for r in got] == [r["s"] for r in want]
 
 
@@ -138,7 +138,7 @@ def test_stateful_period_counter_across_batches(spark, staged_pbp_stream):
     want = {
         (r["game_id"], r["seq"]): r["period"]
         for r in running_count_with_reset(
-            batch_df, ["game_id"], ["seq"], F.col("is_reset"), "period"
+            batch_df, ["game_id"], ["seq"], "is_reset", "period"
         ).collect()
     }
     assert got == want

@@ -25,7 +25,7 @@ def test_running_count_with_reset_period_semantics(spark):
             ("g2", 5, 720), ("g2", 6, 720)]
     df = spark.createDataFrame(data, ["game_id", "seq", "periodTime"])
     out = running_count_with_reset(
-        df, ["game_id"], ["seq"], F.col("periodTime") == 720, "period"
+        df, ["game_id"], ["seq"], "periodTime = 720", "period"
     )
     assert rows(out, "seq", "period") == [(1, 1), (2, 1), (3, 2), (4, 2), (5, 1), (6, 2)]
 
@@ -34,15 +34,15 @@ def test_forward_fill_with_default(spark):
     # playByplay.py:43-65: unparseable -> carry; leading nulls -> default 0
     data = [("g1", 1, None), ("g1", 2, 5), ("g1", 3, None), ("g1", 4, 7), ("g2", 5, None)]
     df = spark.createDataFrame(data, ["game_id", "seq", "v"])
-    out = forward_fill(df, ["game_id"], ["seq"], F.col("v"), "filled", default=0)
+    out = forward_fill(df, ["game_id"], ["seq"], "v", "filled", default=0)
     assert rows(out, "seq", "filled") == [(1, 0), (2, 5), (3, 5), (4, 7), (5, 0)]
 
 
 def test_forward_fill_idempotent(spark):
     data = [("g1", i, v) for i, v in enumerate([None, 3, None, None, 9])]
     df = spark.createDataFrame(data, ["game_id", "seq", "v"])
-    once = forward_fill(df, ["game_id"], ["seq"], F.col("v"), "f1", default=0)
-    twice = forward_fill(once, ["game_id"], ["seq"], F.col("f1"), "f2", default=0)
+    once = forward_fill(df, ["game_id"], ["seq"], "v", "f1", default=0)
+    twice = forward_fill(once, ["game_id"], ["seq"], "f1", "f2", default=0)
     got = twice.select("seq", "f1", "f2").collect()
     assert all(r["f1"] == r["f2"] for r in got)
 

@@ -6,8 +6,10 @@ Run after plan-affecting changes: python tools/dump_plans.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 HEADLINE = [
     "q_flagship",
@@ -143,7 +145,7 @@ def main() -> None:
             n_ok += 1
         except Exception as e:  # keep the section, record the failure
             out.append(f"\n## {name}\n\n```\nPLAN CAPTURE FAILED: {e}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("".join(out))
     print(f"wrote PLANS.md with {n_ok}/{len(names)} plans")
 

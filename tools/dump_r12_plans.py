@@ -9,8 +9,10 @@ import io
 import os
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -21,13 +23,13 @@ def main() -> None:
 
     spark = get_spark("plans_r12")
     spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs("/root/repo/plans/r12", exist_ok=True)
+    os.makedirs(f"{ROOT}/plans/r12", exist_ok=True)
     for q in names:
         df = REGISTRY[q].fn(spark, "/root/testdata/sf0.1")
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        with open(f"/root/repo/plans/r12/{q}_{tag}.txt", "w") as fh:
+        with open(f"{ROOT}/plans/r12/{q}_{tag}.txt", "w") as fh:
             fh.write(buf.getvalue())
         print(f"dumped {q}_{tag}")
 

@@ -5,19 +5,29 @@ same parquet tables, then compares row count, column names, and values
 (order-insensitive, exact for non-floats, 1e-9 tolerance reported for
 floats — the real driver hashes, so we also flag any non-exact float).
 
+Spark reads a fresh symlinked alias of sf_dir, whose staged lakes and
+stream sources are removed at exit: the package keys its stages on the
+sf_dir path, so every stage a run reads is built by this checkout's
+code, never reused from an earlier run. DuckDB reads sf_dir itself.
+
 Usage: python tools/local_verify.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import sys
+import tempfile
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -87,17 +97,33 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     from nba_pipeline_spark.session import get_spark
-    from nba_pipeline_spark.plans.queries import REGISTRY
 
     spark = get_spark("local_verify")
     con = duck_con(sf_dir)
+    alias_dir = tempfile.mkdtemp(prefix="local_verify-")
+    alias = os.path.join(alias_dir, "sf")
+    os.symlink(os.path.abspath(sf_dir), alias)
+    try:
+        failures = run(spark, con, alias, only)
+    finally:
+        tag = alias.strip("/").replace("/", "_")
+        for root in ("/tmp/nba_spark_lake", "/tmp/nba_stream_src"):
+            shutil.rmtree(f"{root}/{tag}", ignore_errors=True)
+        shutil.rmtree(alias_dir, ignore_errors=True)
+    print(f"\n{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")
+    return 1 if failures else 0
+
+
+def run(spark, con, alias: str, only: set) -> int:
+    from nba_pipeline_spark.plans.queries import REGISTRY
+
     failures = 0
     for name, spec in REGISTRY.items():
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = spec.fn(spark, sf_dir)
+            sdf = spec.fn(spark, alias)
             spark_pdf = sdf.toPandas()
         except Exception as e:
             print(f"FAIL {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
@@ -118,8 +144,7 @@ def main() -> int:
             failures += 1
         else:
             print(f"PASS {name} ({len(spark_pdf)} rows, {time.time()-t0:.1f}s)")
-    print(f"\n{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")
-    return 1 if failures else 0
+    return failures
 
 
 if __name__ == "__main__":

@@ -15,8 +15,10 @@ import sys
 import time
 import traceback
 from collections import defaultdict
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 RECORDS: list[tuple[str, str, float]] = []  # (kind, site, sec)
 ACTIVE = False
@@ -25,8 +27,8 @@ ACTIVE = False
 def _site() -> str:
     for fr in reversed(traceback.extract_stack()):
         fn = fr.filename
-        if "/root/repo/" in fn and "profile_query" not in fn:
-            return f"{fn.split('/root/repo/')[-1]}:{fr.lineno}"
+        if f"{ROOT}/" in fn and "profile_query" not in fn:
+            return f"{fn.split(f'{ROOT}/')[-1]}:{fr.lineno}"
     return "<external>"
 
 

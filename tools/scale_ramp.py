@@ -25,8 +25,10 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
