@@ -25,7 +25,7 @@ from ..operators import bpe as BPE
 from ..operators.partitioning import fan_out, rows_frame, under_parallelized
 from ..session import tune
 from ..sources import load_table
-from .queries import register
+from .queries import _ensure_stage, _stage_dir, register
 from .text_queries import _DUCK_TOKS, _marker_hits
 
 MIN_TOKENS = 20
@@ -1052,25 +1052,19 @@ def _span_window_lake(spark: SparkSession, sf_dir: str) -> str:
     reads instead of re-windowing settled text."""
     from ..operators.dedup import span_window_table
     from ..sources import manifest as M
-    from .relational_queries import _stage_dir
 
     root = _stage_dir(sf_dir, "documents", "span_windows_h")  # hashed-key table
     wpath = f"{root}/windows"
 
-    import os
-    import shutil
-
-    marker = os.path.join(root, "_STAGE_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build():
         settled = load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") < SPAN_SPLIT
         )
         M.commit_replace(
             spark, wpath, span_window_table(settled, k=SPAN_DEDUP_K)
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    _ensure_stage(root, build)
     return wpath
 
 
@@ -1588,17 +1582,11 @@ def _pack_incr_stage(spark: SparkSession, sf_dir: str) -> str:
     between batches — the loader-shard build running as ingestion, not
     as a full-corpus job."""
     from ..sources import manifest as M
-    from .relational_queries import _stage_dir
 
     root = _stage_dir(sf_dir, "documents", "pack_incremental")
     placed_lake, state_lake = f"{root}/placed", f"{root}/state"
 
-    import os
-    import shutil
-
-    marker = os.path.join(root, "_STAGE_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         for b in range(PACK_BATCHES):
             batch = docs.filter(F.col("doc_id") % PACK_BATCHES == b)
@@ -1614,8 +1602,8 @@ def _pack_incr_stage(spark: SparkSession, sf_dir: str) -> str:
                 tag=f"pack={b}",
             )
             M.commit_replace(spark, state_lake, new_state)
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    _ensure_stage(root, build)
     return placed_lake
 
 

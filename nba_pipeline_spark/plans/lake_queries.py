@@ -24,28 +24,7 @@ from ..operators.partitioning import rows_frame
 from ..session import tune
 from ..sources import load_table
 from ..sources import manifest as M
-from .queries import register
-from .relational_queries import _stage_dir
-
-
-
-def _ensure_stage(lake: str, build) -> str:
-    """Crash-safe staging: the lake is complete only when the
-    ``_STAGE_COMPLETE`` marker exists (written strictly AFTER the
-    build); any partial state from an interrupted build is wiped and
-    rebuilt rather than appended onto — version-count guards alone
-    mis-handle a crash between commits (re-appending duplicates or
-    never completing)."""
-    import os
-    import shutil
-
-    marker = os.path.join(lake, "_STAGE_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(lake, ignore_errors=True)
-        build()
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return lake
+from .queries import _ensure_stage, _stage_dir, register
 
 
 def _manifest_lake(spark: SparkSession, sf_dir: str) -> str:

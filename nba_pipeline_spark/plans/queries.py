@@ -13,6 +13,8 @@ check for those.
 
 from __future__ import annotations
 
+import os
+import shutil
 from dataclasses import dataclass
 from typing import Callable
 
@@ -36,6 +38,40 @@ def register(name: str, fn: QueryFn, oracle: str | None) -> None:
     if name in REGISTRY:
         raise ValueError(f"duplicate query name {name}")
     REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle)
+
+
+def _stage_dir(sf_dir: str, table: str, kind: str) -> str:
+    """Per-source staging path for the write-once/read-back queries.
+
+    The path embeds a fingerprint (size + mtime) of the SOURCE parquet:
+    test data regenerated in place would otherwise meet a stage keyed
+    only on _SUCCESS existence, which silently replays the old data's
+    bytes against the new data's oracle. A fingerprint change simply
+    lands in a fresh directory (stale ones are /tmp-lifetime garbage)."""
+    tag = sf_dir.strip("/").replace("/", "_")
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    try:
+        st = os.stat(src)
+        fp = f"{st.st_size:x}-{st.st_mtime_ns:x}"
+    except OSError:  # non-local source: fall back to the unkeyed path
+        fp = "nofp"
+    return f"/tmp/nba_spark_lake/{tag}/{kind}-{fp}"
+
+
+def _ensure_stage(root: str, build) -> str:
+    """Crash-safe staging: the stage is complete only when the
+    ``_STAGE_COMPLETE`` marker exists (written strictly AFTER the
+    build); any partial state from an interrupted build is wiped and
+    rebuilt rather than appended onto — version-count guards alone
+    mis-handle a crash between commits (re-appending duplicates or
+    never completing)."""
+    marker = os.path.join(root, "_STAGE_COMPLETE")
+    if not os.path.exists(marker):
+        shutil.rmtree(root, ignore_errors=True)
+        build()
+        with open(marker, "w") as fh:
+            fh.write("ok")
+    return root
 
 
 register("q_flagship", flagship, FLAGSHIP_ORACLE)

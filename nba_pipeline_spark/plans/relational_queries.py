@@ -20,30 +20,12 @@ from ..operators import setops as OS
 from ..operators import sorts as OO
 from ..sources import load_table
 from ..session import tune
-from .queries import register
+from .queries import _stage_dir, register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune(spark)
     return load_table(spark, sf_dir, name)
-
-
-def _stage_dir(sf_dir: str, table: str, kind: str) -> str:
-    """Per-source staging path for the write-once/read-back queries.
-
-    The path embeds a fingerprint (size + mtime) of the SOURCE parquet:
-    the driver regenerates /root/testdata between rounds, and a stage
-    keyed only on _SUCCESS existence would silently replay last round's
-    bytes against this round's oracle. A fingerprint change simply lands
-    in a fresh directory (stale ones are /tmp-lifetime garbage)."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_size:x}-{st.st_mtime_ns:x}"
-    except OSError:  # non-local source: fall back to the unkeyed path
-        fp = "nofp"
-    return f"/tmp/nba_spark_lake/{tag}/{kind}-{fp}"
 
 
 # --- P1-P4/P7: renames, drops, positional select ------------------------------

@@ -14,7 +14,7 @@ from ..operators import similarity as SIM
 from ..sources import load_table
 from ..sources import manifest as M
 from ..session import tune
-from .queries import register
+from .queries import _ensure_stage, _stage_dir, register
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,18 +638,11 @@ def _ivfq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build-once IVF-PQ index lakes (centroids + per-cell int8 codes)
     for this testdata generation (operators/similarity.py::
     build_ivf_quantized_index)."""
-    from .relational_queries import _stage_dir
-
     root = _stage_dir(sf_dir, "embeddings", "ivfq_index")
     centroids_path = f"{root}/centroids"
     codes_path = f"{root}/codes"
 
-    import os
-    import shutil
-
-    marker = os.path.join(root, "_STAGE_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build():
         SIM.build_ivf_quantized_index(
             spark,
             load_table(spark, sf_dir, "embeddings"),
@@ -659,8 +652,8 @@ def _ivfq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             centroids_path,
             codes_path,
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    _ensure_stage(root, build)
     return centroids_path, codes_path
 
 
@@ -743,18 +736,11 @@ def _ivfq_incr_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     update_ivf_quantized_index). Centroids are the first N_CELLS ids,
     all < IVFQ_SPLIT, so the final state is bit-identical to a full
     rebuild — which is exactly what the oracle replays."""
-    from .relational_queries import _stage_dir
-
     root = _stage_dir(sf_dir, "embeddings", "ivfq_incr")
     centroids_path = f"{root}/centroids"
     codes_path = f"{root}/codes"
 
-    import os
-    import shutil
-
-    marker = os.path.join(root, "_STAGE_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         SIM.build_ivf_quantized_index(
             spark,
@@ -773,8 +759,8 @@ def _ivfq_incr_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             centroids_path,
             codes_path,
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    _ensure_stage(root, build)
     return centroids_path, codes_path
 
 
@@ -828,18 +814,11 @@ PQ_POOL = 100   # ADT candidate pool reranked exact
 def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build-once PQ index lakes (codebooks + per-vector m-code rows)
     for this testdata generation."""
-    from .relational_queries import _stage_dir
-
     root = _stage_dir(sf_dir, "embeddings", "pq_index")
     codebooks_path = f"{root}/codebooks"
     codes_path = f"{root}/codes"
 
-    import os
-    import shutil
-
-    marker = os.path.join(root, "_STAGE_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build():
         SIM.build_pq_index(
             spark,
             load_table(spark, sf_dir, "embeddings"),
@@ -850,8 +829,8 @@ def _pq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             codebooks_path,
             codes_path,
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    _ensure_stage(root, build)
     return codebooks_path, codes_path
 
 
@@ -937,17 +916,10 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """Build-once full IVF-PQ index (coarse cells + shared residual
     codebooks + per-cell PQ code segments) for this testdata
     generation."""
-    from .relational_queries import _stage_dir
-
     root = _stage_dir(sf_dir, "embeddings", "ivfpq_index")
     paths = (f"{root}/centroids", f"{root}/codebooks", f"{root}/codes")
 
-    import os
-    import shutil
-
-    marker = os.path.join(root, "_STAGE_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build():
         SIM.build_ivfpq_index(
             spark,
             load_table(spark, sf_dir, "embeddings"),
@@ -958,8 +930,8 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
             PQ_KSUB,
             *paths,
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    _ensure_stage(root, build)
     return paths
 
 
@@ -1293,17 +1265,10 @@ def _ivfpq_deleted_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, st
     `propagate_index_deletes` (id-bloom-pruned CoW on the codes lake —
     only the victims' cell segments rewrite, no rebuild). Staged
     separately from _ivfpq_index so the shared index stays pristine."""
-    import json
-    import os
-    import shutil
-
-    from .relational_queries import _stage_dir
-
     root = _stage_dir(sf_dir, "embeddings", "ivfpq_index_del")
     paths = (f"{root}/centroids", f"{root}/codebooks", f"{root}/codes")
-    marker = os.path.join(root, "_STAGE_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         SIM.build_ivfpq_index(
             spark, emb, "vec_id", "embedding",
@@ -1317,8 +1282,8 @@ def _ivfpq_deleted_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, st
         SIM.propagate_index_deletes(
             spark, victims, "vec_id", index_code_paths=[paths[2]]
         )
-        with open(marker, "w") as fh:
-            fh.write(json.dumps(victims))
+
+    _ensure_stage(root, build)
     return paths
 
 
@@ -1719,19 +1684,13 @@ def _ann_cdf_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     oracle replays."""
     from ..sources.cdf_stream import register_cdf_stream
     from ..streaming.sinks import ann_cdf_maintain_sink
-    from .relational_queries import _stage_dir
 
     root = _stage_dir(sf_dir, "embeddings", "ann_cdf_maintain")
     ep = f"{root}/emb"
     centroids_path = f"{root}/centroids"
     codes_path = f"{root}/codes"
 
-    import os
-    import shutil
-
-    marker = os.path.join(root, "_STAGE_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(root, ignore_errors=True)
+    def build():
         register_cdf_stream(spark)
         emb = load_table(spark, sf_dir, "embeddings")
         M.commit_append(spark, ep, emb.filter(F.col("vec_id") % 5 != 0))
@@ -1763,8 +1722,8 @@ def _ann_cdf_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
             centroids_path, codes_path, f"{root}/ckpt",
         )
         q.awaitTermination(300)
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    _ensure_stage(root, build)
     return ep, centroids_path, codes_path
 
 

@@ -73,7 +73,16 @@ in the layout; untouched transfer by name) and ``commit_delete_mor`` is
 merge-on-read (an O(batch) tombstone commit; readers anti-join pending
 tombstones, sequence-scoped so later appends are never retro-masked;
 ``compact`` materializes them) — the takedown/GDPR obligations a
-100 TB training corpus carries.
+100 TB training corpus carries. ``commit_delete_dv`` and
+``commit_upsert_mor`` write deletion vectors (positional deletes).
+
+The row-level deletes and MERGEs share one keyed-change core:
+`_keyed_batch` (the physical batch, keys, pruning column and distinct
+key frame), `_segments_overlapping_keys` (stats, then blooms, classify
+the touched segments), `_dv_hits` (a deletion vector's ``(file, pos)``
+scan), `_record_victims` / `_record_merge` (the write-time change
+segment) and `_segment_empty` (a rewrite left empty is read off its
+footers, not counted by a job).
 """
 
 from __future__ import annotations
@@ -2079,8 +2088,7 @@ def commit_replace_where(
                 ~F.coalesce(pred_phys, F.lit(False))
             )
             seg = _write_segment(kept, path, None)
-            footers = _footers(_seg_path(path, seg))
-            if footers is not None and not sum(f.num_rows for f in footers):
+            if _segment_empty(path, seg):
                 emptied.append(seg)  # every row was in the scope
                 continue
             # subset rows: old tag/stats/bloom remain sound superset
@@ -2901,6 +2909,14 @@ def _footers(d: str) -> list | None:
     return out
 
 
+def _segment_empty(path: str, seg: str) -> bool:
+    """True when the just-written segment `seg` provably holds no row:
+    its footers' row counts sum to 0. A non-local lake has no footers
+    to read, and unknown counts as non-empty."""
+    footers = _footers(_seg_path(path, seg))
+    return footers is not None and not sum(f.num_rows for f in footers)
+
+
 def _footer_schema(paths: list[str]):
     """The read schema of segment dirs `paths` from their footers alone:
     the Spark row schema each data file stores under
@@ -3045,6 +3061,18 @@ def _require_no_tombstones(manifest: dict, path: str, op: str) -> None:
         )
 
 
+def _require_untagged(manifest: dict, path: str, op: str) -> None:
+    """MERGEs that write one consolidated segment (pruned, MoR) record
+    stats on it, not partition tags, so a partition-tagged lake must use
+    `commit_upsert_partitioned`."""
+    meta = manifest.get("meta", {})
+    if any("part" in meta.get(s, {}) for s in manifest["segments"]):
+        raise ValueError(
+            f"{op} on a partition-tagged lake would strand an untagged "
+            f"merged segment — use commit_upsert_partitioned: {path}"
+        )
+
+
 def _tomb_groups(
     segments: list[str], dels: list[str], meta: dict
 ) -> dict[tuple, list[str]]:
@@ -3161,31 +3189,6 @@ def _read_with_tombstones(
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=merge_schema)
     return out
-
-
-def _visible_victims(
-    spark: SparkSession,
-    path: str,
-    parent: dict,
-    touched: list[str],
-    key_df: DataFrame,
-    keys: list[str],
-    props: dict,
-) -> DataFrame:
-    """The currently-VISIBLE rows of the `touched` segments that hold a
-    key of `key_df`, under logical names — the old side of a recorded
-    delete or MoR merge. Pending tombstones apply: a row an earlier
-    delete already killed must not be emitted as deleted again. With
-    no touched segment: an empty frame of the parent's snapshot
-    schema."""
-    if not touched:
-        return read_snapshot(spark, path, version=parent["version"]).limit(0)
-    return _project_logical(
-        _read_with_tombstones(spark, path, touched, parent).join(
-            key_df, on=list(keys), how="left_semi"
-        ),
-        props,
-    )
 
 
 def _part_tag_disjoint(have, want) -> bool:
@@ -4243,12 +4246,12 @@ def commit_upsert_partitioned(
 
     from ..operators.cdc import merge_upsert
 
-    _p0 = _latest_props(spark, path)
     logical_changes = changes
     logical_keys = list(keys)
-    changes = _to_physical(changes, _p0)
+    _p0, changes, keys, _, key_df = _keyed_batch(
+        spark, path, changes, keys, checkpoint=False
+    )
     part_col = _physical(_p0, part_col)
-    keys = [_physical(_p0, k) for k in keys]
     stats_cols = _physical_cols(_p0, stats_cols)
     bloom_cols = _physical_cols(_p0, bloom_cols)
     parts = [
@@ -4278,7 +4281,7 @@ def commit_upsert_partitioned(
             stray = (
                 _read_segments(spark, path, untouched)
                 .select(*keys)
-                .join(changes.select(*keys).distinct(), on=list(keys), how="left_semi")
+                .join(key_df, on=list(keys), how="left_semi")
                 .limit(1)
                 .count()
             )
@@ -4327,24 +4330,11 @@ def commit_upsert_partitioned(
                 )
         out: dict = {}
         if record_cdf:
-            # the write-time change segment (see commit_upsert):
-            # restricted to the change keys — carried rows inside the
-            # touched partitions are identical on both sides anyway.
-            # Both sides project to LOGICAL names so the recorded frame
-            # is exactly what snapshot_diff computes post-hoc; merged is
-            # checkpointed above, so the diff isn't a self-join.
-            ckeys = changes.select(*keys).distinct()
-            new_r = merged.join(ckeys, on=list(keys), how="left_semi")
-            if touched:
-                old_r = base.join(ckeys, on=list(keys), how="left_semi")
-            else:
-                old_r = rows_frame(spark, [], new_r.schema)
-            out = _record_change_segment(
-                spark,
-                path,
-                _project_logical(old_r, _p0),
-                _project_logical(new_r, _p0),
-                logical_keys,
+            # the write-time change segment (see commit_upsert); merged
+            # is checkpointed above, so the diff isn't a self-join
+            out = _record_merge(
+                spark, path, base if touched else None, merged,
+                key_df, keys, _p0, logical_keys,
             )
         # one keyed pass over the merged partitions; it regenerates the
         # skipping metadata on them (index-maintenance callers keep
@@ -4366,18 +4356,66 @@ def commit_upsert_partitioned(
     return _commit(spark, path, "upsert_partitioned", build, tag=tag)
 
 
+# --- the keyed-change core: what the row-level deletes and MERGEs share
+
+# the largest key batch the bloom step of `_segments_overlapping_keys`
+# collects to the driver: a larger key set saturates the union
+# false-positive rate anyway, and collecting it would not be bounded
+_BLOOM_PROBE_CAP = 1024
+
+
+def _keyed_batch(
+    spark: SparkSession,
+    path: str,
+    batch: DataFrame,
+    keys: list[str],
+    stats_key: str | None = None,
+    checkpoint: bool = True,
+) -> tuple[dict, DataFrame, list[str], str, DataFrame]:
+    """The prelude of a keyed row-level op: ``(props, batch, keys,
+    stats_key, key_df)``. `props` are the newest manifest's; the batch,
+    the keys and the pruning column (`stats_key`, default the first
+    key) come back under its column mapping's physical names, because
+    segments are uniform-physical. `key_df` is the batch's distinct key
+    tuples, checkpointed when `checkpoint` (the op reads it more than
+    once, and every commit attempt classifies against it)."""
+    props = _latest_props(spark, path)
+    batch = _to_physical(batch, props)
+    keys = [_physical(props, k) for k in keys]
+    sk = _physical(props, stats_key) if stats_key else keys[0]
+    if sk not in keys:
+        raise ValueError(f"stats_key {stats_key!r} must be one of the keys {keys}")
+    key_df = batch.select(*keys).distinct()
+    if checkpoint:
+        key_df = key_df.localCheckpoint(eager=True)
+    return props, batch, keys, sk, key_df
+
+
 def _segments_overlapping_keys(
-    spark: SparkSession, manifest: dict, key_df: DataFrame, key_col: str
+    spark: SparkSession,
+    manifest: dict,
+    key_df: DataFrame,
+    key_col: str,
+    cap: int = _BLOOM_PROBE_CAP,
 ) -> tuple[list[str], list[str]]:
     """(touched, untouched): classify the manifest's data segments by
-    PROVABLE key-range overlap with the batch's keys — ONE agg job over
-    the batch regardless of segment count (each segment's recorded
-    [min,max] becomes one flag column; the manifest is KB-sized by
-    construction so the column list is bounded). A segment without
-    min/max stats on `key_col` is always touched — no information must
-    mean "assume overlap", never "skip". Soundness is inherited from
-    the stats themselves: a range that excludes every batch key
-    PROVES the segment holds none of them."""
+    PROVABLE overlap with the keys of `key_df` on `key_col`, in two
+    steps. Soundness is inherited from the metadata: a range or a bloom
+    that excludes every batch key PROVES the segment holds none.
+
+    1. Stats: ONE agg job over the batch regardless of segment count
+       (each segment's recorded [min,max] becomes one flag column; the
+       manifest is KB-sized by construction so the column list is
+       bounded). A segment without min/max stats on `key_col` is
+       always touched — no information must mean "assume overlap",
+       never "skip".
+    2. Blooms: a touched segment whose bloom on `key_col` maybe-contains
+       none of the keys moves to untouched. This is what makes point-id
+       deletes on an id-bloomed cell-partitioned codes lake O(touched
+       cells): ids are assigned by content, not by cell, so id ranges
+       span every cell. It runs only when a touched segment has such a
+       bloom and the batch holds at most `cap` keys (one bounded
+       collect)."""
     from pyspark.sql import functions as F
 
     meta = manifest.get("meta", {})
@@ -4404,7 +4442,114 @@ def _segments_overlapping_keys(
         for i, (s, _, _) in enumerate(candidates):
             # NULL flag = empty batch: provably no overlap
             (touched if row[f"__s{i}"] == 1 else untouched).append(s)
-    return touched, untouched
+    blooms = {
+        s: meta.get(s, {}).get("bloom", {}).get(key_col) for s in touched
+    }
+    blooms = {s: b for s, b in blooms.items() if b is not None}
+    if not blooms or cap <= 0:
+        return touched, untouched
+    head = key_df.select(key_col).limit(cap + 1).collect()
+    vals = [r[0] for r in head if r[0] is not None]
+    if len(head) > cap or not vals:
+        return touched, untouched
+    probes = _bloom_probes(spark, {key_col: vals})[key_col]
+    cleared = {
+        s for s, bloom in blooms.items()
+        if not any(_bloom_maybe_contains(bloom, h) for h in probes)
+    }
+    return (
+        [s for s in touched if s not in cleared],
+        untouched + [s for s in touched if s in cleared],
+    )
+
+
+def _dv_hits(
+    spark: SparkSession,
+    path: str,
+    props: dict,
+    touched: list[str],
+    key_df: DataFrame,
+    keys: list[str],
+) -> DataFrame:
+    """The position scan of a deletion vector (DV, a positional
+    delete): ``(file, pos)`` of every row of the `touched` segments
+    that holds a key of `key_df` — its segment-relative file and its
+    row index there, read under the widened DDL of `props`."""
+    from pyspark.sql import functions as F
+
+    if not touched:
+        return rows_frame(spark, [], "file string, pos bigint")
+    raw = _read_segments(spark, path, touched, schema_ddl=_widened_ddl(props))
+    return (
+        raw.select(
+            _dv_relpath(F.col("_metadata.file_path")).alias("file"),
+            F.col("_metadata.row_index").alias("pos"),
+            *keys,
+        )
+        .join(key_df, on=list(keys), how="left_semi")
+        .select("file", "pos")
+    )
+
+
+def _record_victims(
+    spark: SparkSession,
+    path: str,
+    parent: dict | None,
+    touched: list[str],
+    key_df: DataFrame,
+    keys: list[str],
+    props: dict,
+    logical_keys: list[str],
+    new: DataFrame | None = None,
+) -> dict:
+    """Record the rows a delete or an MoR merge supersedes as a change
+    segment (`_record_change_segment`). The old side is the currently
+    VISIBLE rows of the `touched` segments that hold a key of `key_df`,
+    under logical names: pending tombstones apply, so a row an earlier
+    delete already killed is not recorded as deleted again. The new
+    side is `new` (the rows an MoR merge appends) or nothing (a
+    delete)."""
+    if touched:
+        old = _project_logical(
+            _read_with_tombstones(spark, path, touched, parent).join(
+                key_df, on=list(keys), how="left_semi"
+            ),
+            props,
+        )
+    elif new is not None:
+        old = rows_frame(spark, [], new.schema)
+    else:
+        old = read_snapshot(spark, path, version=parent["version"]).limit(0)
+    if new is None:
+        new = rows_frame(spark, [], old.schema)
+    return _record_change_segment(spark, path, old, new, logical_keys)
+
+
+def _record_merge(
+    spark: SparkSession,
+    path: str,
+    old: DataFrame | None,
+    new: DataFrame,
+    key_df: DataFrame,
+    keys: list[str],
+    props: dict,
+    logical_keys: list[str],
+) -> dict:
+    """Record a copy-on-write MERGE's valued delta as a change segment:
+    `old` (the rows the merge read; None when it read none) against
+    `new` (the rows it writes), both restricted to the change keys —
+    the other rows are identical on both sides — and projected to
+    LOGICAL names, so the record is what `snapshot_diff` computes."""
+    new_r = _project_logical(
+        new.join(key_df, on=list(keys), how="left_semi"), props
+    )
+    if old is None:
+        old_r = rows_frame(spark, [], new_r.schema)
+    else:
+        old_r = _project_logical(
+            old.join(key_df, on=list(keys), how="left_semi"), props
+        )
+    return _record_change_segment(spark, path, old_r, new_r, logical_keys)
 
 
 def commit_upsert_pruned(
@@ -4421,9 +4566,10 @@ def commit_upsert_pruned(
     `commit_upsert`'s full-table rewrite for fact tables that are
     key-range clustered rather than partition-tagged: only segments
     whose recorded ``stats`` range on `stats_key` (default: first merge
-    key) OVERLAPS the change batch are read, merged, and rewritten;
-    every other segment transfers into the new manifest BY NAME — zero
-    data movement. At 100 TB a CDC batch touching 3 of 10,000
+    key) OVERLAPS the change batch, and whose bloom on it (if any) may
+    hold a change key, are read, merged, and rewritten; every other
+    segment transfers into the new manifest BY NAME — zero data
+    movement. At 100 TB a CDC batch touching 3 of 10,000
     key-range segments rewrites 3.
 
     Soundness: pruning is keyed on the MERGE KEY itself, so an
@@ -4457,30 +4603,21 @@ def commit_upsert_pruned(
     _check_schema(spark, path, changes.drop(version_col))
     from ..operators.cdc import merge_upsert
 
-    _p0 = _latest_props(spark, path)
     logical_changes = changes
     logical_keys = list(keys)
-    changes = _to_physical(changes, _p0)
-    keys = [_physical(_p0, k) for k in keys]
-    stats_key = _physical(_p0, stats_key) if stats_key else None
-    stats_key = stats_key or keys[0]
-    if stats_key not in keys:
-        raise ValueError(f"stats_key {stats_key!r} must be one of the merge keys {keys}")
+    _p0, changes, keys, sk, key_df = _keyed_batch(
+        spark, path, changes, keys, stats_key, checkpoint=False
+    )
+
     def build(parent):
         touched: list[str] = []
         untouched: list[str] = []
         if parent is not None:
             _require_no_tombstones(parent, path, "commit_upsert_pruned")
             _require_not_widened(_props(parent), path, "commit_upsert_pruned")
-            meta = parent.get("meta", {})
-            if any("part" in meta.get(s, {}) for s in parent["segments"]):
-                raise ValueError(
-                    "commit_upsert_pruned on a partition-tagged lake would "
-                    "strand an untagged merged segment — use "
-                    f"commit_upsert_partitioned: {path}"
-                )
+            _require_untagged(parent, path, "commit_upsert_pruned")
             touched, untouched = _segments_overlapping_keys(
-                spark, parent, changes.select(stats_key).distinct(), stats_key
+                spark, parent, key_df, sk
             )
         if touched:
             base = _read_segments(spark, path, touched)
@@ -4495,7 +4632,7 @@ def commit_upsert_pruned(
         # cols: merge_upsert emits one row per key tuple, and pruning
         # is keyed on stats_key ∈ keys, so an untouched segment
         # provably holds no merged key tuple (base rows by the unique
-        # table invariant; change rows by the stats proof).
+        # table invariant; change rows by the stats or bloom proof).
         props = _props(parent)
         uniq = _physical_cols(props, props.get("unique", []))
         if uniq and not set(keys) <= set(uniq):
@@ -4514,7 +4651,7 @@ def commit_upsert_pruned(
             # would be worse)
             "meta": {
                 seg: _stats_meta(
-                    _read_segments(spark, path, [seg]), [], [stats_key]
+                    _read_segments(spark, path, [seg]), [], [sk]
                 )[0][1]
             },
             "props": _schema_props(
@@ -4522,76 +4659,19 @@ def commit_upsert_pruned(
             ),
         }
         if record_cdf:
-            # write-time change segment (LOGICAL names, the
-            # snapshot_diff contract): old side = the touched segments
+            # write-time change segment: old side = the touched segments
             # (the pruning proof: untouched segments hold no change
-            # key) restricted to the change keys; new side re-reads the
-            # freshly written segment (fresh lineage, as commit_upsert)
-            ckeys = changes.select(*keys).distinct()
-            new_r = _project_logical(
-                _read_segments(spark, path, [seg]).join(
-                    ckeys, on=list(keys), how="left_semi"
-                ),
-                _p0,
-            )
-            if touched:
-                old_r = _project_logical(
-                    _read_segments(spark, path, touched).join(
-                        ckeys, on=list(keys), how="left_semi"
-                    ),
-                    _p0,
-                )
-            else:
-                old_r = rows_frame(spark, [], new_r.schema)
-            out.update(
-                _record_change_segment(spark, path, old_r, new_r, logical_keys)
-            )
+            # key); new side re-reads the freshly written segment
+            # (fresh lineage, as commit_upsert)
+            out.update(_record_merge(
+                spark, path,
+                _read_segments(spark, path, touched) if touched else None,
+                _read_segments(spark, path, [seg]),
+                key_df, keys, _p0, logical_keys,
+            ))
         return out
 
     return _commit(spark, path, "upsert_pruned", build)
-
-
-def _bloom_refine_touched(
-    spark: SparkSession,
-    manifest: dict,
-    touched: list[str],
-    key_df: DataFrame,
-    key_col: str,
-    cap: int,
-) -> tuple[list[str], list[str]]:
-    """(still_touched, cleared): bloom-test stats-touched segments
-    against a BOUNDED key batch — a bloom that maybe-contains none of
-    the keys PROVES the segment holds none (clearing is sound). This is
-    what makes point-id deletes on an id-bloomed cell-partitioned codes
-    lake O(touched cells): id min/max ranges span every cell (ids are
-    assigned by content, not by id), so stats classification alone
-    touches everything. Batches larger than `cap` skip the refinement
-    (a huge key set saturates the union false-positive rate anyway and
-    collecting it driver-side would not be bounded)."""
-    with_blooms = [
-        s for s in touched
-        if key_col in manifest.get("meta", {}).get(s, {}).get("bloom", {})
-    ]
-    if not with_blooms or cap <= 0:
-        return touched, []
-    head = key_df.select(key_col).limit(cap + 1).collect()
-    if len(head) > cap:
-        return touched, []
-    vals = [r[0] for r in head if r[0] is not None]
-    if not vals:
-        return touched, []
-    probes = _bloom_probes(spark, {key_col: vals})[key_col]
-    meta = manifest.get("meta", {})
-    still, cleared = [], []
-    for s in touched:
-        bloom = meta.get(s, {}).get("bloom", {}).get(key_col)
-        if bloom is not None and not any(
-            _bloom_maybe_contains(bloom, positions) for positions in probes
-        ):
-            cleared.append(s)
-        else:
-            still.append(s)
-    return still, cleared
 
 
 def commit_delete(
@@ -4601,21 +4681,22 @@ def commit_delete(
     keys: list[str],
     stats_key: str | None = None,
     target_files: int | None = None,
-    bloom_probe_cap: int = 1024,
+    bloom_probe_cap: int = _BLOOM_PROBE_CAP,
     record_cdf: bool = False,
     tag: str | None = None,
 ) -> int:
     """Row-level DELETE, copy-on-write: rewrite ONLY the segments whose
-    key range can contain a delete key (same one-job stats
-    classification as `commit_upsert_pruned`, sharpened by segment
+    key range can contain a delete key (the one-job stats
+    classification of `commit_upsert_pruned`, sharpened by segment
     BLOOMS for key batches up to `bloom_probe_cap` — the id-bloomed
     index-lake takedown path rewrites only bloom-positive cells even
     though id ranges span every cell); each touched segment is
     anti-joined against the delete keys and rewritten IN PLACE in the
     layout (its partition/stats/bloom metadata carries over — still
     sound: deletion only shrinks a segment, so recorded bounds and
-    blooms stay supersets); a segment emptied entirely just drops from
-    the manifest. Untouched segments transfer by name — the
+    blooms stay supersets); a segment emptied entirely (its rewrite's
+    footers count no row) drops from the manifest and its rewrite's
+    dir is removed. Untouched segments transfer by name — the
     takedown/GDPR path on a 100 TB lake rewrites the few segments that
     hold the keys, not the table. NULL delete keys match no row (SQL
     semantics). The classification and rewrite run in the commit's
@@ -4636,15 +4717,10 @@ def commit_delete(
     victims are one semi-join of the TOUCHED segments the delete reads
     anyway, so the recording costs O(deleted rows), and downstream
     single-step diffs skip re-reading the rewrite width."""
-    _p0 = _latest_props(spark, path)
     logical_keys = list(keys)
-    deletes = _to_physical(deletes, _p0)
-    keys = [_physical(_p0, k) for k in keys]
-    stats_key = _physical(_p0, stats_key) if stats_key else None
-    stats_key = stats_key or keys[0]
-    if stats_key not in keys:
-        raise ValueError(f"stats_key {stats_key!r} must be one of the delete keys {keys}")
-    key_df = deletes.select(*keys).distinct().localCheckpoint(eager=True)
+    _p0, _, keys, sk, key_df = _keyed_batch(
+        spark, path, deletes, keys, stats_key
+    )
 
     def build(m):
         if m is None:
@@ -4653,32 +4729,29 @@ def commit_delete(
         _require_not_widened(_props(m), path, "commit_delete")
         meta = m.get("meta", {})
         touched, untouched = _segments_overlapping_keys(
-            spark, m, key_df.select(stats_key), stats_key
+            spark, m, key_df, sk, bloom_probe_cap
         )
-        # second prune: segment blooms clear stats-ambiguous segments
-        # for bounded key batches (the index-lake takedown shape)
-        touched, cleared = _bloom_refine_touched(
-            spark, m, touched, key_df, stats_key, bloom_probe_cap
-        )
-        untouched = untouched + cleared
         out: dict = {}
         if record_cdf:
             # the write-time change segment: deleted rows with their
             # old values — only the touched segments are read, and
             # they're the ones the rewrite below reads anyway
-            vict = _visible_victims(spark, path, m, touched, key_df, keys, _p0)
-            out = _record_change_segment(
-                spark, path, vict, rows_frame(spark, [], vict.schema),
-                logical_keys,
+            out = _record_victims(
+                spark, path, m, touched, key_df, keys, _p0, logical_keys
             )
         new_segs: dict[str, dict] = {}
         for s in touched:
-            remaining = _read_segments(spark, path, [s]).join(
-                key_df, on=list(keys), how="left_anti"
+            ns = _write_segment(
+                _read_segments(spark, path, [s]).join(
+                    key_df, on=list(keys), how="left_anti"
+                ),
+                path,
+                target_files,
             )
-            if remaining.isEmpty():
-                continue  # fully-deleted segment: drop from the manifest
-            ns = _write_segment(remaining, path, target_files)
+            if _segment_empty(path, ns):
+                # fully-deleted segment: drop it from the manifest
+                shutil.rmtree(_seg_path(path, ns))
+                continue
             new_segs[ns] = {
                 k: v for k, v in meta.get(s, {}).items() if k != "seq"
             }
@@ -4731,18 +4804,11 @@ def commit_delete_mor(
     delete's read side, against which downstream diffs then read
     O(deleted rows) instead of re-deriving the tombstone's effect.
     ``stats_key`` picks the pruning column (default: first key)."""
-    _p0 = _latest_props(spark, path)
     logical_keys = list(keys)
-    deletes = _to_physical(deletes, _p0)
-    keys = [_physical(_p0, k) for k in keys]
-    if record_cdf:
-        sk = _physical(_p0, stats_key) if stats_key else keys[0]
-        if sk not in keys:
-            raise ValueError(
-                f"stats_key {stats_key!r} must be one of the delete keys"
-            )
-        key_df = deletes.select(*keys).distinct().localCheckpoint(eager=True)
-    seg = _write_segment(deletes.select(*keys).distinct(), path, 1)
+    _p0, _, keys, sk, key_df = _keyed_batch(
+        spark, path, deletes, keys, stats_key, checkpoint=record_cdf
+    )
+    seg = _write_segment(key_df, path, 1)
 
     def build(parent):
         out = {
@@ -4760,19 +4826,10 @@ def commit_delete_mor(
             raise ValueError(
                 f"cannot delete from an empty manifest lake: {path}"
             )
-        touched, _untch = _segments_overlapping_keys(
-            spark, parent, key_df.select(sk), sk
-        )
-        touched, _clr = _bloom_refine_touched(
-            spark, parent, touched, key_df, sk, 1024
-        )
-        vict = _visible_victims(spark, path, parent, touched, key_df, keys, _p0)
-        out.update(
-            _record_change_segment(
-                spark, path, vict, rows_frame(spark, [], vict.schema),
-                logical_keys,
-            )
-        )
+        touched, _ = _segments_overlapping_keys(spark, parent, key_df, sk)
+        out.update(_record_victims(
+            spark, path, parent, touched, key_df, keys, _p0, logical_keys
+        ))
         return out
 
     return _commit(spark, path, "delete_mor", build, tag=tag)
@@ -4899,7 +4956,7 @@ def commit_delete_dv(
     deletes: DataFrame,
     keys: list[str],
     stats_key: str | None = None,
-    bloom_probe_cap: int = 1024,
+    bloom_probe_cap: int = _BLOOM_PROBE_CAP,
     tag: str | None = None,
     record_cdf: bool = False,
 ) -> int:
@@ -4936,43 +4993,20 @@ def commit_delete_dv(
     scan already reads the victim rows, so recording adds one
     projected write of O(deleted rows), and the DV path joins the
     other delete tiers on the recorded O(changes) feed."""
-    from pyspark.sql import functions as F
-
-    _p0 = _latest_props(spark, path)
     logical_keys = list(keys)
-    deletes = _to_physical(deletes, _p0)
-    keys = [_physical(_p0, k) for k in keys]
-    sk = _physical(_p0, stats_key) if stats_key else keys[0]
-    if sk not in keys:
-        raise ValueError(
-            f"stats_key {stats_key!r} must be one of the delete keys {keys}"
-        )
-    key_df = deletes.select(*keys).distinct().localCheckpoint(eager=True)
+    _p0, _, keys, sk, key_df = _keyed_batch(
+        spark, path, deletes, keys, stats_key
+    )
 
     def build(m):
         if m is None:
             raise ValueError(f"cannot delete from an empty manifest lake: {path}")
-        touched, _untch = _segments_overlapping_keys(
-            spark, m, key_df.select(sk), sk
+        touched, _ = _segments_overlapping_keys(
+            spark, m, key_df, sk, bloom_probe_cap
         )
-        touched, _clr = _bloom_refine_touched(
-            spark, m, touched, key_df, sk, bloom_probe_cap
+        dv_seg = _write_segment(
+            _dv_hits(spark, path, _props(m), touched, key_df, keys), path, 1
         )
-        if touched:
-            ddl = _widened_ddl(_props(m))
-            raw = _read_segments(spark, path, touched, schema_ddl=ddl)
-            hits = (
-                raw.select(
-                    _dv_relpath(F.col("_metadata.file_path")).alias("file"),
-                    F.col("_metadata.row_index").alias("pos"),
-                    *keys,
-                )
-                .join(key_df, on=list(keys), how="left_semi")
-                .select("file", "pos")
-            )
-        else:
-            hits = rows_frame(spark, [], "file string, pos bigint")
-        dv_seg = _write_segment(hits, path, 1)
         out = {
             "segments": _carry(m),
             "deletes": list(m.get("deletes", [])) + [dv_seg],
@@ -4985,13 +5019,9 @@ def commit_delete_dv(
             # victims for the recorded feed = currently-VISIBLE rows
             # (the raw position scan above may legitimately carry
             # redundant already-masked positions)
-            vict = _visible_victims(spark, path, m, touched, key_df, keys, _p0)
-            out.update(
-                _record_change_segment(
-                    spark, path, vict, rows_frame(spark, [], vict.schema),
-                    logical_keys,
-                )
-            )
+            out.update(_record_victims(
+                spark, path, m, touched, key_df, keys, _p0, logical_keys
+            ))
         return out
 
     return _commit(spark, path, "delete_dv", build, tag=tag)
@@ -5005,7 +5035,7 @@ def commit_upsert_mor(
     version_col: str,
     stats_key: str | None = None,
     target_files: int | None = None,
-    bloom_probe_cap: int = 1024,
+    bloom_probe_cap: int = _BLOOM_PROBE_CAP,
     tag: str | None = None,
     record_cdf: bool = False,
 ) -> int:
@@ -5018,7 +5048,7 @@ def commit_upsert_mor(
     file is rewritten: a CDC batch whose keys SCATTER across the
     keyspace (the common fact-table case without clustering) costs
     O(batch + pruned position scan) where every copy-on-write path
-    (`commit_upsert` :3753, `_partitioned`, `_pruned` :4163) rewrites
+    (`commit_upsert`, `_partitioned`, `_pruned`) rewrites
     each touched segment in full. `compact()` materializes the DVs
     and re-consolidates, exactly as for DV deletes — write-cheap now,
     read-optimal after maintenance, the deferred-compaction contract.
@@ -5060,22 +5090,15 @@ def commit_upsert_mor(
     changes = _upcast_to_schema(spark, path, changes)  # before validation
     _check_constraints(spark, path, changes)
     _check_schema(spark, path, changes.drop(version_col))
-    from pyspark.sql import functions as F
-
     from ..operators.cdc import merge_upsert
 
-    _p0 = _latest_props(spark, path)
     logical_keys = list(keys)
     # version_col is batch-only (never lands), so its name is shared
     # between the logical batch and the physical translation
     logical_changes = changes.drop(version_col)
-    changes = _to_physical(changes, _p0)
-    keys = [_physical(_p0, k) for k in keys]
-    sk = _physical(_p0, stats_key) if stats_key else keys[0]
-    if sk not in keys:
-        raise ValueError(
-            f"stats_key {stats_key!r} must be one of the merge keys {keys}"
-        )
+    _p0, changes, keys, sk, _ = _keyed_batch(
+        spark, path, changes, keys, stats_key, checkpoint=False
+    )
     # LWW fold of the batch alone (no base rows — the base never
     # rewrites): one row per key tuple, version_col dropped
     folded = merge_upsert(
@@ -5086,20 +5109,9 @@ def commit_upsert_mor(
     def build(m):
         touched: list[str] = []
         if m is not None:
-            if any(
-                "part" in m.get("meta", {}).get(s, {})
-                for s in m["segments"]
-            ):
-                raise ValueError(
-                    "commit_upsert_mor on a partition-tagged lake would "
-                    "strand an untagged merged segment — use "
-                    f"commit_upsert_partitioned: {path}"
-                )
-            touched, _untch = _segments_overlapping_keys(
-                spark, m, key_df.select(sk), sk
-            )
-            touched, _clr = _bloom_refine_touched(
-                spark, m, touched, key_df, sk, bloom_probe_cap
+            _require_untagged(m, path, "commit_upsert_mor")
+            touched, _ = _segments_overlapping_keys(
+                spark, m, key_df, sk, bloom_probe_cap
             )
         props = _props(m)
         uniq = _physical_cols(props, props.get("unique", []))
@@ -5114,25 +5126,15 @@ def commit_upsert_mor(
                 )
         dv_seg = None
         if touched:
-            raw = _read_segments(
-                spark, path, touched, schema_ddl=_widened_ddl(props)
+            dv_seg = _write_segment(
+                _dv_hits(spark, path, props, touched, key_df, keys), path, 1
             )
-            hits = (
-                raw.select(
-                    _dv_relpath(F.col("_metadata.file_path")).alias("file"),
-                    F.col("_metadata.row_index").alias("pos"),
-                    *keys,
-                )
-                .join(key_df, on=list(keys), how="left_semi")
-                .select("file", "pos")
-            )
-            cand = _write_segment(hits, path, 1)
             # reference the tombstone only when it kills rows — a pure
             # insert batch that merely stats-overlapped must not tax
-            # every future read with an empty anti-join (the unused
-            # dir is an invisible, vacuumable orphan)
-            if _read_segments(spark, path, [cand]).limit(1).count():
-                dv_seg = cand
+            # every future read with an empty anti-join
+            if _segment_empty(path, dv_seg):
+                shutil.rmtree(_seg_path(path, dv_seg))
+                dv_seg = None
         new_seg = _write_segment(folded, path, target_files)
         [(_, st)] = _stats_meta(_read_segments(spark, path, [new_seg]), [], [sk])
         meta = {new_seg: st}
@@ -5147,25 +5149,12 @@ def commit_upsert_mor(
         }
         if record_cdf:
             # the batch IS the delta: visible victims vs folded rows
-            if touched:
-                vict = _visible_victims(
-                    spark, path, m, touched, key_df, keys, _p0
-                )
-            else:
-                vict = rows_frame(
-                    spark, [], _project_logical(folded, _p0).schema
-                )
-            out.update(
-                _record_change_segment(
-                    spark,
-                    path,
-                    vict,
-                    _project_logical(
-                        _read_segments(spark, path, [new_seg]), _p0
-                    ),
-                    logical_keys,
-                )
-            )
+            out.update(_record_victims(
+                spark, path, m, touched, key_df, keys, _p0, logical_keys,
+                new=_project_logical(
+                    _read_segments(spark, path, [new_seg]), _p0
+                ),
+            ))
         return out
 
     return _commit(spark, path, "upsert_mor", build, tag=tag)

@@ -5,6 +5,8 @@ tests/test_adversarial.py."""
 
 from __future__ import annotations
 
+import pytest
+
 from nba_pipeline_spark.operators.cdc import apply_changelog, merge_upsert
 
 
@@ -378,12 +380,17 @@ def test_maintain_sink_works_on_uri_scheme_view_path(spark, tmp_path):
 # ---------------------------------------------- write-time recorded CDF (r10)
 
 
-def test_recorded_cdf_equals_computed(spark, tmp_path):
-    """commit_upsert(record_cdf=True) stores the commit's valued delta
+@pytest.mark.parametrize(
+    "op", ["commit_upsert", "commit_upsert_pruned", "commit_upsert_mor"]
+)
+def test_recorded_cdf_equals_computed(spark, tmp_path, op):
+    """A MERGE with record_cdf=True stores the commit's valued delta
     at write time; snapshot_diff's recorded fast path must equal the
     post-hoc diff of the two snapshots — including NULL→value /
     value→NULL transitions, group moves, inserts, and a change row
-    identical to its base row (which must NOT appear)."""
+    identical to its base row (which must NOT appear). The full
+    rewrite, the pruned and the merge-on-read MERGE record the same
+    feed for the same batch."""
     from nba_pipeline_spark.sources import manifest as M
     from nba_pipeline_spark.sources.manifest import _diff_frames
 
@@ -395,7 +402,7 @@ def test_recorded_cdf_equals_computed(spark, tmp_path):
             "k int, grp string, v bigint",
         ),
     )
-    M.commit_upsert(
+    getattr(M, op)(
         spark, lake,
         spark.createDataFrame(
             [

@@ -692,7 +692,7 @@ def test_query_runs_from_any_cwd(tmp_path):
 
     from conftest import SF_DIR
 
-    from nba_pipeline_spark.plans.relational_queries import _stage_dir
+    from nba_pipeline_spark.plans.queries import _stage_dir
 
     repo = str(Path(__file__).resolve().parent.parent)
     sf = tmp_path / "sf"  # a fresh source dir stages a fresh lake

@@ -819,6 +819,31 @@ def test_commit_upsert_pruned_stats_less_and_tagged_guards(spark, tmp_path):
         )
 
 
+def test_commit_upsert_pruned_bloom_clears_stats_overlap(spark, tmp_path):
+    """Pruned MERGE on a lake with a bloom on the key: a segment whose
+    stats range overlaps the batch but whose bloom excludes every
+    change key transfers by NAME; the bloom-positive one re-merges."""
+    lake = str(tmp_path / "lake")
+    for lo in (0, 10):  # interleaved keys: both ranges span the batch
+        M.commit_append(
+            spark, lake,
+            spark.createDataFrame(
+                [(k, f"d{k}") for k in range(lo, 200, 20)], "k int, t string"
+            ),
+            stats_cols=["k"], bloom_cols=["k"],
+        )
+    evens, odds = M.resolve_segments(spark, lake)
+    changes = spark.createDataFrame(
+        [(30, "UP", 5), (35, "NEW", 5)], "k int, t string, ver int"
+    )
+    M.commit_upsert_pruned(spark, lake, changes, ["k"], "ver")
+    after = M.resolve_segments(spark, lake)
+    assert evens in after and odds not in after and len(after) == 2
+    got = {(r["k"], r["t"]) for r in M.read_snapshot(spark, lake).collect()}
+    expect = {(k, f"d{k}") for k in range(0, 200, 10)} - {(30, "d30")}
+    assert got == expect | {(30, "UP"), (35, "NEW")}
+
+
 def test_commit_delete_cow_prunes_and_drops_empty(spark, tmp_path):
     """CoW delete: only stats-overlapping segments rewrite (others
     transfer by name, metadata carried); a fully-deleted segment drops
@@ -847,6 +872,8 @@ def test_commit_delete_cow_prunes_and_drops_empty(spark, tmp_path):
     M.commit_delete(spark, lake, all_200, ["k"])
     after2 = M.resolve_segments(spark, lake)
     assert seg_200 not in after2 and len(after2) == 2
+    # the emptied rewrite leaves no dir behind under data/
+    assert set(os.listdir(f"{lake}/data")) == {seg_0, seg_100, seg_200} | set(after2)
     assert {r["k"] for r in M.read_snapshot(spark, lake).collect()} == (
         {k for k in range(0, 100, 10)} | {k for k in range(100, 200, 10)} - {110, 150}
     )

@@ -184,7 +184,7 @@ def test_dynamic_partition_pruning_from_dim_filter(spark):
     from nba_pipeline_spark.sources import load_table
 
     # ensure the partitioned lake exists (q_partition_prune stages it)
-    from nba_pipeline_spark.plans.relational_queries import _stage_dir
+    from nba_pipeline_spark.plans.queries import _stage_dir
 
     REGISTRY["q_partition_prune"].fn(spark, SF_DIR).count()
     lake = _stage_dir(SF_DIR, "orders", "orders_by_year")
