@@ -789,29 +789,28 @@ def embedding_lsh_neardup_pairs(
         a, b = probe.alias("a"), F.broadcast(bd).alias("b")
     else:
         a, b = probe_side.alias("a"), bd.alias("b")
+    # HOF dot, NOT the unrolled chain: the threshold sits in the join
+    # condition, which is evaluated by the INTERPRETED expression path
+    # (join conditions sit outside whole-stage codegen) — there a
+    # single zip_with/aggregate loop node beats a 64-term tree with 128
+    # getItem nodes ~6x (measured 4.4 s -> 0.7 s at sf0.1; both fold
+    # left-to-right from 0.0, so results are bit-identical). It is the
+    # LAST conjunct, so only id-ordered pairs pay the dot: a trailing
+    # filter would be pushed into the condition ahead of the id test.
+    sim = F.expr(f"round(try_divide({dot_sql('a.v', 'b.v')}, a.nrm * b.nrm), 4)")
     cond = (
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.bucket") == F.col("b.bucket"))
         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    )
-    # HOF dot, NOT the unrolled chain: Catalyst pushes the threshold
-    # filter into the join condition, which is evaluated by the
-    # INTERPRETED expression path (join conditions sit outside
-    # whole-stage codegen) — there a single zip_with/aggregate loop
-    # node beats a 64-term tree with 128 getItem nodes ~6x (measured
-    # 4.4 s -> 0.7 s at sf0.1; both fold left-to-right from 0.0, so
-    # results are bit-identical).
-    sim = F.try_divide(
-        F.expr(dot_sql("`a`.`v`", "`b`.`v`")), F.col("a.nrm") * F.col("b.nrm")
+        & (sim >= threshold)
     )
     return (
         a.join(b, cond)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.round(sim, 4).alias("sim"),
+            sim.alias("sim"),
         )
-        .filter(F.col("sim") >= threshold)
         .distinct()
     )
 
@@ -829,8 +828,8 @@ def embedding_neardup_pairs(
     """Tier 5b: cosine near-duplicates within blocks (label / IVF cell).
 
     Same blocked self-join shape. The per-pair dot is the HOF fold
-    (``dot_sql``): the threshold filter is pushed into the join
-    condition, which runs on the interpreted path, where an unrolled
+    (``dot_sql``): the threshold is the join condition's last conjunct,
+    which runs on the interpreted path, where an unrolled
     chain is ~4x slower (re-measured at sf0.1: 2.4 s unrolled vs 0.5 s
     HOF, bit-identical results).
 
@@ -887,12 +886,16 @@ def embedding_neardup_pairs(
         a, b = probe.alias("a"), F.broadcast(docs).alias("b")
     else:
         a, b = docs_gated.alias("a"), docs.alias("b")
-    cond = " AND ".join([f"a.{ident} < b.{ident}"] + [f"a.{k} = b.{k}" for k in keys])
-    sim = f"try_divide({dot_sql('a.v', 'b.v')}, a.nrm * b.nrm)"
-    return (
-        a.join(b, F.expr(cond))
-        .selectExpr(f"a.{ident} AS id_a", f"b.{ident} AS id_b", f"round({sim}, 4) AS sim")
-        .where(f"sim >= {float(threshold)!r}D")
+    # the threshold is the LAST conjunct: only id-ordered pairs of one
+    # block pay the dot (a trailing filter would be pushed ahead of them)
+    sim = f"round(try_divide({dot_sql('a.v', 'b.v')}, a.nrm * b.nrm), 4)"
+    cond = " AND ".join(
+        [f"a.{ident} < b.{ident}"]
+        + [f"a.{k} = b.{k}" for k in keys]
+        + [f"{sim} >= {float(threshold)!r}D"]
+    )
+    return a.join(b, F.expr(cond)).selectExpr(
+        f"a.{ident} AS id_a", f"b.{ident} AS id_b", f"{sim} AS sim"
     )
 
 
@@ -1010,26 +1013,22 @@ def semdedup_pairs(
         a, b = probe.alias("a"), F.broadcast(with_csim).alias("b")
     else:
         a, b = kept.alias("a"), with_csim.alias("b")
-    cond = (F.col("a.cid") == F.col("b.cid")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    # pair sim via the HOF fold (the threshold is the interpreted join
+    # condition's last conjunct — see embedding_lsh_neardup_pairs);
+    # csim above stays unrolled (it is evaluated in a codegen'd project)
+    sim = F.expr(f"round(try_divide({dot_sql('a.v', 'b.v')}, a.nrm * b.nrm), 4)")
+    cond = (
+        (F.col("a.cid") == F.col("b.cid"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        & (sim >= threshold)
     )
-    # pair sim via the HOF fold (the threshold filter lands in the
-    # interpreted join condition — see embedding_neardup_pairs); csim
-    # above stays unrolled (it is evaluated in a codegen'd project)
-    sim = F.try_divide(
-        F.expr(dot_sql("`a`.`v`", "`b`.`v`")), F.col("a.nrm") * F.col("b.nrm")
-    )
-    return (
-        a.join(b, cond)
-        .select(
-            F.col("a.cid").alias("cell"),
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.csim").alias("csim_a"),
-            F.col("b.csim").alias("csim_b"),
-            F.round(sim, 4).alias("sim"),
-        )
-        .filter(F.col("sim") >= threshold)
+    return a.join(b, cond).select(
+        F.col("a.cid").alias("cell"),
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        F.col("a.csim").alias("csim_a"),
+        F.col("b.csim").alias("csim_b"),
+        sim.alias("sim"),
     )
 
 

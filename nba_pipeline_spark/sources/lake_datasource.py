@@ -74,6 +74,10 @@ from . import manifest_store as store
 from .lake_stream import _join, _pa_type, _schema_triples_at
 from .manifest_store import _DATA_DIR, _pafs
 
+# the lake's one encoding (`manifest._lake_writer`) in pyarrow's terms:
+# zstd column chunks and DataPage v2 pages
+_PQ_ENCODING = {"compression": "zstd", "data_page_version": "2.0"}
+
 
 def _pinned_version(path: str, options) -> int:
     vs = store.versions(path)
@@ -706,7 +710,7 @@ class ManifestLakeWriter(DataSourceArrowWriter):
                         [self._rename.get(n, n) for n in batch.schema.names]
                     )
                 if writer is None:
-                    writer = pq.ParquetWriter(full, batch.schema)
+                    writer = pq.ParquetWriter(full, batch.schema, **_PQ_ENCODING)
                 writer.write_batch(batch)
                 rows += batch.num_rows
                 for c in phys_stats:
@@ -775,6 +779,7 @@ class ManifestLakeWriter(DataSourceArrowWriter):
                 pa.table({f.name: [] for f in fields},
                          schema=pa.schema(fields)),
                 f"{seg_dir}/part-empty.parquet",
+                **_PQ_ENCODING,
             )
         shutil.rmtree(self._staging, ignore_errors=True)
 

@@ -49,6 +49,13 @@ segment and/or tmp manifest that no committed manifest references —
 invisible to every reader, reclaimed by vacuum. A crash after the
 publish is a completed commit.
 
+**One encoding at rest.** Every lake data file (data, DV, compaction,
+keyed ``partitionBy`` and CDF change segments) is written zstd with
+Parquet 2.0 pages by `_lake_writer`; the ``manifest_lake`` DataSource
+writes zstd and DataPage v2 through pyarrow. The codec is recorded per
+file, in its footer, so a lake written snappy before stays readable
+and one lake may hold both.
+
 At 100 TB: the manifest holds directory names, not per-file entries, so
 it stays KB-sized; resolution is one small-file read on the driver;
 scan planning over the listed dirs is Spark's normal file-index path
@@ -110,6 +117,12 @@ from .manifest_store import (
 # orders of magnitude past any real window while keeping the manifest
 # KB-sized at unbounded commit counts.
 _MAX_TAGS = 10_000
+
+# the largest key batch a bloom point probe collects to the driver (the
+# bloom step of `_segments_overlapping_keys`, `_check_unique`'s probe):
+# a larger key set saturates the union false-positive rate anyway, and
+# collecting it would not be bounded
+_BLOOM_PROBE_CAP = 1024
 
 
 def _jpath(spark: SparkSession, p: str):
@@ -257,6 +270,19 @@ def _walk_entries(
     return out
 
 
+def _lake_writer(df: DataFrame):
+    """The writer of every lake data file: zstd column chunks and
+    Parquet 2.0 pages (DataPage v2; where the dictionary does not pay,
+    parquet-mr falls back to DELTA_BINARY_PACKED for integers and
+    DELTA_BYTE_ARRAY for strings, so a unique int64 key costs bits per
+    row, not eight bytes)."""
+    return (
+        df.write.mode("overwrite")
+        .option("compression", "zstd")
+        .option("parquet.writer.version", "PARQUET_2_0")
+    )
+
+
 def _write_segment(
     df: DataFrame,
     path: str,
@@ -267,9 +293,11 @@ def _write_segment(
 ) -> str:
     """Write `df` to a new dir under ``data/`` and return its name: a
     segment, or with `partition_by` the tmp dir `_write_segments`
-    renames the partition dirs out of."""
+    renames the partition dirs out of. The files take the lake's one
+    encoding (`_lake_writer`: zstd, Parquet 2.0 pages); the codec is
+    per file, so older snappy segments read beside them."""
     seg = f"{'.tmp' if partition_by else 'seg'}-{uuid.uuid4().hex[:12]}"
-    w = (df.coalesce(target_files) if target_files else df).write.mode("overwrite")
+    w = _lake_writer(df.coalesce(target_files) if target_files else df)
     if partition_by:
         w = w.partitionBy(partition_by)
     # FILE-level parquet blooms on the declared point-lookup columns:
@@ -886,10 +914,10 @@ def _check_unique(
     if cur is None or not _read_manifest(spark, path, cur)["segments"]:
         return
     if len(cols) == 1:
-        head = batch.distinct().limit(1025).collect()
+        head = batch.distinct().limit(_BLOOM_PROBE_CAP + 1).collect()
         if not head:
             return
-        if len(head) <= 1024:
+        if len(head) <= _BLOOM_PROBE_CAP:
             vals = [r[0] for r in head]
             if read_for_keys(spark, path, cols[0], vals).limit(1).count():
                 raise ConstraintViolation(
@@ -4358,12 +4386,6 @@ def commit_upsert_partitioned(
 
 # --- the keyed-change core: what the row-level deletes and MERGEs share
 
-# the largest key batch the bloom step of `_segments_overlapping_keys`
-# collects to the driver: a larger key set saturates the union
-# false-positive rate anyway, and collecting it would not be bounded
-_BLOOM_PROBE_CAP = 1024
-
-
 def _keyed_batch(
     spark: SparkSession,
     path: str,
@@ -5487,8 +5509,8 @@ def _record_change_segment(
     names — the snapshot_diff contract) as a write-time change segment
     under ``cdf/``; returns the manifest extra that records it."""
     seg = f"seg-{uuid.uuid4().hex[:12]}"
-    _diff_frames(old, new, list(keys), include_values=True).write.mode(
-        "overwrite"
+    _lake_writer(
+        _diff_frames(old, new, list(keys), include_values=True)
     ).parquet(f"{path}/{_CDF_DIR}/{seg}")
     return {"cdf": seg}
 

@@ -2679,3 +2679,139 @@ def test_fresh_version_read_issues_no_job(spark, tmp_path):
         *[M._seg_path(lake, s) for s in M.resolve_segments(spark, lake)]
     ).schema
     assert df.count() == 9
+
+
+# ---------------------------------------------------------------------
+# The lake's one encoding: every lake data file is written zstd with
+# Parquet 2.0 pages, and the codec is per file, so segments written
+# before (snappy, v1 pages) read beside new ones.
+# ---------------------------------------------------------------------
+
+
+def _chunks(files):
+    """(file, column, compression, encodings) of every column chunk in
+    the footers of `files`."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in sorted(files):
+        md = pq.read_metadata(f)
+        for g in range(md.num_row_groups):
+            for i in range(md.num_columns):
+                c = md.row_group(g).column(i)
+                out.append((f, c.path_in_schema, c.compression, c.encodings))
+    return out
+
+
+def _parquet_files(*roots):
+    import glob
+
+    return {
+        f for r in roots for f in glob.glob(f"{r}/**/*.parquet", recursive=True)
+    }
+
+
+def test_every_lake_writer_lands_zstd_parquet2_files(spark, tmp_path):
+    """An append, a keyed partitioned append, a MERGE with a recorded
+    change segment, a DV delete and a ``manifest_lake`` DataSource write
+    each land files whose every column chunk is zstd; the Spark-written
+    unique int64 key takes Parquet 2.0's DELTA_BINARY_PACKED."""
+    from nba_pipeline_spark.sources.lake_datasource import register_lake_source
+
+    def batch(lo, hi, ver=0):
+        return spark.range(lo, hi).selectExpr(
+            "id AS k", "CAST(id % 3 AS INT) AS p", "concat('s', id) AS s",
+            f"{ver} AS ver",
+        )
+
+    lake, part = str(tmp_path / "lake"), str(tmp_path / "part")
+    register_lake_source(spark)
+    writes = {
+        "append": lambda: M.commit_append(spark, lake, batch(0, 1000), target_files=1),
+        "partitioned": lambda: M.commit_append_partitioned(
+            spark, part, batch(0, 300), "p"
+        ),
+        "upsert_cdf": lambda: M.commit_upsert(
+            spark, lake, batch(900, 1100, ver=1), ["k"], "ver", record_cdf=True
+        ),
+        "delete_dv": lambda: M.commit_delete_dv(
+            spark, lake, spark.range(5).selectExpr("id AS k"), ["k"]
+        ),
+        "datasource": lambda: batch(2000, 2100).write.format("manifest_lake")
+        .option("path", lake).mode("append").save(),
+    }
+    seen: set = set()
+    landed = {}
+    for name, write in writes.items():
+        write()
+        now = _parquet_files(lake, part)
+        landed[name], seen = now - seen, now
+        assert landed[name], f"{name} wrote no file"
+    assert any("/cdf/" in f for f in landed["upsert_cdf"])
+    chunks = _chunks(seen)
+    assert {c for _, _, c, _ in chunks} == {"ZSTD"}, [
+        (f, col, c) for f, col, c, _ in chunks if c != "ZSTD"
+    ]
+    key = [e for f, col, _, e in _chunks(landed["append"]) if col == "k"]
+    assert key and all("DELTA_BINARY_PACKED" in e for e in key), key
+    assert M.read_snapshot(spark, lake).count() == 1100 - 5 + 100
+
+
+def test_mixed_codec_lake_reads_merges_compacts_like_snappy(
+    spark, tmp_path, monkeypatch
+):
+    """A lake whose first segment is a snappy file beside zstd segments
+    returns the same rows from `read_snapshot`, `commit_upsert` and
+    `compact` as a lake written all snappy (the encoding lakes had
+    before)."""
+    import shutil
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: r["id"])
+
+    def ops(lake):
+        out = [rows(M.read_snapshot(spark, lake))]
+        M.commit_upsert(spark, lake, _rich(spark, 3, 9, ver=1), ["id"], "ver")
+        out.append(rows(M.read_snapshot(spark, lake)))
+        M.compact(spark, lake)
+        out.append(rows(M.read_snapshot(spark, lake)))
+        return out
+
+    def codecs(lake):
+        return {c for _, _, c, _ in _chunks(_parquet_files(lake))}
+
+    old = str(tmp_path / "old")
+    with monkeypatch.context() as mp:
+        mp.setattr(
+            M, "_lake_writer",
+            lambda df: df.write.mode("overwrite").option("compression", "snappy"),
+        )
+        M.commit_append(spark, old, _rich(spark, 0, 6))
+        M.commit_append(spark, old, _rich(spark, 6, 12))
+        want = ops(old)
+    assert codecs(old) == {"SNAPPY"}
+
+    mixed = str(tmp_path / "mixed")
+    M.commit_append(spark, mixed, _rich(spark, 0, 6))
+    # swap the committed segment's file for a snappy copy of its rows
+    seg = M._seg_path(mixed, M.resolve_segments(spark, mixed)[0])
+    copy = str(tmp_path / "copy")
+    spark.read.parquet(seg).coalesce(1).write.option(
+        "compression", "snappy"
+    ).parquet(copy)
+    for f in os.listdir(seg):
+        if ".parquet" in f:
+            os.remove(os.path.join(seg, f))
+    for f in _parquet_files(copy):
+        shutil.move(f, seg)
+    M.commit_append(spark, mixed, _rich(spark, 6, 12))
+    assert codecs(mixed) == {"SNAPPY", "ZSTD"}
+    assert ops(mixed) == want
+
+    # the MERGE takes rows 3..8 from the change batch (its version
+    # column lands NULL, as `merge_upsert` writes it)
+    changed = _rich(spark, 3, 9).withColumn("ver", F.lit(None).cast("int"))
+    merged = rows(
+        _rich(spark, 0, 3).union(changed).union(_rich(spark, 9, 12))
+    )
+    assert want == [rows(_rich(spark, 0, 12)), merged, merged]
