@@ -54,11 +54,16 @@ def merge_upsert(
 
     `changes` must carry the base columns plus `version_col`; pass
     `tiebreak` columns when versions can collide (ordering is pinned
-    NULLS LAST on every sort key so both engines agree).
+    NULLS LAST on every sort key so both engines agree). A base that
+    stores `version_col` keeps it: a winning change row carries its own
+    version into it.
     """
     ver = sql_ident(version_col)
     b = base.selectExpr("*", "0 AS __src", "CAST(NULL AS BIGINT) AS __ver")
-    cols = [sql_ident(c) for c in changes.columns if c != version_col]
+    keep_ver = version_col in base.columns
+    cols = [
+        sql_ident(c) for c in changes.columns if c != version_col or keep_ver
+    ]
     c = changes.selectExpr(*cols, "1 AS __src", f"CAST({ver} AS BIGINT) AS __ver")
     u = b.unionByName(c, allowMissingColumns=True)
     order = ["__src", "__ver"] + [sql_ident(t) for t in tiebreak]

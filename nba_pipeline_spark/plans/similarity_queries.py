@@ -771,16 +771,12 @@ def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGE that rewrites only touched cells and REGENERATES their id
     blooms — the search that follows is byte-for-byte the full-rebuild
     search (same centroids by construction), so the oracle is the exact
-    full-index SQL, no recall pin. Asserted here: every live cell
-    segment still carries a bloom after maintenance (point lookups keep
-    pruning — the metadata-freshness property compaction-style rewrites
-    usually lose). At 100 TB this is ingest-rate index maintenance:
-    touched cells only, KB manifest CAS, readers snapshot-isolated."""
+    full-index SQL, no recall pin. Every live cell segment keeps its
+    bloom through maintenance (tests/test_dedup_similarity.py). At
+    100 TB this is ingest-rate index maintenance: touched cells only,
+    KB manifest CAS, readers snapshot-isolated."""
     tune(spark)
     centroids_path, codes_path = _ivfq_incr_index(spark, sf_dir)
-    m = M._read_manifest(spark, codes_path, M.current_version(spark, codes_path))
-    for s in m["segments"]:
-        assert "bloom" in m["meta"].get(s, {}), f"segment {s} lost its bloom"
     return SIM.ivf_quantized_topk(
         spark,
         load_table(spark, sf_dir, "embeddings"),

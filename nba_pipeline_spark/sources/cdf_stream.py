@@ -46,9 +46,12 @@ equality loop since Acero has no nested kernels. The output schema is
 pinned at stream start; restart to pick up additive evolution.
 
 JVM-less by construction like the sibling sources: planning runs in a
-Python worker (manifest_store for the KB-sized JSON manifests), reads
-run in executors (pyarrow parquet + the lake_datasource tombstone
-anti-join).
+Python worker (manifest_store for the KB-sized JSON manifests;
+``lake_stream._parent_delta`` for a version's removed/added segments;
+``lake_datasource._seg_files`` and ``_tomb_specs`` for files and
+applicable tombstones), reads run in executors through the lake's
+shared Arrow read path (``lake_datasource._read_logical``, or
+``_apply_tombstones`` + ``_project`` for carried rows).
 
 Reference parity: the reference recomputes warehouse tables wholesale
 per DAG run (gcs_to_bq_dag.py:6); this is the streaming change feed a
@@ -67,10 +70,17 @@ from pyspark.sql.datasource import (
 
 from ..session import register_data_source
 from . import manifest_store as store
-from .lake_stream import _join, _pa_type, _schema_triples_at, _start_floor
+from .lake_datasource import (
+    _apply_tombstones,
+    _project,
+    _read_logical,
+    _recorded_triples,
+    _seg_files,
+    _tomb_specs,
+)
+from .lake_stream import _parent_delta, _start_floor
 from .manifest_store import (
     _CDF_DIR,
-    _DATA_DIR,
     _is_widening,
     _pafs,
     _props_triples,
@@ -82,65 +92,6 @@ _DATACHANGE_FALSE = {
     "compact", "compact_small", "zorder",
     "cluster", "cluster_partitioned", "cluster_incremental",
 }
-
-
-def _schema_triples(path: str, v: int) -> list[tuple[str, str, str]]:
-    trip = _schema_triples_at(path, v)
-    if not trip:
-        raise ValueError(
-            f"manifest_cdf: lake at {path} has no recorded schema — "
-            "make one write so the schema is stamped, then restart"
-        )
-    return trip
-
-
-def _seg_files(path: str, s: str, base_dir: str = _DATA_DIR) -> list[str]:
-    from pyarrow import fs as pafs
-
-    fs, norm = _pafs(path)
-    if "://" in s:
-        dir_uri, (seg_fs, seg_dir) = s, _pafs(s)
-    elif s.startswith("/"):
-        dir_uri, seg_fs, seg_dir = s, fs, s
-    else:
-        dir_uri = _join(path, base_dir, s)
-        seg_fs, seg_dir = fs, _join(norm, base_dir, s)
-    infos = seg_fs.get_file_info(pafs.FileSelector(seg_dir))
-    return [
-        _join(dir_uri, info.base_name)
-        for info in sorted(infos, key=lambda i: i.base_name)
-        if info.base_name.endswith(".parquet")
-    ]
-
-
-def _applicable_tombs(path: str, m: dict, seg: str) -> list[tuple]:
-    """(delete_keys, tomb files) for every tombstone of manifest `m`
-    that seq-applies to `seg` (the _read_with_tombstones fence)."""
-    meta = m.get("meta", {})
-
-    def seq(s: str) -> int:
-        return int(meta.get(s, {}).get("seq", 0))
-
-    out = []
-    for t in m.get("deletes", []):
-        if seq(seg) < seq(t):
-            tmeta = meta.get(t, {})
-            if tmeta.get("dv"):
-                # positional deletion vector (commit_delete_dv):
-                # kcols=None marks it for _apply_tombstones; dv_segs
-                # scopes the read to named segments
-                dv_segs = tmeta.get("dv_segs")
-                if dv_segs and seg not in set(dv_segs):
-                    continue
-                out.append((None, _seg_files(path, t)))
-                continue
-            kcols = list(tmeta.get("delete_keys", ()))
-            if not kcols:
-                raise ValueError(
-                    f"tombstone segment lacks delete_keys metadata: {path}"
-                )
-            out.append((kcols, _seg_files(path, t)))
-    return out
 
 
 class ManifestCDFDataSource(DataSource):
@@ -158,10 +109,7 @@ class ManifestCDFDataSource(DataSource):
         keys = [k for k in str(self.options.get("keys", "")).split(",") if k]
         if not path or not keys:
             raise ValueError("manifest_cdf requires path and keys options")
-        vs = store.versions(path)
-        if not vs:
-            raise ValueError(f"manifest_cdf: no commits at {path}")
-        triples = _schema_triples(path, vs[-1])
+        triples = _recorded_triples("manifest_cdf", path)
         types = {n: t for n, t, _ in triples}
         missing = [k for k in keys if k not in types]
         if missing:
@@ -192,10 +140,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         self._shards = max(int(options.get("cdf_shards", "1")), 1)
         self._start = _start_floor("manifest_cdf", path, options)
         # value schema pinned at stream start (restart to widen)
-        vs = store.versions(path)
-        if not vs:
-            raise ValueError(f"manifest_cdf: no commits at {path}")
-        self._triples = _schema_triples(path, vs[-1])
+        self._triples = _recorded_triples("manifest_cdf", path)
 
     def initialOffset(self) -> dict:
         return {"version": self._start}
@@ -289,21 +234,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                 ))
                 for f in files
             ]
-        # the predecessor is the manifest's recorded parent, NOT v-1:
-        # version numbers may SKIP (WAP/branch publish floors the number
-        # via min_version) and a dense v-1 probe would raise
-        # _RetentionGap on a lake that was never vacuumed. A parent
-        # whose manifest truly IS vacuumed still raises _RetentionGap —
-        # that one is real (the base state is unreconstructable).
-        par = m1.get("parent")
-        m0 = store.read_manifest(self._path, par) if par else None
-        segs0 = list(m0["segments"]) if m0 else []
-        segs1 = list(m1["segments"])
-        dels0 = list(m0.get("deletes", [])) if m0 else []
-        dels1 = list(m1.get("deletes", []))
-        removed = [s for s in segs0 if s not in set(segs1)]
-        added = [s for s in segs1 if s not in set(segs0)]
-        dels_changed = dels0 != dels1
+        m0, removed, added, dels_changed = _parent_delta(self._path, m1)
         if not removed and not dels_changed:
             # pure append: one parallel insert-partition per new file
             return [
@@ -314,24 +245,24 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         # diff version: candidates = removed (old), added (new), and —
         # only under a tombstone change — carried segments under BOTH
         # tombstone sets
+        listed: dict = {}
+
+        def spec(m: dict, s: str) -> list:
+            return _tomb_specs(self._path, m, s, listed)
+
         old_specs = [
-            (_seg_files(self._path, s), _applicable_tombs(self._path, m0, s))
-            for s in removed
+            (_seg_files(self._path, s), spec(m0, s)) for s in removed
         ]
         new_specs = [
-            (_seg_files(self._path, s), _applicable_tombs(self._path, m1, s))
-            for s in added
+            (_seg_files(self._path, s), spec(m1, s)) for s in added
         ]
         carried_specs = []
         if dels_changed:
+            fresh = set(added)
             carried_specs = [
-                (
-                    _seg_files(self._path, s),
-                    _applicable_tombs(self._path, m0, s),
-                    _applicable_tombs(self._path, m1, s),
-                )
-                for s in segs1
-                if s in set(segs0)
+                (_seg_files(self._path, s), spec(m0, s), spec(m1, s))
+                for s in m1["segments"]
+                if s not in fresh
             ]
         return [
             InputPartition((
@@ -368,37 +299,6 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         return parts or [InputPartition(None)]
 
     # ------------------------------------------------- executor read
-
-    def _project(self, t, fname):
-        """Physical file table -> logical, manifest-typed, null-filled
-        (the manifest_stream read contract)."""
-        import pyarrow as pa
-
-        cols = []
-        for n, typ, phys in self._triples:
-            want = _pa_type(typ, fname, n)
-            if phys in t.column_names:
-                col = t.column(phys)
-                if col.type != want:
-                    col = col.cast(want)
-                cols.append(col)
-            else:
-                cols.append(pa.nulls(t.num_rows, want))
-        return pa.table(cols, names=[n for n, _, _ in self._triples])
-
-    def _load(self, files, tombs):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from .lake_datasource import _apply_tombstones
-
-        out = []
-        for f in files:
-            fs, norm = _pafs(f)
-            t = pq.read_table(norm, filesystem=fs)
-            t = _apply_tombstones(t, tombs, self._triples, f)
-            out.append(self._project(t, f))
-        return out
 
     def _emit(self, keys_tbl, op_arr, old_struct, new_struct, v):
         import pyarrow as pa
@@ -449,43 +349,26 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                     "_commit_version", pa.array([v] * t.num_rows, pa.int32())
                 ).to_batches()
                 return
-            n_rows = t.num_rows
-            key_cols = []
-            for k in self._keys:
-                rn, typ = plan[k]
-                want = _pa_type(typ, fname, k)
-                col = t.column(rn).combine_chunks()
-                if col.type != want:
-                    col = col.cast(want)
-                key_cols.append(col)
-            vals = self._value_cols()
+            import pyarrow.compute as pc
+
+            def bridged(tbl, names):
+                # the plan's recorded name is the "physical" one here
+                # (None: a column added after the recording null-fills)
+                return _project(
+                    tbl, [(n, plan[n][1], plan[n][0]) for n in names], fname
+                )
+
             sides = []
             for side in ("old", "new"):
                 sa = t.column(side).combine_chunks()
-                import pyarrow.compute as pc
-
-                absent = pc.is_null(sa)
-                children = []
-                for nname in vals:
-                    rn, typ = plan[nname]
-                    want = _pa_type(typ, fname, nname)
-                    if rn is None:  # column added after the recording
-                        children.append(pa.nulls(n_rows, want))
-                        continue
-                    child = sa.field(rn)
-                    if child.type != want:
-                        child = child.cast(want)
-                    children.append(child)
-                sides.append(
-                    pa.StructArray.from_arrays(
-                        children, names=vals, mask=absent
-                    )
+                fields = pa.table(
+                    sa.flatten(), names=[f.name for f in sa.type]
                 )
-            out = pa.table(
-                key_cols
-                + [t.column("op"), sides[0], sides[1],
-                   pa.array([v] * n_rows, pa.int32())],
-                names=self._keys + ["op", "old", "new", "_commit_version"],
+                sides.append(self._struct_of(
+                    bridged(fields, self._value_cols()), pc.is_valid(sa)
+                ))
+            out = self._emit(
+                bridged(t, self._keys), t.column("op"), sides[0], sides[1], v
             )
             self._require_keys(out)
             yield from out.to_batches()
@@ -493,10 +376,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         if kind == "ins":
             _, v, fname, keys, triples = partition.value
             self._keys, self._triples = keys, triples
-            import pyarrow.parquet as pq
-
-            fs, norm = _pafs(fname)
-            t = self._project(pq.read_table(norm, filesystem=fs), fname)
+            t = _read_logical(fname, self._triples)
             self._require_keys(t)
             n = t.num_rows
             present = pa.array([True] * n, pa.bool_())
@@ -514,14 +394,16 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         self._keys, self._triples = keys, triples
         import pyarrow.parquet as pq
 
-        from .lake_datasource import _apply_tombstones
-
-        old_parts: list = []
-        new_parts: list = []
-        for files, tombs in old_specs:
-            old_parts.extend(self._load(files, tombs))
-        for files, tombs in new_specs:
-            new_parts.extend(self._load(files, tombs))
+        old_parts = [
+            _read_logical(f, triples, tombs)
+            for files, tombs in old_specs
+            for f in files
+        ]
+        new_parts = [
+            _read_logical(f, triples, tombs)
+            for files, tombs in new_specs
+            for f in files
+        ]
         for files, t0, t1 in carried_specs:
             # a carried row is a candidate only where its visibility
             # CHANGES between the two tombstone sets (rowidx identity)
@@ -538,12 +420,12 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                 lost = sorted(i0 - i1)
                 gained = sorted(i1 - i0)
                 if lost:
-                    old_parts.append(self._project(
-                        raw.take(pa.array(lost, pa.int64())), f
+                    old_parts.append(_project(
+                        raw.take(pa.array(lost, pa.int64())), triples, f
                     ))
                 if gained:
-                    new_parts.append(self._project(
-                        raw.take(pa.array(gained, pa.int64())), f
+                    new_parts.append(_project(
+                        raw.take(pa.array(gained, pa.int64())), triples, f
                     ))
         schema = None
         for p in old_parts + new_parts:

@@ -39,6 +39,15 @@ ones and translates pushed predicates before probing, like every
 other read path. Pre-evolution files null-fill additive columns with
 their manifest-recorded types.
 
+This module holds the lake's one Arrow read path, which
+format("manifest_stream") and format("manifest_cdf") share:
+``_seg_files`` (the parquet files a segment reference names),
+``_tomb_specs`` (the tombstones ``manifest._applicable_tombs`` applies
+to a segment, with their files), ``_read_logical`` (read a file,
+``_apply_tombstones``, then ``_project`` it to logical, recorded-type
+columns) and ``_recorded_triples`` (the recorded schema, or an error
+naming the reading format).
+
 Performance position: the JVM parquet scan (``read_snapshot``) is the
 hot path — vectorized, codegen'd, zero Python. This source trades
 that for pushdown-through-SQL convenience at Arrow-batch speed (the
@@ -71,12 +80,119 @@ from pyspark.sql.datasource import (
 
 from ..session import register_data_source
 from . import manifest_store as store
-from .lake_stream import _join, _pa_type, _schema_triples_at
-from .manifest_store import _DATA_DIR, _pafs
+from .manifest_store import _DATA_DIR, _pafs, _props_triples
 
 # the lake's one encoding (`manifest._lake_writer`) in pyarrow's terms:
 # zstd column chunks and DataPage v2 pages
 _PQ_ENCODING = {"compression": "zstd", "data_page_version": "2.0"}
+
+# Spark simpleString -> pyarrow type, for upcasting widened columns and
+# null-filling columns a pre-evolution file lacks. Exotic nested types
+# raise — a lake whose evolution adds nested columns needs a
+# re-bootstrap, stated loudly.
+_PA_TYPES = {
+    "tinyint": "int8", "smallint": "int16", "int": "int32",
+    "bigint": "int64", "float": "float32", "double": "float64",
+    "string": "string", "boolean": "bool_", "date": "date32",
+    "binary": "binary",
+}
+
+
+def _pa_type(simple: str, fname: str, col: str):
+    import pyarrow as pa
+
+    if simple in _PA_TYPES:
+        return getattr(pa, _PA_TYPES[simple])()
+    if simple.startswith("decimal("):
+        p, sc = simple[8:-1].split(",")
+        return pa.decimal128(int(p), int(sc))
+    if simple.startswith("timestamp"):
+        return pa.timestamp("us")
+    if simple.startswith("array<") and simple.endswith(">"):
+        return pa.list_(_pa_type(simple[6:-1], fname, col))
+    raise ValueError(
+        f"manifest lake file {fname}: column {col!r} of type {simple!r} "
+        "has no Arrow type to null-fill or upcast to — re-bootstrap the "
+        "reader from a snapshot"
+    )
+
+
+def _join(base: str, *parts: str) -> str:
+    return "/".join([base.rstrip("/"), *parts])
+
+
+def _recorded_triples(
+    fmt: str, path: str, v: int | None = None
+) -> list[tuple[str, str, str]]:
+    """(logical, type, physical) per column recorded at version `v`
+    (the newest when None). Raises, naming the reading format `fmt`,
+    on a lake with no commits or no recorded schema."""
+    if v is None:
+        vs = store.versions(path)
+        if not vs:
+            raise ValueError(f"{fmt}: no commits at {path}")
+        v = vs[-1]
+    trip = _props_triples(store.read_manifest(path, v).get("props", {}))
+    if not trip:
+        raise ValueError(
+            f"{fmt}: lake at {path} has no recorded schema "
+            "(pre-enforcement lake) — make one write so the schema is "
+            "probed and stamped"
+        )
+    return trip
+
+
+def _seg_files(path: str, seg: str, base_dir: str = _DATA_DIR) -> list[str]:
+    """The parquet files of segment reference `seg` in the lake at
+    `path`, sorted by name. `seg` is a URI (a segment on another store),
+    an absolute path on the lake's own filesystem, or a name under
+    `base_dir`. Each file is returned as the segment-dir URI + base
+    name, so an executor re-resolves the filesystem from it — never
+    from pyarrow's scheme-stripped FileInfo.path (for S3 it drops the
+    scheme, for HDFS the authority; either would resolve the WRONG
+    filesystem executor-side)."""
+    from pyarrow import fs as pafs
+
+    if "://" in seg:
+        dir_uri, (seg_fs, seg_dir) = seg, _pafs(seg)
+    else:
+        seg_fs, norm = _pafs(path)
+        if seg.startswith("/"):
+            dir_uri = seg_dir = seg
+        else:
+            dir_uri = _join(path, base_dir, seg)
+            seg_dir = _join(norm, base_dir, seg)
+    infos = seg_fs.get_file_info(pafs.FileSelector(seg_dir))
+    return [
+        _join(dir_uri, info.base_name)
+        for info in sorted(infos, key=lambda i: i.base_name)
+        if info.base_name.endswith(".parquet")
+    ]
+
+
+def _tomb_specs(path: str, m: dict, seg: str, listed: dict) -> list[tuple]:
+    """`_apply_tombstones` input for data segment `seg` under manifest
+    `m`: one (delete key columns, or None for a positional deletion
+    vector; tombstone files) per tombstone `manifest._applicable_tombs`
+    names. `listed` caches each tombstone's files, so one planning call
+    lists every tombstone dir once. Tombstone batches are small by the
+    commit_delete_mor premise, so each task re-reading them is a
+    KB-scale cost (the JVM path broadcasts them per group)."""
+    from .manifest import _applicable_tombs
+
+    meta = m.get("meta", {})
+    out = []
+    for t in _applicable_tombs(seg, list(m.get("deletes", [])), meta):
+        tm = meta.get(t, {})
+        kcols = None if tm.get("dv") else list(tm.get("delete_keys", ()))
+        if kcols == []:
+            raise ValueError(
+                f"tombstone segment lacks delete_keys metadata: {path}"
+            )
+        if t not in listed:
+            listed[t] = _seg_files(path, t)
+        out.append((kcols, listed[t]))
+    return out
 
 
 def _pinned_version(path: str, options) -> int:
@@ -109,15 +225,10 @@ class ManifestLakeDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("manifest_lake requires a path option")
-        v = _pinned_version(path, self.options)
-        sch = store.read_manifest(path, v).get("props", {}).get("schema")
-        if not sch:
-            raise ValueError(
-                f"manifest_lake: lake at {path} has no recorded schema "
-                "(pre-enforcement lake) — make one write so the schema "
-                "is probed and stamped"
-            )
-        return ", ".join(f"{n} {t}" for n, t in sch["cols"])
+        trip = _recorded_triples(
+            "manifest_lake", path, _pinned_version(path, self.options)
+        )
+        return ", ".join(f"{n} {t}" for n, t, _ in trip)
 
     def reader(self, schema) -> "ManifestLakeReader":
         return ManifestLakeReader(self.options)
@@ -243,131 +354,95 @@ class ManifestLakeReader(DataSourceReader):
             phys(self._bloom_probes) if self._bloom_probes else None,
             _sortable_keys(phys(keys)),
         )
-        cols = _schema_triples_at(self._path, self._version)
+        cols = _props_triples(props) or []
         row_filters = [
             (cm.get(c, c), op, val) for c, op, val in row_filters
         ]
-        from pyarrow import fs as pafs
-
-        fs, norm = _pafs(self._path)
-
-        def seg_files(s: str) -> list[str]:
-            if "://" in s:
-                dir_uri, (seg_fs, seg_dir) = s, _pafs(s)
-            elif s.startswith("/"):
-                dir_uri, seg_fs, seg_dir = s, fs, s
-            else:
-                dir_uri = _join(self._path, _DATA_DIR, s)
-                seg_fs, seg_dir = fs, _join(norm, _DATA_DIR, s)
-            infos = seg_fs.get_file_info(pafs.FileSelector(seg_dir))
-            return [
-                _join(dir_uri, info.base_name)
-                for info in sorted(infos, key=lambda i: i.base_name)
-                if info.base_name.endswith(".parquet")
-            ]
-
-        # merge-on-read tombstones, seq-fenced per data segment (the
-        # _read_with_tombstones rule): ship each file the tombstone
-        # parquet files + key columns that apply to ITS segment; the
-        # executor anti-joins per batch. Tombstone batches are small
-        # by the commit_delete_mor premise, so the per-task re-read is
-        # a KB-scale cost (the JVM path broadcasts them per group).
-        meta = self._m.get("meta", {})
-        dels = list(self._m.get("deletes", []))
-
-        def seq(s: str) -> int:
-            return int(meta.get(s, {}).get("seq", 0))
-
-        tomb_files: dict[str, list[str]] = {
-            t: seg_files(t) for t in dels
-        }
+        # merge-on-read tombstones: ship each file the tombstone files
+        # + key columns that apply to ITS segment; the executor
+        # anti-joins them in `_read_logical`
+        listed: dict = {}
         parts = []
-        for s in self._m["segments"]:
-            if s not in segs:
-                continue
-            tombs = []
-            for t in dels:
-                if not (seq(s) < seq(t)):
-                    continue
-                tm = meta.get(t, {})
-                if tm.get("dv"):
-                    # positional deletion vector: kcols=None marks it;
-                    # dv_segs lets irrelevant data segments skip the
-                    # DV read outright (the file match scopes anyway)
-                    dv_segs = tm.get("dv_segs")
-                    if dv_segs and s not in set(dv_segs):
-                        continue
-                    tombs.append((None, tomb_files[t]))
-                    continue
-                tombs.append(
-                    (list(tm.get("delete_keys", ())), tomb_files[t])
-                )
-            for t_keys, _ in tombs:
-                if t_keys is not None and not t_keys:
-                    raise ValueError(
-                        f"tombstone segment lacks delete_keys metadata: "
-                        f"{self._path}"
-                    )
-            for fname in seg_files(s):
-                parts.append(
-                    InputPartition((fname, cols, row_filters, tombs))
-                )
+        for s in segs:
+            tombs = _tomb_specs(self._path, self._m, s, listed)
+            parts.extend(
+                InputPartition((fname, cols, row_filters, tombs))
+                for fname in _seg_files(self._path, s)
+            )
         return parts or [InputPartition(None)]
 
     # ------------------------------------------------- executor read
 
     def read(self, partition):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         if partition.value is None:
             return
         fname, sch_cols, row_filters, tombs = partition.value
-        fs, norm = _pafs(fname)
-        pf = pq.ParquetFile(norm, filesystem=fs)
-        have = set(pf.schema_arrow.names)
+        yield from _read_logical(
+            fname, sch_cols, tombs, row_filters
+        ).to_batches()
+
+
+def _project(t, sch_cols, fname):
+    """A data file's physical table → the lake's logical rows: each
+    recorded (logical, type, physical) column in recorded order, under
+    its LOGICAL name (column mapping: files keep the physical one),
+    narrow pre-widening columns upcast to the recorded type (int32 →
+    int64, float → double — the promotion the JVM reader performs under
+    the explicit schema), and columns a pre-evolution file lacks
+    null-filled with the recorded type."""
+    import pyarrow as pa
+
+    cols = []
+    for n, typ, phys in sch_cols:
+        want = _pa_type(typ, fname, n)
+        if phys in t.column_names:
+            col = t.column(phys)
+            cols.append(col if col.type == want else col.cast(want))
+        else:
+            cols.append(pa.nulls(t.num_rows, want))
+    return pa.table(cols, names=[n for n, _, _ in sch_cols])
+
+
+def _read_logical(fname, sch_cols, tombs=(), row_filters=()):
+    """One data file of the lake as logical rows — the read every Arrow
+    reader of the lake shares: read the file, `_apply_tombstones`, then
+    `_project`. `row_filters` ((physical col, op, value) triples)
+    push into the parquet scan as a pure hint: an unevaluable predicate
+    falls back to the unfiltered read, since Spark re-applies every
+    pushed filter."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fs, norm = _pafs(fname)
+    expr = None
+    if row_filters:
+        have = set(pq.read_schema(norm, filesystem=fs).names)
         expr = _arrow_expr(
             [(c, op, v) for c, op, v in row_filters if c in have]
         )
-        if expr is not None and any(k is None for k, _ in tombs):
-            # positional deletion vectors index the RAW file's rows: a
-            # pushdown-filtered read would shift every surviving row's
-            # index, deleting the wrong rows and resurrecting deleted
-            # ones. Read unfiltered, mask on raw positions, THEN apply
-            # the predicate (only to shrink the Arrow->JVM transfer —
-            # Spark re-checks every pushed filter regardless)
+    unevaluable = (pa.ArrowInvalid, pa.ArrowNotImplementedError, TypeError)
+    if expr is not None and any(k is None for k, _ in tombs):
+        # positional deletion vectors index the RAW file's rows: a
+        # pushdown-filtered read would shift every surviving row's
+        # index, deleting the wrong rows and resurrecting deleted ones.
+        # Read unfiltered, mask on raw positions, THEN apply the
+        # predicate (only to shrink the Arrow->JVM transfer)
+        t = _apply_tombstones(
+            pq.read_table(norm, filesystem=fs), tombs, sch_cols, fname
+        )
+        try:
+            t = t.filter(expr)
+        except unevaluable:
+            pass
+    else:
+        try:
+            t = pq.read_table(norm, filesystem=fs, filters=expr)
+        except unevaluable:
+            if expr is None:
+                raise
             t = pq.read_table(norm, filesystem=fs)
-            t = _apply_tombstones(t, tombs, sch_cols, fname)
-            try:
-                t = t.filter(expr)
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError, TypeError):
-                pass  # unevaluable predicate: Spark re-applies it
-        else:
-            try:
-                t = pq.read_table(norm, filesystem=fs, filters=expr)
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError, TypeError):
-                # type-drifted predicate pyarrow can't evaluate: fall
-                # back to the unfiltered read — Spark re-applies every
-                # filter
-                t = pq.read_table(norm, filesystem=fs)
-            t = _apply_tombstones(t, tombs, sch_cols, fname)
-        cols = []
-        for n, typ, phys_name in sch_cols:
-            want = _pa_type(typ, fname, n)
-            if phys_name in t.column_names:
-                col = t.column(phys_name)
-                if col.type != want:
-                    # type-widened lake: narrow pre-widening file
-                    # upcasts to the recorded type (int32->int64,
-                    # float->double) — same promotion the JVM reader
-                    # performs under the explicit schema
-                    col = col.cast(want)
-                cols.append(col)
-            else:  # pre-evolution file: null-fill, manifest-typed
-                cols.append(pa.nulls(t.num_rows, want))
-        yield from pa.table(
-            cols, names=[n for n, _, _ in sch_cols]
-        ).to_batches()
+        t = _apply_tombstones(t, tombs, sch_cols, fname)
+    return _project(t, sch_cols, fname)
 
 
 def _apply_tombstones(t, tombs, sch_cols, fname):
@@ -740,9 +815,10 @@ class ManifestLakeWriter(DataSourceArrowWriter):
         finally:
             if writer is not None:
                 writer.close()
+        from .manifest import _json_safe
+
         safe = {
-            c: [_py_json_safe(v[0]), _py_json_safe(v[1])]
-            for c, v in stats.items()
+            c: [_json_safe(v[0]), _json_safe(v[1])] for c, v in stats.items()
         }
         return _LakeWriteMessage(fname, rows, safe, nulls)
 
@@ -852,13 +928,6 @@ class ManifestLakeWriter(DataSourceArrowWriter):
         import shutil
 
         shutil.rmtree(self._staging, ignore_errors=True)
-
-
-
-def _py_json_safe(v):
-    if v is None or isinstance(v, (int, float, str, bool)):
-        return v
-    return str(v)  # dates/timestamps: ISO str, same rule as the JVM path
 
 
 def _min_opt(a, b):

@@ -29,21 +29,25 @@ Py4J gateway (``spark._jvm`` is unreachable here by construction), so
 nothing here touches the Hadoop FS API. Metadata — KB-sized JSON
 manifests — is listed and read through ``manifest_store`` (plain
 ``os`` on local lakes, ``pyarrow.fs`` on object stores), the same
-module every other lake reader and writer uses. Data is read with
-pyarrow parquet in executors, through ``pyarrow.fs`` resolved from
-the lake URI, so the source plans and reads against ``file://``,
-``s3://`` and ``gs://`` lakes alike (hdfs via libhdfs where
-deployed). At 100 TB the per-trigger work is O(newly appended files)
-— the same floor as Spark's own file-stream source, minus its
-unbounded seen-file ledger (the version offset IS the ledger).
+module every other lake reader and writer uses. Data is read in
+executors by the lake's shared Arrow read path
+(``lake_datasource._seg_files`` / ``_read_logical``), through
+``pyarrow.fs`` resolved from the lake URI, so the source plans and
+reads against ``file://``, ``s3://`` and ``gs://`` lakes alike (hdfs
+via libhdfs where deployed). At 100 TB the per-trigger work is
+O(newly appended files) — the same floor as Spark's own file-stream
+source, minus its unbounded seen-file ledger (the version offset IS
+the ledger).
 
 Schema comes from the manifest's recorded schema (commit-time schema
-enforcement stamps it; sources/manifest.py). Files predating an
-additive evolution null-fill the missing columns with their
-manifest-recorded types (failing would wedge the stream permanently);
-the stream's OWN output schema is pinned at start — a mid-stream
-additive evolution's extra columns are projected AWAY against the
-declared reader schema (widen by restarting, the usual
+enforcement stamps it; sources/manifest.py; read through
+``lake_datasource._recorded_triples``). A version's appended
+segments come from ``_parent_delta``, which manifest_cdf shares.
+Files predating an additive evolution null-fill the missing columns
+with their manifest-recorded types (failing would wedge the stream
+permanently); the stream's OWN output schema is pinned at start — a
+mid-stream additive evolution's extra columns are projected AWAY
+against the declared reader schema (widen by restarting, the usual
 streaming-source contract), never an arrow schema mismatch.
 """
 
@@ -57,46 +61,8 @@ from pyspark.sql.datasource import (
 
 from ..session import register_data_source
 from . import manifest_store as store
-from .manifest_store import _DATA_DIR, _pafs, _props_triples, _RetentionGap
-
-# Spark simpleString -> pyarrow type, for null-filling columns a
-# pre-evolution file lacks. Exotic nested types raise — a lake whose
-# evolution adds nested columns needs a re-bootstrap, stated loudly.
-_PA_TYPES = {
-    "tinyint": "int8", "smallint": "int16", "int": "int32",
-    "bigint": "int64", "float": "float32", "double": "float64",
-    "string": "string", "boolean": "bool_", "date": "date32",
-    "binary": "binary",
-}
-
-
-def _pa_type(simple: str, fname: str, col: str):
-    import pyarrow as pa
-
-    if simple in _PA_TYPES:
-        return getattr(pa, _PA_TYPES[simple])()
-    if simple.startswith("decimal("):
-        p, sc = simple[8:-1].split(",")
-        return pa.decimal128(int(p), int(sc))
-    if simple.startswith("timestamp"):
-        return pa.timestamp("us")
-    if simple.startswith("array<") and simple.endswith(">"):
-        return pa.list_(_pa_type(simple[6:-1], fname, col))
-    raise ValueError(
-        f"manifest_stream: cannot null-fill column {col!r} of type "
-        f"{simple!r} missing from pre-evolution file {fname} — "
-        "re-bootstrap the stream from a snapshot"
-    )
-
-
-def _join(base: str, *parts: str) -> str:
-    return "/".join([base.rstrip("/"), *parts])
-
-
-def _schema_triples_at(path: str, v: int) -> list[tuple[str, str, str]]:
-    """(logical, type, physical) per column of version v; [] for a lake
-    that predates schema recording."""
-    return _props_triples(store.read_manifest(path, v).get("props", {})) or []
+from .lake_datasource import _read_logical, _recorded_triples, _seg_files
+from .manifest_store import _RetentionGap
 
 
 def _start_floor(fmt: str, path: str, options) -> int:
@@ -136,19 +102,21 @@ def _start_floor(fmt: str, path: str, options) -> int:
     return floor
 
 
-def _schema_ddl(path: str) -> str:
-    vs = store.versions(path)
-    if not vs:
-        raise ValueError(f"manifest_stream: no commits at {path}")
-    sch = store.read_manifest(path, vs[-1]).get("props", {}).get("schema")
-    if not sch:
-        raise ValueError(
-            f"manifest_stream: lake at {path} has no recorded schema "
-            "(pre-enforcement lake) — make one write so the schema is "
-            "probed and stamped, then restart the stream"
-        )
-    cols = ", ".join(f"{n} {t}" for n, t in sch["cols"])
-    return cols + ", _commit_version int"
+def _parent_delta(path: str, m: dict) -> tuple:
+    """(parent manifest or None, removed segments, added segments,
+    whether the tombstone list changed) of manifest `m` against its
+    RECORDED parent, not v-1: WAP/branch publish skips version numbers
+    (min_version) and a dense v-1 probe would raise a spurious
+    _RetentionGap. A parent whose manifest truly IS vacuumed still
+    raises _RetentionGap — the base state is unreconstructable."""
+    par = m.get("parent")
+    m0 = store.read_manifest(path, par) if par else None
+    segs0 = list(m0["segments"]) if m0 else []
+    have0, have1 = set(segs0), set(m["segments"])
+    removed = [s for s in segs0 if s not in have1]
+    added = [s for s in m["segments"] if s not in have0]
+    dels0 = list(m0.get("deletes", [])) if m0 else []
+    return m0, removed, added, dels0 != list(m.get("deletes", []))
 
 
 class ManifestStreamDataSource(DataSource):
@@ -165,7 +133,9 @@ class ManifestStreamDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("manifest_stream requires a path option")
-        return _schema_ddl(path)
+        trip = _recorded_triples("manifest_stream", path)
+        cols = ", ".join(f"{n} {t}" for n, t, _ in trip)
+        return cols + ", _commit_version int"
 
     def streamReader(self, schema) -> "ManifestStreamReader":
         return ManifestStreamReader(self.options, schema)
@@ -207,21 +177,9 @@ class ManifestStreamReader(DataSourceStreamReader):
     def _new_files(self, v: int) -> list[tuple[str, int]]:
         """(parquet file, version) pairs appended by version v; raises
         (or skips under ignore_changes) for non-append commits."""
-        from pyarrow import fs as pafs
-
         cur = store.read_manifest(self._path, v)
-        prev_segs: set = set()
-        prev_dels: list = []
-        # predecessor = the manifest's recorded parent, not v-1:
-        # WAP/branch publish skips version numbers (min_version) and a
-        # dense probe would spuriously raise _RetentionGap
-        par = cur.get("parent")
-        if par:
-            prev = store.read_manifest(self._path, par)
-            prev_segs = set(prev["segments"])
-            prev_dels = list(prev.get("deletes", []))
-        removed = prev_segs - set(cur["segments"])
-        if removed or list(cur.get("deletes", [])) != prev_dels:
+        _, removed, added, dels_changed = _parent_delta(self._path, cur)
+        if removed or dels_changed:
             if self._ignore_changes:
                 return []
             raise ValueError(
@@ -230,30 +188,7 @@ class ManifestStreamReader(DataSourceStreamReader):
                 "restart from a snapshot, or set ignore_changes=true to "
                 "skip such commits, or consume the valued change feed"
             )
-        fs, norm = _pafs(self._path)
-        out = []
-        for s in cur["segments"]:
-            if s in prev_segs:
-                continue
-            # the partition carries the segment-dir URI + base name and
-            # the executor re-resolves the filesystem from that URI —
-            # never from pyarrow's scheme-stripped FileInfo.path (for
-            # S3 it drops the scheme, for HDFS the authority; either
-            # would resolve the WRONG filesystem executor-side)
-            if "://" in s:  # absolute ref on (possibly) another store
-                dir_uri = s
-                seg_fs, seg_dir = _pafs(s)
-            elif s.startswith("/"):
-                dir_uri = s
-                seg_fs, seg_dir = fs, s
-            else:
-                dir_uri = _join(self._path, _DATA_DIR, s)
-                seg_fs, seg_dir = fs, _join(norm, _DATA_DIR, s)
-            infos = seg_fs.get_file_info(pafs.FileSelector(seg_dir))
-            for info in sorted(infos, key=lambda i: i.base_name):
-                if info.base_name.endswith(".parquet"):
-                    out.append((_join(dir_uri, info.base_name), v))
-        return out
+        return [(f, v) for s in added for f in _seg_files(self._path, s)]
 
     def partitions(self, start: dict, end: dict):
         lo, hi = int(start.get("version", 0)), int(end.get("version", 0))
@@ -265,7 +200,9 @@ class ManifestStreamReader(DataSourceStreamReader):
         # otherwise widens the batch past the pinned reader schema and
         # fails the batch with an arrow mismatch — extra columns are
         # picked up on restart, per the stated contract.
-        cols = _schema_triples_at(self._path, hi) if hi else []
+        cols = (
+            _recorded_triples("manifest_stream", self._path, hi) if hi else []
+        )
         if self._declared is not None:
             declared = set(self._declared)
             cols = [p for p in cols if p[0] in declared]
@@ -299,40 +236,14 @@ class ManifestStreamReader(DataSourceStreamReader):
 
     def read(self, partition):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         if partition.value is None:
             return
         fname, version, sch_cols = partition.value
-        # resolve through pyarrow.fs so executor reads work on object
-        # stores, not just paths mounted on the local filesystem
-        fs, norm = _pafs(fname)
-        t = pq.read_table(norm, filesystem=fs)
-        have = set(t.column_names)
-        cols = []
-        for n, typ, phys in sch_cols:
-            # column mapping: the file stores the PHYSICAL name; the
-            # stream emits the LOGICAL one
-            if phys in have:
-                col = t.column(phys)
-                want = _pa_type(typ, fname, n)
-                if col.type != want:
-                    # type-widened lake: upcast narrow pre-widening
-                    # files to the recorded type (the declared stream
-                    # schema is pinned to it)
-                    col = col.cast(want)
-                cols.append(col)
-            else:
-                # file predates an additive evolution: null-fill with
-                # the manifest-recorded type (failing here would wedge
-                # the stream permanently — no restart can add columns
-                # to an old file)
-                cols.append(pa.nulls(t.num_rows, _pa_type(typ, fname, n)))
-        out = pa.table(cols, names=[n for n, _, _ in sch_cols])
-        out = out.append_column(
-            "_commit_version", pa.array([version] * t.num_rows, pa.int32())
-        )
-        yield from out.to_batches()
+        out = _read_logical(fname, sch_cols)
+        yield from out.append_column(
+            "_commit_version", pa.array([version] * out.num_rows, pa.int32())
+        ).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # the engine's checkpointed offset is the only state

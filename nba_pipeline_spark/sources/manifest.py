@@ -3101,34 +3101,41 @@ def _require_untagged(manifest: dict, path: str, op: str) -> None:
         )
 
 
-def _tomb_groups(
-    segments: list[str], dels: list[str], meta: dict
-) -> dict[tuple, list[str]]:
-    """Group data segments by their APPLICABLE tombstone set: seq-fenced
-    (a tombstone masks only segments committed before it), and a
-    positional deletion vector scopes to the data files its manifest
-    entry NAMES (`dv_segs`, stamped at commit from the write-time
-    position resolution) — a segment no DV names skips the (file, pos)
-    anti-join outright, the same pruning the pyarrow datasource applies
-    (lake_datasource partitions). A DV without `dv_segs` (pre-feature)
-    conservatively applies everywhere."""
+def _applicable_tombs(seg: str, dels: list[str], meta: dict) -> list[str]:
+    """The tombstones of `dels` that apply to data segment `seg` — the
+    lake's one tombstone rule, shared by the JVM read
+    (`_tomb_groups`) and the Arrow read (`lake_datasource._tomb_specs`).
+    Seq-fenced: a tombstone masks only segments committed before it.
+    A positional deletion vector scopes to the data segments its
+    manifest entry NAMES (`dv_segs`, stamped at commit from the
+    write-time position resolution), so a segment no DV names skips
+    the (file, pos) anti-join outright; a DV without `dv_segs`
+    (pre-feature) conservatively applies everywhere."""
 
     def seq(s: str) -> int:
         return int(meta.get(s, {}).get("seq", 0))
 
+    out = []
+    for t in dels:
+        if not (seq(seg) < seq(t)):
+            continue
+        tm = meta.get(t, {})
+        if tm.get("dv"):
+            dv_segs = tm.get("dv_segs")
+            if dv_segs and seg not in set(dv_segs):
+                continue  # DV provably names other files only
+        out.append(t)
+    return out
+
+
+def _tomb_groups(
+    segments: list[str], dels: list[str], meta: dict
+) -> dict[tuple, list[str]]:
+    """Group data segments by their `_applicable_tombs` set — the JVM
+    twin of the Arrow readers' per-segment `lake_datasource._tomb_specs`."""
     groups: dict[tuple, list[str]] = {}
     for s in segments:
-        applicable = []
-        for t in dels:
-            if not (seq(s) < seq(t)):
-                continue
-            tm = meta.get(t, {})
-            if tm.get("dv"):
-                dv_segs = tm.get("dv_segs")
-                if dv_segs and s not in set(dv_segs):
-                    continue  # DV provably names other files only
-            applicable.append(t)
-        groups.setdefault(tuple(applicable), []).append(s)
+        groups.setdefault(tuple(_applicable_tombs(s, dels, meta)), []).append(s)
     return groups
 
 

@@ -35,6 +35,19 @@ def test_merge_upsert_null_key_groups(spark):
     assert got == [(1, "a"), (None, "y")]
 
 
+def test_merge_upsert_keeps_a_stored_version_column(spark):
+    # a base that stores the version column keeps it: the winning
+    # change row carries its own version, never NULL
+    base = spark.createDataFrame(
+        [(1, "a", 1), (2, "b", 1)], "k int, v string, ver int"
+    )
+    changes = spark.createDataFrame(
+        [(1, "a2", 5), (3, "c", 2)], "k int, v string, ver int"
+    )
+    got = _rows(merge_upsert(base, changes, ["k"], "ver"))
+    assert got == [(1, "a2", 5), (2, "b", 1), (3, "c", 2)]
+
+
 def test_apply_changelog_delete_upsert_passthrough(spark):
     base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["k", "v"])
     log = spark.createDataFrame(

@@ -1028,6 +1028,23 @@ def test_update_ivf_quantized_index_incremental(spark, tmp_path):
         SIM.update_ivf_quantized_index(spark, mover, "vec_id", "embedding", c_inc, k_inc)
 
 
+def test_ivf_incremental_query_cells_keep_blooms(spark):
+    """q_ann_ivf_incremental's codes lake: after the incremental MERGE,
+    every live cell segment still carries its id bloom, so point
+    lookups keep pruning (the metadata freshness compaction-style
+    rewrites usually lose)."""
+    from conftest import SF_DIR
+
+    from nba_pipeline_spark.plans.similarity_queries import _ivfq_incr_index
+    from nba_pipeline_spark.sources import manifest as M
+
+    _, codes = _ivfq_incr_index(spark, SF_DIR)
+    m = M._read_manifest(spark, codes, M.current_version(spark, codes))
+    assert m["segments"]
+    for s in m["segments"]:
+        assert "bloom" in m["meta"].get(s, {}), f"segment {s} lost its bloom"
+
+
 def test_ivf_index_build_is_one_commit_and_rebuildable(spark, tmp_path):
     """The codes lake gains exactly ONE version per build (all cells
     land atomically — readers never see a partial index), and a

@@ -2808,10 +2808,10 @@ def test_mixed_codec_lake_reads_merges_compacts_like_snappy(
     assert codecs(mixed) == {"SNAPPY", "ZSTD"}
     assert ops(mixed) == want
 
-    # the MERGE takes rows 3..8 from the change batch (its version
-    # column lands NULL, as `merge_upsert` writes it)
-    changed = _rich(spark, 3, 9).withColumn("ver", F.lit(None).cast("int"))
+    # the MERGE takes rows 3..8, version column included, from the
+    # change batch
     merged = rows(
-        _rich(spark, 0, 3).union(changed).union(_rich(spark, 9, 12))
+        _rich(spark, 0, 3).union(_rich(spark, 3, 9, ver=1))
+        .union(_rich(spark, 9, 12))
     )
     assert want == [rows(_rich(spark, 0, 12)), merged, merged]
