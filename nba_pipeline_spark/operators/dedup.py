@@ -19,6 +19,20 @@ each tier prunes the candidate space for the next:
    pairs, run ONLY inside blocks (lang/source or LSH bucket / label) so
    the quadratic term is bounded by block size.
 
+The pair tiers share one blocking core, one helper per step:
+
+- `_cap_hot_blocks`   — the hot-block cap: drop buckets / blocks / cells
+                        over the size cap, drops reported through an
+                        ``Observation`` or a named observe;
+- `_bucket_pairs`     — the row-local (id_a < id_b) explode of a bucket's
+                        member array (MinHash, incremental, SimHash);
+- `_verify_candidates` — candidate pairs joined to a pinned per-doc
+                        frame on id_a, then id_b (with `_shingle_sets`
+                        and `_jaccard` for the shingle tiers);
+- `_blocked_cosine_join` — the cosine pair kernel of the three embedding
+                        tiers, broadcast or blocked sort-merge picked
+                        from one plan-size estimate.
+
 The md5-based hash functions are engine-portable on purpose: the DuckDB
 oracles replay the identical algorithm, so correctness is provable, and
 md5 min-hashing (lexicographic min over hex strings) is a valid uniform
@@ -41,9 +55,198 @@ from ..functions.vectors import (
     to_double_array,
     to_double_array_sql,
 )
-from .partitioning import fan_out
+from .partitioning import fan_out, fits_broadcast
 
 HEX = "0123456789abcdef"
+
+# --- the blocking core every pair tier shares ---------------------------------
+
+_BUCKET_METRICS = ("hot_buckets_dropped", "docs_in_dropped_buckets")
+
+
+def _cap_hot_blocks(
+    frame: DataFrame,
+    max_size: int,
+    metric_names: tuple[str, str],
+    observation,
+    observe_name: str,
+    block_keys: Sequence[str] | None = None,
+) -> DataFrame:
+    """Drop blocks holding more than `max_size` members — one degenerate
+    boilerplate cluster of m docs is an O(m²) pair blowup — and report
+    the drops: the count of hot blocks and of their members, under
+    `metric_names`, through the caller's ``Observation`` or else the
+    named observe `observe_name` (one name per plan: Spark refuses two
+    observes of one name). Caveat: when the cap empties the frame,
+    AQE's empty-relation propagation elides the metrics node and
+    ``Observation.get`` raises — read that as "every block dropped".
+
+    Array-bucket form (`block_keys` None): `frame` has one row per
+    bucket with its member array ``ids``; hot rows are filtered out.
+    Row-block form: `frame` has one row per member; a per-block count
+    over `block_keys` feeds a broadcast gate of the blocks that are not
+    hot, joined to `frame`. Gate the PROBE side only: an equi-join
+    cannot emit a pair from a block absent on one side, so one-sided
+    gating is pair-exact and keeps the metrics node out of the
+    self-join's doubled subtree."""
+    if block_keys is None:
+        blocks, size = frame, F.size("ids")
+    else:
+        blocks = frame.groupBy(*block_keys).agg(F.count(F.lit(1)).alias("__n"))
+        size = F.col("__n")
+    hot = size > max_size
+    blocks = blocks.observe(
+        observation if observation is not None else observe_name,
+        F.coalesce(F.sum(F.when(hot, 1)), F.lit(0)).alias(metric_names[0]),
+        F.coalesce(F.sum(F.when(hot, size)), F.lit(0)).alias(metric_names[1]),
+    ).filter(~hot)
+    if block_keys is None:
+        return blocks
+    return frame.join(F.broadcast(blocks.select(*block_keys)), list(block_keys))
+
+
+def _bucket_pairs(buckets: DataFrame, emit=None) -> DataFrame:
+    """Distinct (id_a < id_b) pairs of every bucket row's sorted member
+    array ``ids``, generated row-locally (no join). With `emit` the
+    members are (id, __new) structs and a pair is kept only when
+    ``emit(a, b)`` holds — the incremental tiers' new-side test."""
+
+    def pair(a, b):
+        if emit is None:
+            return F.struct(a.alias("id_a"), b.alias("id_b"))
+        return F.struct(
+            a["id"].alias("id_a"), b["id"].alias("id_b"), emit(a, b).alias("emit")
+        )
+
+    def keep(p):
+        if emit is None:
+            return p["id_a"] < p["id_b"]
+        return (p["id_a"] < p["id_b"]) & p["emit"]
+
+    pair_arr = F.filter(
+        F.flatten(
+            F.transform(
+                F.col("ids"), lambda a: F.transform(F.col("ids"), lambda b: pair(a, b))
+            )
+        ),
+        keep,
+    )
+    return (
+        buckets.select(F.explode(pair_arr).alias("p"))
+        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        .distinct()
+    )
+
+
+def _band_sigs(n_hashes: int, band_rows: int) -> Column:
+    """The in-row band array of a minhash signature frame (mh0..mhk):
+    band b is the concat of its `band_rows` hashes. Null-propagating: a
+    doc with no shingles gets NULL band sigs, filtered AFTER the
+    generate on the cheap attribute — filtering on mh0 before it would
+    reference the expensive expression twice and make the optimizer
+    re-evaluate the whole signature per reference."""
+    return F.array(
+        *[
+            F.concat(*[F.col(f"mh{b * band_rows + r}") for r in range(band_rows)])
+            for b in range(n_hashes // band_rows)
+        ]
+    )
+
+
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str, shingle_n: int) -> DataFrame:
+    """(id, sh): each doc's distinct shingle set, PINNED (localCheckpoint)
+    because both verify joins reference it — un-pinned, Catalyst's
+    CollapseProject re-evaluates the tokenize+shingle expressions per
+    join side."""
+    return (
+        fan_out(df)
+        .select(F.col(id_col), tokenize(F.col(text_col)).alias("__toks"))
+        .select(
+            id_col, F.array_distinct(shingles(F.col("__toks"), shingle_n)).alias("sh")
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def _verify_candidates(cand: DataFrame, docs: DataFrame, id_col: str, col: str) -> DataFrame:
+    """Candidate pairs (id_a, id_b) with each side's per-doc `col` from
+    `docs` as ``__sa`` / ``__sb``: two hash equi-joins on the doc id —
+    shuffle O(candidates + docs), never a self-join."""
+    a = docs.select(F.col(id_col).alias("id_a"), F.col(col).alias("__sa"))
+    b = docs.select(F.col(id_col).alias("id_b"), F.col(col).alias("__sb"))
+    return cand.join(a, "id_a").join(b, "id_b")
+
+
+def _jaccard(sa: Column, sb: Column) -> Column:
+    """Set jaccard of two distinct-element arrays, rounded to 4 dp.
+    try_divide: two empty sets give union=0 — NULL (dropped by any
+    threshold filter), not an ANSI divide-by-zero job abort."""
+    inter = F.size(F.array_intersect(sa, sb))
+    union = F.size(sa) + F.size(sb) - inter
+    return F.round(F.try_divide(inter * F.lit(1.0), union), 4)
+
+
+def _verified_jaccard(
+    cand: DataFrame, docs: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) of the candidates whose shingle sets
+    (`docs` column ``sh``) clear `threshold`."""
+    return (
+        _verify_candidates(cand, docs, id_col, "sh")
+        .withColumn("jaccard", _jaccard(F.col("__sa"), F.col("__sb")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _blocked_cosine_join(
+    src: DataFrame,
+    rows: DataFrame,
+    probe: DataFrame,
+    block_keys: Sequence[str],
+    id_col: str,
+    threshold: float,
+) -> tuple[DataFrame, str]:
+    """The cosine pair kernel of the embedding tiers: `rows` (id, block
+    keys, v, nrm, extras) self-joined within blocks, with `probe` (rows,
+    maybe hot-block gated) as the ``a`` side and `rows` as ``b``.
+    Returns the joined frame and the pair's SQL `sim` text for the
+    caller's projection.
+
+    The condition is id order, then the block equi-keys (the planner
+    takes them as the join keys wherever they stand; the optimizer
+    infers the sides' IS NOT NULL filters in condition order), then
+    the rounded cosine threshold as the LAST conjunct, so only
+    id-ordered pairs of one block pay the dot (a trailing filter would
+    be pushed into the condition ahead of the id test). The dot is the
+    HOF fold (``dot_sql``), not the unrolled chain: join conditions run
+    on the interpreted path, where a 64-term tree with 128 getItem
+    nodes is ~4-6x slower (measured 4.4 s -> 0.7 s at sf0.1,
+    bit-identical: both fold left-to-right from 0.0).
+
+    Plan choice, from ONE plan-size estimate of the input `src` (`rows`
+    may be a lazy checkpoint, whose stats are gone): while the corpus
+    fits the broadcast bar, broadcast `rows` and round-robin the probe
+    to core width. A sort-merge join on few block keys lands in as
+    many tasks as there are blocks, and AQE byte-coalesces the tiny
+    shuffle to ONE task, scoring every pair on one core (semdedup:
+    4.5 s -> 1.7 s at sf0.1). The repartition is explicit, not
+    `fan_out`: a lazy checkpoint still claims its pre-AQE width. Past
+    the bar the blocked SMJ is the 100 TB plan (parallelism = #blocks,
+    large at scale)."""
+    if fits_broadcast(src):
+        probe = probe.repartition(src.sparkSession.sparkContext.defaultParallelism)
+        a, b = probe.alias("a"), F.broadcast(rows).alias("b")
+    else:
+        a, b = probe.alias("a"), rows.alias("b")
+    ident = sql_ident(id_col)
+    sim = f"round(try_divide({dot_sql('a.v', 'b.v')}, a.nrm * b.nrm), 4)"
+    cond = " AND ".join(
+        [f"a.{ident} < b.{ident}"]
+        + [f"a.{k} = b.{k}" for k in map(sql_ident, block_keys)]
+        + [f"{sim} >= {float(threshold)!r}D"]
+    )
+    return a.join(b, F.expr(cond)), sim
 
 
 def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -153,11 +356,8 @@ def minhash_lsh_pairs(
     ``hot_buckets_dropped`` / ``docs_in_dropped_buckets`` after the
     first action); a named observe is attached otherwise so the drop
     counts land in the Spark UI / QueryExecution metrics regardless.
-    ``max_bucket=None`` disables the cap (oracle-exact replay).
-    Caveat: if the cap empties the bucket frame entirely, AQE's
-    empty-relation propagation elides the metrics node and
-    ``Observation.get`` raises — treat a missing observation on an
-    empty result as "every bucket was dropped".
+    ``max_bucket=None`` disables the cap (oracle-exact replay; see
+    `_cap_hot_blocks` for the empty-result caveat).
 
     The signature frame is PINNED (localCheckpoint): Catalyst's
     CollapseProject re-inlines the md5-min signature expressions into
@@ -170,55 +370,20 @@ def minhash_lsh_pairs(
     sigs = with_minhash_signatures(
         fan_out(df), text_col, id_col, n_hashes
     ).localCheckpoint(eager=False)
-    n_bands = n_hashes // band_rows
-    # Null-propagating concat: a doc with no shingles gets NULL band sigs,
-    # filtered AFTER the generate on the cheap attribute — filtering on
-    # mh0 before it would reference the expensive expression twice and
-    # make the optimizer re-evaluate the whole signature per reference.
-    band_arr = F.array(
-        *[
-            F.concat(*[F.col(f"mh{b * band_rows + r}") for r in range(band_rows)])
-            for b in range(n_bands)
-        ]
-    )
-    bands = sigs.select(F.col(id_col), F.posexplode(band_arr).alias("band", "sig")).filter(
-        F.col("sig").isNotNull()
-    )
+    bands = sigs.select(
+        F.col(id_col), F.posexplode(_band_sigs(n_hashes, band_rows)).alias("band", "sig")
+    ).filter(F.col("sig").isNotNull())
     buckets = (
         bands.groupBy("band", "sig")
         .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
         .filter(F.size("ids") > 1)
     )
     if max_bucket is not None:
-        hot = F.size("ids") > max_bucket
-        metrics = (
-            F.coalesce(F.sum(F.when(hot, 1)), F.lit(0)).alias("hot_buckets_dropped"),
-            F.coalesce(F.sum(F.when(hot, F.size("ids"))), F.lit(0)).alias(
-                "docs_in_dropped_buckets"
-            ),
+        buckets = _cap_hot_blocks(
+            buckets, max_bucket, _BUCKET_METRICS, observation,
+            "minhash_lsh_bucket_cap",
         )
-        if observation is not None:
-            buckets = buckets.observe(observation, *metrics)
-        else:
-            buckets = buckets.observe("minhash_lsh_bucket_cap", *metrics)
-        buckets = buckets.filter(~hot)
-    # all (i < j) pairs within a bucket, generated row-locally
-    pair_arr = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda a: F.transform(
-                    F.col("ids"), lambda b: F.struct(a.alias("id_a"), b.alias("id_b"))
-                ),
-            )
-        ),
-        lambda p: p["id_a"] < p["id_b"],
-    )
-    return (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
+    return _bucket_pairs(buckets)
 
 
 def minhash_lsh_pairs_incremental(
@@ -340,21 +505,8 @@ def fuzzy_decontaminate_pairs(
         sigs.drop("__sh"), id_col, n_hashes, band_rows, max_bucket,
         cross_only=True,
     )
-    docs = sigs.select(
-        id_col, F.array_distinct(F.col("__sh")).alias("sh")
-    )
-    a = docs.select(F.col(id_col).alias("id_a"), F.col("sh").alias("__sa"))
-    b = docs.select(F.col(id_col).alias("id_b"), F.col("sh").alias("__sb"))
-    inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-    union = F.size("__sa") + F.size("__sb") - inter
-    jac = F.try_divide(inter * F.lit(1.0), union)
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    docs = sigs.select(id_col, F.array_distinct(F.col("__sh")).alias("sh"))
+    return _verified_jaccard(cand, docs, id_col, threshold)
 
 
 def _mixed_bucket_pairs(
@@ -374,16 +526,11 @@ def _mixed_bucket_pairs(
     ``cross_only=True`` is the two-corpus form (fuzzy decontamination:
     train vs eval): only pairs with EXACTLY one flagged side are
     emitted, and single-side buckets (all-train or all-eval) are
-    skipped before pair generation."""
-    n_bands = n_hashes // band_rows
-    band_arr = F.array(
-        *[
-            F.concat(*[F.col(f"mh{b * band_rows + r}") for r in range(band_rows)])
-            for b in range(n_bands)
-        ]
-    )
+    skipped before pair generation. The hot-bucket cap reports its
+    drops under the named observe ``minhash_mixed_bucket_cap``."""
     bands = sigs.select(
-        F.col(id_col), F.col("__new"), F.posexplode(band_arr).alias("band", "sig")
+        F.col(id_col), F.col("__new"),
+        F.posexplode(_band_sigs(n_hashes, band_rows)).alias("band", "sig"),
     ).filter(F.col("sig").isNotNull())
     buckets = (
         bands.groupBy("band", "sig")
@@ -402,32 +549,12 @@ def _mixed_bucket_pairs(
         )
     )
     if max_bucket is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
-    pair_arr = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda a: F.transform(
-                    F.col("ids"),
-                    lambda b: F.struct(
-                        a["id"].alias("id_a"),
-                        b["id"].alias("id_b"),
-                        (
-                            (a["__new"] != b["__new"])
-                            if cross_only
-                            else (a["__new"] | b["__new"])
-                        ).alias("emit"),
-                    ),
-                ),
-            )
-        ),
-        lambda p: (p["id_a"] < p["id_b"]) & p["emit"],
-    )
-    return (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
+        buckets = _cap_hot_blocks(
+            buckets, max_bucket, _BUCKET_METRICS, None, "minhash_mixed_bucket_cap"
+        )
+    if cross_only:
+        return _bucket_pairs(buckets, lambda a, b: a["__new"] != b["__new"])
+    return _bucket_pairs(buckets, lambda a, b: a["__new"] | b["__new"])
 
 
 def minhash_lsh_pairs_ml(
@@ -509,36 +636,12 @@ def simhash_neardup_pairs(
         .filter(F.size("ids") > 1)
     )
     if max_bucket is not None:
-        hot = F.size("ids") > max_bucket
-        buckets = buckets.observe(
-            "simhash_bucket_cap",
-            F.coalesce(F.sum(F.when(hot, 1)), F.lit(0)).alias("hot_buckets_dropped"),
-            F.coalesce(F.sum(F.when(hot, F.size("ids"))), F.lit(0)).alias(
-                "docs_in_dropped_buckets"
-            ),
-        ).filter(~hot)
-    pair_arr = F.filter(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda a: F.transform(
-                    F.col("ids"), lambda b: F.struct(a.alias("id_a"), b.alias("id_b"))
-                ),
-            )
-        ),
-        lambda p: p["id_a"] < p["id_b"],
-    )
-    cand = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
-    )
-    a = sims.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("__sa"))
-    b = sims.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("__sb"))
+        buckets = _cap_hot_blocks(
+            buckets, max_bucket, _BUCKET_METRICS, None, "simhash_bucket_cap"
+        )
     hamming = F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb")))
     return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
+        _verify_candidates(_bucket_pairs(buckets), sims, id_col, "simhash")
         .withColumn("hamming", hamming.cast("int"))
         .filter(F.col("hamming") <= hamming_max)
         .select("id_a", "id_b", "hamming")
@@ -632,17 +735,12 @@ def ngram_jaccard_pairs(
     cond = (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     for c in block_cols:
         cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.col("a.sh")) + F.size(F.col("b.sh")) - inter
-    # try_divide: two shingle-less docs give union=0 — NULL (dropped by
-    # the threshold filter), not an ANSI divide-by-zero job abort
-    jac = F.try_divide(inter * F.lit(1.0), union)
     return (
         a.join(b, cond)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.round(jac, 4).alias("jaccard"),
+            _jaccard(F.col("a.sh"), F.col("b.sh")).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -668,36 +766,15 @@ def lsh_verified_jaccard_pairs(
     id (shuffle keyed on id, never a self-join): candidates ⋈ shingle
     sets for the a-side, then the b-side. Total shuffle volume is
     O(candidates + docs), the same shape published dedup pipelines
-    (RefinedWeb / Dolma) run at web scale.
-
-    The shingle-set frame is pinned (localCheckpoint) for the same
-    CollapseProject reason as the signatures: both joins reference it,
-    and un-pinned the tokenize+shingle expressions re-evaluate per join.
+    (RefinedWeb / Dolma) run at web scale. The shingle-set frame is
+    pinned (`_shingle_sets`).
     """
     cand = minhash_lsh_pairs(
         df, text_col, id_col, n_hashes=n_hashes, band_rows=band_rows,
         max_bucket=max_bucket,
     )
-    docs = (
-        fan_out(df)
-        .select(F.col(id_col), tokenize(F.col(text_col)).alias("__toks"))
-        .select(
-            id_col, F.array_distinct(shingles(F.col("__toks"), shingle_n)).alias("sh")
-        )
-        .localCheckpoint(eager=False)
-    )
-    a = docs.select(F.col(id_col).alias("id_a"), F.col("sh").alias("__sa"))
-    b = docs.select(F.col(id_col).alias("id_b"), F.col("sh").alias("__sb"))
-    inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
-    union = F.size("__sa") + F.size("__sb") - inter
-    jac = F.try_divide(inter * F.lit(1.0), union)
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", F.round(jac, 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    docs = _shingle_sets(df, text_col, id_col, shingle_n)
+    return _verified_jaccard(cand, docs, id_col, threshold)
 
 
 def embedding_lsh_neardup_pairs(
@@ -756,63 +833,19 @@ def embedding_lsh_neardup_pairs(
     bd = fan_out(e).select(
         F.col(id_col), "v", "nrm", F.posexplode(buckets).alias("band", "bucket")
     ).localCheckpoint(eager=False)
-    probe_side = bd
+    probe = bd
     if max_bucket is not None:
-        counts = bd.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__n"))
-        hot = F.col("__n") > max_bucket
-        metrics = (
-            F.coalesce(F.sum(F.when(hot, 1)), F.lit(0)).alias("hot_buckets_dropped"),
-            # exploded (doc, band) rows — a doc in k hot bands counts k
-            # times; named accordingly (was docs_in_dropped_buckets)
-            F.coalesce(F.sum(F.when(hot, F.col("__n"))), F.lit(0)).alias(
-                "bucket_rows_dropped"
-            ),
+        # the row metric counts exploded (doc, band) rows — a doc in k
+        # hot bands counts k times; named accordingly
+        probe = _cap_hot_blocks(
+            bd, max_bucket, ("hot_buckets_dropped", "bucket_rows_dropped"),
+            observation, "embedding_lsh_bucket_cap", ["band", "bucket"],
         )
-        if observation is not None:
-            counts = counts.observe(observation, *metrics)
-        else:
-            counts = counts.observe("embedding_lsh_bucket_cap", *metrics)
-        probe_side = bd.join(
-            F.broadcast(counts.filter(~hot).select("band", "bucket")),
-            ["band", "bucket"],
-        )
-    # Small-corpus fast path (same trap as semdedup_pairs): the SMJ on
-    # (band, bucket) shuffles a tiny frame that AQE byte-coalesces to
-    # ONE partition, serializing every pair dot on one core. Broadcast
-    # the build side and round-robin the probe to core width while the
-    # corpus fits the 64 MB bar; the banded SMJ stays the 100 TB plan
-    # (parallelism = n_bands x 2^n_bits blocks at scale).
-    from .partitioning import plan_size_bytes
-
-    if plan_size_bytes(df) <= (64 << 20):
-        probe = probe_side.repartition(df.sparkSession.sparkContext.defaultParallelism)
-        a, b = probe.alias("a"), F.broadcast(bd).alias("b")
-    else:
-        a, b = probe_side.alias("a"), bd.alias("b")
-    # HOF dot, NOT the unrolled chain: the threshold sits in the join
-    # condition, which is evaluated by the INTERPRETED expression path
-    # (join conditions sit outside whole-stage codegen) — there a
-    # single zip_with/aggregate loop node beats a 64-term tree with 128
-    # getItem nodes ~6x (measured 4.4 s -> 0.7 s at sf0.1; both fold
-    # left-to-right from 0.0, so results are bit-identical). It is the
-    # LAST conjunct, so only id-ordered pairs pay the dot: a trailing
-    # filter would be pushed into the condition ahead of the id test.
-    sim = F.expr(f"round(try_divide({dot_sql('a.v', 'b.v')}, a.nrm * b.nrm), 4)")
-    cond = (
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        & (sim >= threshold)
-    )
-    return (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            sim.alias("sim"),
-        )
-        .distinct()
-    )
+    pairs, sim = _blocked_cosine_join(df, bd, probe, ["band", "bucket"], id_col, threshold)
+    ident = sql_ident(id_col)
+    return pairs.selectExpr(
+        f"a.{ident} AS id_a", f"b.{ident} AS id_b", f"{sim} AS sim"
+    ).distinct()
 
 
 def embedding_neardup_pairs(
@@ -821,28 +854,12 @@ def embedding_neardup_pairs(
     id_col: str,
     block_cols: list[str],
     threshold: float,
-    broadcast_build: bool = False,
     max_block: int | None = None,
     observation=None,
 ) -> DataFrame:
-    """Tier 5b: cosine near-duplicates within blocks (label / IVF cell).
-
-    Same blocked self-join shape. The per-pair dot is the HOF fold
-    (``dot_sql``): the threshold is the join condition's last conjunct,
-    which runs on the interpreted path, where an unrolled
-    chain is ~4x slower (re-measured at sf0.1: 2.4 s unrolled vs 0.5 s
-    HOF, bit-identical results).
-
-    ``broadcast_build=True`` is the small-corpus fast path: broadcast
-    the build side and fan the probe side across cores. A sort-merge
-    self-join on low-cardinality block keys lands in as many tasks as
-    there are DISTINCT BLOCKS (then AQE byte-coalesces tiny partitions
-    to ONE task while each pair still costs a 64-term dot) — the
-    broadcast plan round-robins the probe side to core width and never
-    shuffles the pair join. It takes the caller's size verdict as given:
-    no second estimate is made here. Leave False when the corpus doesn't
-    fit an executor; the blocked SMJ is the 100 TB path (parallelism =
-    #blocks, which is large at scale).
+    """Tier 5b: cosine near-duplicates within blocks (label / IVF cell),
+    scored by `_blocked_cosine_join` (broadcast or blocked SMJ, picked
+    from the input's plan size).
 
     ``max_block`` is the hot-block cap (see ``semdedup_pairs``): blocks
     holding more than `max_block` rows — one degenerate IVF cell /
@@ -860,41 +877,14 @@ def embedding_neardup_pairs(
     docs = df.selectExpr(
         ident, *keys, f"{to_double_array_sql(sql_ident(vec_col))} AS v"
     ).selectExpr("*", f"{norm_sql('v')} AS nrm")
+    probe = docs
     if max_block is not None:
-        counts = docs.groupBy(*block_cols).agg(F.count(F.lit(1)).alias("__n"))
-        hot = F.col("__n") > max_block
-        metrics = (
-            F.coalesce(F.sum(F.when(hot, 1)), F.lit(0)).alias("hot_blocks_dropped"),
-            F.coalesce(F.sum(F.when(hot, F.col("__n"))), F.lit(0)).alias(
-                "docs_in_dropped_blocks"
-            ),
+        probe = _cap_hot_blocks(
+            docs, max_block, ("hot_blocks_dropped", "docs_in_dropped_blocks"),
+            observation, "embedding_block_cap", block_cols,
         )
-        if observation is not None:
-            counts = counts.observe(observation, *metrics)
-        else:
-            counts = counts.observe("embedding_block_cap", *metrics)
-        docs_gated = docs.join(
-            F.broadcast(counts.filter(~hot).select(*block_cols)), list(block_cols)
-        )
-    else:
-        docs_gated = docs
-    if broadcast_build:
-        # the caller's size estimate put the corpus under the broadcast
-        # bar, so the probe fans out to core width as in semdedup_pairs,
-        # without fan_out's second estimate of the same scan
-        probe = docs_gated.repartition(df.sparkSession.sparkContext.defaultParallelism)
-        a, b = probe.alias("a"), F.broadcast(docs).alias("b")
-    else:
-        a, b = docs_gated.alias("a"), docs.alias("b")
-    # the threshold is the LAST conjunct: only id-ordered pairs of one
-    # block pay the dot (a trailing filter would be pushed ahead of them)
-    sim = f"round(try_divide({dot_sql('a.v', 'b.v')}, a.nrm * b.nrm), 4)"
-    cond = " AND ".join(
-        [f"a.{ident} < b.{ident}"]
-        + [f"a.{k} = b.{k}" for k in keys]
-        + [f"{sim} >= {float(threshold)!r}D"]
-    )
-    return a.join(b, F.expr(cond)).selectExpr(
+    pairs, sim = _blocked_cosine_join(df, docs, probe, block_cols, id_col, threshold)
+    return pairs.selectExpr(
         f"a.{ident} AS id_a", f"b.{ident} AS id_b", f"{sim} AS sim"
     )
 
@@ -906,7 +896,6 @@ def semdedup_pairs(
     n_cells: int,
     threshold: float,
     dims: int | None = None,
-    broadcast_build: bool | None = None,
     max_cell: int | None = None,
     observation=None,
     centroids: DataFrame | None = None,
@@ -936,14 +925,11 @@ def semdedup_pairs(
     Hot-cell cap (the minhash_lsh_pairs guard, cell-shaped): one
     degenerate cluster of m boilerplate embeddings is an O(m²) per-cell
     self-join — the same blowup class as a hot LSH bucket. Cells whose
-    population exceeds ``max_cell`` are dropped BEFORE the pair join:
-    a tiny groupBy(cid) count (O(cells) rows) anti-gates the PROBE side
-    only — an equi-join can't emit a pair from a cell absent on one
-    side, so single-side filtering is pair-exact while keeping the
-    metrics node out of the self-join's doubled subtree. Drops are
-    observable: pass a ``pyspark.sql.Observation`` (metrics
-    ``hot_cells_dropped`` / ``docs_in_dropped_cells``); a named observe
-    is attached otherwise. Default ``max_cell=None`` — no cap, exact
+    population exceeds ``max_cell`` are dropped BEFORE the pair join by
+    a tiny groupBy(cid) count gating the PROBE side (`_cap_hot_blocks`;
+    pair-exact for an equi-join). Drops are observable: pass a
+    ``pyspark.sql.Observation`` (metrics ``hot_cells_dropped`` /
+    ``docs_in_dropped_cells``); a named observe is attached otherwise. Default ``max_cell=None`` — no cap, exact
     replay: the same contract as the sibling tiers' ``max_block`` /
     ``max_bucket`` (an un-opted-in caller must never silently lose
     pairs from >N-row cells). Production callers and the registered
@@ -975,60 +961,19 @@ def semdedup_pairs(
         .select(id_col, "cid", "v", "nrm", "csim")
         .localCheckpoint(eager=False)  # both join sides reference it
     )
-    probe_gate = None
+    probe = with_csim
     if max_cell is not None:
-        counts = with_csim.groupBy("cid").agg(F.count(F.lit(1)).alias("__n"))
-        hot = F.col("__n") > max_cell
-        metrics = (
-            F.coalesce(F.sum(F.when(hot, 1)), F.lit(0)).alias("hot_cells_dropped"),
-            F.coalesce(F.sum(F.when(hot, F.col("__n"))), F.lit(0)).alias(
-                "docs_in_dropped_cells"
-            ),
+        probe = _cap_hot_blocks(
+            with_csim, max_cell, ("hot_cells_dropped", "docs_in_dropped_cells"),
+            observation, "semdedup_cell_cap", ["cid"],
         )
-        if observation is not None:
-            counts = counts.observe(observation, *metrics)
-        else:
-            counts = counts.observe("semdedup_cell_cap", *metrics)
-        probe_gate = F.broadcast(counts.filter(~hot).select("cid"))
-    # Same small-corpus fast path as embedding_neardup_pairs: the pinned
-    # frame coalesces to O(1) partitions at bench scale, and an SMJ on
-    # n_cells keys then scores every pair on as many cores as CELLS.
-    # Broadcasting the build side and fanning the probe side keeps
-    # scoring at full core width; past the ~64 MB bar the blocked SMJ
-    # is the 100 TB plan (parallelism = #cells, large at scale).
-    if broadcast_build is None:
-        from .partitioning import plan_size_bytes
-
-        broadcast_build = plan_size_bytes(df) <= (64 << 20)
-    kept = with_csim if probe_gate is None else with_csim.join(probe_gate, "cid")
-    if broadcast_build:
-        # Explicit repartition, not fan_out: the lazy checkpoint's plan
-        # still claims its pre-AQE width, but AQE coalesces the tiny
-        # agg output to ONE partition at runtime — fan_out's estimate
-        # can't see that, and an unfanned probe scores every pair on a
-        # single core (measured 4.5 s -> 1.7 s at sf0.1).
-        probe = kept.repartition(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
-        a, b = probe.alias("a"), F.broadcast(with_csim).alias("b")
-    else:
-        a, b = kept.alias("a"), with_csim.alias("b")
-    # pair sim via the HOF fold (the threshold is the interpreted join
-    # condition's last conjunct — see embedding_lsh_neardup_pairs);
-    # csim above stays unrolled (it is evaluated in a codegen'd project)
-    sim = F.expr(f"round(try_divide({dot_sql('a.v', 'b.v')}, a.nrm * b.nrm), 4)")
-    cond = (
-        (F.col("a.cid") == F.col("b.cid"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        & (sim >= threshold)
-    )
-    return a.join(b, cond).select(
-        F.col("a.cid").alias("cell"),
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.col("a.csim").alias("csim_a"),
-        F.col("b.csim").alias("csim_b"),
-        sim.alias("sim"),
+    # the pair sim is the HOF fold of `_blocked_cosine_join`; csim above
+    # stays unrolled (it is evaluated in a codegen'd project)
+    pairs, sim = _blocked_cosine_join(df, with_csim, probe, ["cid"], id_col, threshold)
+    ident = sql_ident(id_col)
+    return pairs.selectExpr(
+        "a.cid AS cell", f"a.{ident} AS id_a", f"b.{ident} AS id_b",
+        "a.csim AS csim_a", "b.csim AS csim_b", f"{sim} AS sim",
     )
 
 
@@ -1039,7 +984,6 @@ def semdedup_drop_list(
     n_cells: int,
     threshold: float,
     dims: int | None = None,
-    broadcast_build: bool | None = None,
     max_cell: int | None = None,
     observation=None,
     centroids: DataFrame | None = None,
@@ -1054,7 +998,7 @@ def semdedup_drop_list(
     near-dup-sized) pair set. A doc in many pairs is dropped once.
     """
     pairs = semdedup_pairs(
-        df, vec_col, id_col, n_cells, threshold, dims, broadcast_build,
+        df, vec_col, id_col, n_cells, threshold, dims,
         max_cell=max_cell, observation=observation, centroids=centroids,
     )
     drop = F.when(
@@ -1101,22 +1045,12 @@ def lsh_verified_containment_pairs(
         df, text_col, id_col, n_hashes=n_hashes, band_rows=band_rows,
         max_bucket=max_bucket,
     )
-    docs = (
-        fan_out(df)
-        .select(F.col(id_col), tokenize(F.col(text_col)).alias("__toks"))
-        .select(
-            id_col, F.array_distinct(shingles(F.col("__toks"), shingle_n)).alias("sh")
-        )
-        .localCheckpoint(eager=False)
-    )
-    a = docs.select(F.col(id_col).alias("id_a"), F.col("sh").alias("__sa"))
-    b = docs.select(F.col(id_col).alias("id_b"), F.col("sh").alias("__sb"))
+    docs = _shingle_sets(df, text_col, id_col, shingle_n)
     inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb"))).cast("bigint")
     smaller = F.least(F.size("__sa"), F.size("__sb")).cast("bigint")
     cont_bp = F.expr("(__n_common * 10000) div __n_small")
     return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
+        _verify_candidates(cand, docs, id_col, "sh")
         .withColumn("__n_common", inter)
         .withColumn("__n_small", smaller)
         .filter(F.col("__n_small") > 0)

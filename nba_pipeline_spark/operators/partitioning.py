@@ -42,6 +42,18 @@ def plan_size_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
+# The package's one broadcast bar: the 64 MB the session sets for
+# dimension auto-broadcast (session.py). A frame whose plan estimate
+# fits it may be broadcast whole or scored on a narrow path; past it
+# the shuffle (sort-merge / wide) plan is the 100 TB shape.
+BROADCAST_BYTES = 64 << 20
+
+
+def fits_broadcast(df: DataFrame, cap: int = BROADCAST_BYTES) -> bool:
+    """True when `df`'s plan-size estimate is at or under `cap`."""
+    return plan_size_bytes(df) <= cap
+
+
 def _bytes_conf(df: DataFrame, key: str, default: int) -> int:
     raw = df.sparkSession.conf.get(key, str(default))
     s = raw.strip().lower()

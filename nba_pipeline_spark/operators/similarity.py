@@ -45,7 +45,7 @@ from ..functions.vectors import (
     to_double_array,
     to_double_array_sql,
 )
-from .partitioning import rows_frame
+from .partitioning import fits_broadcast, rows_frame
 
 
 def _kmeans_centroid_lists(
@@ -1237,16 +1237,14 @@ def ivfpq_knn_join(
     # partitioning the candidate stream by qid up front lets BOTH the
     # ADT aggregation (clustering on (qid, id, qc) — a superset of the
     # partition key) and the per-query pool window reuse ONE exchange
-    # (2 Exchanges -> 1, one fewer AQE stage job). Guarded by the same
-    # 64 MB plan-stats bar as semdedup's broadcast_build because the
+    # (2 Exchanges -> 1, one fewer AQE stage job). Guarded by the
+    # package's one broadcast bar (`fits_broadcast`) because the
     # narrow shape shuffles candidate PAYLOADS (m-code arrays) and caps
     # scoring parallelism at |Q| tasks — above the bar the wide shape
     # (map-side partial agg, scan-width scoring, WindowGroupLimit-
     # pre-limited second exchange) is the 100 TB plan.
-    from .partitioning import plan_size_bytes
-
     if narrow_pool is None:
-        narrow_pool = plan_size_bytes(cand) <= (64 << 20)
+        narrow_pool = fits_broadcast(cand)
     if narrow_pool:
         pool_src = pool_src.repartition("qid")
     scored = (

@@ -485,22 +485,15 @@ register(
 # --- tier 5b: blocked embedding cosine ----------------------------------------
 
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Label-blocked cosine near-dups. The operator makes the query's
+    one plan-size estimate: under the broadcast bar it broadcasts the
+    corpus and fans the probe out to core width; past it the blocked
+    sort-merge self-join (parallelism = #blocks; at TB+ feed IVF cells
+    / LSH buckets as block_cols)."""
     tune(spark)
-    from ..operators.partitioning import plan_size_bytes
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    # broadcast_build only when the whole corpus fits an executor (same
-    # 64 MB bar the session sets for dim-table auto-broadcast): the
-    # broadcast plan fans the probe out to core width and wins at bench
-    # scale, but broadcasting a 100 TB corpus OOMs every executor — past
-    # the bar this picks the blocked sort-merge self-join, whose
-    # parallelism is #blocks (large at scale; at TB+ feed IVF cells /
-    # LSH buckets as block_cols). This is the query's one plan-size
-    # estimate: the operator's probe fan-out takes the same verdict.
-    small = plan_size_bytes(emb) <= (64 << 20)
     return OD.embedding_neardup_pairs(
-        emb, "embedding", "vec_id", block_cols=["label"], threshold=0.3,
-        broadcast_build=small,
+        load_table(spark, sf_dir, "embeddings"), "embedding", "vec_id",
+        block_cols=["label"], threshold=0.3,
     )
 
 

@@ -2532,14 +2532,13 @@ def q_manifest_sql_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs in a JVM-less worker that cannot hash, so read_lake hashes
     the probe keys driver-side (the same engine-hash job as the
     programmatic bloom_eq) and ships positions as a read option —
-    pushFilters-planned partitions are asserted to skip the
-    bloom-negative interleaved segments, which min/max stats provably
-    cannot (every segment spans the full key range). Probe keys: the
-    two smallest orderkeys of band 0 — deterministic at every SF.
-    Oracle: the same two keys selected the hard way."""
-    import json
-
-    from ..sources.lake_datasource import ManifestLakeReader, read_lake
+    pushFilters-planned partitions skip the bloom-negative interleaved
+    segments, which min/max stats provably cannot (every segment spans
+    the full key range; the pruning is asserted by
+    tests/test_lake_datasource.py). Probe keys: the two smallest
+    orderkeys of band 0 — deterministic at every SF. Oracle: the same
+    two keys selected the hard way."""
+    from ..sources.lake_datasource import read_lake
 
     tune(spark)
     lake = _sql_bloom_lake(spark, sf_dir)
@@ -2551,18 +2550,7 @@ def q_manifest_sql_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(2)
         .collect()
     ]
-    n_all = len(ManifestLakeReader({"path": lake}).partitions())
-    probes = json.dumps(M._bloom_probes(spark, {"o_orderkey": keys}))
-    kept = len(
-        ManifestLakeReader(
-            {"path": lake, "bloom_probes": probes}
-        ).partitions()
-    )
-    assert kept < n_all, f"bloom probes did not prune: {kept}/{n_all}"
-    # reuse the probe hashes computed for the pruning assert above —
-    # bloom_keys= would re-run the same engine-hash job (2x0.3 s
-    # measured) for identical positions — r12, guide §1
-    t = read_lake(spark, lake, bloom_probes=probes).filter(
+    t = read_lake(spark, lake, bloom_keys={"o_orderkey": keys}).filter(
         F.col("o_orderkey").isin(keys) if keys else F.lit(False)
     )
     return t.select("o_orderkey", "o_custkey", "o_orderstatus")

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..functions.text import shingles
-from ..operators.partitioning import fan_out
+from ..operators.partitioning import BROADCAST_BYTES, fan_out, fits_broadcast
 from ..session import tune
 from ..sources import load_table
 from .queries import register
@@ -645,16 +645,14 @@ def q_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bigram_ppl_plan(
-    spark: SparkSession, sf_dir: str, broadcast_cap: int = 64 << 20
+    spark: SparkSession, sf_dir: str, broadcast_cap: int = BROADCAST_BYTES
 ) -> DataFrame:
-    from ..operators.partitioning import plan_size_bytes
-
     docs = _docs(spark, sf_dir)
     # upper bound for BOTH count tables: each aggregates the bigram
     # stream, whose bytes are bounded by the text scan (the lazy
     # localCheckpoint below erases plan stats, so the guard reads the
     # PRE-checkpoint scan estimate — the sound side of the proxy)
-    corpus_fits = plan_size_bytes(docs.select("text")) <= broadcast_cap
+    corpus_fits = fits_broadcast(docs.select("text"), broadcast_cap)
 
     def guarded(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if corpus_fits else df
@@ -765,12 +763,10 @@ def q_trigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trigram_ppl_plan(
-    spark: SparkSession, sf_dir: str, broadcast_cap: int = 64 << 20
+    spark: SparkSession, sf_dir: str, broadcast_cap: int = BROADCAST_BYTES
 ) -> DataFrame:
-    from ..operators.partitioning import plan_size_bytes
-
     docs = _docs(spark, sf_dir)
-    corpus_fits = plan_size_bytes(docs.select("text")) <= broadcast_cap
+    corpus_fits = fits_broadcast(docs.select("text"), broadcast_cap)
 
     def guarded(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if corpus_fits else df

@@ -87,9 +87,11 @@ from .manifest_store import _DATA_DIR, _pafs, _props_triples
 _PQ_ENCODING = {"compression": "zstd", "data_page_version": "2.0"}
 
 # Spark simpleString -> pyarrow type, for upcasting widened columns and
-# null-filling columns a pre-evolution file lacks. Exotic nested types
-# raise — a lake whose evolution adds nested columns needs a
-# re-bootstrap, stated loudly.
+# null-filling columns a pre-evolution file lacks. Map and struct types
+# have no mapping: a file that holds such a column is read with its own
+# Arrow type, and null-filling one a pre-evolution file lacks raises — a
+# lake whose evolution adds nested columns needs a re-bootstrap, stated
+# loudly.
 _PA_TYPES = {
     "tinyint": "int8", "smallint": "int16", "int": "int32",
     "bigint": "int64", "float": "float32", "double": "float64",
@@ -98,7 +100,8 @@ _PA_TYPES = {
 }
 
 
-def _pa_type(simple: str, fname: str, col: str):
+def _pa_type(simple: str):
+    """The Arrow type of a Spark simpleString, or None without a mapping."""
     import pyarrow as pa
 
     if simple in _PA_TYPES:
@@ -109,12 +112,28 @@ def _pa_type(simple: str, fname: str, col: str):
     if simple.startswith("timestamp"):
         return pa.timestamp("us")
     if simple.startswith("array<") and simple.endswith(">"):
-        return pa.list_(_pa_type(simple[6:-1], fname, col))
-    raise ValueError(
-        f"manifest lake file {fname}: column {col!r} of type {simple!r} "
-        "has no Arrow type to null-fill or upcast to — re-bootstrap the "
-        "reader from a snapshot"
-    )
+        inner = _pa_type(simple[6:-1])
+        return None if inner is None else pa.list_(inner)
+    return None
+
+
+def _required_pa_type(simple: str, fname: str, col: str):
+    """`_pa_type` where a column must be made from nothing (a null-fill,
+    an empty file): no mapping raises."""
+    want = _pa_type(simple)
+    if want is None:
+        raise ValueError(
+            f"manifest lake file {fname}: column {col!r} of type {simple!r} "
+            "has no Arrow type to null-fill — re-bootstrap the reader from "
+            "a snapshot"
+        )
+    return want
+
+
+def _as_type(col, want):
+    """`col` upcast to `want`; unchanged when it has that type already
+    or `want` is None (no mapping: the file's own type stands)."""
+    return col if want is None or col.type == want else col.cast(want)
 
 
 def _join(base: str, *parts: str) -> str:
@@ -394,12 +413,10 @@ def _project(t, sch_cols, fname):
 
     cols = []
     for n, typ, phys in sch_cols:
-        want = _pa_type(typ, fname, n)
         if phys in t.column_names:
-            col = t.column(phys)
-            cols.append(col if col.type == want else col.cast(want))
+            cols.append(_as_type(t.column(phys), _pa_type(typ)))
         else:
-            cols.append(pa.nulls(t.num_rows, want))
+            cols.append(pa.nulls(t.num_rows, _required_pa_type(typ, fname, n)))
     return pa.table(cols, names=[n for n, _, _ in sch_cols])
 
 
@@ -463,9 +480,7 @@ def _apply_tombstones(t, tombs, sch_cols, fname):
 
     if not tombs:
         return t
-    want_type = {
-        phys: _pa_type(typ, fname, n) for n, typ, phys in sch_cols
-    }
+    want_type = {phys: _pa_type(typ) for _, typ, phys in sch_cols}
     dv_entries = [files for kcols, files in tombs if kcols is None]
     if dv_entries:
         rel = "/".join(fname.rstrip("/").split("/")[-2:])
@@ -497,24 +512,13 @@ def _apply_tombstones(t, tombs, sch_cols, fname):
         usable = [c for c in kcols if c in t.column_names]
         if len(usable) < len(kcols):
             continue  # file predates the key column: nothing to mask
-        cast = {
-            c: t.column(c).cast(want_type[c])
-            if c in want_type and t.column(c).type != want_type[c]
-            else t.column(c)
-            for c in kcols
-        }
-        probe = pa.table({c: cast[c] for c in kcols})
+        probe = pa.table({c: _as_type(t.column(c), want_type.get(c)) for c in kcols})
         tomb_parts = []
         for f in files:
             tfs, tnorm = _pafs(f)
             tt = pq.read_table(tnorm, filesystem=tfs, columns=list(kcols))
             tomb_parts.append(
-                pa.table({
-                    c: tt.column(c).cast(want_type[c])
-                    if c in want_type and tt.column(c).type != want_type[c]
-                    else tt.column(c)
-                    for c in kcols
-                })
+                pa.table({c: _as_type(tt.column(c), want_type.get(c)) for c in kcols})
             )
         tomb = pa.concat_tables(tomb_parts)
         # row-index trick: anti-join the key projection (plus a row id)
@@ -849,7 +853,9 @@ class ManifestLakeWriter(DataSourceArrowWriter):
             for f in self._schema.fields:
                 name = self._rename.get(f.name, f.name)
                 fields.append(
-                    pa.field(name, _pa_type(f.dataType.simpleString(), seg, name))
+                    pa.field(
+                        name, _required_pa_type(f.dataType.simpleString(), seg, name)
+                    )
                 )
             pq.write_table(
                 pa.table({f.name: [] for f in fields},

@@ -194,6 +194,57 @@ def test_bloom_keys_skip_segments_in_sql_reads(spark, tmp_path):
     assert sorted(r["k"] for r in got.collect()) == [4, 100]
 
 
+def test_sql_bloom_query_lake_prunes_bloom_negative_segments(spark, tmp_path):
+    """q_manifest_sql_bloom's staged lake (sixteen key-interleaved
+    segments with id blooms, so stats prove nothing): the driver-hashed
+    probes for the query's two keys plan fewer partitions than the
+    unprobed read. Built on a fresh alias of SF_DIR, so the stage is
+    this code's."""
+    import json
+    import os
+    import shutil
+
+    from conftest import SF_DIR
+
+    from nba_pipeline_spark.plans.lake_queries import _sql_bloom_lake
+    from nba_pipeline_spark.sources import load_table
+
+    alias = str(tmp_path / "sf")
+    os.symlink(SF_DIR, alias)
+    lake = _sql_bloom_lake(spark, alias)
+    try:
+        keys = [
+            int(r["o_orderkey"])
+            for r in load_table(spark, alias, "orders")
+            .filter(F.col("o_orderkey") % 16 == 0)
+            .orderBy("o_orderkey")
+            .limit(2)
+            .collect()
+        ]
+        n_all = len(ManifestLakeReader({"path": lake}).partitions())
+        probes = json.dumps(M._bloom_probes(spark, {"o_orderkey": keys}))
+        kept = len(
+            ManifestLakeReader({"path": lake, "bloom_probes": probes}).partitions()
+        )
+        assert kept < n_all, f"bloom probes did not prune: {kept}/{n_all}"
+    finally:
+        shutil.rmtree(os.path.dirname(lake), ignore_errors=True)
+
+
+def test_arrow_read_keeps_map_and_struct_columns(spark, tmp_path):
+    """Stored map<> and struct<> columns have no Arrow type in the
+    recorded-type table; the Arrow read path keeps the file's own type
+    for a column the file holds, so read_lake reads what read_snapshot
+    reads."""
+    p = str(tmp_path / "maplake")
+    df = spark.createDataFrame(
+        [(1, {"a": 1.5}, (2, "x"))],
+        "k int, m map<string,double>, s struct<a:int,b:string>",
+    )
+    M.commit_append(spark, p, df)
+    assert read_lake(spark, p).collect() == M.read_snapshot(spark, p).collect()
+
+
 def test_arrow_readers_match_jvm_reads_on_evolved_tombstoned_lake(
     spark, tmp_path
 ):

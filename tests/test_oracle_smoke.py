@@ -1,7 +1,10 @@
-"""Default-gate oracle parity for four groups of registry queries:
+"""Default-gate oracle parity for five groups of registry queries:
 those whose iterative operators run on the driver-local tier at test
 scale; one per SQL-text vector builder call site (embedding near-dup,
-semantic decontamination, sign-LSH, SemDeDup, kNN join); those whose
+semantic decontamination, sign-LSH, SemDeDup, kNN join); one per text
+dedup tier on the shared blocking core of operators/dedup.py (SimHash
+pairs, LSH-verified jaccard and containment, fuzzy decontamination,
+incremental MinHash); those whose
 builders make a local frame through `partitioning.rows_frame` (a dict
 lookup join, a banded range join, a manifest MERGE and the manifest
 history table); and manifest-lake queries whose staging runs the write
@@ -41,6 +44,11 @@ QUERIES = [
     "q_pagerank",
     "q_dedup_cluster_star",
     "q_dedup_keep_best",
+    "q_dedup_simhash_pairs",
+    "q_dedup_ngram_lsh",
+    "q_dedup_containment",
+    "q_decontaminate_fuzzy",
+    "q_dedup_incremental",
     "q_dedup_embedding",
     "q_decontaminate_semantic",
     "q_dedup_embedding_lsh",

@@ -1,10 +1,14 @@
-"""Dump formatted physical plans for the headline queries -> PLANS.md.
+"""Dump formatted physical plans of registered queries.
 
-Run after plan-affecting changes: python tools/dump_plans.py
+Run after plan-affecting changes:
+
+    python tools/dump_plans.py SF_DIR                      # every query -> PLANS.md
+    python tools/dump_plans.py SF_DIR q_a q_b --out F.md   # named queries -> F.md
 """
 
 from __future__ import annotations
 
+import argparse
 import sys
 from pathlib import Path
 
@@ -109,7 +113,7 @@ HEADLINE = [
     "q_udtf_chunks",
 ]
 
-PREAMBLE = """# PLANS — formatted physical plans (sf0.001, local)
+PREAMBLE = """# PLANS — formatted physical plans ({sf}, local)
 
 Generated by `tools/dump_plans.py`. What to look for, per SCALE.md:
 `PushedFilters`/`ReadSchema` on scans, `PartitionFilters` on the
@@ -120,24 +124,29 @@ pairs, and windows that never run on `SinglePartition`.
 
 
 def main() -> None:
-    """One section per REGISTERED query (VERDICT r9 #4): the curated
-    HEADLINE order leads (the plans people read), then every remaining
-    registry entry in registry order — greppable by `## q_name`. A
-    builder that fails to plan records the error instead of silently
-    dropping the section."""
+    """One section per REGISTERED query (VERDICT r9 #4), or per named
+    query when some are given: the curated HEADLINE order leads (the
+    plans people read), then every remaining registry entry in registry
+    order — greppable by `## q_name`. A builder that fails to plan
+    records the error instead of silently dropping the section."""
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir")
+    ap.add_argument("queries", nargs="*")
+    ap.add_argument("--out", type=Path, default=ROOT / "PLANS.md")
+    args = ap.parse_args()
     from nba_pipeline_spark.session import get_spark
     from nba_pipeline_spark.plans.queries import REGISTRY
 
     spark = get_spark("dump_plans", cores=4)
     spark.sparkContext.setLogLevel("ERROR")
-    names = [n for n in HEADLINE if n in REGISTRY] + [
+    names = args.queries or [n for n in HEADLINE if n in REGISTRY] + [
         n for n in REGISTRY if n not in HEADLINE
     ]
-    out = [PREAMBLE]
+    out = [PREAMBLE.format(sf=Path(args.sf_dir).name)]
     n_ok = 0
     for name in names:
         try:
-            df = REGISTRY[name].fn(spark, "/root/testdata/sf0.001")
+            df = REGISTRY[name].fn(spark, args.sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
@@ -145,9 +154,8 @@ def main() -> None:
             n_ok += 1
         except Exception as e:  # keep the section, record the failure
             out.append(f"\n## {name}\n\n```\nPLAN CAPTURE FAILED: {e}\n```\n")
-    with open(ROOT / "PLANS.md", "w") as f:
-        f.write("".join(out))
-    print(f"wrote PLANS.md with {n_ok}/{len(names)} plans")
+    args.out.write_text("".join(out))
+    print(f"wrote {args.out} with {n_ok}/{len(names)} plans")
 
 
 if __name__ == "__main__":
