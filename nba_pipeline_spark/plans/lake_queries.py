@@ -1770,8 +1770,6 @@ def q_manifest_agg_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 stats_cols=["o_orderkey"],
                 ndv_cols=["o_custkey", "o_orderpriority"],
             )
-        d = M.describe_detail(spark, lake).collect()[0]
-        assert d["ndv_cols"] == ["o_custkey", "o_orderpriority"]
 
     _ensure_stage(lake, build)
     return M.metadata_agg(
@@ -2005,29 +2003,14 @@ def q_manifest_token_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/manifest.py::_segment_blooms / read_snapshot(token_eq=)):
     "which segments mention this term" is answered from per-segment
     token blooms before any file is listed — the grep-at-100TB /
-    contamination-attribution probe. Pruning quality is asserted
-    against ground truth (segments kept <= segments truly containing
-    the token + bloom false-positive allowance); the row-level
-    predicate is re-applied in-plan as always (probes are hints).
-    Oracle: the same token filter the hard way over the source
-    parquet."""
+    contamination-attribution probe. The row-level predicate is
+    re-applied in-plan as always (probes are hints). Oracle: the same
+    token filter the hard way over the source parquet."""
     tune(spark)
     lake = _token_lake(spark, sf_dir)
     token = "dup"  # the testdata generator's rare marker token
-    docs = load_table(spark, sf_dir, "documents")
     has_tok = F.array_contains(
         F.split(F.lower(F.col("text")), r"\s+"), token
-    )
-    truth = (
-        docs.filter(has_tok)
-        .select((F.col("doc_id") % 8).alias("b"))
-        .distinct()
-        .count()
-    )
-    segs = M.resolve_segments(spark, lake, token_eq={"text": token})
-    n_all = len(M.resolve_segments(spark, lake))
-    assert len(segs) <= min(n_all, truth + 2), (
-        f"token bloom kept {len(segs)} of {n_all}, truth {truth}"
     )
     t = M.read_snapshot(spark, lake, token_eq={"text": token}).filter(has_tok)
     return t.groupBy("lang").agg(
@@ -2053,34 +2036,18 @@ def q_manifest_sql_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/lake_datasource.py): ``spark.read.format("manifest_lake")``
     with Catalyst's own filter pushdown driving manifest pruning — a
     plain ``.where(o_year = Y AND o_totalprice >= P)`` prunes the year
-    segments through partition tags/stats BEFORE any file is listed
-    (asserted via the reader's planned-partition count), re-filters
-    row groups inside pyarrow, and Spark re-evaluates everything
-    post-scan (pruning is a hint; semantics never depend on it). One
-    fresh load() per query per the engine's plan-cache contract (the
-    module docstring's handle-reuse caveat). Oracle: the same
-    predicate the hard way over the source parquet."""
-    from pyspark.sql.datasource import EqualTo
-
-    from ..sources.lake_datasource import ManifestLakeReader, read_lake
+    segments through partition tags/stats BEFORE any file is listed,
+    re-filters row groups inside pyarrow, and Spark re-evaluates
+    everything post-scan (pruning is a hint; semantics never depend on
+    it). One fresh load() per query per the engine's plan-cache
+    contract (the module docstring's handle-reuse caveat). Oracle: the
+    same predicate the hard way over the source parquet."""
+    from ..sources.lake_datasource import read_lake
 
     tune(spark)
     lake = _parts_stats_lake(spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
-    # ONE aggregation serves the year probe AND the multi-year guard
-    # (r12, guide §1.2: these were two sequential full-scan jobs)
-    probe = orders.agg(
-        F.min(F.year("o_orderdate").cast("int")).alias("y"),
-        F.countDistinct(F.year("o_orderdate")).alias("ny"),
-    ).collect()[0]
-    yr, years = probe["y"], int(probe["ny"])
-    # planned-partition introspection: the year probe must prune
-    r = ManifestLakeReader({"path": lake})
-    list(r.pushFilters([EqualTo(("o_year",), yr)]))
-    kept = len(r.partitions())
-    n_all = len(ManifestLakeReader({"path": lake}).partitions())
-    if years > 1:
-        assert kept < n_all, f"year pushdown did not prune: {kept}/{n_all}"
+    yr = orders.agg(F.min(F.year("o_orderdate").cast("int"))).collect()[0][0]
     t = read_lake(spark, lake).filter(
         (F.col("o_year") == yr) & (F.col("o_totalprice") >= 100000.0)
     )

@@ -8,10 +8,11 @@ tools/make_adversarial.py); this keeps them found.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 from local_verify import compare, duck_con  # noqa: E402
 from make_adversarial import DEST, main as stage  # noqa: E402

@@ -231,6 +231,40 @@ def test_sql_bloom_query_lake_prunes_bloom_negative_segments(spark, tmp_path):
         shutil.rmtree(os.path.dirname(lake), ignore_errors=True)
 
 
+
+def test_sql_read_query_lake_prunes_year_pushdown(spark, tmp_path):
+    """q_manifest_sql_read's staged lake (orders, one year-tagged
+    segment per order year): the query's year probe, pushed as
+    ``o_year = Y``, plans fewer partitions than the unfiltered read
+    whenever the data spans more than one year. Built on a fresh alias
+    of SF_DIR, so the stage is this code's."""
+    import os
+    import shutil
+
+    from conftest import SF_DIR
+    from pyspark.sql.datasource import EqualTo
+
+    from nba_pipeline_spark.plans.lake_queries import _parts_stats_lake
+    from nba_pipeline_spark.sources import load_table
+
+    alias = str(tmp_path / "sf")
+    os.symlink(SF_DIR, alias)
+    lake = _parts_stats_lake(spark, alias)
+    try:
+        probe = load_table(spark, alias, "orders").agg(
+            F.min(F.year("o_orderdate").cast("int")).alias("y"),
+            F.countDistinct(F.year("o_orderdate")).alias("ny"),
+        ).collect()[0]
+        yr, years = probe["y"], int(probe["ny"])
+        r = ManifestLakeReader({"path": lake})
+        list(r.pushFilters([EqualTo(("o_year",), yr)]))
+        kept = len(r.partitions())
+        n_all = len(ManifestLakeReader({"path": lake}).partitions())
+        if years > 1:
+            assert kept < n_all, f"year pushdown did not prune: {kept}/{n_all}"
+    finally:
+        shutil.rmtree(os.path.dirname(lake), ignore_errors=True)
+
 def test_arrow_read_keeps_map_and_struct_columns(spark, tmp_path):
     """Stored map<> and struct<> columns have no Arrow type in the
     recorded-type table; the Arrow read path keeps the file's own type

@@ -1821,6 +1821,172 @@ def test_ndv_column_mapped_lake(spark, tmp_path):
     assert int(r["ndv_bucket"]) == 8  # {0..4} U {3..7}
 
 
+
+
+def test_metadata_aggs_match_scan_on_mixed_layout(spark, tmp_path):
+    """One seeded lake holding every layout the two metadata-only
+    aggregates meet: partition-tagged segments with stats (one tagged
+    NULL), an untagged segment with stats and a tagged segment without
+    them, over int, date, double (NULLs and a NaN) and decimal columns;
+    every tag matches its segment's data. At the covered-only version
+    and at the latest, `metadata_agg` equals the plain aggregate over
+    `read_snapshot`, `metadata_agg_by_partition` equals it grouped by
+    the tag column (values and types), and the per-partition rows fold
+    to the global row. The covered-only calls submit no job;
+    `allow_scan=False` refuses the latest version, naming the
+    function."""
+    import datetime
+    import math
+    import random
+    from decimal import Decimal
+
+    rng = random.Random(15)
+    cols = ["k", "d", "x", "m"]
+
+    def batch(n, parts):
+        return [
+            (
+                rng.choice(parts),
+                rng.randint(-10**6, 10**6),
+                datetime.date(2000, 1, 1)
+                + datetime.timedelta(days=rng.randint(0, 9000)),
+                None if rng.random() < 0.2 else rng.uniform(-50.0, 50.0),
+                Decimal(rng.randint(0, 20000)) / 100,
+            )
+            for _ in range(n)
+        ]
+
+    def frame(rows):
+        return spark.createDataFrame(
+            rows, "p int, k long, d date, x double, m decimal(10,2)"
+        )
+
+    lake = str(tmp_path / "lake")
+    first = batch(60, [0, 1, None])
+    first.append((1, 0, datetime.date(2001, 1, 1), float("nan"), Decimal("7")))
+    M.commit_append_partitioned(spark, lake, frame(first), "p", stats_cols=cols)
+    M.commit_append(
+        spark, lake, frame(batch(20, [2])), partition={"p": 2},
+        stats_cols=cols,
+    )
+    covered_v = M.current_version(spark, lake)
+    M.commit_append(spark, lake, frame(batch(30, [0, 1, 2, None])), stats_cols=cols)
+    M.commit_append(spark, lake, frame(batch(20, [1])), partition={"p": 1})
+
+    kw = dict(min_cols=cols, max_cols=cols, count_cols=cols)
+
+    def plain(df, by):
+        return df.groupBy(*by).agg(
+            F.count(F.lit(1)).alias("count_rows"),
+            *[F.min(c).alias(f"min_{c}") for c in cols],
+            *[F.max(c).alias(f"max_{c}") for c in cols],
+            *[F.count(c).alias(f"count_{c}") for c in cols],
+        )
+
+    def nan(v):  # NaN != NaN: compare it as a marker
+        return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
+    def order(v):  # Spark's order: NaN above every other double
+        return (v != v, v)
+
+    def rows(df):
+        return sorted(
+            (tuple(nan(v) for v in r) for r in df.collect()),
+            key=lambda t: (t[0] is None, str(t[0])),
+        )
+
+    for v in (covered_v, None):
+        snap = M.read_snapshot(spark, lake, version=v)
+        glob = M.metadata_agg(spark, lake, version=v, **kw)
+        per = M.metadata_agg_by_partition(spark, lake, "p", version=v, **kw)
+        assert glob.dtypes == plain(snap, []).dtypes
+        assert rows(glob) == rows(plain(snap, []))
+        assert per.dtypes == plain(snap, ["p"]).dtypes
+        assert rows(per) == rows(plain(snap, ["p"]))
+        g, ps = glob.collect()[0], per.collect()
+        for name in g.asDict():
+            vals = [r[name] for r in ps if r[name] is not None]
+            if name.startswith("min_"):
+                want = min(vals, key=order, default=None)
+            elif name.startswith("max_"):
+                want = max(vals, key=order, default=None)
+            else:
+                want = sum(vals)
+            assert nan(want) == nan(g[name]), name
+
+    before = _jobs(spark)
+    M.metadata_agg(spark, lake, version=covered_v, allow_scan=False, **kw)
+    M.metadata_agg_by_partition(
+        spark, lake, "p", version=covered_v, allow_scan=False, **kw
+    )
+    assert _jobs(spark) == before
+    with pytest.raises(ValueError, match=r"^metadata_agg\(allow_scan=False\)"):
+        M.metadata_agg(spark, lake, allow_scan=False, **kw)
+    with pytest.raises(
+        ValueError, match=r"^metadata_agg_by_partition\(allow_scan=False\)"
+    ):
+        M.metadata_agg_by_partition(spark, lake, "p", allow_scan=False, **kw)
+
+def _fresh_sf_alias(tmp_path):
+    """A fresh symlinked alias of SF_DIR: the query stages built on it
+    are this checkout's, and live under their own stage root."""
+    from conftest import SF_DIR
+
+    alias = str(tmp_path / "sf")
+    os.symlink(SF_DIR, alias)
+    return alias
+
+
+def test_agg_ndv_query_lake_records_ndv_cols(spark, tmp_path):
+    """q_manifest_agg_ndv's staged lake records NDV sketches for both
+    requested columns, so the query's metadata-only COUNT DISTINCT
+    answers from them."""
+    import shutil
+
+    from nba_pipeline_spark.plans.lake_queries import q_manifest_agg_ndv
+    from nba_pipeline_spark.plans.queries import _stage_dir
+
+    alias = _fresh_sf_alias(tmp_path)
+    q_manifest_agg_ndv(spark, alias)
+    lake = _stage_dir(alias, "orders", "manifest_agg_ndv")
+    try:
+        d = M.describe_detail(spark, lake).collect()[0]
+        assert d["ndv_cols"] == ["o_custkey", "o_orderpriority"]
+    finally:
+        shutil.rmtree(os.path.dirname(lake), ignore_errors=True)
+
+
+def test_token_search_query_lake_prunes_to_truth(spark, tmp_path):
+    """q_manifest_token_search's staged lake (documents in 8 doc_id
+    bands, token blooms over text): the token probe keeps no more
+    segments than truly contain the token, plus a bloom false-positive
+    allowance of two."""
+    import shutil
+
+    from nba_pipeline_spark.plans.lake_queries import _token_lake
+    from nba_pipeline_spark.sources import load_table
+
+    alias = _fresh_sf_alias(tmp_path)
+    lake = _token_lake(spark, alias)
+    try:
+        token = "dup"
+        truth = (
+            load_table(spark, alias, "documents")
+            .filter(F.array_contains(
+                F.split(F.lower(F.col("text")), r"\s+"), token
+            ))
+            .select((F.col("doc_id") % 8).alias("b"))
+            .distinct()
+            .count()
+        )
+        segs = M.resolve_segments(spark, lake, token_eq={"text": token})
+        n_all = len(M.resolve_segments(spark, lake))
+        assert len(segs) <= min(n_all, truth + 2), (
+            f"token bloom kept {len(segs)} of {n_all}, truth {truth}"
+        )
+    finally:
+        shutil.rmtree(os.path.dirname(lake), ignore_errors=True)
+
 def _mor_chg(spark, rows):
     return spark.createDataFrame(rows, "id int, t string, ver int")
 
