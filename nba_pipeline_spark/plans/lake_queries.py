@@ -1945,7 +1945,7 @@ def q_manifest_agg_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata_agg_by_partition): the per-year COUNT(*)/MIN/MAX report
     comes entirely from partition tags + per-segment rows/stats/nulls —
     `allow_scan=False` proves zero data files are opened. The covered
-    side is O(segments) driver JSON re-aggregated through the same
+    side is O(segments) driver JSON folded per partition with the same
     decomposable sum/min/max a scan would use, so hybrid lakes (some
     segments untagged) merge honestly. The oracle does it the hard
     way: a full GROUP BY over the source parquet."""
