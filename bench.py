@@ -287,11 +287,14 @@ def main() -> None:
 def _merge_min_record(prior: dict, full: dict, this_run: dict) -> dict:
     """Fold a fresh run into the existing round record: per-query MIN,
     total recomputed from the merged mins, numeric skew_demo entries
-    min'd, run history appended (bounded). A different query set or sf
-    starts fresh — mins across different HEADLINEs would be fiction."""
+    min'd, run history appended (bounded). The record is keyed on
+    (sf, cpus): a different query set, sf or core count starts fresh —
+    mins across different HEADLINEs would be fiction."""
     same_shape = (
         set(prior.get("queries", {})) == set(full["queries"])
         and prior.get("sf") == full.get("sf")
+        and prior.get("config", {}).get("cpus")
+        == full.get("config", {}).get("cpus")
     )
     if not same_shape:
         return full
@@ -329,8 +332,9 @@ def _write_own_artifact(payload: dict) -> None:
     timing, the headline total is recomputed from the merged mins, and
     every run's (wall_ts, loadavg, total) is appended to a ``runs``
     history so a contended run is visible but can't destroy the
-    record. A changed query set or sf starts a fresh record (mins
-    across different HEADLINEs would be fiction)."""
+    record. A changed query set, sf or core count (``config.cpus``)
+    starts a fresh record (mins across different HEADLINEs would be
+    fiction)."""
     import glob
     import re
     import time as _t

@@ -32,6 +32,10 @@ _RUNTIME_CONF = {
     # reader rejects; read as long and convert at the source boundary
     # (sources.registry normalizes back to TimestampType, micros).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Python DataSource filter pushdown is opt-in engine-wide, and a
+    # reader that implements pushFilters (manifest_lake, html_tables)
+    # fails analysis while it is off; their registrations tune().
+    "spark.sql.python.filterPushdown.enabled": "true",
     # spark.sql.parser.escapedStringLiterals is deliberately NOT set:
     # SQL text built at plan time splices string values only through
     # operators/bpe.py::_sql_str, which parses the same in both modes.

@@ -78,7 +78,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..session import register_data_source
+from ..session import register_data_source, tune
 from . import manifest_store as store
 from .manifest_store import _DATA_DIR, _pafs, _props_triples
 
@@ -581,10 +581,11 @@ def _arrow_expr(filters):
 
 
 def register_lake_source(spark) -> None:
-    """Idempotent registration of format("manifest_lake"); turns on
-    the engine-wide Python-source filter pushdown flag (a reader that
-    implements pushFilters fails analysis while it's off)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """Idempotent registration of format("manifest_lake"). `tune`
+    pins the engine-wide Python-source filter pushdown flag with the
+    session's other confs (a reader that implements pushFilters fails
+    analysis while it's off)."""
+    tune(spark)
     register_data_source(spark, ManifestLakeDataSource)
 
 

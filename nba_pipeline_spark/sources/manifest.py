@@ -88,8 +88,16 @@ The row-level deletes and MERGEs share one keyed-change core:
 key frame), `_segments_overlapping_keys` (stats, then blooms, classify
 the touched segments), `_dv_hits` (a deletion vector's ``(file, pos)``
 scan), `_record_victims` / `_record_merge` (the write-time change
-segment) and `_segment_empty` (a rewrite left empty is read off its
-footers, not counted by a job).
+segment) and `_segment_empty` (a deletion-vector write left empty is
+read off its footers, not counted by a job).
+
+The segment rewrites share one maintenance core, `_rewrite_groups`:
+`compact`, `compact_small` (through `_rewrite_tag_groups`), the three
+cluster ops, and the row-removing rewrites of `commit_replace_where`
+and `commit_delete` (through `_rewrite_survivors`) hand it every
+group's rows, read in one scan (`_read_groups`), and it lands every
+group's new segment in one keyed `_write_segments` pass, so their jobs
+do not grow with the number of groups.
 """
 
 from __future__ import annotations
@@ -1507,8 +1515,12 @@ def _write_segments(
     non-ASCII) out of directory names, and a key computed from helper
     columns (a z-run id) never reaches the files. `sort` names helper
     columns that order the rows inside each keyed segment and are not
-    written (the z value of the cluster ops). Segments come back in key
-    order, NULL first.
+    written (the z value of the cluster ops, the group id of
+    `_rewrite_groups`). `target_files` caps each keyed segment's file
+    count: the rows shuffle on (``__p``, input partition mod
+    `target_files`), so one task writes each of a segment's at most
+    `target_files` files. Segments come back in key order, NULL first.
+    The maintenance ops reach this pass through `_rewrite_groups`.
 
     Metadata takes at most two grouped aggregations: `_stats_meta`
     (``stats``/``rows``/``nulls``, recorded when `stats_cols` is given)
@@ -1550,8 +1562,11 @@ def _write_segments(
         for c, j in zip(kcols, jcols):
             on = on & F.col(c).eqNullSafe(F.col(j))
         meta_df = kdf.join(F.broadcast(ids), on).drop(*kcols, *jcols)
+        out = meta_df if not target_files else meta_df.withColumn(
+            "__f", F.pmod(F.spark_partition_id(), F.lit(target_files))
+        ).repartition("__p", "__f").drop("__f")
         tmp = _write_segment(
-            meta_df.sortWithinPartitions("__p", *sort).drop(*sort), path, None,
+            out.sortWithinPartitions("__p", *sort).drop(*sort), path, None,
             bloom_cols=file_bloom_cols, expected_ndv=expected_ndv,
             partition_by="__p",
         )
@@ -2001,11 +2016,15 @@ def commit_replace_where(
       the new manifest BY NAME, zero data movement;
     - provably all-matching (tag equality on every `eq` col, stats
       fully inside every range) -> dropped wholesale, zero reads;
-    - anything else -> rewritten keeping only ``NOT scope`` rows. The
-      surviving rows are a subset, so the old tag/stats/bloom metadata
-      stays a SOUND (superset) bound and carries forward unchanged. A
-      rewrite left with no rows (its footers' row counts say so) is
-      not listed and its dir is removed.
+    - anything else -> rewritten keeping only ``NOT scope`` rows,
+      every such segment in ONE keyed pass of the maintenance core
+      (`_rewrite_survivors` → `_rewrite_groups`), so the jobs do not
+      grow with the number of rewritten segments. The surviving rows
+      are a subset, so the old tag and blooms stay SOUND (superset)
+      bounds and carry forward; the row/null counts and stats are
+      recomputed. A rewrite left with no rows writes nothing and is
+      not listed; a version left with no segment keeps one 0-row
+      segment so it stays readable.
 
     At 100 TB with date-partitioned segments, re-stating one day is
     one dropped segment + one appended segment and a KB manifest swap —
@@ -2094,47 +2113,27 @@ def commit_replace_where(
         if uniq:
             _check_unique_dups(df, uniq, path, "the replaceWhere batch")
             if untouched or rewrite:
-                remainder = None
-                if untouched:
-                    remainder = _read_segments(spark, path, untouched)
-                if rewrite:
-                    kept_rows = _read_segments(spark, path, rewrite).filter(
-                        ~F.coalesce(pred_phys, F.lit(False))
-                    )
-                    remainder = (
-                        kept_rows if remainder is None
-                        else remainder.unionByName(
-                            kept_rows, allowMissingColumns=True
-                        )
-                    )
+                # untouched segments hold no in-scope row: one NOT-scope
+                # read of both is the remainder
+                remainder = _read_segments(
+                    spark, path, untouched + rewrite, merge_schema=True
+                ).filter(~F.coalesce(pred_phys, F.lit(False)))
                 _check_unique_remainder(
                     spark, path, uniq, df, remainder, "the replaceWhere batch"
                 )
         new_segs: dict[str, dict] = {}
-        emptied: list[str] = []
-        for s in rewrite:
-            kept = _read_segments(spark, path, [s]).filter(
-                ~F.coalesce(pred_phys, F.lit(False))
-            )
-            seg = _write_segment(kept, path, None)
-            if _segment_empty(path, seg):
-                emptied.append(seg)  # every row was in the scope
-                continue
-            # subset rows: old tag/stats/bloom remain sound superset
-            # bounds (seq is restamped by _commit for the new name)
-            new_segs[seg] = {
-                k: v for k, v in meta.get(s, {}).items() if k != "seq"
-            }
         if partition_by is not None:
             new_segs.update(_tagged(partition_by, _write_segments(
                 spark, path, df, [F.col(partition_by)]
             )))
         elif df.limit(1).count():
             new_segs[_write_segment(df, path, None)] = {}
-        if emptied and not (untouched or new_segs):
-            new_segs[emptied.pop()] = {}  # a 0-row version stays readable
-        for seg in emptied:
-            shutil.rmtree(_seg_path(path, seg))
+        if rewrite:
+            new_segs = {**_rewrite_survivors(
+                spark, path, parent, rewrite,
+                lambda rows: rows.filter(~F.coalesce(pred_phys, F.lit(False))),
+                untouched + list(new_segs),
+            ), **new_segs}
         out = {
             "segments": untouched + list(new_segs),
             "meta": {s: sm for s, sm in new_segs.items() if sm},
@@ -2216,6 +2215,127 @@ def _rebased(spark: SparkSession, path: str, rewrite):
     return build
 
 
+def _read_groups(
+    spark: SparkSession, path: str, manifest: dict, group_of: dict[str, int]
+) -> DataFrame:
+    """The rows of the segments `group_of` lists, in ONE scan
+    (tombstones applied, merged schema), each with ``__g``, the group
+    id `group_of` gives its source segment. The id is looked up by one
+    broadcast join on the segment's dir name: a hash probe per row,
+    whatever the number of segments."""
+    from pyspark.sql import functions as F
+
+    df = _read_with_tombstones(
+        spark, path, list(group_of), manifest, True, with_segment=True
+    )
+    ids = [(s.rstrip("/").rsplit("/", 1)[-1], g) for s, g in group_of.items()]
+    ids = rows_frame(spark, ids, "__seg string, __g int")
+    return df.join(F.broadcast(ids), "__seg").drop("__seg")
+
+
+def _rewrite_groups(
+    spark: SparkSession, path: str, props: dict, df: DataFrame,
+    metas: dict[int, dict], kept: list[str], sort: list[str] = (),
+    target_files: int | None = None, stats_cols=None, bloom_cols=None,
+) -> dict[str, dict]:
+    """The one segment rewrite of the lake's maintenance ops (`compact`,
+    `compact_small`, the cluster ops, and through `_rewrite_survivors`
+    `commit_replace_where` and `commit_delete`): every group's new
+    segment lands in ONE keyed `_write_segments` pass on the group id,
+    so the jobs do not grow with the number of groups.
+
+    `df` holds the rows of every group, each with its group id ``__g``
+    (`_read_groups`), a key of `metas`. The rows are projected to the
+    table's recorded physical schema, as the Arrow read path's
+    `_project` does: recorded order, narrow pre-widening columns
+    upcast, missing columns null-filled, a dropped column's bytes not
+    carried. `target_files` caps each segment's files; `sort` names
+    helper columns that order the rows inside each segment. Neither
+    they nor ``__g`` are written.
+
+    Returns {segment: {**metas[g], **written metadata}} in group order.
+    A group left with no row writes nothing: it has no key in the stats
+    aggregation. When no group keeps a row and the new version lists no
+    other segment (`kept`), one 0-row segment with the lowest group's
+    metadata keeps the version readable."""
+    from pyspark.sql import functions as F
+
+    sch, cm, have = (props.get("schema") or {}).get("cols"), _colmap(props), set(df.columns)
+    if sch:
+        phys = [(cm.get(n, n), t) for n, t in sch]
+        df = df.select(*[
+            (F.col(p) if p in have else F.lit(None)).cast(t).alias(p)
+            for p, t in phys
+        ], *sort, "__g")
+    cols = dict(stats_cols=stats_cols, bloom_cols=bloom_cols)
+    new = {
+        seg: {**metas[g], **m}
+        for (g,), seg, m in _write_segments(
+            spark, path, df, [F.col("__g")], sort=[*sort, "__g"],
+            target_files=target_files, **cols,
+        )
+    }
+    if not (new or kept):
+        empty = df.drop(*sort, "__g").limit(0)
+        [(_, seg, m)] = _write_segments(spark, path, empty, target_files=1, **cols)
+        new[seg] = {**metas[min(metas)], **m}
+    return new
+
+
+def _rewrite_survivors(
+    spark: SparkSession, path: str, manifest: dict, segs: list[str],
+    keep, kept: list[str], target_files: int | None = None,
+) -> dict[str, dict]:
+    """Rewrite each of `segs` with only the rows `keep(rows)` leaves,
+    through `_rewrite_groups` (the row-removing rewrites of
+    `commit_replace_where` and `commit_delete`). A segment left with no
+    row drops out. A survivor keeps its segment's partition tag and
+    blooms, sound superset bounds for a subset; its row and null counts
+    are recomputed with its stats, over every stats column of `segs`,
+    and its NDV sketch is dropped (seq is restamped by `_commit`)."""
+    meta = manifest.get("meta", {})
+    stale = ("seq", "rows", "nulls", "ndv")
+    return _rewrite_groups(
+        spark, path, _props(manifest),
+        keep(_read_groups(spark, path, manifest, {s: g for g, s in enumerate(segs)})),
+        {
+            g: {k: v for k, v in meta.get(s, {}).items() if k not in stale}
+            for g, s in enumerate(segs)
+        },
+        kept,
+        target_files=target_files,
+        stats_cols=sorted({c for s in segs for c in meta.get(s, {}).get("stats", {})}),
+    )
+
+
+def _tag_groups(manifest: dict, segs: list[str]) -> dict[str, list[str]]:
+    """`segs` grouped by partition tag, keyed by the tag's JSON (the
+    untagged ones under ``"null"``), in first-seen order."""
+    meta, out = manifest.get("meta", {}), {}
+    for s in segs:
+        tag = json.dumps(meta.get(s, {}).get("part"), sort_keys=True, default=str)
+        out.setdefault(tag, []).append(s)
+    return out
+
+
+def _rewrite_tag_groups(
+    spark: SparkSession, path: str, manifest: dict,
+    groups: dict[str, list[str]], kept: list[str], **write,
+) -> dict[str, dict]:
+    """Consolidate each `_tag_groups` group into one segment that keeps
+    the group's tag (`compact`, `compact_small`), through
+    `_rewrite_groups`."""
+    keys = list(groups)
+    return _rewrite_groups(
+        spark, path, _props(manifest),
+        _read_groups(spark, path, manifest, {
+            s: g for g, k in enumerate(keys) for s in groups[k]
+        }),
+        {g: {"part": json.loads(k)} if k != "null" else {} for g, k in enumerate(keys)},
+        kept, **write,
+    )
+
+
 def compact(
     spark: SparkSession,
     path: str,
@@ -2244,7 +2364,13 @@ def compact(
     Partition-tagged lakes keep their tags: when EVERY base segment
     carries a ``part`` tag, consolidation runs PER PARTITION VALUE
     (one tagged output segment each), so manifest-level pruning and
-    `commit_upsert_partitioned` survive maintenance. Min/max stats and
+    `commit_upsert_partitioned` survive maintenance. Every group lands
+    in ONE keyed pass of the maintenance core (`_rewrite_tag_groups` →
+    `_rewrite_groups`): one scan of all the groups' segments, the same
+    number of jobs for 8 partitions or 8,000, `target_files` files at
+    most per consolidated segment, every file at the recorded
+    (widened) types; a group whose every row is tombstoned leaves no
+    segment. Min/max stats and
     per-segment BLOOMS are dropped for compacted segments by default
     (the skipping columns aren't recorded in the manifest) — point
     lookups degrade to full-segment scans after maintenance unless the
@@ -2271,45 +2397,28 @@ def compact(
     def rewrite(base):
         if base is None:
             raise ValueError(f"cannot compact an empty manifest lake: {path}")
-        base_meta = base.get("meta", {})
-        part_tags = [base_meta.get(s, {}).get("part") for s in base["segments"]]
-        if base["segments"] and all(p is not None for p in part_tags):
-            by_part: dict = {}
-            for s, p in zip(base["segments"], part_tags):
-                by_part.setdefault(tuple(sorted(p.items())), []).append(s)
-            groups = [(dict(k), segs) for k, segs in by_part.items()]
-        else:
-            groups = [(None, list(base["segments"]))]
+        groups = _tag_groups(base, base["segments"])
+        if "null" in groups:  # not every segment tagged: consolidate all
+            groups = {"null": list(base["segments"])}
         untouched: list[str] = []
         if part_eq is not None:
-            matching, rest = [], []
-            for part, group in groups:
-                if part is not None and all(
-                    part.get(k) == _json_safe(v) for k, v in part_eq.items()
-                ):
-                    matching.append((part, group))
-                else:
-                    rest.extend(group)
-            if not matching:
+            def hit(k):
+                tag = json.loads(k)
+                return tag is not None and all(
+                    tag.get(c) == _json_safe(v) for c, v in part_eq.items()
+                )
+
+            untouched = [s for k, g in groups.items() if not hit(k) for s in g]
+            groups = {k: g for k, g in groups.items() if hit(k)}
+            if not groups:
                 raise ValueError(
                     f"compact(part_eq={part_eq!r}): no partition-tagged "
                     f"segments match (untagged segments never match): {path}"
                 )
-            groups, untouched = matching, rest
-        new_segs: dict[str, dict] = {}
-        for part, group in groups:
-            # merge_schema: consolidating schema-evolved segments must
-            # keep the union schema, not drop later-added columns
-            df = _read_with_tombstones(
-                spark, path, group, base, merge_schema=True
-            )
-            [(_, seg, m)] = _write_segments(
-                spark, path, df,
-                target_files=target_files,
-                stats_cols=stats_cols,
-                bloom_cols=bloom_cols,
-            )
-            new_segs[seg] = m if part is None else {"part": part, **m}
+        new_segs = _rewrite_tag_groups(
+            spark, path, base, groups, untouched,
+            target_files=target_files, stats_cols=stats_cols, bloom_cols=bloom_cols,
+        )
         return {
             "segments": list(new_segs) + untouched,
             "meta": {s: m for s, m in new_segs.items() if m},
@@ -2421,8 +2530,10 @@ def compact_small(
     appends accumulate small files, and rewriting the whole table per
     maintenance pass (plain `compact`) is O(table) where this is
     O(small tail). Partition boundaries are respected (same-tag
-    segments merge together, cross-tag never); per-group stats are
-    recomputed over the union of the candidates' stats columns, so
+    segments merge together, cross-tag never); every group lands in
+    ONE keyed pass of `compact`'s core (`_rewrite_tag_groups`), so the
+    jobs do not grow with the number of partitions; stats are
+    recomputed over the union of all the candidates' stats columns, so
     range skipping and metadata-only aggregates survive. Returns the
     committed version, or None when no group has >= 2 candidates
     (nothing worth doing — idempotent steady state). Pending MoR
@@ -2436,46 +2547,30 @@ def compact_small(
         if m is None:
             return None
         _require_no_tombstones(m, path, "compact_small")
-        props = _props(m)
         meta = m.get("meta", {})
-        ddl = _widened_ddl(props)
-
-        def pkey(s: str) -> str:
-            return json.dumps(
-                meta.get(s, {}).get("part"), sort_keys=True, default=str
-            )
-
-        groups: dict[str, list[str]] = {}
-        for seg in m["segments"]:
-            sm = meta.get(seg, {})
-            rows = sm.get("rows")
-            if rows is None or int(rows) < target_rows:
-                groups.setdefault(pkey(seg), []).append(seg)
-        cands = {k: segs for k, segs in groups.items() if len(segs) >= 2}
-        if not cands:
+        small = [
+            s for s in m["segments"]
+            if meta.get(s, {}).get("rows") is None
+            or int(meta[s]["rows"]) < target_rows
+        ]
+        groups = {
+            k: g for k, g in sorted(_tag_groups(m, small).items()) if len(g) >= 2
+        }
+        if not groups:
             return None
         acted["yes"] = True
-        new_segs: dict[str, dict] = {}
-        consumed: set[str] = set()
-        bloom_t = _physical_cols(props, bloom_cols)
-        for k, segs in sorted(cands.items()):
-            df = _read_segments(
-                spark, path, segs, merge_schema=True, schema_ddl=ddl
-            )
-            [(_, seg, sm)] = _write_segments(
-                spark, path, df,
-                target_files=target_files,
-                stats_cols=sorted(
-                    {c for s in segs for c in meta.get(s, {}).get("stats", {})}
-                ),
-                bloom_cols=bloom_t,
-            )
-            part = meta.get(segs[0], {}).get("part")
-            new_segs[seg] = sm if part is None else {"part": part, **sm}
-            consumed.update(segs)
+        consumed = {s for g in groups.values() for s in g}
+        kept = [s for s in m["segments"] if s not in consumed]
+        new_segs = _rewrite_tag_groups(
+            spark, path, m, groups, kept,
+            target_files=target_files,
+            stats_cols=sorted(
+                {c for s in consumed for c in meta.get(s, {}).get("stats", {})}
+            ),
+            bloom_cols=_physical_cols(_props(m), bloom_cols),
+        )
         return {
-            "segments": [s for s in m["segments"] if s not in consumed]
-            + list(new_segs),
+            "segments": kept + list(new_segs),
             "meta": {s: sm for s, sm in new_segs.items() if sm},
         }
 
@@ -2572,17 +2667,17 @@ def cluster(
                 .repartitionByRange(target_segments, zrun, F.col("__z"))
                 .persist()
             )
-            for (run,), seg, m in _write_segments(
-                spark, path, prepared, [zrun], sort=["__z"], stats_cols=all_stats
-            ):
-                new_segs[seg] = {
-                    **m, "cluster": {"cols": list(cluster_cols), "zrun": run}
-                }
+            # a 0-row snapshot (every row tombstoned) keeps one empty
+            # run-0 segment, so reads stay valid
+            new_segs = _rewrite_groups(
+                spark, path, _props(base), prepared.withColumn("__g", zrun),
+                {
+                    r: {"cluster": {"cols": list(cluster_cols), "zrun": r}}
+                    for r in range(target_segments)
+                },
+                [], sort=["__z"], stats_cols=all_stats,
+            )
             prepared.unpersist()
-            if not new_segs:
-                # 0-row snapshot (e.g. all rows tombstoned): keep one
-                # empty schema-preserving segment so reads stay valid
-                new_segs[_write_segment(df.limit(0), path, 1)] = {}
 
         # the layout spec rides the manifest so cluster_incremental can
         # reproduce the EXACT z mapping (same cuts -> same runs)
@@ -2620,9 +2715,11 @@ def cluster_incremental(spark: SparkSession, path: str) -> int:
     their z with the manifest-persisted cut points (identical mapping
     to the original layout), route to their run by the same
     ``floor(z * N / n_z)`` formula, and only runs that RECEIVE rows
-    are rewritten (merged + re-sorted, stats refreshed); every other
-    clustered segment transfers by name. Returns the committed version
-    (the current one when there is nothing to fold).
+    are rewritten (merged + re-sorted into one file, stats refreshed),
+    all of them in ONE keyed pass of the maintenance core
+    (`_rewrite_groups`, grouped by z-run); every other clustered
+    segment transfers by name. Returns the committed version (the
+    current one when there is nothing to fold).
 
     Repeated increments preserve query-time skipping exactly, but run
     sizes drift toward the hot z-cells; re-run full `cluster` when
@@ -2678,46 +2775,24 @@ def cluster_incremental(spark: SparkSession, path: str) -> int:
         if not fresh:
             return None  # nothing to fold: _commit returns the head
         z, n_z = _zorder_from_cuts(cols, bits, spec["cuts"])
-        ddl = _widened_ddl(dict(base.get("props", {})))
-        df_new = _read_segments(
-            spark, path, fresh, merge_schema=True, schema_ddl=ddl
-        )
-        routed = df_new.withColumn(
-            "__zrun",
-            F.least(
-                F.lit(n_runs - 1),
-                F.floor(z * n_runs / F.lit(n_z)),
-            ).cast("int"),
+        # each row's group is its z-run: the fresh rows route by z, the
+        # rows of a receiving run's current segments by segment
+        routed = _read_with_tombstones(spark, path, fresh, base, True).withColumn(
+            "__g", F.least(F.lit(n_runs - 1), F.floor(z * n_runs / F.lit(n_z))).cast("int")
         ).persist()
-        touched = sorted(
-            int(r["__zrun"]) for r in routed.select("__zrun").distinct().collect()
-        )
-        by_run: dict[int, list[str]] = {}
-        for s, r in run_of.items():
-            by_run.setdefault(r, []).append(s)
-        new_segs: dict[str, dict] = {}
-        replaced: set[str] = set()
-        for run in touched:
-            olds = by_run.get(run, [])
-            replaced.update(olds)
-            part = routed.filter(F.col("__zrun") == run).drop("__zrun")
-            if olds:
-                part = _read_segments(
-                    spark, path, olds, merge_schema=True, schema_ddl=ddl
-                ).unionByName(part, allowMissingColumns=True)
-            zc, _ = _zorder_from_cuts(cols, bits, spec["cuts"])
-            # one z-sorted file: sort AFTER the coalesce, which would
-            # otherwise just concatenate separately sorted partitions
-            merged = (
-                part.coalesce(1).withColumn("__z", zc).sortWithinPartitions("__z")
-            )
-            [(_, seg, m)] = _write_segments(
-                spark, path, merged.drop("__z"), stats_cols=all_stats
-            )
-            new_segs[seg] = {**m, "cluster": {"cols": cols, "zrun": run}}
+        touched = sorted(int(r[0]) for r in routed.select("__g").distinct().collect())
+        olds = {s: r for s, r in run_of.items() if r in touched}
+        rows = routed.unionByName(
+            _read_groups(spark, path, base, olds), allowMissingColumns=True
+        ) if olds else routed
+        kept = [s for s in base["segments"] if s not in olds and s not in fresh]
+        # target_files=1: each run is one file, z-sorted throughout
+        new_segs = _rewrite_groups(
+            spark, path, _props(base), rows.withColumn("__z", z),
+            {run: {"cluster": {"cols": cols, "zrun": run}} for run in touched},
+            kept, sort=["__z"], target_files=1, stats_cols=all_stats,
+        ) if touched else {}
         routed.unpersist()
-        consumed = set(fresh) | replaced
-        kept = [s for s in base["segments"] if s not in consumed]
         return {
             "segments": kept + list(new_segs),
             "meta": new_segs,
@@ -2783,41 +2858,34 @@ def cluster_partitioned(
                 f"cluster_partitioned requires every segment tagged on "
                 f"{part_col!r} ({len(untagged)} untagged): {path}"
             )
-        df = _read_segments(
-            spark,
-            path,
-            base["segments"],
-            merge_schema=True,
-            schema_ddl=_widened_ddl(dict(base.get("props", {}))),
-        )
+        # group id = the partition's index * n_per + the z-run
+        vals = [json.dumps(meta0[s]["part"][part_col]) for s in base["segments"]]
+        index = {v: i for i, v in enumerate(dict.fromkeys(vals))}
+        df = _read_groups(spark, path, base, {
+            s: index[v] for s, v in zip(base["segments"], vals)
+        })
         z, n_z, _cuts_unused = _zorder_exprs(df, list(cluster_cols), bits_per_col)
         zrun = F.least(
             F.lit(n_per - 1), F.floor(F.col("__z") * n_per / F.lit(n_z))
         ).cast("int")
-        n_parts = len({
-            json.dumps(meta0[s]["part"][part_col], default=str)
-            for s in base["segments"]
-        })
         prepared = (
             df.withColumn("__z", z)
-            .repartitionByRange(
-                max(1, n_parts) * n_per, F.col(part_col), zrun, F.col("__z")
-            )
+            .withColumn("__g", F.col("__g") * n_per + zrun)
+            .repartitionByRange(len(index) * n_per, "__g", "__z")
             .persist()
         )
-        new_segs: dict[str, dict] = {}
-        for (p, _), seg, m in _write_segments(
-            spark, path, prepared, [F.col(part_col), zrun],
-            sort=["__z"], stats_cols=all_stats,
-        ):
-            new_segs[seg] = {
-                "part": {part_col: _json_safe(p)},
-                **m,
-                "cluster": {"cols": list(cluster_cols)},
-            }
+        new_segs = _rewrite_groups(
+            spark, path, _props(base), prepared,
+            {
+                i * n_per + r: {
+                    "part": {part_col: json.loads(v)},
+                    "cluster": {"cols": list(cluster_cols)},
+                }
+                for v, i in index.items() for r in range(n_per)
+            },
+            [], sort=["__z"], stats_cols=all_stats,
+        )
         prepared.unpersist()
-        if not new_segs:  # 0-row snapshot: keep reads valid
-            new_segs[_write_segment(df.limit(0), path, 1)] = {}
         return {
             "segments": list(new_segs),
             "meta": {s: m for s, m in new_segs.items() if m},
@@ -3146,9 +3214,13 @@ def _read_with_tombstones(
     segments: list[str],
     manifest: dict,
     merge_schema: bool = False,
+    with_segment: bool = False,
 ) -> DataFrame:
     """Merge-on-read scan: anti-join the data segments against the
     manifest's pending tombstone segments (see commit_delete_mor).
+    `with_segment` adds ``__seg``, the dir name of each row's source
+    segment, taken at the scan (``_metadata`` does not resolve past a
+    join or a union).
 
     Tombstones are SEQUENCE-SCOPED, the Iceberg equality-delete rule:
     a tombstone masks only rows of segments committed BEFORE it
@@ -3164,15 +3236,23 @@ def _read_with_tombstones(
     batches are small next to the table by premise; AQE picks
     broadcast for the key side when it is. NULL delete keys follow SQL
     semantics: they match no row."""
+    from pyspark.sql import functions as F
+
     ddl = _widened_ddl(dict(manifest.get("props", {})))
+    seg = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2)
+
+    def scan(group):
+        df = _read_segments(spark, path, group, merge_schema, ddl)
+        return df.withColumn("__seg", seg) if with_segment else df
+
     dels = list(manifest.get("deletes", []))
     if not dels:
-        return _read_segments(spark, path, segments, merge_schema, ddl)
+        return scan(segments)
     meta = manifest.get("meta", {})
     groups = _tomb_groups(segments, dels, meta)
     parts = []
     for applicable, group in groups.items():
-        df = _read_segments(spark, path, group, merge_schema, ddl)
+        df = scan(group)
         dv_tombs = [t for t in applicable if meta.get(t, {}).get("dv")]
         if dv_tombs:
             # positional tombstones (deletion vectors): the file
@@ -3180,8 +3260,6 @@ def _read_with_tombstones(
             # with the rows, so ordering vs the equality anti-joins
             # below is immaterial), then ONE anti-join against the DV
             # rows — a per-file positional filter, no key comparison
-            from pyspark.sql import functions as F
-
             df = df.withColumn(
                 "__dvf", _dv_relpath(F.col("_metadata.file_path"))
             ).withColumn("__dvp", F.col("_metadata.row_index"))
@@ -4603,11 +4681,11 @@ def commit_delete(
     index-lake takedown path rewrites only bloom-positive cells even
     though id ranges span every cell); each touched segment is
     anti-joined against the delete keys and rewritten IN PLACE in the
-    layout (its partition/stats/bloom metadata carries over — still
-    sound: deletion only shrinks a segment, so recorded bounds and
-    blooms stay supersets); a segment emptied entirely (its rewrite's
-    footers count no row) drops from the manifest and its rewrite's
-    dir is removed. Untouched segments transfer by name — the
+    layout, all of them in one keyed pass (`_rewrite_survivors`: the
+    partition tag and blooms carry over — still sound, deletion only
+    shrinks a segment — and the row/null counts and stats are
+    recomputed); a segment emptied entirely writes nothing and drops
+    from the manifest. Untouched segments transfer by name — the
     takedown/GDPR path on a 100 TB lake rewrites the few segments that
     hold the keys, not the table. NULL delete keys match no row (SQL
     semantics). The classification and rewrite run in the commit's
@@ -4638,7 +4716,6 @@ def commit_delete(
             raise ValueError(f"cannot delete from an empty manifest lake: {path}")
         _require_no_tombstones(m, path, "commit_delete")
         _require_not_widened(_props(m), path, "commit_delete")
-        meta = m.get("meta", {})
         touched, untouched = _segments_overlapping_keys(
             spark, m, key_df, sk, bloom_probe_cap
         )
@@ -4650,22 +4727,11 @@ def commit_delete(
             out = _record_victims(
                 spark, path, m, touched, key_df, keys, _p0, logical_keys
             )
-        new_segs: dict[str, dict] = {}
-        for s in touched:
-            ns = _write_segment(
-                _read_segments(spark, path, [s]).join(
-                    key_df, on=list(keys), how="left_anti"
-                ),
-                path,
-                target_files,
-            )
-            if _segment_empty(path, ns):
-                # fully-deleted segment: drop it from the manifest
-                shutil.rmtree(_seg_path(path, ns))
-                continue
-            new_segs[ns] = {
-                k: v for k, v in meta.get(s, {}).items() if k != "seq"
-            }
+        new_segs = _rewrite_survivors(
+            spark, path, m, touched,
+            lambda rows: rows.join(key_df, on=list(keys), how="left_anti"),
+            untouched, target_files,
+        ) if touched else {}
         return {
             **out,
             "segments": untouched + list(new_segs),

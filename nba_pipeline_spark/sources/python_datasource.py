@@ -31,7 +31,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from ..session import register_data_source
+from ..session import register_data_source, tune
 
 
 class HtmlTablesDataSource(DataSource):
@@ -196,7 +196,8 @@ def register_html_source(spark) -> None:
 
     Python-source filter pushdown is opt-in engine-wide; a reader that
     implements pushFilters FAILS ANALYSIS while the flag is off, so
-    registration turns it on (runtime-settable SQL conf).
+    registration calls `tune`, which pins it with the session's other
+    confs and reads it back.
 
     HANDLE-REUSE CAVEAT (upstream Spark 4.1, affects every Python
     DataSource with pushFilters): the JVM caches the planned read per
@@ -205,5 +206,5 @@ def register_html_source(spark) -> None:
     reuses the pruned plan and drops rows. Take a fresh ``load()`` per
     query. Pinned in tests/test_lake_datasource.py (the lake source
     documents the same engine behavior)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    tune(spark)
     register_data_source(spark, HtmlTablesDataSource)

@@ -2981,3 +2981,145 @@ def test_mixed_codec_lake_reads_merges_compacts_like_snappy(
         .union(_rich(spark, 9, 12))
     )
     assert want == [rows(_rich(spark, 0, 12)), merged, merged]
+
+
+def _seg_rows(spark, lake, seg):
+    df = M._read_segments(spark, lake, [seg], merge_schema=True)
+    return df.dtypes, sorted(
+        (tuple(r) for r in df.collect()), key=lambda t: [(v is None, v) for v in t]
+    )
+
+
+def test_rewrite_core_matches_per_group_writes(spark, tmp_path):
+    """`compact`'s one keyed rewrite pass lands, for every partition
+    group, the segment the per-group write (`_write_segments` on the
+    group's own tombstoned read) lands: the same rows and column types,
+    the same rows/stats/nulls metadata, bit-identical blooms, and at
+    most `target_files` files. The seeded lake has a group with some
+    rows tombstoned, a group with every row tombstoned (it leaves no
+    segment), a widened column with narrow and wide files, and a
+    renamed column whose stats and blooms are asked for by its logical
+    name."""
+    import glob
+    import random
+
+    rng = random.Random(16)
+
+    def batch(lo, parts, vtype):
+        rows = [
+            (
+                k,
+                rng.choice(parts),
+                None if rng.random() < 0.2 else rng.randint(-10**4, 10**4),
+                rng.choice(["ab", "c d", None, "é"]),
+            )
+            for k in range(lo, lo + 300)
+        ]
+        return rows, spark.createDataFrame(
+            rows, f"k long, p int, v {vtype}, w string"
+        )
+
+    lake, ref = str(tmp_path / "lake"), str(tmp_path / "ref")
+    doomed = []
+    for lo in (0, 300):
+        rows, df = batch(lo, [0, 1, 2, 3], "int")
+        M.commit_append_partitioned(spark, lake, df, "p")
+        doomed += [(k,) for k, p, _, _ in rows if p == 3 or (p == 0 and k % 5 == 0)]
+    M.commit_delete_mor(spark, lake, spark.createDataFrame(doomed, "k long"), ["k"])
+    M.widen_column_type(spark, lake, "v", "bigint")
+    M.commit_append_partitioned(spark, lake, batch(600, [0, 1, 2], "bigint")[1], "p")
+    M.rename_column(spark, lake, "w", "label")
+    base = M._read_manifest(spark, lake, M.current_version(spark, lake))
+    groups: dict = {}
+    for s in base["segments"]:
+        groups.setdefault(base["meta"][s]["part"]["p"], []).append(s)
+    want = {}
+    for p, segs in groups.items():
+        df = M._read_with_tombstones(spark, lake, segs, base, merge_schema=True)
+        [(_, seg, m)] = M._write_segments(
+            spark, ref, df, target_files=4,
+            stats_cols=["k", "v", "w"], bloom_cols=["k", "w"],
+        )
+        if m["rows"]:
+            want[p] = (seg, m)
+    assert set(want) == {0, 1, 2}, "group 3 is tombstoned whole"
+
+    v = M.compact(
+        spark, lake, target_files=4,
+        stats_cols=["k", "v", "label"], bloom_cols=["k", "label"],
+    )
+    m = M._read_manifest(spark, lake, v)
+    got = {m["meta"][s]["part"]["p"]: s for s in m["segments"]}
+    assert set(got) == set(want)
+    for p, (rseg, rmeta) in want.items():
+        seg, meta = got[p], m["meta"][got[p]]
+        assert _seg_rows(spark, lake, seg) == _seg_rows(spark, ref, rseg)
+        for k in ("rows", "stats", "nulls", "bloom"):
+            assert meta[k] == rmeta[k], (p, k)
+        assert 1 <= len(glob.glob(f"{lake}/data/{seg}/*.parquet")) <= 4
+    assert {"p": 0} == m["meta"][got[0]]["part"] and not m.get("deletes")
+    assert "widened" not in m["props"]
+    assert M.read_snapshot(spark, lake).count() == sum(
+        want[p][1]["rows"] for p in want
+    )
+
+
+@pytest.mark.parametrize("op", ["replace_where", "delete"])
+def test_replace_where_rewrite_records_fresh_counts(spark, tmp_path, op):
+    """A segment replaceWhere or a copy-on-write delete rewrites keeps
+    only its surviving rows, so its recorded row and null counts are
+    recomputed (the parent's were carried over) and its NDV sketch is
+    dropped: the metadata-only aggregate equals the scan afterwards."""
+    lake = str(tmp_path / "lake")
+    M.commit_append(
+        spark, lake,
+        spark.range(0, 10).select(
+            F.col("id"), F.when(F.col("id") % 4 == 0, None).otherwise(
+                F.col("id") % 3
+            ).alias("v"),
+        ),
+        stats_cols=["id", "v"], ndv_cols=["v"],
+    )
+    if op == "delete":
+        v = M.commit_delete(spark, lake, spark.range(0, 5), ["id"])
+    else:
+        v = M.commit_replace_where(
+            spark, lake, spark.range(0, 0).select(F.col("id"), F.col("id").alias("v")),
+            ranges={"id": (0, 4)},
+        )
+    [seg] = M._read_manifest(spark, lake, v)["segments"]
+    meta = M._read_manifest(spark, lake, v)["meta"][seg]
+    assert meta["rows"] == 5 and meta["stats"]["id"] == [5, 9]
+    assert meta["nulls"] == {"id": 0, "v": 1} and "ndv" not in meta
+    agg = M.metadata_agg(spark, lake, count_cols=["v"], allow_scan=False)
+    assert agg.collect()[0].asDict() == {"count_rows": 5, "count_v": 4}
+
+
+def test_maintenance_job_budget_does_not_grow_with_partitions(spark, tmp_path):
+    """`compact` and `compact_small` rewrite every partition group in
+    one keyed pass: on a two-batch `commit_append_partitioned` lake
+    they submit the same number of Spark jobs at 4 and at 16
+    partitions (the per-group loops they replace cost two jobs per
+    group)."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(op, n_parts):
+        lake = str(tmp_path / f"{op.__name__}{n_parts}")
+        for lo in (0, 500):
+            M.commit_append_partitioned(
+                spark, lake,
+                spark.range(lo, lo + 500).select(
+                    F.col("id"), (F.col("id") % n_parts).alias("p")
+                ),
+                "p",
+            )
+        before = set(tracker.getJobIdsForGroup(None))
+        if op is M.compact:
+            op(spark, lake)
+        else:
+            op(spark, lake, target_rows=10**6)
+        assert len(M.resolve_segments(spark, lake)) == n_parts
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    for op in (M.compact, M.compact_small):
+        assert jobs(op, 4) == jobs(op, 16), op.__name__

@@ -734,7 +734,7 @@ def test_cli_pin_catalog(spark, tmp_path, capsys):
 def test_bench_record_merge_min():
     """VERDICT r9 #6: two consecutive bench runs keep the better
     per-query record (a contended rerun cannot clobber the idle min);
-    a changed query set starts a fresh record."""
+    a changed query set or core count starts a fresh record."""
     import bench
 
     run1 = {"wall_ts": "t1", "loadavg": [1.0], "value": 5.0}
@@ -762,3 +762,12 @@ def test_bench_record_merge_min():
     # different query set: fresh record, no fictional mins
     other = {"queries": {"a": 3.0, "c": 1.0}, "value": 4.0, "sf": 0.1}
     assert bench._merge_min_record(prior, dict(other), run2) == other
+    # the record is keyed on (sf, cpus): an 8-core run never folds its
+    # minima into a 32-core record
+    wide = {**prior, "config": {"cpus": "32"}}
+    narrow = {**fresh, "config": {"cpus": "8"}}
+    assert bench._merge_min_record(wide, dict(narrow), run2) == narrow
+    same = {**fresh, "config": {"cpus": "32"}}
+    assert bench._merge_min_record(wide, dict(same), run2)["queries"] == {
+        "a": 2.0, "b": 2.5,
+    }
