@@ -1484,6 +1484,10 @@ def _stats_meta(
     ]
 
 
+# the dir Spark's partitioned writer gives a NULL partition value
+_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
+
+
 def _write_segments(
     spark: SparkSession,
     path: str,
@@ -1506,14 +1510,17 @@ def _write_segments(
     are ``()``. With `key` (a
     list of Columns), each distinct key tuple (NULL is a value) becomes
     one segment, in a fixed number of jobs whatever the number of
-    segments: the tuples come out of the stats aggregation, a broadcast
-    join copies each row's tuple into a dense int ``__p``, the frame is
-    written ONCE with ``partitionBy("__p")`` into a tmp dir under
-    ``data/``, and each ``__p=<i>`` dir is renamed into its own
-    ``data/seg-<uuid>``, so the manifest layout and every reader stay
-    as they are. The dense id keeps typed values (NULL, '/', '=', '%',
-    non-ASCII) out of directory names, and a key computed from helper
-    columns (a z-run id) never reaches the files. `sort` names helper
+    segments: the frame is written ONCE with ``partitionBy("__p")``
+    into a tmp dir under ``data/``, and each ``__p=<v>`` dir is renamed
+    into its own ``data/seg-<uuid>``, so the manifest layout and every
+    reader stay as they are. One integral key column is ``__p`` itself
+    (the z-run of the cluster ops, the group id of `_rewrite_groups`):
+    the dirs the write made are the keys, and without `stats_cols` no
+    aggregation runs. Any other key's tuples come out of the stats
+    aggregation and a broadcast join copies each row's tuple into a
+    dense int ``__p``, which keeps typed values (NULL, '/', '=', '%',
+    non-ASCII) out of directory names. A key computed from helper
+    columns never reaches the files. `sort` names helper
     columns that order the rows inside each keyed segment and are not
     written (the z value of the cluster ops, the group id of
     `_rewrite_groups`). `target_files` caps each keyed segment's file
@@ -1543,25 +1550,29 @@ def _write_segments(
     else:
         kcols = [f"__k{i}" for i in range(len(key))]
         kdf = df.select("*", *[k.alias(c) for c, k in zip(kcols, key)])
-        stats = sorted(
-            _stats_meta(kdf, kcols, stats_cols),
-            key=lambda ks: [(v is not None, v) for v in ks[0]],
-        )
-        if not stats:
-            return []
-        jcols = [f"__j{i}" for i in range(len(key))]
-        ids = rows_frame(
-            spark,
-            [(i, *k) for i, (k, _) in enumerate(stats)],
-            kdf.select(
-                F.lit(0).alias("__p"),
-                *[F.col(c).alias(j) for c, j in zip(kcols, jcols)],
-            ).schema,
-        )
-        on = F.lit(True)
-        for c, j in zip(kcols, jcols):
-            on = on & F.col(c).eqNullSafe(F.col(j))
-        meta_df = kdf.join(F.broadcast(ids), on).drop(*kcols, *jcols)
+        direct = len(key) == 1 and dict(kdf.dtypes)["__k0"] in _INTEGRAL_TYPES
+        if direct:  # an integral key names its dirs itself
+            meta_df = kdf.withColumnRenamed("__k0", "__p")
+        else:
+            stats = sorted(
+                _stats_meta(kdf, kcols, stats_cols),
+                key=lambda ks: [(v is not None, v) for v in ks[0]],
+            )
+            if not stats:
+                return []
+            jcols = [f"__j{i}" for i in range(len(key))]
+            ids = rows_frame(
+                spark,
+                [(i, *k) for i, (k, _) in enumerate(stats)],
+                kdf.select(
+                    F.lit(0).alias("__p"),
+                    *[F.col(c).alias(j) for c, j in zip(kcols, jcols)],
+                ).schema,
+            )
+            on = F.lit(True)
+            for c, j in zip(kcols, jcols):
+                on = on & F.col(c).eqNullSafe(F.col(j))
+            meta_df = kdf.join(F.broadcast(ids), on).drop(*kcols, *jcols)
         out = meta_df if not target_files else meta_df.withColumn(
             "__f", F.pmod(F.spark_partition_id(), F.lit(target_files))
         ).repartition("__p", "__f").drop("__f")
@@ -1571,20 +1582,34 @@ def _write_segments(
             partition_by="__p",
         )
         fs, jtmp = _fs(spark, f"{path}/{_DATA_DIR}/{tmp}")
+        if direct:  # the keys are the ``__p=<v>`` dirs the write made
+            dirs = [
+                f.getPath().getName()[4:] for f in fs.listStatus(jtmp) if f.isDirectory()
+            ]
+            vals = sorted(
+                (None if d == _NULL_DIR else int(d) for d in dirs),
+                key=lambda v: (v is not None, v),
+            )
+            got = dict(
+                _stats_meta(meta_df, ["__p"], stats_cols) if stats_cols and vals else []
+            )
+            stats = [((v,), got.get((v,), {})) for v in vals]
         placed = []
         for i, (k, _) in enumerate(stats):
+            d = k[0] if direct else i
             seg = f"seg-{uuid.uuid4().hex[:12]}"
+            src = f"{tmp}/__p={_NULL_DIR if d is None else d}"
             if not fs.rename(
-                _jpath(spark, f"{path}/{_DATA_DIR}/{tmp}/__p={i}"),
+                _jpath(spark, f"{path}/{_DATA_DIR}/{src}"),
                 _jpath(spark, f"{path}/{_DATA_DIR}/{seg}"),
             ):
                 raise RuntimeError(f"failed to place the segment for key {k}")
-            placed.append(((i,), seg))
+            placed.append(((d,), seg))
         fs.delete(jtmp, True)
         by = ["__p"]
     blooms = (
         _segment_blooms(meta_df, by, kinds, [g for g, _ in placed])
-        if kinds else {}
+        if kinds and placed else {}
     )
     return [
         (k, seg, {**(st if stats_cols else {}), **blooms.get(g, {})})
@@ -2113,11 +2138,19 @@ def commit_replace_where(
         if uniq:
             _check_unique_dups(df, uniq, path, "the replaceWhere batch")
             if untouched or rewrite:
-                # untouched segments hold no in-scope row: one NOT-scope
-                # read of both is the remainder
-                remainder = _read_segments(
-                    spark, path, untouched + rewrite, merge_schema=True
-                ).filter(~F.coalesce(pred_phys, F.lit(False)))
+                remainder = None
+                if untouched:
+                    remainder = _read_segments(spark, path, untouched)
+                if rewrite:
+                    kept_rows = _read_segments(spark, path, rewrite).filter(
+                        ~F.coalesce(pred_phys, F.lit(False))
+                    )
+                    remainder = (
+                        kept_rows if remainder is None
+                        else remainder.unionByName(
+                            kept_rows, allowMissingColumns=True
+                        )
+                    )
                 _check_unique_remainder(
                     spark, path, uniq, df, remainder, "the replaceWhere batch"
                 )
@@ -2218,23 +2251,17 @@ def _rebased(spark: SparkSession, path: str, rewrite):
 def _read_groups(
     spark: SparkSession, path: str, manifest: dict, group_of: dict[str, int]
 ) -> DataFrame:
-    """The rows of the segments `group_of` lists, in ONE scan
-    (tombstones applied, merged schema), each with ``__g``, the group
-    id `group_of` gives its source segment. The id is looked up by one
-    broadcast join on the segment's dir name: a hash probe per row,
-    whatever the number of segments."""
-    from pyspark.sql import functions as F
-
-    df = _read_with_tombstones(
-        spark, path, list(group_of), manifest, True, with_segment=True
+    """The rows of the segments `group_of` lists, in ONE scan at the
+    table's recorded physical schema, tombstones applied, each with
+    ``__g``, the group id `group_of` gives its source segment (see
+    `_read_with_tombstones`): the input of `_rewrite_groups`."""
+    return _read_with_tombstones(
+        spark, path, list(group_of), manifest, True, group_of
     )
-    ids = [(s.rstrip("/").rsplit("/", 1)[-1], g) for s, g in group_of.items()]
-    ids = rows_frame(spark, ids, "__seg string, __g int")
-    return df.join(F.broadcast(ids), "__seg").drop("__seg")
 
 
 def _rewrite_groups(
-    spark: SparkSession, path: str, props: dict, df: DataFrame,
+    spark: SparkSession, path: str, df: DataFrame,
     metas: dict[int, dict], kept: list[str], sort: list[str] = (),
     target_files: int | None = None, stats_cols=None, bloom_cols=None,
 ) -> dict[str, dict]:
@@ -2242,31 +2269,27 @@ def _rewrite_groups(
     `compact_small`, the cluster ops, and through `_rewrite_survivors`
     `commit_replace_where` and `commit_delete`): every group's new
     segment lands in ONE keyed `_write_segments` pass on the group id,
-    so the jobs do not grow with the number of groups.
+    so the jobs do not grow with the number of groups: the write, a
+    shuffle before it when `target_files` caps the files, and the
+    stats aggregation when `stats_cols` asks for one (no lookup or
+    key-discovery job: the int group id names the written dirs).
 
-    `df` holds the rows of every group, each with its group id ``__g``
-    (`_read_groups`), a key of `metas`. The rows are projected to the
-    table's recorded physical schema, as the Arrow read path's
-    `_project` does: recorded order, narrow pre-widening columns
-    upcast, missing columns null-filled, a dropped column's bytes not
-    carried. `target_files` caps each segment's files; `sort` names
+    `df` holds the rows of every group, each with its group id ``__g``,
+    a key of `metas`, as `_read_groups` reads them: at the table's
+    recorded physical schema, as the Arrow read path's `_project`
+    projects (recorded order, narrow pre-widening columns upcast,
+    missing columns null-filled, a dropped column's bytes not
+    carried). `target_files` caps each segment's files; `sort` names
     helper columns that order the rows inside each segment. Neither
     they nor ``__g`` are written.
 
     Returns {segment: {**metas[g], **written metadata}} in group order.
-    A group left with no row writes nothing: it has no key in the stats
-    aggregation. When no group keeps a row and the new version lists no
+    A group left with no row writes nothing: the keyed write makes no
+    dir for it. When no group keeps a row and the new version lists no
     other segment (`kept`), one 0-row segment with the lowest group's
     metadata keeps the version readable."""
     from pyspark.sql import functions as F
 
-    sch, cm, have = (props.get("schema") or {}).get("cols"), _colmap(props), set(df.columns)
-    if sch:
-        phys = [(cm.get(n, n), t) for n, t in sch]
-        df = df.select(*[
-            (F.col(p) if p in have else F.lit(None)).cast(t).alias(p)
-            for p, t in phys
-        ], *sort, "__g")
     cols = dict(stats_cols=stats_cols, bloom_cols=bloom_cols)
     new = {
         seg: {**metas[g], **m}
@@ -2296,7 +2319,7 @@ def _rewrite_survivors(
     meta = manifest.get("meta", {})
     stale = ("seq", "rows", "nulls", "ndv")
     return _rewrite_groups(
-        spark, path, _props(manifest),
+        spark, path,
         keep(_read_groups(spark, path, manifest, {s: g for g, s in enumerate(segs)})),
         {
             g: {k: v for k, v in meta.get(s, {}).items() if k not in stale}
@@ -2325,13 +2348,12 @@ def _rewrite_tag_groups(
     """Consolidate each `_tag_groups` group into one segment that keeps
     the group's tag (`compact`, `compact_small`), through
     `_rewrite_groups`."""
-    keys = list(groups)
     return _rewrite_groups(
-        spark, path, _props(manifest),
+        spark, path,
         _read_groups(spark, path, manifest, {
-            s: g for g, k in enumerate(keys) for s in groups[k]
+            s: g for g, k in enumerate(groups) for s in groups[k]
         }),
-        {g: {"part": json.loads(k)} if k != "null" else {} for g, k in enumerate(keys)},
+        {g: {"part": json.loads(k)} if k != "null" else {} for g, k in enumerate(groups)},
         kept, **write,
     )
 
@@ -2654,9 +2676,8 @@ def cluster(
         new_segs: dict[str, dict] = {}
         zcuts: list[list[float]] = [[] for _ in cluster_cols]
         if base["segments"]:
-            df = _read_with_tombstones(
-                spark, path, base["segments"], base, merge_schema=True
-            )
+            # one group for the read; the z-run is each row's group
+            df = _read_groups(spark, path, base, dict.fromkeys(base["segments"], 0))
             z, n_z, zcuts = _zorder_exprs(df, list(cluster_cols), bits_per_col)
             zrun = F.least(
                 F.lit(target_segments - 1),
@@ -2670,7 +2691,7 @@ def cluster(
             # a 0-row snapshot (every row tombstoned) keeps one empty
             # run-0 segment, so reads stay valid
             new_segs = _rewrite_groups(
-                spark, path, _props(base), prepared.withColumn("__g", zrun),
+                spark, path, prepared.withColumn("__g", zrun),
                 {
                     r: {"cluster": {"cols": list(cluster_cols), "zrun": r}}
                     for r in range(target_segments)
@@ -2775,24 +2796,26 @@ def cluster_incremental(spark: SparkSession, path: str) -> int:
         if not fresh:
             return None  # nothing to fold: _commit returns the head
         z, n_z = _zorder_from_cuts(cols, bits, spec["cuts"])
-        # each row's group is its z-run: the fresh rows route by z, the
-        # rows of a receiving run's current segments by segment
-        routed = _read_with_tombstones(spark, path, fresh, base, True).withColumn(
-            "__g", F.least(F.lit(n_runs - 1), F.floor(z * n_runs / F.lit(n_z))).cast("int")
-        ).persist()
-        touched = sorted(int(r[0]) for r in routed.select("__g").distinct().collect())
+        zrun = F.least(F.lit(n_runs - 1), F.floor(z * n_runs / F.lit(n_z))).cast("int")
+        # each row's group is its z-run: the fresh segments read as
+        # group -1 and route by z, a receiving run's segments keep it
+        fresh_g = dict.fromkeys(fresh, -1)
+        touched = sorted(
+            r[0] for r in _read_groups(spark, path, base, fresh_g)
+            .select(zrun).distinct().collect()
+        )
         olds = {s: r for s, r in run_of.items() if r in touched}
-        rows = routed.unionByName(
-            _read_groups(spark, path, base, olds), allowMissingColumns=True
-        ) if olds else routed
+        rows = _read_groups(spark, path, base, {**fresh_g, **olds})
         kept = [s for s in base["segments"] if s not in olds and s not in fresh]
         # target_files=1: each run is one file, z-sorted throughout
         new_segs = _rewrite_groups(
-            spark, path, _props(base), rows.withColumn("__z", z),
+            spark, path,
+            rows.withColumn("__z", z).withColumn(
+                "__g", F.when(F.col("__g") < 0, zrun).otherwise(F.col("__g"))
+            ),
             {run: {"cluster": {"cols": cols, "zrun": run}} for run in touched},
             kept, sort=["__z"], target_files=1, stats_cols=all_stats,
         ) if touched else {}
-        routed.unpersist()
         return {
             "segments": kept + list(new_segs),
             "meta": new_segs,
@@ -2875,7 +2898,7 @@ def cluster_partitioned(
             .persist()
         )
         new_segs = _rewrite_groups(
-            spark, path, _props(base), prepared,
+            spark, path, prepared,
             {
                 i * n_per + r: {
                     "part": {part_col: json.loads(v)},
@@ -3109,8 +3132,13 @@ def _widened_ddl(props: dict) -> str | None:
     """Explicit PHYSICAL read schema for a widened lake (None
     otherwise): the vectorized reader upcasts each narrow file to the
     recorded type; files missing additive columns null-fill."""
-    if not props.get("widened"):
-        return None
+    return _recorded_ddl(props) if props.get("widened") else None
+
+
+def _recorded_ddl(props: dict) -> str | None:
+    """The table's recorded PHYSICAL schema as a read DDL (None when
+    the lake records none): recorded order and types, a renamed column
+    under its physical name, a dropped column left out."""
     sch = (props.get("schema") or {}).get("cols")
     if not sch:
         return None
@@ -3214,13 +3242,18 @@ def _read_with_tombstones(
     segments: list[str],
     manifest: dict,
     merge_schema: bool = False,
-    with_segment: bool = False,
+    group_of: dict[str, int] | None = None,
 ) -> DataFrame:
     """Merge-on-read scan: anti-join the data segments against the
     manifest's pending tombstone segments (see commit_delete_mor).
-    `with_segment` adds ``__seg``, the dir name of each row's source
-    segment, taken at the scan (``_metadata`` does not resolve past a
-    join or a union).
+    `group_of` ({segment: int group id}) makes it the read of the
+    maintenance rewrite (`_read_groups`): the data files are read at
+    the table's recorded physical schema (`_recorded_ddl`; merged from
+    the footers on a lake that records none), and each row gets
+    ``__g``, its source segment's group id, looked up at the scan from
+    the dir name in ``_metadata.file_path`` (which does not resolve
+    past a join or a union) in a constant map, so no job runs for the
+    lookup.
 
     Tombstones are SEQUENCE-SCOPED, the Iceberg equality-delete rule:
     a tombstone masks only rows of segments committed BEFORE it
@@ -3238,12 +3271,19 @@ def _read_with_tombstones(
     semantics: they match no row."""
     from pyspark.sql import functions as F
 
-    ddl = _widened_ddl(dict(manifest.get("props", {})))
-    seg = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2)
+    props = dict(manifest.get("props", {}))
+    ddl = _widened_ddl(props)
 
     def scan(group):
-        df = _read_segments(spark, path, group, merge_schema, ddl)
-        return df.withColumn("__seg", seg) if with_segment else df
+        if group_of is None:
+            return _read_segments(spark, path, group, merge_schema, ddl)
+        names = {s.rstrip("/").rsplit("/", 1)[-1]: g for s, g in group_of.items()}
+        ids = F.map_from_arrays(  # NUL-joined: no dir name holds one
+            F.split(F.lit("\0".join(names)), "\0"),
+            F.split(F.lit(",".join(map(str, names.values()))), ",").cast("array<int>"),
+        )[F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2)]
+        df = _read_segments(spark, path, group, merge_schema, _recorded_ddl(props))
+        return df.withColumn("__g", ids)
 
     dels = list(manifest.get("deletes", []))
     if not dels:

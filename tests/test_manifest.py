@@ -3123,3 +3123,59 @@ def test_maintenance_job_budget_does_not_grow_with_partitions(spark, tmp_path):
 
     for op in (M.compact, M.compact_small):
         assert jobs(op, 4) == jobs(op, 16), op.__name__
+
+
+@pytest.mark.parametrize("op", ["replace_where", "delete", "cluster_incremental"])
+def test_scoped_rewrite_job_budget_does_not_grow_with_segments(spark, tmp_path, op):
+    """The scoped rewrites land every rewritten segment (every receiving
+    z-run) in one keyed pass: rewriting one or four of four segments
+    submits the same number of Spark jobs (the per-segment loops they
+    replace cost one to four jobs per segment)."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(n):
+        lake = str(tmp_path / f"{op}{n}")
+        if op == "cluster_incremental":
+            base = spark.range(0, 800).select(
+                F.col("id"), (F.col("id") % 97).alias("x"), (F.col("id") % 89).alias("y")
+            )
+            M.commit_append(spark, lake, base)
+            M.cluster(spark, lake, ["x", "y"], target_segments=4)
+            z = F.lit(0).cast("long") if n == 1 else F.col("id")
+            M.commit_append(spark, lake, spark.range(5000, 5100).select(
+                F.col("id"), (z % 97).alias("x"), (z % 89).alias("y")
+            ))
+        for i in range(4 if op != "cluster_incremental" else 0):
+            # the first n segments straddle the scope / hold the keys
+            ids = (
+                spark.range(0, 100).select((F.col("id") * 4 + i).alias("id"))
+                if i < n else spark.range(10000 + i * 100, 10100 + i * 100)
+            )
+            M.commit_append(
+                spark, lake, ids.select(F.col("id"), (F.col("id") * 3).alias("v")),
+                stats_cols=["id"],
+            )
+        # rows of segment 0, inside the id range of every straddling one
+        keys = spark.range(1, 5).select((F.col("id") * 4).alias("id"))
+        before = set(tracker.getJobIdsForGroup(None))
+        if op == "replace_where":
+            M.commit_replace_where(
+                spark, lake,
+                spark.range(10, 201).select(F.col("id"), F.lit(-1).cast("long").alias("v")),
+                ranges={"id": (10, 200)},
+            )
+        elif op == "delete":
+            M.commit_delete(spark, lake, keys, ["id"])
+        else:
+            M.cluster_incremental(spark, lake)
+        n_jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+        m = M._read_manifest(spark, lake, M.current_version(spark, lake))
+        if op == "cluster_incremental":
+            runs = {m["meta"][s]["cluster"]["zrun"] for s in m["segments"]}
+            assert len(runs) == 4 and len(m["segments"]) == 4
+        else:  # each straddling segment rewritten (+ the batch's)
+            new = set(m["segments"]) - set(M._read_manifest(spark, lake, 4)["segments"])
+            assert len(new) == n + (op == "replace_where")
+        return n_jobs
+
+    assert jobs(1) == jobs(4)
